@@ -361,8 +361,10 @@ def train_multiclass(spark: SparkSession, inst: DataFrame, epochs: int = 2) -> D
     # from the |rows|-sized instance table after scoring (measured 2x at
     # sf0.1)
     tri = inst.select("row_id", "label", F.posexplode("x").alias("feat_id", "x_f"))
-    cells = tri.crossJoin(
-        spark.range(N_CLASSES).select(F.col("id").alias("c"))
+    # the class ids are generated per row, not cross-joined from a
+    # range: no nested-loop join for every cached epoch's plan to carry
+    cells = tri.select(
+        "*", F.explode(F.sequence(F.lit(0).cast("long"), F.lit(N_CLASSES - 1).cast("long"))).alias("c")
     ).select(
         "row_id", "label", "c", "x_f",
         (F.col("c") * N_FEATURES + F.col("feat_id")).alias("param_id"),

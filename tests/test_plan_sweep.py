@@ -64,16 +64,6 @@ BOUNDED_BNLJ = {
     "events_multires_rollup": (1, "bounded hour grid"),
     # multiclass step joins the constant N_CLASSES x N_FEATURES base grid
     "pa_step_weights": (1, "10x64 class-feature grid"),
-    # five trainers x epochs: each multiclass epoch re-joins the class
-    # grid; binary/multiclass share 1-row dimension-statistic broadcasts.
-    # r15: the five families are scratch-cached and materialized on
-    # driver threads (guide §2.6 overlap), so the union's printed plan
-    # re-prints each family's SAME bounded joins inside its
-    # InMemoryRelation subtree (executed once at cache build, exactly
-    # the pre-r15 count at runtime) — the string count rises without
-    # any new runtime join; every broadcast side is still a constant
-    # grid or a 1-row aggregate
-    "ps_train_epochs": (56, "class grids + 1-row stats, per epoch, re-printed per cached family subtree"),
     # sketch probe grids (hash-row x width) are constant-sized
     "sketch_point_queries": (3, "constant sketch probe grids"),
     # BM25/TF-IDF broadcast the 1-row (N, avgdl) corpus statistics

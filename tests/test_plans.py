@@ -109,6 +109,19 @@ def test_ps_push_fold_static_k_is_flat_sums(spark):
     rows = {r["param_id"]: r["value"] for r in ps.params.collect()}
     assert rows[0] == [20.0, 40.0]
 
+    # mf.train's step feeds the fold a flat array(...) delta: a
+    # transform(uv, ...) lambda would get the error term (an 8-term dot
+    # product) inlined and re-run interpreted once per dimension
+    from flink_parameter_server_spark import scratch
+    from flink_parameter_server_spark.ps import mf
+
+    scratch.release()
+    model = mf.train(spark, mf.ratings(spark, SF_SMALL), epochs=1)
+    plan = model._jdf.queryExecution().executedPlan().toString()
+    assert "partial_sum(" in plan  # the fold aggregation is in view
+    assert "transform(uv" not in plan
+    scratch.release()
+
 
 def test_recommend_topk_prunes_before_window(spark):
     """B5 LEMP pruning contract (VERDICT r1 'What's missing' #1, tightened

@@ -8,7 +8,10 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from flink_parameter_server_spark import scratch
+from flink_parameter_server_spark.ps import mf
 from flink_parameter_server_spark.ps.kernel import BatchParameterServer
+from tests.conftest import SF_SMALL
 
 
 def _init_fn(pid):
@@ -90,3 +93,73 @@ def test_bidirectional_trainer_checkpoints_every_epoch(spark):
     assert "Scan ExistingRDD" in plan  # localCheckpoint-backed params
     # the epoch joins are behind the checkpoint cut, not in this plan
     assert plan.count("Join") == 0
+
+
+def _train_jobs(spark, ratings, epochs: int) -> int:
+    """Spark jobs one ``mf.train(epochs)`` + count starts."""
+    sc = spark.sparkContext
+    group = f"mf-train-epochs{epochs}"
+    scratch.release()
+    sc.setJobGroup(group, group)
+    try:
+        mf.train(spark, ratings, epochs=epochs).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mf_train_epoch_cost_is_linear(spark):
+    """Every epoch adds the same Spark work, whatever its position: each
+    epoch reads its predecessor from cache. Unpersisting the superseded
+    epoch while the next is still lazy made the cache manager re-plan it
+    without that cache, so every epoch recomputed the whole history
+    (8/15/32/66 jobs at 1-4 epochs on this fixture; 8/13/19/25 now)."""
+    ratings = mf.ratings(spark, SF_SMALL).persist()
+    try:
+        ratings.count()
+        jobs = {n: _train_jobs(spark, ratings, n) for n in (2, 3, 4)}
+    finally:
+        scratch.release()
+        ratings.unpersist()
+    assert jobs[4] - jobs[3] == jobs[3] - jobs[2], jobs
+
+
+def test_superseded_params_caches_bounded_by_checkpoint_every(spark):
+    """Superseded params frames stay cached until the next checkpoint cut
+    has read them, then the whole chain is freed: at most
+    ``checkpoint_every`` params caches are ever live, the fold is exact,
+    and ``scratch.release()`` frees every block the server persisted."""
+    every = 3
+    pushes = 2 * every + 1
+    scratch.release()
+    baseline = scratch.persistent_rdd_ids(spark)
+    ps = BatchParameterServer(init_fn=_init_fn, checkpoint_every=every)
+    seen: set[int] = set()
+    checkpoints: set[int] = set()
+    live_caches = []
+    for i in range(1, pushes + 1):
+        ps.push(spark.createDataFrame([(1, [1.0, 0.5]), (i % 3, [0.25, 0.0])], ["param_id", "delta"]))
+        ps.params.count()
+        live = scratch.persistent_rdd_ids(spark) - baseline
+        if i % every == 0:
+            # a cut: only its checkpoint blocks are new
+            checkpoints |= live - seen
+        seen |= live
+        live_caches.append(len(live - checkpoints))
+    assert len(checkpoints) == pushes // every
+    # between cuts the superseded frames stay cached (the frame a cut
+    # returns is checkpoint blocks, not a cache): every - 1 caches just
+    # before a cut, the current one included, and each cut frees them all
+    assert max(live_caches) == every - 1
+    assert [live_caches[i - 1] for i in range(every, pushes + 1, every)] == [0] * (pushes // every)
+    # init(id) = [id, 2 id]; key 1 gets (1, 0.5) every push and (0.25, 0)
+    # when i % 3 == 1; keys 0 and 2 get (0.25, 0) when i % 3 hits them
+    want = {0: [0.0, 0.0], 1: [1.0, 2.0], 2: [2.0, 4.0]}
+    for i in range(1, pushes + 1):
+        want[1] = [want[1][0] + 1.0, want[1][1] + 0.5]
+        want[i % 3] = [want[i % 3][0] + 0.25, want[i % 3][1]]
+    got = {r.param_id: r.value for r in ps.params.collect()}
+    assert got == want
+    scratch.release()
+    assert not seen & scratch.persistent_rdd_ids(spark)
