@@ -10,6 +10,10 @@ is fully deterministic.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +54,28 @@ def fan_out(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
+
+
+def overlap(spark: SparkSession, *builders: Callable[[], Any]) -> list[Any]:
+    """Run independent builders on driver threads, one thread each, and
+    return their results in builder order; a builder's exception is
+    re-raised here.
+
+    Each builder is wrapped with the SESSION form of
+    ``inheritable_thread_target``, so both the caller's local
+    properties (job group, scheduler pool) and its session tags reach
+    the thread: jobs started inside stay attributable to, and
+    cancellable with, the caller's tags. The function form drops the
+    tags (and warns on every call under Spark 4).
+
+    Plans, fold orders and values do not depend on the threads; only
+    driver-side plan analysis and job submission overlap. Serial code
+    is the default — a call site uses this only where the overlap
+    measured faster at the target core count.
+    """
+    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b)) for b in builders]
+        return [f.result() for f in futures]
 
 
 def exact_sum(col: Column) -> Column:

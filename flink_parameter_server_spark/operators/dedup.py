@@ -795,15 +795,11 @@ FROM ({SEMANTIC_PAIRS_SQL}) AS sem_part
     "this module and operators/similarity.py.",
 )
 def dedup_near_dup_pairs(spark, sf_dir):
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     from .similarity import embedding_near_dup_pairs, embedding_semantic_pairs
 
-    # r15 (guide §2.6 / §7.3): ~2.5 s of this entry was serial
-    # driver-side plan construction across the six method branches;
-    # the six branch constructions run on driver threads.
+    # serial: building the six method branches on driver threads ran
+    # 6 % faster at 4 cores (tools/ab.py warm rep, sf0.1, 5 pairs),
+    # under the 10 % an overlap must earn.
     # r16 (guide §2.4): the four text lanes previously persisted FOUR
     # relations (token-hash arrays + separate shingle/gram/span frames,
     # three extra materialization passes re-reading the first). ONE
@@ -823,34 +819,27 @@ def dedup_near_dup_pairs(spark, sf_dir):
     ).where(F.size("grams") > 0)
     spans_df = rel.select("doc_id", "spans")
 
-    builders = [
-        lambda: dedup_minhash_lsh(spark, sf_dir, sh=sh),
-        lambda: dedup_simhash(spark, sf_dir, sh=sh),
-        lambda: dedup_ngram_jaccard(spark, sf_dir, corpus_key=sf_dir, g=g),
-        lambda: dedup_substring_spans(spark, sf_dir, spans_df=spans_df),
-        lambda: embedding_near_dup_pairs(spark, sf_dir).select(
-            F.lit("embedding").alias("method"),
-            F.col("vec_a").alias("doc_a"),
-            F.col("vec_b").alias("doc_b"),
-            F.col("cos_sim").alias("score"),
-        ),
-        lambda: embedding_semantic_pairs(spark, sf_dir).select(
-            F.lit("semantic").alias("method"),
-            F.col("vec_a").alias("doc_a"),
-            F.col("vec_b").alias("doc_b"),
-            F.col("cos_sim").alias("score"),
-        ),
-    ]
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        mh, sim, ng, ss, emb, sem = pool.map(
-            inheritable_thread_target(lambda b: b()), builders
-        )
     return (
-        mh.unionByName(sim)
-        .unionByName(ng)
-        .unionByName(ss)
-        .unionByName(emb)
-        .unionByName(sem)
+        dedup_minhash_lsh(spark, sf_dir, sh=sh)
+        .unionByName(dedup_simhash(spark, sf_dir, sh=sh))
+        .unionByName(dedup_ngram_jaccard(spark, sf_dir, corpus_key=sf_dir, g=g))
+        .unionByName(dedup_substring_spans(spark, sf_dir, spans_df=spans_df))
+        .unionByName(
+            embedding_near_dup_pairs(spark, sf_dir).select(
+                F.lit("embedding").alias("method"),
+                F.col("vec_a").alias("doc_a"),
+                F.col("vec_b").alias("doc_b"),
+                F.col("cos_sim").alias("score"),
+            )
+        )
+        .unionByName(
+            embedding_semantic_pairs(spark, sf_dir).select(
+                F.lit("semantic").alias("method"),
+                F.col("vec_a").alias("doc_a"),
+                F.col("vec_b").alias("doc_b"),
+                F.col("cos_sim").alias("score"),
+            )
+        )
     )
 
 

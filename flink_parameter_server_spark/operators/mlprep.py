@@ -339,31 +339,18 @@ def train_test_split(spark, sf_dir):
     # in the printed plan)
     from .similarity import embeddings_normed, ivf_assign
 
-    # r15 (guide §2.6): the IVF assignment, the DSIR weight build and
-    # the curation chain are independent eager segments that ran
-    # back-to-back. The DSIR build now materializes on a driver thread
-    # while the assignment and then the whole curation chain (gate ->
-    # keeper -> CC loops) run on the main thread — safe since
-    # scoped_checkpoint's exact LogicalRDD-id attribution (r15): a CC
-    # round freeing its previous round can never claim the
-    # concurrently-materializing DSIR checkpoint's blocks.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
+    # serial: the IVF assignment, the DSIR weight build and the
+    # curation chain are independent eager segments, but materializing
+    # the DSIR build on a driver thread beside the other two ran 6 %
+    # faster at 4 cores (tools/ab.py warm rep, sf0.1, 5 pairs), under
+    # the 10 % an overlap must earn
     from ._gopher_core import GOPHER_FIXTURE_RULES
 
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _w_fut = _pool.submit(
-            inheritable_thread_target(
-                lambda: tracked_checkpoint(dsir_micro(d.select("doc_id", "lang", "text")))
-            )
-        )
-        assign = tracked_checkpoint(ivf_assign(embeddings_normed(spark, sf_dir)))
-        curated = corpus_curate(
-            spark, sf_dir, sem_assign=assign, quality_rules=GOPHER_FIXTURE_RULES
-        ).select(F.lit("curated").alias("part"), "doc_id", "lang", "source", "split")
-        w = _w_fut.result()
+    w = tracked_checkpoint(dsir_micro(d.select("doc_id", "lang", "text")))
+    assign = tracked_checkpoint(ivf_assign(embeddings_normed(spark, sf_dir)))
+    curated = corpus_curate(
+        spark, sf_dir, sem_assign=assign, quality_rules=GOPHER_FIXTURE_RULES
+    ).select(F.lit("curated").alias("part"), "doc_id", "lang", "source", "split")
     return (
         plain.unionByName(curated)
         .unionByName(_packed_part(d))

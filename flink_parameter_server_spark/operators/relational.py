@@ -169,8 +169,10 @@ def revenue_by_nation(spark, sf_dir):
     'rollup': ROLLUP over the region -> nation -> total hierarchy on the
     same broadcast dimension join (revenue = account-balance total).
     """
-    # r15 (guide §2.6): the star join and the rollup are independent
-    # branches — their plan constructions overlap on driver threads
+    # serial: the star join and the rollup are independent branches,
+    # but overlapping them on driver threads ran no faster at 4 cores
+    # (tools/ab.py warm rep, sf0.1, 5 pairs), under the 10 % an overlap
+    # must earn
     def _rollup_part():
         return (
             t(spark, sf_dir, "supplier")
@@ -208,15 +210,7 @@ def revenue_by_nation(spark, sf_dir):
             )
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        bn_fut = pool.submit(inheritable_thread_target(_by_nation))
-        ru_fut = pool.submit(inheritable_thread_target(_rollup_part))
-        by_nation, rollup_part = bn_fut.result(), ru_fut.result()
-    return by_nation.unionByName(rollup_part)
+    return _by_nation().unionByName(_rollup_part())
 
 
 # ---------------------------------------------------------------------------

@@ -563,28 +563,18 @@ SELECT * FROM ({_bpe_sql()}) AS bpe_part
 )
 def text_retrieval(spark, sf_dir):
     tf = scratch(_tf(spark, sf_dir))  # one (doc, term) build for all 3 parts
-    # r15 (guide §2.6 + §2.4): the BPE trainer is an inherently serial
-    # driver-round chain (n_merges bounded probes) that previously ran
-    # back-to-back with the tf build — run it on a thread while the
-    # main thread materializes tf, and build the corpus word table ONCE
-    # for the trainer AND the encoder half (bpe_apply re-derived the
-    # same explode+groupBy — one full corpus tokenize shuffle saved).
-    # Values pinned identical in the r15 A/B; measured 5.7-6.2 s ->
-    # 5.0-5.5 s at sf0.1 on the entry.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
+    # guide §2.4: build the corpus word table ONCE for the BPE trainer
+    # AND the encoder half (bpe_apply re-derived the same
+    # explode+groupBy — one full corpus tokenize shuffle saved).
+    # serial: running the trainer's driver-round chain on a driver
+    # thread while tf materializes ran 12 % faster at 4 cores but won
+    # only 7 of 10 pairs (tools/ab.py warm rep, sf0.1); an overlap must
+    # win 8
     from ..scratch import tracked_checkpoint
 
-    def _train():
-        w = tracked_checkpoint(_bpe_words(spark, sf_dir))
-        return w, bpe_merge_vocab(spark, sf_dir, words=w)
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        _fut = pool.submit(inheritable_thread_target(_train))
-        tf.count()  # overlap: materialize the shared (doc, term) build
-        words, mt = _fut.result()
+    tf.count()  # materialize the shared (doc, term) build
+    words = tracked_checkpoint(_bpe_words(spark, sf_dir))
+    mt = bpe_merge_vocab(spark, sf_dir, words=words)
     null_s = F.lit(None).cast("string")
     tfidf = tfidf_top_terms(spark, sf_dir, tf=tf).select(
         F.lit("tfidf").alias("part"),

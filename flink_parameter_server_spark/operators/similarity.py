@@ -589,20 +589,13 @@ SELECT * FROM ({_IVFPQ_RES_ANN_SQL}) AS ivfpq_res_part
     "adds per-subspace Lloyd residual codewords, BASELINE.md r14).",
 )
 def embedding_ann_topk(spark, sf_dir):
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     from ..scratch import scratch
 
-    # r15 (guide §2.6 / §7.3): ~4 s of this entry was DRIVER-side plan
-    # construction — seven method branches' Catalyst analysis built
-    # back-to-back (the fused PQ chain alone ~1.5 s of pure DataFrame
-    # building). The four independent construction chains (brute |
-    # simhash | flat-assignment family | two-level family) now build on
-    # driver threads; the produced plans, scratch sharing and values are
-    # identical (threaded-vs-serial collect pinned in the r15 A/B).
-    # Measured: 7.6-9.0 s -> 5.6-6.5 s at sf0.1.
+    # serial: the four construction chains (brute | simhash |
+    # flat-assignment family | two-level family) are independent, but
+    # building them on driver threads ran 7 % faster at 4 cores
+    # (tools/ab.py warm rep, sf0.1, 10 pairs), under the 10 % an overlap
+    # must earn
     def _brute():
         return embedding_cosine_topk(spark, sf_dir).select(
             F.lit("brute").alias("method"), "query_id", "neighbor_id", "cos_sim", "rk"
@@ -703,14 +696,9 @@ def embedding_ann_topk(spark, sf_dir):
         )
         return ivf2, ivf2p
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        fb = pool.submit(inheritable_thread_target(_brute))
-        fs = pool.submit(inheritable_thread_target(_simhash))
-        ff = pool.submit(inheritable_thread_target(_flat_family))
-        f2 = pool.submit(inheritable_thread_target(_two_level_family))
-        brute, simhash = fb.result(), fs.result()
-        ivf, pq_both = ff.result()
-        ivf2, ivf2p = f2.result()
+    brute, simhash = _brute(), _simhash()
+    ivf, pq_both = _flat_family()
+    ivf2, ivf2p = _two_level_family()
     return (
         brute.unionByName(simhash)
         .unionByName(ivf)

@@ -25,7 +25,7 @@ from ..functions.hashing import int_hash, int_hash_sql, poly_hash, poly_hash_sql
 from ..functions.text import tokens, tokens_sql
 from ..plans.registry import register
 from ..scratch import scratch
-from ._util import t
+from ._util import overlap, t
 
 BLOOM_M = 1024
 BLOOM_SEEDS = (7, 991, 2027)
@@ -190,10 +190,10 @@ def ams_sketches(spark, sf_dir):
         / F.lit(len(AMS_SEEDS))
     )
 
-    # r15 (guide §2.6): the lang_f2 and daily branches touch different
-    # tables and share nothing but the seed list — their plan
-    # constructions (the 8-seed interpreted-hash agg trees are the bulk
-    # of this entry's ~1.2 s Catalyst analysis) overlap on driver threads
+    # serial: the lang_f2 and daily branches are independent, but
+    # overlapping their plan constructions on driver threads ran 7 %
+    # faster at 4 cores (tools/ab.py warm rep, sf0.1, 10 pairs), under
+    # the 10 % an overlap must earn
     def _lang_part():
         counters = freq.groupBy("lang").agg(
             *[F.sum(F.col("f") * _ams_sign(F.col("tok"), s)).alias(f"c{s}") for s in AMS_SEEDS]
@@ -228,15 +228,7 @@ def ams_sketches(spark, sf_dir):
             F.col("n_events").alias("f2_check"),
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        l_fut = pool.submit(inheritable_thread_target(_lang_part))
-        d_fut = pool.submit(inheritable_thread_target(_daily_part))
-        lang_part, daily_part = l_fut.result(), d_fut.result()
-    return lang_part.unionByName(daily_part)
+    return _lang_part().unionByName(_daily_part())
 
 
 # ---------------------------------------------------------------------------
@@ -345,20 +337,16 @@ SELECT * FROM ({_CMS_HEAVY_SQL}) AS cms_heavy_part
     "oracle.",
 )
 def sketch_point_queries(spark, sf_dir):
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    # r15 (guide §2.6): the three sketch branches share the persisted
-    # freq relation; their plan constructions overlap on driver threads
+    # guide §2.6: the three sketch branches share the persisted freq
+    # relation; their plan constructions overlap on driver threads.
+    # 4 cores, sf0.1 (tools/ab.py warm rep, 10 pairs): serial 3.65 s -> 2.92 s.
     freq = _lang_token_freq(spark, sf_dir)
-    builders = [
+    bloom, cms, heavy = overlap(
+        spark,
         lambda: _bloom_membership(spark, sf_dir, freq=freq),
         lambda: _cms_frequency(spark, sf_dir, freq=freq),
         lambda: _cms_heavy(spark, sf_dir, freq=freq),
-    ]
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        bloom, cms, heavy = pool.map(inheritable_thread_target(lambda b: b()), builders)
+    )
     return bloom.unionByName(cms).unionByName(heavy)
 
 

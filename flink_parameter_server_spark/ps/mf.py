@@ -12,10 +12,12 @@ comparable convergence; the per-step math (B2) is identical and
 oracle-checked. Ratings are derived deterministically from the fixtures
 (FIXTURES.md): user=o_custkey, item=l_partkey, rating=l_quantity.
 
-Scale: deltas are exploded to (id, dim, delta) triplets and summed with
-map-side combine — the shuffle per epoch carries at most |items| x k
-rows; factor init is a pure function of id so there is no factor table
-to scan or broadcast until training actually updates it.
+Scale: each epoch's deltas fold in ONE aggregation of k flat
+``sum(delta[j])`` columns per id with map-side combine — each map task
+ships at most one k-wide partial row per item (kernel
+``_fold_deltas``), with no explode to (id, dim, delta) triplets; factor
+init is a pure function of id so there is no factor table to
+scan or broadcast until training actually updates it.
 """
 
 from __future__ import annotations
@@ -60,22 +62,6 @@ def item_vec(col):
 def predict(r: DataFrame) -> DataFrame:
     """B4: rating ~= dot(userVec, itemVec) from the deterministic init."""
     return r.withColumn("pred", vectors.dot(user_vec("user"), item_vec("item")))
-
-
-def epoch_item_deltas(r: DataFrame) -> DataFrame:
-    """B2 aggregated over one epoch: (item, dim, delta) with
-    delta = sum over ratings of lr * e * u_dim, e = rating - <u, i>."""
-    withe = r.withColumn(
-        "e", F.col("rating") - vectors.dot(user_vec("user"), item_vec("item"))
-    )
-    exploded = withe.select(
-        "item",
-        F.posexplode(user_vec("user")).alias("dim", "u_j"),
-        "e",
-    )
-    return exploded.groupBy("item", "dim").agg(
-        F.sum(F.lit(LR) * F.col("e") * F.col("u_j")).alias("delta")
-    )
 
 
 def train(spark: SparkSession, r: DataFrame, epochs: int = 2) -> DataFrame:
@@ -146,7 +132,8 @@ def train_bidirectional(spark: SparkSession, r: DataFrame, epochs: int = 2) -> D
     # extra exchanges); every id receives a delta every epoch (each
     # rating row updates its item and its user), so the preseed id set
     # equals the trained id set and the final model rows are identical
-    # (hash-pinned in tools/ab_r16_bidir.py: n=279992, equal hashes).
+    # (r16 A/B at sf0.1: n=279992 rows, equal model hashes with and
+    # without the preseed).
     ids = (
         r.select((F.col("item") * 2 + 1).alias("param_id"))
         .unionByName(r.select((F.col("user") * 2).alias("param_id")))

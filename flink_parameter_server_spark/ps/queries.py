@@ -5,15 +5,14 @@ constants/SQL-twins as the Spark expressions, so they cannot drift.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import int_hash2, int_hash2_sql
 from ..functions.vectors import dot_sql, norm2_sql
-from ..operators._util import t
+from ..operators._util import overlap, t
 from ..plans.registry import register
 from ..scratch import scratch
 from . import mf, pa
@@ -89,11 +88,11 @@ def ps_kernel_ops(spark, sf_dir):
 
     li = t(spark, sf_dir, "lineitem")
 
-    # r15 (guide §2.6): the dump->load->pull leg runs EAGER work at
-    # build time (a checkpointed push fold, a parquet model dump, the
-    # reload) while the pull/push legs are pure plan construction —
-    # the two run on driver threads so the eager leg's jobs overlap
-    # the other legs' Catalyst analysis.
+    # serial: the dump->load->pull leg runs EAGER work at build time (a
+    # checkpointed push fold, a parquet model dump, the reload) while
+    # the pull/push legs are pure plan construction, but overlapping the
+    # two on driver threads ran 7 % faster at 4 cores (tools/ab.py warm
+    # rep, sf0.1, 10 pairs), under the 10 % an overlap must earn
     def _pull_push():
         # --- pull over lazily-initialized K=4 item vectors
         keys = (
@@ -152,10 +151,8 @@ def ps_kernel_ops(spark, sf_dir):
             F.round(F.element_at("value", 1), 6).alias("w"),
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        pp_fut = pool.submit(inheritable_thread_target(_pull_push))
-        ld_fut = pool.submit(inheritable_thread_target(_load))
-        (pull_part, push_part), load_part = pp_fut.result(), ld_fut.result()
+    pull_part, push_part = _pull_push()
+    load_part = _load()
 
     return pull_part.unionByName(push_part).unionByName(load_part)
 
@@ -564,23 +561,17 @@ def ps_train_epochs(spark, sf_dir):
     rat.count()
     inst.count()
 
-    # r15 (guide §2.6 — overlap independent jobs): the five trainer
-    # families are INDEPENDENT programs, but their serial segments
-    # (bidir's per-epoch eager checkpoints, each family's multi-epoch
-    # fold chain) previously ran back-to-back — bidir's eager epochs at
-    # construction, the rest at the final union's count. Running each
-    # family on a driver thread and materializing its (scratch-cached)
-    # result lets the later jobs' tasks back-fill the stragglers of the
-    # earlier ones; the final union then reads five warmed caches.
-    # Per-family plans, fold orders and values are UNCHANGED (threaded
-    # vs serial collect() pinned identical in the r15 A/B); only the
-    # driver-side job submission overlaps. Measured (interleaved A/B,
-    # sf0.1): 15.3–18.9 s -> 9.8–11.1 s. Only bidir checkpoints
-    # eagerly (checkpoint_every=1), so the kernel's unlocked
-    # checkpoint-id diff never runs on two threads at once; a
-    # concurrent cache block swept into its diff would merely be
-    # released at the next registry entry — where scratch frees it
-    # anyway.
+    # guide §2.6 — overlap independent jobs: the five trainer families
+    # are INDEPENDENT programs whose serial segments (bidir's per-epoch
+    # eager checkpoints, each family's multi-epoch fold chain) would
+    # otherwise run back-to-back. Each family builds and materializes
+    # its (scratch-cached) result on its own driver thread, so later
+    # jobs' tasks back-fill the stragglers of earlier ones; the final
+    # union then reads five warmed caches. Per-family plans, fold orders
+    # and values do not depend on the threads, and checkpoint blocks are
+    # attributed per call (scratch.scoped_checkpoint), so concurrent
+    # families cannot free each other's blocks.
+    # 4 cores, sf0.1 (tools/ab.py warm rep, 10 pairs): serial 18.5 s -> 16.3 s.
     def fam_mf():
         return (
             mf.train(spark, rat, epochs=2)
@@ -649,11 +640,10 @@ def ps_train_epochs(spark, sf_dir):
         df.count()
         return df
 
-    builders = [fam_mf, fam_bidir, fam_pa, fam_pamc, fam_mfneg]
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        mf_part, bidir, pa_part, pamc, mfneg = pool.map(
-            inheritable_thread_target(_materialize), builders
-        )
+    families = (fam_mf, fam_bidir, fam_pa, fam_pamc, fam_mfneg)
+    mf_part, bidir, pa_part, pamc, mfneg = overlap(
+        spark, *[partial(_materialize, fam) for fam in families]
+    )
     return (
         mf_part.unionByName(bidir).unionByName(pa_part).unionByName(pamc).unionByName(mfneg)
     )
@@ -777,9 +767,10 @@ SELECT 'doc_quality' AS task, * FROM ({_doc_quality_sql()}) AS dq_task
     "featurize, 64-key step shuffle, broadcast-w1 scoring).",
 )
 def pa_predict_binary(spark, sf_dir):
-    # r15 (guide §2.6): the two tasks are independent; their plan
+    # guide §2.6: the two tasks are independent; their plan
     # construction (the doc-quality featurize->train->score chain is
-    # ~1.5 s of Catalyst analysis) overlaps on driver threads
+    # ~1.5 s of Catalyst analysis) overlaps on driver threads.
+    # 4 cores, sf0.1 (tools/ab.py warm rep, 5 pairs): serial 3.34 s -> 2.81 s.
     def _base():
         return pa.predict_binary(pa.instances(spark, sf_dir)).select(
             F.lit("embeddings").alias("task"), "row_id", "y", "y_pred", "margin"
@@ -790,10 +781,7 @@ def pa_predict_binary(spark, sf_dir):
             F.lit("doc_quality").alias("task"), "row_id", "y", "y_pred", "margin"
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        b_fut = pool.submit(inheritable_thread_target(_base))
-        d_fut = pool.submit(inheritable_thread_target(_dq))
-        base, dq = b_fut.result(), d_fut.result()
+    base, dq = overlap(spark, _base, _dq)
     return base.unionByName(dq)
 
 
@@ -863,9 +851,9 @@ FROM base LEFT JOIN deltas USING (class_id, feat_id)
 def pa_step_weights(spark, sf_dir):
     inst = scratch(pa.instances(spark, sf_dir))  # feeds both parts
 
-    # r15 (guide §2.6): the two branch constructions are ~1.6 s of
-    # Catalyst analysis (64-wide constant-folded expression trees);
-    # they are independent given inst, so they analyze on driver threads
+    # serial: overlapping the two branch constructions on driver
+    # threads ran 4 % faster at 4 cores (tools/ab.py warm rep, sf0.1,
+    # 10 pairs), under the 10 % an overlap must earn
     def _binaries():
         return pa.binary_steps_all_variants(inst).select(
             "variant",
@@ -882,11 +870,7 @@ def pa_step_weights(spark, sf_dir):
             F.round("w", 6).alias("w"),
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        b_fut = pool.submit(inheritable_thread_target(_binaries))
-        m_fut = pool.submit(inheritable_thread_target(_multi))
-        binaries, multi = b_fut.result(), m_fut.result()
-    return binaries.unionByName(multi)
+    return _binaries().unionByName(_multi())
 
 
 # ---------------------------------------------------------------------------

@@ -43,10 +43,3 @@ def salted_sum(
         .agg(F.sum(value_col).alias("__partial"))
     )
     return stage1.groupBy(*key_cols).agg(F.sum("__partial").alias(value_col))
-
-
-def salted_push_deltas(deltas: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Skew-safe variant of the PS push pre-aggregation for scalar deltas:
-    (param_id, delta) -> (param_id, delta summed), hot params spread over
-    n_salts reducers first."""
-    return salted_sum(deltas, ["param_id"], "delta", n_salts=n_salts)

@@ -31,7 +31,10 @@ repo.
 Checkpoint block attribution is per-call and lock-free (r15: the id is
 read directly off the checkpointed Dataset's LogicalRDD plan), so
 queries may materialize checkpoints from several driver threads at once
-— which the §2.6 intra-query overlaps introduced in r15 do.
+— which concurrent foreachBatch sinks do, and so do the §2.6 intra-query
+overlaps: independent branches built on driver threads through the one
+helper :func:`operators._util.overlap`, at the sites where the overlap
+measured faster at 4 cores.
 """
 
 from __future__ import annotations

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_parameter_server_spark.operators.asof import asof_join
@@ -77,10 +78,7 @@ def test_scoped_checkpoint_exact_attribution_concurrent(spark):
     around materialization). Two concurrent checkpoints must each claim
     exactly their own RDD id, and freeing one must leave the other's
     blocks (and data) alive."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
+    from flink_parameter_server_spark.operators._util import overlap
     from flink_parameter_server_spark.scratch import (
         persistent_rdd_ids,
         scoped_checkpoint,
@@ -93,11 +91,7 @@ def test_scoped_checkpoint_exact_attribution_concurrent(spark):
         out = scoped_checkpoint(df, ids)
         return out, ids
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(inheritable_thread_target(ckpt), 3)
-        f2 = pool.submit(inheritable_thread_target(ckpt), 7)
-        out1, ids1 = f1.result()
-        out2, ids2 = f2.result()
+    (out1, ids1), (out2, ids2) = overlap(spark, lambda: ckpt(3), lambda: ckpt(7))
 
     # each call claimed exactly one id, they differ, and both are live
     assert len(ids1) == 1 and len(ids2) == 1 and ids1 != ids2
@@ -109,3 +103,65 @@ def test_scoped_checkpoint_exact_attribution_concurrent(spark):
     assert ids2 <= persistent_rdd_ids(spark)
     assert out2.count() == 50_000
     unpersist_rdd_ids(spark, ids2)
+
+
+def test_overlap_threads_inherit_tags_and_local_properties(spark):
+    """Every builder runs with the caller's session tags (so the jobs
+    it starts stay cancellable with spark.interruptTag) and local
+    properties, without the function-form UserWarning; results come
+    back in builder order."""
+    import warnings
+
+    from flink_parameter_server_spark.operators._util import overlap
+
+    # the tag goes on a child session: under Spark 4.1.2 a session that
+    # has ever carried a tag fails later MLlib jobs (LinearSVC transform:
+    # NotSerializableException SparkSession$$anon$1), which would break
+    # tests that share the session fixture
+    tagged = spark.newSession()
+    sc = spark.sparkContext
+
+    def probe(i):
+        return i, tagged.getTags(), sc.getLocalProperty("fps.overlap.probe")
+
+    tagged.addTag("fps-overlap-tag")
+    sc.setLocalProperty("fps.overlap.probe", "caller")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            out = overlap(tagged, *[lambda i=i: probe(i) for i in range(4)])
+    finally:
+        tagged.removeTag("fps-overlap-tag")
+        sc.setLocalProperty("fps.overlap.probe", None)
+    assert [i for i, _, _ in out] == [0, 1, 2, 3]
+    assert all("fps-overlap-tag" in tags for _, tags, _ in out)
+    assert all(prop == "caller" for _, _, prop in out)
+
+
+def test_overlap_reraises_builder_exception(spark):
+    from flink_parameter_server_spark.operators._util import overlap
+
+    def boom():
+        raise ValueError("builder failed")
+
+    with pytest.raises(ValueError, match="builder failed"):
+        overlap(spark, lambda: 1, boom)
+
+
+def test_driver_threads_only_via_overlap():
+    """The package starts driver threads in one place: the overlap
+    helper. Hand-rolled pools drift (the function form of
+    inheritable_thread_target drops session tags)."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "flink_parameter_server_spark"
+    offenders = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if p.relative_to(root).as_posix() != "operators/_util.py"
+        and any(
+            word in p.read_text()
+            for word in ("ThreadPoolExecutor", "inheritable_thread_target", "FPS_ONLINE_PS_THREADED")
+        )
+    )
+    assert offenders == []
