@@ -193,8 +193,8 @@ def inverted_index(spark, sf_dir, tf=None):
     — sort_array(collect_list(...)) keeps the list deterministic
     without a global sort. At 100 TB posting lists for stop-like terms
     are the skew risk: shard hot terms by doc_id range (salting) and
-    concatenate shards, exactly like the salted_sum utility in
-    ps/skew.py."""
+    concatenate shards, like the two-stage salted sum of
+    skew_salted_agg (ps/queries.py)."""
     if tf is None:
         tf = _tf(spark, sf_dir)
     return tf.groupBy("tok").agg(

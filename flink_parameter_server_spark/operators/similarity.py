@@ -17,6 +17,8 @@ No reference analog; this is the north-star similarity surface over the
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -136,10 +138,7 @@ def embedding_cosine_topk(spark, sf_dir, k: int = 5):
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.select("query_id", "neighbor_id", "cos_sim", F.row_number().over(w).alias("rk")).where(
-        F.col("rk") <= k
-    )
+    return _top_k(scored, k)
 
 
 _SIMHASH_ANN_SQL = f"""
@@ -185,8 +184,7 @@ def embedding_simhash_ann(spark, sf_dir, k: int = 1):
             6,
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _top_k(scored, k)
 
 
 # The counted-n centroid rule (k ~ sqrt(n), r11) lives in
@@ -571,7 +569,7 @@ SELECT * FROM ({_IVFPQ_RES_ANN_SQL}) AS ivfpq_res_part
     "is hash-checked against DuckDB — the oracle-checkable twin of "
     "ann_index.kmeans_assign_two_level. 'ivf2_p2' (r12): the lane's "
     "deterministic multi-probe recall knob — queries probe the top-1 "
-    "child of each of their top-2 supers (rn <= p on the same windows "
+    "child of each of their top-2 supers (srn <= p on the same windows "
     "the single-probe form argmaxes), candidate sets are supersets of "
     "ivf2's, recall-vs-brute monotone in p (receipt in BASELINE.md). "
     "'ivfpq' (r12): the IVFADC composite (Jegou et al. 2011) — the "
@@ -586,125 +584,41 @@ SELECT * FROM ({_IVFPQ_RES_ANN_SQL}) AS ivfpq_res_part
     "per-query centroid base term is constant in the probed cell and "
     "drops out of the ADC ranking; shortlist= sweepable on both PQ "
     "lanes (recall non-decreasing, pinned; the persisted serving lane "
-    "adds per-subspace Lloyd residual codewords, BASELINE.md r14).",
+    "adds per-subspace Lloyd residual codewords, BASELINE.md r14). "
+    "Shared pieces: the cell lanes read one in-cell exact-cosine "
+    "scorer (_in_cell_scored) over the flat path (_flat_scored: one "
+    "assignment, one scored join for ivf, ivfpq and ivfpq_res) and the "
+    "two-level path (_ivf2_scored: one geometry, one assignment, probe "
+    "cells with their super rank srn, one scored join; the lane for p "
+    "probes is srn <= p); both PQ lanes build their (codes, lut) in "
+    "_pq_tables and run one lane-discriminated ADC -> shortlist -> "
+    "refine -> top-k chain (_pq_topk). The standalone lane functions "
+    "(embedding_ivf_ann, embedding_ivf2_ann(probes, k), "
+    "embedding_ivfpq_ann / embedding_ivfpq_res_ann(k, shortlist)) call "
+    "the same functions with their own parameters.",
 )
 def embedding_ann_topk(spark, sf_dir):
-    from ..scratch import scratch
-
     # serial: the four construction chains (brute | simhash |
     # flat-assignment family | two-level family) are independent, but
     # building them on driver threads ran 7 % faster at 4 cores
     # (tools/ab.py warm rep, sf0.1, 10 pairs), under the 10 % an overlap
     # must earn
-    def _brute():
-        return embedding_cosine_topk(spark, sf_dir).select(
-            F.lit("brute").alias("method"), "query_id", "neighbor_id", "cos_sim", "rk"
+    def tag(method, lane):
+        return lane.select(
+            F.lit(method).alias("method"), "query_id", "neighbor_id", "cos_sim", "rk"
         )
 
-    def _simhash():
-        return embedding_simhash_ann(spark, sf_dir).select(
-            F.lit("simhash").alias("method"), "query_id", "neighbor_id", "cos_sim", "rk"
-        )
-
-    def _flat_family():
-        # one scratch-persisted flat cell assignment feeds the ivf AND
-        # ivfpq branches (r12 — the double-compute class)
-        assign1 = scratch(ivf_assign(embeddings_normed(spark, sf_dir)))
-        # r15: the in-cell EXACT cosine set (query x cell-mate, the
-        # 'ivf' branch's scored frame) is also exactly what both PQ
-        # lanes consume — as the candidate pair set for ADC ranking and
-        # as the refine scores for their shortlists. Compute it once,
-        # scratch it, and let all three branches read it (it was
-        # computed 3x before: the ivf re-rank and each lane's refine
-        # join re-derived the same rounded cosines from the raw
-        # vectors).
-        scored1 = scratch(_ivf_scored(assign1))
-        wk = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-        ivf = (
-            scored1.withColumn("rk", F.row_number().over(wk))
-            .where(F.col("rk") <= 1)
-            .select(
-                F.lit("ivf").alias("method"), "query_id", "neighbor_id", "cos_sim", "rk"
-            )
-        )
-        # both PQ lanes through ONE fused ADC -> shortlist -> refine
-        # chain (lane-discriminated union: half the joins/windows of two
-        # separate lane plans; per-lane arithmetic unchanged — see
-        # _ivfpq_fused)
-        return ivf, _ivfpq_fused(spark, sf_dir, assign1, scored1)
-
-    def _two_level_family():
-        # one scratch-persisted two-level catalog assignment feeds BOTH
-        # ivf2 branches (r12 — the double-compute class).
-        # r16 (the bfdfa78 fused-chain pattern, VERDICT r15 #6): the two
-        # lanes previously each built their own query-cell set (ivf2p
-        # re-deriving the whole two-level geometry inside
-        # ivf2_probe_cells) and each ran its own in-cell scoring join.
-        # Now: ONE geometry feeds the assignment and the probe path, ONE
-        # probe-cells frame with the super rank kept (its srn==1 subset
-        # IS the probes=1 cell set, bit-identical — same windows and
-        # tie-breaks), and ONE scored join feeds both lanes' rank
-        # windows. Per-lane candidate sets and values unchanged (the
-        # single-probe lane ranks only srn==1 rows).
-        emb2 = embeddings_normed(spark, sf_dir)
-        geo = _ivf2_geometry(emb2)
-        assign2 = scratch(ivf2_assign(emb2, _geometry=geo))
-        qcells = ivf2_probe_cells(
-            emb2,
-            emb2.where(F.col("vec_id") % 50 == 0),
-            IVF2_PROBES,
-            _geometry=geo,
-            keep_super_rank=True,
-        )
-        scored2 = scratch(
-            qcells.join(assign2, "cid")
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "srn",
-                F.col("vec_id").alias("neighbor_id"),
-                F.round(
-                    _fast_cosine(
-                        as_double(F.col("qv")), as_double(F.col("embedding")),
-                        F.col("nq"), F.col("ne"),
-                    ),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-        w2 = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-        ivf2 = (
-            scored2.where(F.col("srn") == 1)
-            .withColumn("rk", F.row_number().over(w2))
-            .where(F.col("rk") <= 1)
-            .select(
-                F.lit("ivf2").alias("method"),
-                "query_id", "neighbor_id", "cos_sim", "rk",
-            )
-        )
-        ivf2p = (
-            scored2.withColumn("rk", F.row_number().over(w2))
-            .where(F.col("rk") <= 1)
-            .select(
-                F.lit(f"ivf2_p{IVF2_PROBES}").alias("method"),
-                "query_id", "neighbor_id", "cos_sim", "rk",
-            )
-        )
-        return ivf2, ivf2p
-
-    brute, simhash = _brute(), _simhash()
-    ivf, pq_both = _flat_family()
-    ivf2, ivf2p = _two_level_family()
+    emb = embeddings_normed(spark, sf_dir)
+    assign1, scored1 = _flat_scored(emb)
+    scored2 = _ivf2_scored(emb, IVF2_PROBES)
+    pq = _pq_topk([_pq_tables(emb, assign1, m) for m in ("ivfpq", "ivfpq_res")], scored1, 1)
     return (
-        brute.unionByName(simhash)
-        .unionByName(ivf)
-        .unionByName(pq_both)
-        .unionByName(ivf2)
-        .unionByName(ivf2p)
+        tag("brute", embedding_cosine_topk(spark, sf_dir))
+        .unionByName(tag("simhash", embedding_simhash_ann(spark, sf_dir)))
+        .unionByName(tag("ivf", _top_k(scored1, 1)))
+        .unionByName(pq)
+        .unionByName(tag("ivf2", _ivf2_lane(scored2, 1, 1)))
+        .unionByName(tag(f"ivf2_p{IVF2_PROBES}", _ivf2_lane(scored2, IVF2_PROBES, 1)))
     )
 
 
@@ -793,28 +707,26 @@ def _ivf2_geometry(emb):
     return sup, parent
 
 
-def ivf2_probe_cells(emb, queries, probes: int, _geometry=None, keep_super_rank=False):
+def ivf2_probe_cells(emb, queries, probes: int):
     """Deterministic multi-probe for the hash-checked two-level lane
     (r12, VERDICT r11 #4 — the oracle lane's recall knob): each query
     ranks the super-centroids and probes its top-``probes`` supers
-    (``rn <= probes`` on the same window the single-probe lane
+    (``srn <= probes`` on the same window the single-probe lane
     argmaxes), then takes the max-cosine CHILD within each probed
-    super. Returns (query_id, qv, nq, cid) with <= probes rows per
+    super. Returns (query_id, qv, nq, cid, srn) with <= probes rows per
     query; cells are distinct because every child has exactly one
-    parent. probes=1 reproduces :func:`ivf2_assign`'s query cell
-    bit-for-bit (same windows, same tie-breaks), and the probed cell
-    SET grows monotonically with ``probes`` — so candidate sets are
-    supersets and recall-vs-brute is monotone non-decreasing (pinned
-    in tests). Every stage stays a deterministic rank, so the p>1
-    approximation is DuckDB-replayable like the rest of the lane.
+    parent. The srn == 1 rows reproduce :func:`ivf2_assign`'s query
+    cell bit-for-bit (same windows, same tie-breaks), and the probed
+    cell SET grows monotonically with ``probes`` — so candidate sets
+    are supersets and recall-vs-brute is monotone non-decreasing
+    (pinned in tests). Every stage stays a deterministic rank, so the
+    p>1 approximation is DuckDB-replayable like the rest of the lane."""
+    return _ivf2_probe(queries, _ivf2_geometry(emb), probes)
 
-    ``_geometry`` (r16): pass a prebuilt (sup, parent) pair so the
-    consolidated entry derives the two-level geometry ONCE for the
-    assignment and the probe path. ``keep_super_rank`` additionally
-    carries each probed cell's super rank (``srn``) so a fused consumer
-    can recover the probes=1 cell set (srn == 1) from the probes=p
-    frame — bit-identical cells, same windows and tie-breaks."""
-    sup, parent = _geometry if _geometry is not None else _ivf2_geometry(emb)
+
+def _ivf2_probe(queries, geo, probes: int):
+    """:func:`ivf2_probe_cells` over a prebuilt (sup, parent) geometry."""
+    sup, parent = geo
     wq = Window.partitionBy("query_id").orderBy(F.col("cos_s").desc(), F.col("scid"))
     qsup = (
         queries.crossJoin(F.broadcast(sup))
@@ -835,7 +747,6 @@ def ivf2_probe_cells(emb, queries, probes: int, _geometry=None, keep_super_rank=
     wch = Window.partitionBy("query_id", "scid").orderBy(
         F.col("cos_c").desc(), F.col("cid")
     )
-    extra = ["srn"] if keep_super_rank else []
     return (
         qsup.join(F.broadcast(parent), "scid")
         .select(
@@ -847,11 +758,11 @@ def ivf2_probe_cells(emb, queries, probes: int, _geometry=None, keep_super_rank=
         )
         .withColumn("rn", F.row_number().over(wch))
         .where(F.col("rn") == 1)
-        .select("query_id", "qv", "nq", "cid", *extra)
+        .select("query_id", "qv", "nq", "cid", "srn")
     )
 
 
-def ivf2_assign(emb, keep_centroid_cos: bool = False, _geometry=None):
+def ivf2_assign(emb, keep_centroid_cos: bool = False):
     """Two-level counted-rule assignment (r11) — the DETERMINISTIC,
     oracle-replayable twin of ann_index.kmeans_assign_two_level:
 
@@ -874,11 +785,13 @@ def ivf2_assign(emb, keep_centroid_cos: bool = False, _geometry=None):
     Zero-norm vectors keep the oracle's NULL-cosine ordering exactly
     as :func:`ivf_assign` does; PRUNE consumers filter ``ne > 0``
     AFTER assignment (the semdedup_prune default-path convention) —
-    tests/test_fixedk_semantic.py shows the composition.
+    tests/test_fixedk_semantic.py shows the composition."""
+    return _ivf2_assign(emb, _ivf2_geometry(emb), keep_centroid_cos)
 
-    ``_geometry`` (r16): prebuilt (sup, parent), shared with the probe
-    path by the consolidated entry."""
-    sup, parent = _geometry if _geometry is not None else _ivf2_geometry(emb)
+
+def _ivf2_assign(emb, geo, keep_centroid_cos: bool = False):
+    """:func:`ivf2_assign` over a prebuilt (sup, parent) geometry."""
+    sup, parent = geo
     wc = Window.partitionBy("vec_id").orderBy(F.col("cos_s").desc(), F.col("scid"))
     coarse = (
         emb.crossJoin(F.broadcast(sup))
@@ -963,199 +876,100 @@ def semantic_cell_profile(assign) -> dict:
     }
 
 
-def embedding_ivf2_ann(spark, sf_dir, probes: int = 1, _assign=None, k: int = 1):
-    """IVF ANN over the two-level counted assignment (method='ivf2'):
-    queries probe their own (two-level-assigned) cell, exact re-rank,
-    top-1 — the same probe shape as :func:`embedding_ivf_ann` on the
-    pruned geometry. The assignment is scratch-persisted so the query
-    and catalog sides share one computation.
-
-    ``probes`` > 1 (r12): the deterministic multi-probe — each query
-    probes the top-1 child of each of its top-``probes`` super cells
-    (:func:`ivf2_probe_cells`), so the candidate set is a superset of
-    the single-probe one and recall-vs-brute rises monotonically
-    (receipt in BASELINE.md; registry method='ivf2_p2'). The catalog
-    side stays the shared single-cell assignment either way.
-    ``_assign`` lets the consolidated registry entry share ONE
-    scratch-persisted catalog assignment across its ivf2 branches
-    (the double-compute class)."""
-    from ..scratch import scratch
-
-    emb = embeddings_normed(spark, sf_dir)
-    assign = _assign if _assign is not None else scratch(ivf2_assign(emb))
-    if probes > 1:
-        q = ivf2_probe_cells(emb, emb.where(F.col("vec_id") % 50 == 0), probes)
-    else:
-        q = assign.where(F.col("vec_id") % 50 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-            F.col("ne").alias("nq"), "cid",
+def _in_cell_scored(cells, assign):
+    """The in-cell EXACT cosine set — the one scorer every cell-probing
+    lane reads: each (query_id, qv, nq, cid[, srn]) probe cell joined to
+    its catalog cell-mates in ``assign`` -> (query_id[, srn],
+    neighbor_id, cos_sim 6dp). The ivf lanes window-rank it directly;
+    the PQ lanes read it as their ADC candidate pairs AND as their
+    refine scores (r15: computed once, not re-derived per lane)."""
+    return (
+        cells.join(assign, "cid")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select(
+            *cells.drop("qv", "nq", "cid").columns,
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(
+                _fast_cosine(
+                    as_double(F.col("qv")), as_double(F.col("embedding")),
+                    F.col("nq"), F.col("ne"),
+                ),
+                6,
+            ).alias("cos_sim"),
         )
-    scored = q.join(assign, "cid").where(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _fast_cosine(
-                as_double(F.col("qv")), as_double(F.col("embedding")),
-                F.col("nq"), F.col("ne"),
-            ),
-            6,
-        ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+
+
+def _top_k(scored, k: int, by=("query_id",)):
+    """The top-``k`` rows per ``by`` group of a scored frame, ranked by
+    (cos_sim desc, neighbor_id), with the rank as ``rk``."""
+    w = Window.partitionBy(*by).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
 
 
-def embedding_ivf_ann(spark, sf_dir, _assign=None, k: int = 1):
+def _flat_scored(emb):
+    """The flat-IVF path: (assign, scored) — the scratch-persisted
+    counted-n cell assignment and the scratch-persisted in-cell exact
+    cosine set of the %50 queries probing their own cell. 'ivf' ranks
+    ``scored``; both PQ lanes encode over ``assign`` and refine from
+    ``scored`` (r12/r15: one assignment, one scoring join for all
+    three)."""
+    from ..scratch import scratch
+
+    assign = scratch(ivf_assign(emb))
+    cells = assign.where(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
+        F.col("ne").alias("nq"), "cid",
+    )
+    return assign, scratch(_in_cell_scored(cells, assign))
+
+
+def _ivf2_scored(emb, probes: int):
+    """The two-level path (r16): ONE geometry feeds the
+    scratch-persisted catalog assignment AND the %50 queries' probe
+    cells (top-``probes`` supers, super rank ``srn`` kept), and ONE
+    scoring join over them is scratch-persisted with ``srn``. The lane
+    for any p <= ``probes`` is then its srn <= p rows
+    (:func:`_ivf2_lane`): the srn == 1 cells are the single-probe
+    cells bit-for-bit (same windows, same tie-breaks)."""
+    from ..scratch import scratch
+
+    geo = _ivf2_geometry(emb)
+    assign = scratch(_ivf2_assign(emb, geo))
+    cells = _ivf2_probe(emb.where(F.col("vec_id") % 50 == 0), geo, probes)
+    return scratch(_in_cell_scored(cells, assign))
+
+
+def _ivf2_lane(scored, probes: int, k: int):
+    """Top-``k`` of the ``probes``-probe lane of :func:`_ivf2_scored`."""
+    return _top_k(scored.where(F.col("srn") <= probes).drop("srn"), k)
+
+
+def embedding_ivf2_ann(spark, sf_dir, probes: int = 1, k: int = 1):
+    """IVF ANN over the two-level counted assignment (method='ivf2'):
+    each query probes the top-1 child of each of its top-``probes``
+    super cells (:func:`ivf2_probe_cells`), exact re-rank, top-``k``.
+    probes=1 is the query's own two-level cell; ``probes`` > 1 (r12,
+    registry method='ivf2_p2') is the deterministic multi-probe — the
+    candidate set is a superset of the single-probe one, so
+    recall-vs-brute rises monotonically (receipt in BASELINE.md). The
+    catalog side is the one two-level assignment either way, built
+    from the same geometry as the probe cells (:func:`_ivf2_scored`,
+    the path the registry entry runs)."""
+    scored = _ivf2_scored(embeddings_normed(spark, sf_dir), probes)
+    return _ivf2_lane(scored, probes, k)
+
+
+def embedding_ivf_ann(spark, sf_dir, k: int = 1):
     """IVF-style ANN (the other scale path): deterministic counted-n
     coarse centroids (k ~ sqrt(n)), vectors assigned to their
     max-cosine cell, queries probe their own cell only, exact re-rank
-    inside. At 100 TB: centroids come from sampled k-means (the
-    ann_index build), cells partition the index, multi-probe tunes
-    recall — the cell join shape AND the k ~ sqrt(n) sizing are
-    identical to this oracle-checked form. ``_assign`` lets the
-    consolidated registry entry share ONE scratch-persisted flat
-    assignment with the 'ivfpq' branch (the double-compute class,
-    r12)."""
-    emb = embeddings_normed(spark, sf_dir)
-    assign = _assign if _assign is not None else ivf_assign(emb)
-    q = assign.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-        F.col("ne").alias("nq"), "cid",
-    )
-    scored = q.join(assign, "cid").where(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _fast_cosine(
-                as_double(F.col("qv")), as_double(F.col("embedding")),
-                F.col("nq"), F.col("ne"),
-            ),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
-
-
-def _ivf_scored(assign):
-    """The flat-IVF in-cell EXACT cosine set: (query_id, neighbor_id,
-    cos_sim 6dp) for every %50 query x same-cell catalog vector — the
-    shared sub-result of the consolidated ANN entry (r15): the 'ivf'
-    branch window-ranks it directly, and both PQ lanes consume it as
-    their candidate pair set AND their refine scores (the three
-    branches previously re-derived these cosines independently)."""
-    q = assign.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-        F.col("ne").alias("nq"), "cid",
-    )
-    return q.join(assign, "cid").where(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _fast_cosine(
-                as_double(F.col("qv")), as_double(F.col("embedding")),
-                F.col("nq"), F.col("ne"),
-            ),
-            6,
-        ).alias("cos_sim"),
-    )
-
-
-def _ivfpq_fused(spark, sf_dir, assign, scored):
-    """Both IVFADC lanes (method='ivfpq' plain / 'ivfpq_res'
-    by-residual) through ONE lane-discriminated ADC -> shortlist ->
-    refine chain (r15). Per-lane arithmetic is IDENTICAL to
-    :func:`embedding_ivfpq_ann` / :func:`embedding_ivfpq_res_ann` at
-    the registered defaults (k=1, shortlist=None): the lane-specific
-    pieces (codebook, codes, per-query LUT) are built per lane exactly
-    as before, then union with a `method` column so the candidate
-    join, the ADC window, the refine join and the final top-k window
-    each run ONCE over (method, query_id) instead of once per lane —
-    and the refine reads the shared exact-cosine frame (``scored``)
-    instead of re-deriving cosines from raw vectors. Equivalence is
-    pinned test-side against the standalone lane functions; the
-    standalone functions remain the sweepable (k=, shortlist=) tool
-    surface."""
-    from ..scratch import scratch
-
-    refine_n = PQ_SHORTLIST
-    emb = embeddings_normed(spark, sf_dir)
-
-    # --- plain lane builds (embedding_ivfpq_ann verbatim)
-    cb_p = scratch(pq_codebook(emb))
-    codes_p = pq_codes_arr(emb, codebook=cb_p).withColumnRenamed("vec_id", "neighbor_id")
-    lut_p = pq_lut_map(emb.where(F.col("vec_id") % 50 == 0), cb_p)
-
-    # --- residual lane builds (embedding_ivfpq_res_ann verbatim)
-    nrow = emb.agg(F.count(F.lit(1)).alias("n_emb"))
-    centn = (
-        emb.crossJoin(F.broadcast(nrow))
-        .where(F.col("vec_id") % counted_stride_col(F.col("n_emb")) == 0)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.transform(
-                as_double(F.col("embedding")), lambda c: c / F.col("ne")
-            ).alias("cvn"),
-        )
-    )
-    rx = scratch(
-        _pq_normed(assign, keep=("cid",))
-        .join(F.broadcast(centn), "cid")
-        .select(
-            "vec_id",
-            "cid",
-            F.zip_with("xn", "cvn", lambda a, b: a - b).alias("xn"),
-        )
-    )
-    cb_r = scratch(
-        _pq_subvecs(
-            rx.crossJoin(F.broadcast(nrow))
-            .where(F.col("vec_id") % _pq_stride_col(F.col("n_emb")) == 0)
-            .select("vec_id", "xn"),
-            "vec_id",
-            "cs",
-        ).select(F.col("vec_id").alias("aid"), "m", "cs")
-    )
-    codes_r = pq_codes_from_xn(rx.select("vec_id", "xn"), cb_r).withColumnRenamed(
-        "vec_id", "neighbor_id"
-    )
-    lut_r = pq_lut_map(emb.where(F.col("vec_id") % 50 == 0), cb_r)
-
-    # --- fused chain
-    codes = codes_p.select(F.lit("ivfpq").alias("method"), "neighbor_id", "codes").unionByName(
-        codes_r.select(F.lit("ivfpq_res").alias("method"), "neighbor_id", "codes")
-    )
-    luts = lut_p.select(F.lit("ivfpq").alias("method"), "query_id", "lmap").unionByName(
-        lut_r.select(F.lit("ivfpq_res").alias("method"), "query_id", "lmap")
-    )
-    cand = scored.select("query_id", "neighbor_id")
-    adc = (
-        cand.join(codes, "neighbor_id")
-        .join(luts, ["method", "query_id"])
-        .select(
-            "method",
-            "query_id",
-            "neighbor_id",
-            pq_adc_mic(F.col("codes"), F.col("lmap")).alias("adc_mic"),
-        )
-    )
-    wq = Window.partitionBy("method", "query_id").orderBy(
-        F.col("adc_mic").desc(), F.col("neighbor_id")
-    )
-    short = (
-        adc.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= refine_n)
-        .select("method", "query_id", "neighbor_id")
-    )
-    w = Window.partitionBy("method", "query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        short.join(scored, ["query_id", "neighbor_id"])
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 1)
-        .select("method", "query_id", "neighbor_id", "cos_sim", "rk")
-    )
+    inside, top-``k``. At 100 TB: centroids come from sampled k-means
+    (the ann_index build), cells partition the index, multi-probe
+    tunes recall — the cell join shape AND the k ~ sqrt(n) sizing are
+    identical to this oracle-checked form. Runs the registry entry's
+    flat path (:func:`_flat_scored`)."""
+    return _top_k(_flat_scored(embeddings_normed(spark, sf_dir))[1], k)
 
 
 def _pq_stride_col(n_col):
@@ -1327,13 +1141,116 @@ def pq_adc_mic(codes_col, lmap_col):
     )
 
 
-def embedding_ivfpq_ann(spark, sf_dir, _assign=None, k: int = 1, shortlist: int | None = None):
+def _pq_tables(emb, assign, method: str):
+    """One IVFADC lane's tables over the flat assignment, both tagged
+    with ``method``: (method, neighbor_id, codes) and (method,
+    query_id, lmap), the LUT over the normalized %50 queries.
+
+    'ivfpq' encodes the unit vector against the stride-anchor codebook
+    (:func:`pq_codebook`). 'ivfpq_res' (r14) encodes the residual
+    xn - cvn, cvn = the cell's UNIT centroid (counted-n centroids are
+    actual sampled vectors, so cvn is element-exact in both engines),
+    against the same ceil(n/PQ_K) stride rule applied to the residual
+    rows, codewords NOT normalized. Codebooks feed both the encode and
+    the LUT, and the residual rows both the anchors and the encode, so
+    those are scratch-persisted."""
+    from ..scratch import scratch
+
+    if method == "ivfpq":
+        cb = scratch(pq_codebook(emb))
+        codes = pq_codes_arr(emb, codebook=cb)
+    else:
+        nrow = emb.agg(F.count(F.lit(1)).alias("n_emb"))
+        centn = (
+            emb.crossJoin(F.broadcast(nrow))
+            .where(F.col("vec_id") % counted_stride_col(F.col("n_emb")) == 0)
+            .select(
+                F.col("vec_id").alias("cid"),
+                F.transform(
+                    as_double(F.col("embedding")), lambda c: c / F.col("ne")
+                ).alias("cvn"),
+            )
+        )
+        rx = scratch(
+            _pq_normed(assign, keep=("cid",))
+            .join(F.broadcast(centn), "cid")
+            .select(
+                "vec_id",
+                "cid",
+                F.zip_with("xn", "cvn", lambda a, b: a - b).alias("xn"),
+            )
+        )
+        cb = scratch(
+            _pq_subvecs(
+                rx.crossJoin(F.broadcast(nrow))
+                .where(F.col("vec_id") % _pq_stride_col(F.col("n_emb")) == 0)
+                .select("vec_id", "xn"),
+                "vec_id",
+                "cs",
+            ).select(F.col("vec_id").alias("aid"), "m", "cs")
+        )
+        codes = pq_codes_from_xn(rx.select("vec_id", "xn"), cb)
+    lut = pq_lut_map(emb.where(F.col("vec_id") % 50 == 0), cb)
+    tag = F.lit(method).alias("method")
+    return (
+        codes.select(tag, F.col("vec_id").alias("neighbor_id"), "codes"),
+        lut.select(tag, "query_id", "lmap"),
+    )
+
+
+def _pq_topk(tables, scored, k: int, shortlist: int | None = None):
+    """The IVFADC chain for any set of lanes (r15): ADC -> shortlist ->
+    refine -> top-``k``, ranked per (method, query_id) over the union of
+    the lanes' :func:`_pq_tables`, so the candidate join, the ADC
+    window, the refine join and the final window each run once however
+    many lanes ride along. Candidates are the in-cell pairs of
+    ``scored`` (:func:`_in_cell_scored`); each lane keeps its top
+    ``shortlist`` (default PQ_SHORTLIST, clamped to ``k`` either way —
+    ADVICE r14: a default-shortlist caller with k > PQ_SHORTLIST must
+    not silently get < k rows) by (adc_mic desc, neighbor_id), and the
+    refine reads those pairs' exact cosines from ``scored``. Returns
+    (method, query_id, neighbor_id, cos_sim, rk)."""
+    refine_n = max(PQ_SHORTLIST if shortlist is None else shortlist, k)
+    codes, luts = (reduce(lambda a, b: a.unionByName(b), side) for side in zip(*tables))
+    adc = (
+        scored.select("query_id", "neighbor_id")
+        .join(codes, "neighbor_id")
+        .join(luts, ["method", "query_id"])
+        .select(
+            "method",
+            "query_id",
+            "neighbor_id",
+            pq_adc_mic(F.col("codes"), F.col("lmap")).alias("adc_mic"),
+        )
+    )
+    wq = Window.partitionBy("method", "query_id").orderBy(
+        F.col("adc_mic").desc(), F.col("neighbor_id")
+    )
+    short = (
+        adc.withColumn("rn", F.row_number().over(wq))
+        .where(F.col("rn") <= refine_n)
+        .select("method", "query_id", "neighbor_id")
+    )
+    return _top_k(
+        short.join(scored, ["query_id", "neighbor_id"]), k, by=("method", "query_id")
+    ).select("method", "query_id", "neighbor_id", "cos_sim", "rk")
+
+
+def _pq_lane(spark, sf_dir, method: str, k: int, shortlist: int | None):
+    """One IVFADC lane alone: the registry entry's flat path and chain."""
+    emb = embeddings_normed(spark, sf_dir)
+    assign, scored = _flat_scored(emb)
+    tables = [_pq_tables(emb, assign, method)]
+    return _pq_topk(tables, scored, k, shortlist).drop("method")
+
+
+def embedding_ivfpq_ann(spark, sf_dir, k: int = 1, shortlist: int | None = None):
     """IVFADC ANN (method='ivfpq', r12 — Jegou et al. 2011): queries
     probe their counted-n IVF cell, candidates are ranked by the ADC
     score over 4-byte PQ codes WITHOUT touching raw vectors (the sum
     over subspaces of the query's precomputed codeword dots, integer
     micro-grid so the sum is exact), the top-PQ_SHORTLIST re-rank by
-    exact cosine, top-1 emitted — the standard refine step. Every
+    exact cosine, top-``k`` emitted — the standard refine step. Every
     stage is a deterministic rank over engine-identical values, so the
     PQ approximation itself is hash-checked against DuckDB.
 
@@ -1342,8 +1259,6 @@ def embedding_ivfpq_ann(spark, sf_dir, _assign=None, k: int = 1, shortlist: int 
     shared IVF assignment) and the CONSTANT <=128-row codebook; the
     in-cell ADC scan reads PQ_M longs per candidate instead of the
     256-byte vector — the memory-bandwidth win PQ exists for.
-    ``_assign`` shares the scratch-persisted flat cell assignment with
-    the 'ivf' branch of the consolidated entry.
 
     Documented divergence from Jegou et al.'s by-residual IVFADC: the
     codes here quantize the normalized vector itself, not the residual
@@ -1360,187 +1275,32 @@ def embedding_ivfpq_ann(spark, sf_dir, _assign=None, k: int = 1, shortlist: int 
     refine window — the recall-receipt sweep knob that separates ADC
     ranking loss from refine-window truncation (tools/ann_recall.py;
     recall@k is non-decreasing in it, pinned). Default None keeps the
-    hash-pinned registered behavior (k=1 < PQ_SHORTLIST there); the
-    window is clamped to k either way (ADVICE r14: a default-shortlist
-    caller with k > PQ_SHORTLIST must not silently get < k rows)."""
-    from ..scratch import scratch
-
-    refine_n = max(PQ_SHORTLIST, k) if shortlist is None else max(shortlist, k)
-
-    emb = embeddings_normed(spark, sf_dir)
-    assign = _assign if _assign is not None else scratch(ivf_assign(emb))
-    # the <=128-row codebook feeds BOTH the encode join and the query
-    # LUT — scratch-persist it so the anchor-filter corpus scan runs once
-    cb = scratch(pq_codebook(emb))
-    codes = pq_codes_arr(emb, codebook=cb).withColumnRenamed("vec_id", "neighbor_id")
-    # per-query LUT folded to a (code*PQ_M + m) -> lmic map: the ADC
-    # score is then pure per-row array math over the codes array — the
-    # (query, neighbor, m) explode + re-agg of the first cut is gone
-    lutmap = pq_lut_map(emb.where(F.col("vec_id") % 50 == 0), cb)
-    q = assign.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-        F.col("ne").alias("nq"), "cid",
-    )
-    cand = (
-        q.select("query_id", "cid")
-        .join(assign.select(F.col("vec_id").alias("neighbor_id"), "cid"), "cid")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    adc = (
-        cand.join(codes, "neighbor_id")
-        .join(lutmap, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            pq_adc_mic(F.col("codes"), F.col("lmap")).alias("adc_mic"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("adc_mic").desc(), F.col("neighbor_id")
-    )
-    short = (
-        adc.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= refine_n)
-        .select("query_id", "neighbor_id")
-    )
-    nb = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"),
-        F.col("ne").alias("nn"),
-    )
-    scored = (
-        short.join(q.select("query_id", "qv", "nq"), "query_id")
-        .join(nb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _fast_cosine(
-                    as_double(F.col("qv")), as_double(F.col("nv")),
-                    F.col("nq"), F.col("nn"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    hash-pinned registered behavior. Runs the registry entry's flat
+    path and IVFADC chain (:func:`_pq_topk`) for this lane alone; the
+    refine reads the in-cell exact-cosine set, so a standalone call
+    scores every in-cell pair, not only the shortlist."""
+    return _pq_lane(spark, sf_dir, "ivfpq", k, shortlist)
 
 
-def embedding_ivfpq_res_ann(spark, sf_dir, _assign=None, k: int = 1, shortlist: int | None = None):
+def embedding_ivfpq_res_ann(spark, sf_dir, k: int = 1, shortlist: int | None = None):
     """By-residual IVFADC ANN (method='ivfpq_res', r14 — Jegou et al.
     2011's by_residual=true form, FAISS's default), ORACLE-CHECKED:
     every arithmetic step is deterministic in both engines, so unlike
     the persisted lane's Lloyd-trained codebook (test-pinned), this
     lane's residual approximation itself is hash-checked against
-    DuckDB. Counted-n centroids are ACTUAL stride-sampled vectors (not
-    means), so the unit centroid cvn = cv/|cv| is element-exact in
-    both engines and the residual xn - cvn subtracts identical
-    doubles. Residual codebook = the SAME ceil(n/PQ_K) stride rule
-    applied to the residual rows, codewords NOT normalized (a residual
-    has no meaningful unit direction). The query's cell is probed
-    (n_probe=1), candidates rank by the ADC sum of the query's
-    residual-codeword dots — the per-query-constant centroid base term
-    drops out of the within-cell ranking — and the top-PQ_SHORTLIST
-    refine by exact cosine emits top-k exactly like 'ivfpq'.
+    DuckDB. The codes are the residual ones of :func:`_pq_tables`. The
+    query's cell is probed (n_probe=1), candidates rank by the ADC sum
+    of the query's residual-codeword dots — the per-query-constant
+    centroid base term drops out of the within-cell ranking — and the
+    top-``shortlist`` refine by exact cosine emits top-``k`` exactly
+    like :func:`embedding_ivfpq_ann`, through the same chain.
 
     100 TB shape identical to 'ivfpq' (one extra broadcast of the
     sqrt(n)-row unit-centroid table into the residual map). Recall
     receipts: the sampled-anchor residual codebook is the
     oracle-replayable floor; the persisted lane's per-subspace Lloyd
     codewords are the serving default (BASELINE.md r14)."""
-    from ..scratch import scratch
-
-    # ADVICE r14: clamp the default window to k too (see embedding_ivfpq_ann)
-    refine_n = max(PQ_SHORTLIST, k) if shortlist is None else max(shortlist, k)
-
-    emb = embeddings_normed(spark, sf_dir)
-    assign = _assign if _assign is not None else scratch(ivf_assign(emb))
-    nrow = emb.agg(F.count(F.lit(1)).alias("n_emb"))
-    centn = (
-        emb.crossJoin(F.broadcast(nrow))
-        .where(F.col("vec_id") % counted_stride_col(F.col("n_emb")) == 0)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.transform(
-                as_double(F.col("embedding")), lambda c: c / F.col("ne")
-            ).alias("cvn"),
-        )
-    )
-    rx = scratch(
-        _pq_normed(assign, keep=("cid",))
-        .join(F.broadcast(centn), "cid")
-        .select(
-            "vec_id",
-            "cid",
-            F.zip_with("xn", "cvn", lambda a, b: a - b).alias("xn"),
-        )
-    )
-    cb = scratch(
-        _pq_subvecs(
-            rx.crossJoin(F.broadcast(nrow))
-            .where(F.col("vec_id") % _pq_stride_col(F.col("n_emb")) == 0)
-            .select("vec_id", "xn"),
-            "vec_id",
-            "cs",
-        ).select(F.col("vec_id").alias("aid"), "m", "cs")
-    )
-    codes = pq_codes_from_xn(rx.select("vec_id", "xn"), cb).withColumnRenamed(
-        "vec_id", "neighbor_id"
-    )
-    lutmap = pq_lut_map(emb.where(F.col("vec_id") % 50 == 0), cb)
-    q = assign.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-        F.col("ne").alias("nq"), "cid",
-    )
-    cand = (
-        q.select("query_id", "cid")
-        .join(assign.select(F.col("vec_id").alias("neighbor_id"), "cid"), "cid")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    adc = (
-        cand.join(codes, "neighbor_id")
-        .join(lutmap, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            pq_adc_mic(F.col("codes"), F.col("lmap")).alias("adc_mic"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("adc_mic").desc(), F.col("neighbor_id")
-    )
-    short = (
-        adc.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= refine_n)
-        .select("query_id", "neighbor_id")
-    )
-    nb = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"),
-        F.col("ne").alias("nn"),
-    )
-    scored = (
-        short.join(q.select("query_id", "qv", "nq"), "query_id")
-        .join(nb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _fast_cosine(
-                    as_double(F.col("qv")), as_double(F.col("nv")),
-                    F.col("nq"), F.col("nn"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _pq_lane(spark, sf_dir, "ivfpq_res", k, shortlist)
 
 
 def embedding_near_dup_pairs(spark, sf_dir):

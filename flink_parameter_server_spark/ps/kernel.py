@@ -85,8 +85,9 @@ class BatchParameterServer:
         return cls(init_fn, params=spark.read.parquet(path))
 
     # -- A2: pull ----------------------------------------------------------
-    def pull(self, keys: DataFrame, key_col: str = "param_id") -> DataFrame:
-        """Resolve current values for ``keys`` (lazy init for misses).
+    def pull(self, keys: DataFrame) -> DataFrame:
+        """Resolve current values for ``keys`` (a ``param_id`` column;
+        lazy init for misses).
 
         The request/response round-trip of the reference becomes one
         equi-join; broadcast if the key side is small, else a shuffle
@@ -102,15 +103,14 @@ class BatchParameterServer:
         epoch: the inline form re-evaluated 8-hash vectors per delta
         element per rating row).
         """
-        out = keys.withColumnRenamed(key_col, "param_id")
         if self.params is None:
             init_tab = (
-                out.select("param_id")
+                keys.select("param_id")
                 .distinct()
                 .withColumn("value", self._init)
             )
-            return out.join(init_tab, "param_id")
-        joined = out.join(self.params, "param_id", "left")
+            return keys.join(init_tab, "param_id")
+        joined = keys.join(self.params, "param_id", "left")
         return joined.withColumn("value", F.coalesce(F.col("value"), self._init))
 
     # -- A3/A4/A5: push + server fold ---------------------------------------
@@ -144,7 +144,10 @@ class BatchParameterServer:
             # exact-attributed lineage cut (r15): scoped_checkpoint reads
             # the checkpoint RDD id off the LogicalRDD plan, so a trainer
             # checkpointing on one driver thread can never claim (and
-            # later free) blocks a concurrent thread persisted
+            # later free) blocks a concurrent thread persisted. This is
+            # scratch.tracked_checkpoint inlined so that the call goes
+            # through this module's name: perfbench's traced run wraps
+            # kernel.scoped_checkpoint to count and time the cuts.
             ids: set[int] = set()
             merged = scoped_checkpoint(merged, ids)
             track_checkpoint_ids(spark, ids)

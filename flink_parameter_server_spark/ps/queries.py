@@ -896,8 +896,7 @@ FROM lineitem GROUP BY l_returnflag
     "fold is a commutative+associative decimal sum (exact, so the "
     "salted result hash-matches the oracle's single-stage sum "
     "bit-for-bit; a double sum would expose fold order). The salt never "
-    "reaches the result. Same machinery as ps/skew.salted_sum for PS "
-    "push deltas.",
+    "reaches the result.",
 )
 def skew_salted_agg(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")

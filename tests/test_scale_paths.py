@@ -9,24 +9,34 @@ import tempfile
 from pyspark.sql import functions as F
 
 from flink_parameter_server_spark.operators._util import t
-from flink_parameter_server_spark.ps.skew import salted_sum
+from flink_parameter_server_spark.ps.queries import skew_salted_agg
 from flink_parameter_server_spark.sources.sink import write_bucketed, write_partitioned
 from tests.conftest import SF_SMALL
 
 
 def test_salted_sum_preserves_results(spark):
-    li = t(spark, SF_SMALL, "lineitem").select("l_partkey", F.col("l_quantity").alias("delta"))
-    plain = {r.l_partkey: r.s for r in li.groupBy("l_partkey").agg(F.sum("delta").alias("s")).collect()}
-    salted = {
-        r.l_partkey: r.delta
-        for r in salted_sum(li, ["l_partkey"], "delta", n_salts=8).collect()
+    """skew_salted_agg's two-stage salted decimal sum equals the
+    one-stage sum per key."""
+    li = t(spark, SF_SMALL, "lineitem")
+    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
+    plain = {
+        r.l_returnflag: (r.revenue, r.n_rows)
+        for r in li.groupBy("l_returnflag")
+        .agg(
+            F.round(F.sum(rev).cast("double"), 4).alias("revenue"),
+            F.count(F.lit(1)).alias("n_rows"),
+        )
+        .collect()
     }
-    assert salted == plain
+    salted = {
+        r.l_returnflag: (r.revenue, r.n_rows)
+        for r in skew_salted_agg(spark, SF_SMALL).collect()
+    }
+    assert salted == plain and len(plain) > 1
 
 
 def test_salted_sum_has_two_aggregation_stages(spark):
-    li = t(spark, SF_SMALL, "lineitem").select("l_partkey", F.col("l_quantity").alias("delta"))
-    plan = salted_sum(li, ["l_partkey"], "delta")._jdf.queryExecution().executedPlan().toString()
+    plan = skew_salted_agg(spark, SF_SMALL)._jdf.queryExecution().executedPlan().toString()
     # partial+final per stage x two stages
     assert plan.count("HashAggregate") >= 3
 
@@ -66,7 +76,8 @@ def test_bucketed_join_skips_shuffle(spark):
 
 
 def test_aqe_splits_skewed_join(spark):
-    """The skew remedy ps/skew.py defers JOINS to (AQE skew-join split);
+    """Skewed JOINS are left to AQE's skew-join split (salting, as in
+    skew_salted_agg, covers aggregation);
     prove it actually fires: a 90%-hot-key fact joined to a dim under
     forced-SMJ with tiny skew thresholds must show skew=true splits in
     the final adaptive plan."""

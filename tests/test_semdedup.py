@@ -306,50 +306,30 @@ def test_fused_cc_matches_standalone_runs(spark):
         assert got_sem == want_sem
 
 
-def test_fused_pq_lanes_match_standalone_functions(spark):
-    """r15: the consolidated ANN entry runs both IVFADC lanes through
-    one lane-discriminated ADC/shortlist/refine chain over the shared
-    in-cell exact-cosine frame. Pin per-lane equality against the
-    standalone lane functions (the sweepable tool surface) on both
-    fixture scales."""
-    from flink_parameter_server_spark.operators.similarity import (
-        _ivf_scored,
-        _ivfpq_fused,
-        embedding_ivf_ann,
-        embedding_ivfpq_ann,
-        embedding_ivfpq_res_ann,
-        embeddings_normed,
-        ivf_assign,
-    )
-    from flink_parameter_server_spark.scratch import release, scratch
+def test_ann_topk_lanes_match_standalone_functions(spark):
+    """Every cell-probing lane of the consolidated ANN entry equals its
+    standalone lane function (the sweepable tool surface) at the
+    registered parameters, row for row."""
+    from flink_parameter_server_spark.operators import similarity as sim
+    from flink_parameter_server_spark.plans import REGISTRY
+    from flink_parameter_server_spark.scratch import release
 
-    for sf in (SF_SMALL, SF_MED):
+    standalone = {
+        "ivf": lambda: sim.embedding_ivf_ann(spark, SF_SMALL),
+        "ivf2": lambda: sim.embedding_ivf2_ann(spark, SF_SMALL),
+        f"ivf2_p{sim.IVF2_PROBES}": lambda: sim.embedding_ivf2_ann(
+            spark, SF_SMALL, probes=sim.IVF2_PROBES
+        ),
+        "ivfpq": lambda: sim.embedding_ivfpq_ann(spark, SF_SMALL),
+        "ivfpq_res": lambda: sim.embedding_ivfpq_res_ann(spark, SF_SMALL),
+    }
+    got = {}
+    for r in REGISTRY["embedding_ann_topk"].fn(spark, SF_SMALL).collect():
+        got.setdefault(r["method"], set()).add(tuple(r)[1:])
+    for method, lane in standalone.items():
         release()
-        a1 = scratch(ivf_assign(embeddings_normed(spark, sf)))
-        s1 = scratch(_ivf_scored(a1))
-        fused = _ivfpq_fused(spark, sf, a1, s1)
-        got = {
-            m: {tuple(r) for r in fused.where(F.col("method") == m).drop("method").collect()}
-            for m in ("ivfpq", "ivfpq_res")
-        }
-        want_pq = {tuple(r) for r in embedding_ivfpq_ann(spark, sf, _assign=a1).collect()}
-        want_res = {tuple(r) for r in embedding_ivfpq_res_ann(spark, sf, _assign=a1).collect()}
-        assert got["ivfpq"] == want_pq and want_pq
-        assert got["ivfpq_res"] == want_res and want_res
-        # and the shared exact frame window-ranks to the ivf branch
-        from pyspark.sql import Window
-
-        wk = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-        got_ivf = {
-            tuple(r)
-            for r in s1.withColumn("rk", F.row_number().over(wk))
-            .where(F.col("rk") <= 1)
-            .collect()
-        }
-        want_ivf = {tuple(r) for r in embedding_ivf_ann(spark, sf, _assign=a1).collect()}
-        assert got_ivf == want_ivf and want_ivf
+        want = {tuple(r) for r in lane().collect()}
+        assert want and got[method] == want, method
 
 
 def test_near_dup_arrays_matches_standalone_frames(spark):
