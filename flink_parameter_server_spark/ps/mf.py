@@ -15,14 +15,13 @@ oracle-checked. Ratings are derived deterministically from the fixtures
 Scale: each epoch's deltas fold in ONE aggregation of k flat
 ``sum(delta[j])`` columns per id with map-side combine — each map task
 ships at most one k-wide partial row per item (kernel
-``_fold_deltas``), with no explode to (id, dim, delta) triplets; factor
-init is a pure function of id so there is no factor table to
-scan or broadcast until training actually updates it.
+``_fold_deltas``); factor init is a pure function of id so there is no
+factor table to scan or broadcast until training actually updates it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
@@ -71,7 +70,7 @@ def train(spark: SparkSession, r: DataFrame, epochs: int = 2) -> DataFrame:
     updating them too is a second symmetric PS — omitted for clarity).
     Returns DataFrame(param_id=item, value=array<double> factors).
     """
-    ps = BatchParameterServer(init_fn=lambda pid: item_vec(pid), k=K)
+    ps = BatchParameterServer(init_fn=lambda pid: item_vec(pid))
     # worker-local user vectors as a distinct-user factor table joined
     # back by key: O(|users|) hash evals total, and `uv` reaches the
     # delta math as a join attribute — projection collapse cannot
@@ -140,7 +139,6 @@ def train_bidirectional(spark: SparkSession, r: DataFrame, epochs: int = 2) -> D
         .distinct()
     )
     ps = BatchParameterServer(
-        k=K,
         checkpoint_every=1,
         init_fn=init_fn,
         params=scratch(ids.withColumn("value", init_fn(F.col("param_id")))),
@@ -158,10 +156,10 @@ def train_bidirectional(spark: SparkSession, r: DataFrame, epochs: int = 2) -> D
         ).repartition(spark.sparkContext.defaultParallelism, F.col("param_id"))
     )
 
-    for _ in range(epochs):
-        pulled_items = ps.pull(ritems).withColumnRenamed("value", "ivec").drop("param_id")
+    def step(data: DataFrame, server: BatchParameterServer) -> DataFrame:
+        pulled_items = server.pull(data).withColumnRenamed("value", "ivec").drop("param_id")
         both = (
-            ps.pull(
+            server.pull(
                 pulled_items.select(
                     (F.col("user") * 2).alias("param_id"), "user", "item", "rating", "ivec"
                 )
@@ -178,17 +176,17 @@ def train_bidirectional(spark: SparkSession, r: DataFrame, epochs: int = 2) -> D
                 "e", F.col("rating") - vectors.dot_fixed(F.col("uvec"), F.col("ivec"), K)
             )
         )
-        item_deltas = both.select(
-            (F.col("item") * 2 + 1).alias("param_id"),
-            F.transform(F.col("uvec"), lambda u_j: F.lit(LR) * F.col("e") * u_j).alias("delta"),
-        )
-        user_deltas = both.select(
-            (F.col("user") * 2).alias("param_id"),
-            F.transform(F.col("ivec"), lambda i_j: F.lit(LR) * F.col("e") * i_j).alias("delta"),
-        )
-        ps.push(item_deltas.unionByName(user_deltas))
 
-    return ps.params.select(
+        # flat array(...) deltas, as in train's step (see _fold_deltas)
+        def delta(param_id: Column, vec: str) -> DataFrame:
+            return both.select(
+                param_id.alias("param_id"),
+                F.array(*[F.lit(LR) * F.col("e") * F.col(vec)[j] for j in range(K)]).alias("delta"),
+            )
+
+        return delta(F.col("item") * 2 + 1, "uvec").unionByName(delta(F.col("user") * 2, "ivec"))
+
+    return ps.iterate(ritems, step, epochs).select(
         F.when(F.col("param_id") % 2 == 0, F.lit("user")).otherwise(F.lit("item")).alias("side"),
         F.floor(F.col("param_id") / 2).cast("long").alias("id"),
         F.posexplode("value").alias("dim", "v"),

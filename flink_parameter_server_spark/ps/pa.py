@@ -14,7 +14,7 @@ driver epoch loop on the PS kernel (rows-only check; divergence from the
 reference's per-record trajectory documented here).
 
 Scale: margins are one map-side pass (no shuffle — weights are a
-deterministic function of feat_id until training starts, then a k=1
+deterministic function of feat_id until training starts, then a width-1
 params table joined by feat_id); weight updates shuffle (feat_id) with
 map-side combine — 64 keys here, millions of sparse feature ids at
 100 TB, both fine because the shuffle payload is (feat_id, delta).
@@ -22,7 +22,9 @@ map-side combine — 64 keys here, millions of sparse feature ids at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
@@ -52,16 +54,9 @@ def instances(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def w0_array():
-    """array<double> of N_FEATURES initial weights, shared Spark/SQL."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(N_FEATURES - 1)),
-        lambda f: factor_element(F.lit(0), f, W_SEED, W_LO, W_HI),
-    )
-
-
 def class_w0_array(c):
-    """Initial weight row for class c (multiclass weight matrix)."""
+    """Initial weight row for class c (multiclass weight matrix); row 0
+    is also the binary model's initial weights."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(N_FEATURES - 1)),
         lambda f: factor_element(c, f, W_SEED, W_LO, W_HI),
@@ -73,7 +68,9 @@ def with_margin(inst: DataFrame) -> DataFrame:
     # array, so element_at(w0, j) constant-folds and the margin becomes
     # 64 fused multiply-adds in whole-stage codegen instead of an
     # interpreted higher-order fold per row
-    return inst.withColumn("margin", vectors.dot_fixed(F.col("x"), w0_array(), N_FEATURES))
+    return inst.withColumn(
+        "margin", vectors.dot_fixed(F.col("x"), class_w0_array(F.lit(0)), N_FEATURES)
+    )
 
 
 def _tau(variant: str, xn=None):
@@ -112,61 +109,47 @@ def binary_step(inst: DataFrame, variant: str = "pa1") -> DataFrame:
     weight vector as (feat_id, w) rows.
 
     tau_i per ``variant`` (see :func:`_tau`); w += sum_i tau_i y_i x_i.
-    The reference trains with PA-I by default; all three variants share
-    this one plan shape.
+    The reference trains with PA-I by default.
     """
-    m = with_margin(inst)
-    stepped = m.select(
-        F.posexplode(F.col("x")).alias("feat_id", "x_f"),
-        (_tau(variant) * F.col("y")).alias("coef"),
-    )
-    deltas = stepped.groupBy("feat_id").agg(
-        F.sum((F.col("coef") * F.col("x_f")).cast("decimal(28,15)")).alias("d")
-    )
-    return deltas.select(
-        F.col("feat_id").cast("long").alias("feat_id"),
-        (
-            factor_element(F.lit(0), F.col("feat_id"), W_SEED, W_LO, W_HI)
-            + F.col("d").cast("double")
-        ).alias("w"),
-    )
+    return binary_steps_all_variants(inst, (variant,)).drop("variant")
 
 
 def binary_steps_all_variants(inst: DataFrame, variants=("pa", "pa1", "pa2")) -> DataFrame:
     """All PA variants' batch steps from ONE margin/norm pass: the margin
     dot and the squared norm are computed once per instance (the
     expensive part), each variant's tau is a cheap scalar expression on
-    those shared columns, and one (variant, feat_id) fold aggregates
-    everything. Returns (variant, feat_id, w)."""
+    those shared columns, and one feat_id fold sums every variant's
+    column. Returns (variant, feat_id, w). The flat ``dot_fixed``
+    squared norm is bitwise :func:`vectors.norm2` (the same left fold).
+
+    The long (variant, feat_id) form is a union of per-variant
+    projections of the folded frame, not an explode: a Generate over the
+    fold (or a string variant key inside it) made doc_quality_filter's
+    one-variant step ~0.5 s slower at sf0.1."""
     m = with_margin(inst).withColumn(
         "xn", vectors.dot_fixed(F.col("x"), F.col("x"), N_FEATURES)
     )
-    vc = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(v).alias("variant"),
-                    (_tau(v, xn=F.col("xn")) * F.col("y")).alias("coef"),
-                )
-                for v in variants
-            ]
-        )
-    ).alias("vc")
-    stepped = m.select(vc, "x").select(
-        F.col("vc.variant").alias("variant"),
-        F.col("vc.coef").alias("coef"),
+    stepped = m.select(
+        *[(_tau(v, xn=F.col("xn")) * F.col("y")).alias(f"coef_{v}") for v in variants],
         F.posexplode("x").alias("feat_id", "x_f"),
     )
-    deltas = stepped.groupBy("variant", "feat_id").agg(
-        F.sum((F.col("coef") * F.col("x_f")).cast("decimal(28,15)")).alias("d")
+    sums = stepped.groupBy("feat_id").agg(
+        *[
+            F.sum((F.col(f"coef_{v}") * F.col("x_f")).cast("decimal(28,15)")).alias(f"d_{v}")
+            for v in variants
+        ]
     )
-    return deltas.select(
-        "variant",
-        F.col("feat_id").cast("long").alias("feat_id"),
-        (
-            factor_element(F.lit(0), F.col("feat_id"), W_SEED, W_LO, W_HI)
-            + F.col("d").cast("double")
-        ).alias("w"),
+    w0 = factor_element(F.lit(0), F.col("feat_id"), W_SEED, W_LO, W_HI)
+    return reduce(
+        DataFrame.unionByName,
+        [
+            sums.select(
+                F.lit(v).alias("variant"),
+                F.col("feat_id").cast("long").alias("feat_id"),
+                (w0 + F.col(f"d_{v}").cast("double")).alias("w"),
+            )
+            for v in variants
+        ],
     )
 
 
@@ -275,43 +258,53 @@ def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def multiclass_step(inst: DataFrame) -> DataFrame:
-    """B9 one mini-batch multiclass PA step: for each row, score all
-    classes, find the top violating class v != y; tau = loss/(2||x||^2);
-    push +tau*x to row y and -tau*x to row v. Returns (class_id, feat_id, w).
-    """
-    classes = inst.select(
-        "row_id", "label", "x", F.explode(F.sequence(F.lit(0), F.lit(N_CLASSES - 1))).alias("c")
-    ).withColumn("score", vectors.dot(F.col("x"), class_w0_array(F.col("c"))))
-    from pyspark.sql import Window
+def _ids(n: int) -> Column:
+    """explode(sequence(0, n-1)) as BIGINT: ids generated in place, no
+    range cross join (so no nested-loop join in any plan that reads it)."""
+    return F.explode(F.sequence(F.lit(0).cast("long"), F.lit(n - 1).cast("long")))
 
+
+def _violator_updates(scores: DataFrame, xtab: DataFrame) -> DataFrame:
+    """The multiclass PA rule, from each row's class scores (row_id,
+    label, c, score) and its features xtab (row_id, x): the violator v is
+    the top-scoring class != label (ties to the lower class id), tau =
+    max(0, 1 - (s_label - s_v)) / (2||x||^2), and the row pushes +tau*x
+    to class ``label`` and -tau*x to class v. Returns one (class_id,
+    coef, x) row per signed update."""
     wv = Window.partitionBy("row_id").orderBy(F.col("score").desc(), F.col("c"))
     viol = (
-        classes.where(F.col("c") != F.col("label"))
+        scores.where(F.col("c") != F.col("label"))
         .withColumn("rn", F.row_number().over(wv))
         .where(F.col("rn") == 1)
         .select("row_id", F.col("c").alias("v"), F.col("score").alias("s_v"))
     )
-    true_s = classes.where(F.col("c") == F.col("label")).select(
-        "row_id", "label", "x", F.col("score").alias("s_y")
+    tru = scores.where(F.col("c") == F.col("label")).select(
+        "row_id", "label", F.col("score").alias("s_y")
     )
-    upd = (
-        true_s.join(viol, "row_id")
-        .withColumn(
-            "tau",
-            F.greatest(F.lit(0.0), F.lit(1.0) - (F.col("s_y") - F.col("s_v")))
-            / (F.lit(2.0) * vectors.norm2(F.col("x"))),
-        )
+    upd = tru.join(viol, "row_id").join(xtab, "row_id").withColumn(
+        "tau",
+        F.greatest(F.lit(0.0), F.lit(1.0) - (F.col("s_y") - F.col("s_v")))
+        / (F.lit(2.0) * vectors.norm2(F.col("x"))),
     )
-    signed = upd.select(
+    return upd.select(
         F.explode(
             F.array(
-                F.struct(F.col("label").alias("class_id"), F.col("tau").alias("coef")),
-                F.struct(F.col("v").alias("class_id"), (-F.col("tau")).alias("coef")),
+                F.struct(F.col("label").cast("long").alias("class_id"), F.col("tau").alias("coef")),
+                F.struct(F.col("v").cast("long").alias("class_id"), (-F.col("tau")).alias("coef")),
             )
         ).alias("s"),
         "x",
     ).select(F.col("s.class_id").alias("class_id"), F.col("s.coef").alias("coef"), "x")
+
+
+def multiclass_step(inst: DataFrame) -> DataFrame:
+    """B9 one mini-batch multiclass PA step from the init weights (see
+    :func:`_violator_updates` for the rule). Returns (class_id, feat_id, w).
+    """
+    scores = inst.select("row_id", "label", "x", _ids(N_CLASSES).alias("c")).select(
+        "row_id", "label", "c", vectors.dot(F.col("x"), class_w0_array(F.col("c"))).alias("score")
+    )
+    signed = _violator_updates(scores, inst.select("row_id", "x"))
     deltas = (
         signed.select("class_id", "coef", F.posexplode("x").alias("feat_id", "x_f"))
         .groupBy("class_id", "feat_id")
@@ -319,9 +312,9 @@ def multiclass_step(inst: DataFrame) -> DataFrame:
     )
     # full weight matrix: untouched cells stay at their init value
     base = (
-        inst.sparkSession.range(N_CLASSES)
-        .select(F.col("id").alias("class_id"))
-        .crossJoin(inst.sparkSession.range(N_FEATURES).select(F.col("id").alias("feat_id")))
+        inst.sparkSession.range(1)
+        .select(_ids(N_CLASSES).alias("class_id"))
+        .select("class_id", _ids(N_FEATURES).alias("feat_id"))
     )
     return (
         base.join(deltas, ["class_id", "feat_id"], "left")
@@ -341,13 +334,9 @@ def train_multiclass(spark: SparkSession, inst: DataFrame, epochs: int = 2) -> D
     flattened cell id class*N_FEATURES + feat (the reference shards the
     per-class weight vectors across servers the same way [C-high]).
     Mini-batch epochs; per epoch: score all classes from current weights,
-    find each row's violator, push +tau*x / -tau*x to the true/violator
-    rows. Returns (class_id, feat_id, w).
+    then push :func:`_violator_updates`. Returns (class_id, feat_id, w).
     """
-    from pyspark.sql import Window
-
     ps = BatchParameterServer(
-        k=1,
         init_fn=lambda pid: F.array(
             factor_element(
                 F.floor(pid / N_FEATURES), pid % N_FEATURES, W_SEED, W_LO, W_HI
@@ -361,55 +350,26 @@ def train_multiclass(spark: SparkSession, inst: DataFrame, epochs: int = 2) -> D
     # from the |rows|-sized instance table after scoring (measured 2x at
     # sf0.1)
     tri = inst.select("row_id", "label", F.posexplode("x").alias("feat_id", "x_f"))
-    # the class ids are generated per row, not cross-joined from a
-    # range: no nested-loop join for every cached epoch's plan to carry
-    cells = tri.select(
-        "*", F.explode(F.sequence(F.lit(0).cast("long"), F.lit(N_CLASSES - 1).cast("long"))).alias("c")
-    ).select(
+    cells = tri.select("*", _ids(N_CLASSES).alias("c")).select(
         "row_id", "label", "c", "x_f",
         (F.col("c") * N_FEATURES + F.col("feat_id")).alias("param_id"),
     )
     xtab = inst.select("row_id", "x")
 
-    for _ in range(epochs):
-        pulled = ps.pull(cells)
-        scores = pulled.groupBy("row_id", "c").agg(
+    def step(data: DataFrame, server: BatchParameterServer) -> DataFrame:
+        scores = server.pull(data).groupBy("row_id", "c").agg(
             F.sum(F.element_at("value", 1) * F.col("x_f")).alias("score"),
             F.first("label").alias("label"),
         )
-        wv = Window.partitionBy("row_id").orderBy(F.col("score").desc(), F.col("c"))
-        viol = (
-            scores.where(F.col("c") != F.col("label"))
-            .withColumn("rn", F.row_number().over(wv))
-            .where(F.col("rn") == 1)
-            .select("row_id", F.col("c").alias("v"), F.col("score").alias("s_v"))
-        )
-        tru = scores.where(F.col("c") == F.col("label")).select(
-            "row_id", "label", F.col("score").alias("s_y")
-        )
-        upd = tru.join(viol, "row_id").join(xtab, "row_id").withColumn(
-            "tau",
-            F.greatest(F.lit(0.0), F.lit(1.0) - (F.col("s_y") - F.col("s_v")))
-            / (F.lit(2.0) * vectors.norm2(F.col("x"))),
-        )
-        signed = upd.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("label").cast("long").alias("class_id"), F.col("tau").alias("coef")),
-                    F.struct(F.col("v").cast("long").alias("class_id"), (-F.col("tau")).alias("coef")),
-                )
-            ).alias("s"),
-            "x",
-        ).select(F.col("s.class_id").alias("class_id"), F.col("s.coef").alias("coef"), "x")
-        deltas = signed.select(
+        signed = _violator_updates(scores, xtab)
+        return signed.select(
             "class_id", "coef", F.posexplode("x").alias("feat_id", "x_f")
         ).select(
             (F.col("class_id") * N_FEATURES + F.col("feat_id")).alias("param_id"),
             F.array(F.col("coef") * F.col("x_f")).alias("delta"),
         )
-        ps.push(deltas)
 
-    return ps.params.select(
+    return ps.iterate(cells, step, epochs).select(
         F.floor(F.col("param_id") / N_FEATURES).cast("long").alias("class_id"),
         (F.col("param_id") % N_FEATURES).cast("long").alias("feat_id"),
         F.round(F.element_at("value", 1), 6).alias("w"),
@@ -417,11 +377,10 @@ def train_multiclass(spark: SparkSession, inst: DataFrame, epochs: int = 2) -> D
 
 
 def train_binary(spark: SparkSession, inst: DataFrame, epochs: int = 3) -> DataFrame:
-    """B8 full trainer on the PS kernel (k=1 weight vectors keyed by
-    feat_id). Mini-batch epochs — documented divergence from the
+    """B8 full trainer on the PS kernel (width-1 weight vectors keyed by
+    feat_id). Mini-batch PA-I epochs — documented divergence from the
     reference's per-record sequential updates."""
     ps = BatchParameterServer(
-        k=1,
         init_fn=lambda pid: F.array(factor_element(F.lit(0), pid, W_SEED, W_LO, W_HI)),
     )
 
@@ -438,16 +397,7 @@ def train_binary(spark: SparkSession, inst: DataFrame, epochs: int = 3) -> DataF
             F.first("y").alias("y"),
         )
         tau = margins.join(xtab, "row_id").select(
-            "row_id",
-            (
-                F.least(
-                    F.lit(C),
-                    F.greatest(F.lit(0.0), F.lit(1.0) - F.col("y") * F.col("margin"))
-                    / vectors.norm2(F.col("x")),
-                )
-                * F.col("y")
-            ).alias("coef"),
-            "x",
+            "row_id", (_tau("pa1") * F.col("y")).alias("coef"), "x"
         )
         return tau.select(
             F.posexplode("x").alias("param_id", "x_f"), "coef"

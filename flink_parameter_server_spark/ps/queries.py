@@ -539,10 +539,10 @@ def mf_negative_samples(spark, sf_dir):
     "pa_multiclass_train_2epochs). 'mf': 2 driver-loop epochs on "
     "BatchParameterServer (FlinkParameterServer#transform + "
     "PSOfflineMatrixFactorization [C-high/med]). 'mf_bidir': BOTH factor "
-    "sides update, each in its own parameter server (worker-local user "
-    "vectors + server-side item vectors, PSOnlineMatrixFactorization "
+    "sides update, in ONE parameter server keyed 2*id + side (user and "
+    "item vectors sharded over the same pool, PSOnlineMatrixFactorization "
     "[C-high]). 'pa': 2 mini-batch epochs of PA-I binary updates "
-    "(weights = k=1 param vectors keyed by feat_id). 'pa_mc': multiclass "
+    "(weights = width-1 param vectors keyed by feat_id). 'pa_mc': multiclass "
     "weight matrix as one PS keyed by class*n_features+feat, violator "
     "updates (PassiveAggressiveParameterServer#transformMulticlass "
     "[C-high]). 'mf_neg' (r5): the reference's negative-sampling purpose "

@@ -122,16 +122,15 @@ class FPSQueueStreamReader(DataSourceStreamReader):
     - ``trigger(availableNow=True)`` computes ONE target offset up
       front (latestOffset is called once), so the drain lands in one
       coarse batch regardless of the limit — drain with
-      processAllAvailable when per-file batches matter (run_server's
-      fpsqueue path does).
+      processAllAvailable when per-file batches matter.
     - RESUMING a checkpoint with the limit set would hand the engine an
       end offset BEHIND the checkpointed start (the committed offset is
       not visible to the reader until partitions()), whose empty batch
       would move the offset log backwards and replay files on the next
       restart; partitions() RAISES on that underrun instead of
-      corrupting the checkpoint. Restart paths keep the builtin file
-      source (exact admission control) — see
-      FileQueueTransport.run_server."""
+      corrupting the checkpoint. Restart paths need the builtin file
+      source (exact admission control), which is why
+      FileQueueTransport.run_server consumes through it."""
 
     def __init__(self, path: str, schema: StructType, max_files_per_batch: int | None) -> None:
         self._path = path

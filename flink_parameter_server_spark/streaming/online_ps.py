@@ -138,7 +138,7 @@ PA_OUTPUT_SCHEMA = StructType(
 
 
 def _pa_w0(n_features: int) -> list[float]:
-    """Scalar mirror of pa.w0_array (factor_element(0, f, W_SEED) per f)."""
+    """Scalar mirror of pa.class_w0_array(0) (factor_element(0, f, W_SEED) per f)."""
     from ..ps.pa import W_HI, W_LO, W_SEED
 
     return [

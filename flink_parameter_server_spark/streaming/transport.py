@@ -135,16 +135,17 @@ class FileQueueTransport:
         self,
         spark: SparkSession,
         init_fn: InitFn,
-        max_files_per_trigger: int | None = 1,
         params: DataFrame | None = None,
-        consumer: str = "file",
     ) -> BatchParameterServer:
-        """The decoupled parameter-server job: consume the worker topic as
-        a file stream (one message file per micro-batch by default —
-        Kafka-partition-like arrival granularity), fold pushes, answer
-        pulls onto the server->worker topic. Runs availableNow (drains
-        the topic, then stops) and returns the server holding the final
-        model, exactly like `ParameterServerLogic.close -> output`.
+        """The decoupled parameter-server job: consume the worker topic
+        through Spark's builtin file source, one message file per
+        micro-batch (Kafka-partition-like arrival granularity, with exact
+        admission control on restart too), fold pushes, answer pulls onto
+        the server->worker topic. Runs availableNow (drains the topic,
+        then stops) and returns the server holding the final model,
+        exactly like `ParameterServerLogic.close -> output`. The native
+        ``format("fpsqueue")`` source (sources/fps_queue.py) remains the
+        reader/writer API over the same topics.
 
         ``params`` seeds the server state (A6 transformWithModelLoad
         composed with the transport): a restarted incarnation resumes
@@ -152,17 +153,7 @@ class FileQueueTransport:
         pass the prior run's ``server.params`` (or a
         ``BatchParameterServer.load`` read of a dumped model). Without
         it a restart holds offsets but starts model-fresh, silently
-        dropping previously folded pushes.
-
-        ``consumer`` selects the topic consumer: ``'file'`` (default,
-        Spark's builtin file source — exact maxFilesPerTrigger admission,
-        keep it on restart paths) or ``'fpsqueue'`` (the native Python
-        Data Source, sources/fps_queue.py — same per-file arrival
-        granularity via maxFilesPerBatch on fresh runs; its
-        rate-limiting is self-tracked, so the FIRST batch after a
-        checkpoint restart is coarse — see FPSQueueStreamReader).
-        Per-file answer equivalence between the two is pinned in
-        tests/test_fps_queue.py."""
+        dropping previously folded pushes."""
         ps = BatchParameterServer(init_fn=init_fn, params=params)
         s2w = self.s2w
 
@@ -184,37 +175,17 @@ class FileQueueTransport:
                 # idempotent per-batch dir: a replayed batch overwrites itself
                 answers.write.mode("overwrite").parquet(f"{s2w}/bid={batch_id}")
 
-        if consumer == "fpsqueue":
-            from ..sources.fps_queue import register as _register_fpsq
-
-            _register_fpsq(spark)
-            ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in W2S_SCHEMA.fields)
-            reader = (
-                spark.readStream.format("fpsqueue")
-                .option("path", self.w2s)
-                .option("ddl", ddl)
-            )
-            if max_files_per_trigger is not None:
-                reader = reader.option("maxFilesPerBatch", max_files_per_trigger)
-            stream = reader.load()
-        else:
-            reader = spark.readStream.schema(W2S_SCHEMA)
-            if max_files_per_trigger is not None:
-                reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-            stream = reader.parquet(os.path.join(self.w2s, "*"))
-        writer = stream.writeStream.foreachBatch(serve).option(
-            "checkpointLocation", self.checkpoint
+        stream = (
+            spark.readStream.schema(W2S_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(self.w2s, "*"))
         )
-        if consumer == "fpsqueue":
-            # availableNow computes ONE target offset up front, which
-            # collapses the self-rate-limited reader into a single coarse
-            # batch (see FPSQueueStreamReader); drain with repeated
-            # micro-batches instead so maxFilesPerBatch admits per-file.
-            q = writer.start()
-            q.processAllAvailable()
-            q.stop()
-        else:
-            q = writer.trigger(availableNow=True).start()
+        q = (
+            stream.writeStream.foreachBatch(serve)
+            .option("checkpointLocation", self.checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination()
         return ps
 

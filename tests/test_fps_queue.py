@@ -134,49 +134,6 @@ def test_reads_real_transport_topic_in_stamped_order(fpsq, spark, tmp_path):
     assert all(r.delta == [1.0, 2.0] for r in rows if r.kind == "push")
 
 
-def test_server_answers_equivalent_across_consumers(fpsq, spark, tmp_path):
-    """run_server(consumer='fpsqueue') must produce answer-for-answer
-    the same pull answers as the builtin file source at the same
-    per-file batch granularity — including the interleaving-sensitive
-    case: pull BEFORE a push (answers init value) then pull AFTER it
-    (answers the folded value). Fresh runs (restart stays on 'file' —
-    see the coarse-first-batch note in FPSQueueStreamReader)."""
-    from pyspark.sql import functions as F
-
-    def init_fn(pid):
-        return F.array(F.lit(0.0), F.lit(0.0))
-
-    results = {}
-    for consumer in ("file", "fpsqueue"):
-        root = str(tmp_path / consumer)
-        tr = FileQueueTransport(root)
-        keys = spark.range(2).select(F.col("id").alias("param_id"))
-        tr.send(tr.pulls(keys), "pull_before")
-        tr.send(
-            tr.pushes(
-                spark.range(2).select(
-                    F.col("id").alias("param_id"),
-                    F.array(F.lit(1.5), F.lit(-2.0)).alias("delta"),
-                )
-            ),
-            "push",
-        )
-        tr.send(tr.pulls(keys), "pull_after")
-        tr.run_server(spark, init_fn, consumer=consumer)
-        results[consumer] = sorted(
-            (r.batch_id, r.param_id, tuple(r.value))
-            for r in tr.answers(spark).collect()
-        )
-    assert results["file"] == results["fpsqueue"], results
-    # and the interleaving itself: batch 0 answers init, batch 2 folded
-    by_batch = {}
-    for bid, pid, val in results["file"]:
-        by_batch.setdefault(bid, set()).add(val)
-    batches = sorted(by_batch)
-    assert by_batch[batches[0]] == {(0.0, 0.0)}
-    assert by_batch[batches[-1]] == {(1.5, -2.0)}
-
-
 def test_offset_boundary_contract_violation_raises(fpsq, spark, tmp_path):
     """ADVICE r7: positional offsets are only stable under the
     producer's monotonic-utime contract. The offset JSON pins the

@@ -62,8 +62,6 @@ BOUNDED_BNLJ = {
     "event_value_tiers": (1, "constant tier-boundary frame"),
     # hour-grid fill: bounded spark.range over the window span
     "events_multires_rollup": (1, "bounded hour grid"),
-    # multiclass step joins the constant N_CLASSES x N_FEATURES base grid
-    "pa_step_weights": (1, "10x64 class-feature grid"),
     # sketch probe grids (hash-row x width) are constant-sized
     "sketch_point_queries": (3, "constant sketch probe grids"),
     # BM25/TF-IDF broadcast the 1-row (N, avgdl) corpus statistics

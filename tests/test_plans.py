@@ -60,12 +60,11 @@ def test_topk_uses_takeordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_ps_push_fold_is_exploded_sum_not_collect_list(spark):
-    """The kernel's push fold must aggregate exploded (param_id, dim, v)
-    triplets with a partial-agg sum — never collect_list over the raw
-    delta arrays, whose per-key state is O(fan-in x k) and OOMs when
-    fan-in = instances-per-feature (VERDICT r1 #5). The only collect_list
-    allowed is the k-row re-assembly after the dim-level sum."""
+def test_ps_push_fold_is_flat_sums(spark, monkeypatch):
+    """The kernel's push fold is k flat element sums in ONE aggregation,
+    with k derived from init_fn: no row explosion, no second shuffle and
+    no collect_list over the raw delta arrays (whose per-key state is
+    O(fan-in x k) and OOMs when fan-in = instances-per-feature)."""
     from pyspark.sql import functions as F
 
     from flink_parameter_server_spark.ps.kernel import BatchParameterServer
@@ -77,35 +76,11 @@ def test_ps_push_fold_is_exploded_sum_not_collect_list(spark):
     ps = BatchParameterServer(lambda pid: F.array(F.lit(0.0), F.lit(0.0)))
     ps.push(deltas)
     plan = ps.params._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list(delta" not in plan
-    # dim-level sum fold with map-side partial aggregation
-    assert "posexplode" in plan.lower() or "Generate" in plan
-    assert plan.count("HashAggregate") + plan.count("ObjectHashAggregate") >= 2
-    # and the fold is numerically the elementwise sum
-    rows = {r["param_id"]: r["value"] for r in ps.params.collect()}
-    assert rows[0] == [20.0, 40.0]
-
-
-def test_ps_push_fold_static_k_is_flat_sums(spark):
-    """Companion to the generic-fold pin above: when the server knows its
-    vector dimension, the fold must be k flat element sums in ONE
-    aggregation — no row explosion, no second shuffle, no collect_list
-    reassembly (the r5 static-k path, measured 3x on the MF epoch)."""
-    from pyspark.sql import functions as F
-
-    from flink_parameter_server_spark.ps.kernel import BatchParameterServer
-
-    deltas = spark.range(100).select(
-        (F.col("id") % 5).alias("param_id"),
-        F.array(F.lit(1.0), F.lit(2.0)).alias("delta"),
-    )
-    ps = BatchParameterServer(lambda pid: F.array(F.lit(0.0), F.lit(0.0)), k=2)
-    ps.push(deltas)
-    plan = ps.params._jdf.queryExecution().executedPlan().toString()
     assert "posexplode" not in plan.lower() and "Generate" not in plan
     assert "collect_list" not in plan
     # one partial+final aggregation pair, not two chained aggregations
     assert plan.count("HashAggregate") + plan.count("ObjectHashAggregate") == 2
+    # and the fold is numerically the elementwise sum
     rows = {r["param_id"]: r["value"] for r in ps.params.collect()}
     assert rows[0] == [20.0, 40.0]
 
@@ -120,6 +95,25 @@ def test_ps_push_fold_static_k_is_flat_sums(spark):
     plan = model._jdf.queryExecution().executedPlan().toString()
     assert "partial_sum(" in plan  # the fold aggregation is in view
     assert "transform(uv" not in plan
+    scratch.release()
+
+    # so does train_bidirectional's, for both factor sides (its pushes
+    # are checkpointed, so read the deltas as they reach push)
+    pushed = []
+    real_push = BatchParameterServer.push
+
+    def recording_push(self, deltas):
+        pushed.append(deltas._jdf.queryExecution().optimizedPlan().toString())
+        return real_push(self, deltas)
+
+    monkeypatch.setattr(BatchParameterServer, "push", recording_push)
+    mf.train_bidirectional(spark, mf.ratings(spark, SF_SMALL), epochs=1)
+    assert len(pushed) == 1
+    import re
+
+    for vec in ("uvec", "ivec"):
+        assert not re.search(rf"transform\({vec}#", pushed[0]), pushed[0]
+        assert re.search(rf"{vec}#\d+\[7\]", pushed[0]), pushed[0]
     scratch.release()
 
 

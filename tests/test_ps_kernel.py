@@ -163,3 +163,49 @@ def test_superseded_params_caches_bounded_by_checkpoint_every(spark):
     assert got == want
     scratch.release()
     assert not seen & scratch.persistent_rdd_ids(spark)
+
+
+def test_push_derives_width_without_a_spark_job(spark):
+    """The fold width is size(init_fn(param_id)) over a one-row local
+    relation, which Catalyst folds on the driver: a lazy push (width
+    derivation included) launches no Spark job. The control count in
+    the same job group shows the group does see jobs."""
+    sc = spark.sparkContext
+    deltas = spark.createDataFrame([(1, [1.0, 0.5])], ["param_id", "delta"])
+    ps = BatchParameterServer(init_fn=mf.item_vec)
+    group = "test_push_derives_width"
+    sc.setJobGroup(group, "width derivation")
+    try:
+        ps.push(deltas.select("param_id", F.array(*[F.lit(0.5)] * mf.K).alias("delta")))
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert ps._width == mf.K
+        deltas.count()  # control
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    scratch.release()
+
+
+def test_push_cuts_lineage_through_kernel_scoped_checkpoint(spark, monkeypatch):
+    """The traced benchmark counts and times lineage cuts by wrapping the
+    name ``kernel.scoped_checkpoint``: every cut must go through that
+    name, once per ``checkpoint_every`` pushes. A cut routed elsewhere
+    would silently read 0 in the traced checkpoint metrics."""
+    from flink_parameter_server_spark.ps import kernel
+
+    calls = []
+    real = kernel.scoped_checkpoint
+
+    def counting(df, ids):
+        calls.append(1)
+        return real(df, ids)
+
+    monkeypatch.setattr(kernel, "scoped_checkpoint", counting)
+    every = 2
+    ps = BatchParameterServer(init_fn=_init_fn, checkpoint_every=every)
+    for _ in range(2 * every):
+        ps.push(spark.createDataFrame([(1, [1.0, 0.5])], ["param_id", "delta"]))
+    assert len(calls) == 2
+    assert {r.param_id: r.value for r in ps.params.collect()} == {1: [5.0, 4.0]}
+    scratch.release()

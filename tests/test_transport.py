@@ -57,7 +57,7 @@ def test_file_queue_transport_matches_in_job_kernel(spark, topic_root):
     tp.send(tp.pushes(deltas, worker_partition=1), "001_push")
     tp.send(tp.pulls(warm_keys, worker_partition=1), "002_warm")
 
-    server = tp.run_server(spark, init_fn=_init, max_files_per_trigger=1)
+    server = tp.run_server(spark, init_fn=_init)
     answers = tp.answers(spark)
 
     # in-job replay of the same message order: the equivalence reference
@@ -99,7 +99,7 @@ def test_mixed_batch_folds_pushes_before_answering_pulls(spark, topic_root):
         tp.pulls(_keys(spark, [3]))
     )
     tp.send(mixed, "000_mixed")
-    tp.run_server(spark, init_fn=_init, max_files_per_trigger=1)
+    tp.run_server(spark, init_fn=_init)
     got = _by_key(tp.answers(spark).select("param_id", "value"))
     assert got[3] == [2.5, 3.0]  # init(3)=[1.5,4.0] + [1.0,-1.0]
 
@@ -110,14 +110,14 @@ def test_transport_server_restart_resumes_from_checkpoint(spark, topic_root):
     folding onto the model carried over from the previous run."""
     tp = FileQueueTransport(topic_root)
     tp.send(tp.pushes(_deltas(spark, [(7, [1.0, 1.0])])), "000_a")
-    server1 = tp.run_server(spark, init_fn=_init, max_files_per_trigger=1)
+    server1 = tp.run_server(spark, init_fn=_init)
     model1 = _by_key(server1.params)
 
     tp.send(tp.pushes(_deltas(spark, [(7, [0.5, 0.0])])), "001_b")
     # new server incarnation seeded with the previous model (A6
     # transformWithModelLoad composed with the transport), same checkpoint
     server2 = FileQueueTransport(topic_root).run_server(
-        spark, init_fn=_init, max_files_per_trigger=1, params=server1.params
+        spark, init_fn=_init, params=server1.params
     )
     model2 = _by_key(server2.params)
     assert model1[7] == [4.5, 9.0]  # init(7)=[3.5,8.0] + [1.0,1.0]
@@ -133,12 +133,10 @@ def test_transport_unseeded_restart_is_model_fresh(spark, topic_root):
     the model is pure lazy init."""
     tp = FileQueueTransport(topic_root)
     tp.send(tp.pushes(_deltas(spark, [(7, [1.0, 1.0])])), "000_a")
-    tp.run_server(spark, init_fn=_init, max_files_per_trigger=1)
+    tp.run_server(spark, init_fn=_init)
 
     tp.send(tp.pushes(_deltas(spark, [(9, [0.5, 0.0])])), "001_b")
-    server2 = FileQueueTransport(topic_root).run_server(
-        spark, init_fn=_init, max_files_per_trigger=1
-    )
+    server2 = FileQueueTransport(topic_root).run_server(spark, init_fn=_init)
     model2 = _by_key(server2.params)
     assert 7 not in model2  # file a's key: neither re-folded nor carried
     assert model2[9] == [5.0, 10.0]  # init(9)=[4.5,10.0] + [0.5,0.0]
@@ -149,7 +147,7 @@ def test_push_only_run_has_empty_answer_stream(spark, topic_root):
     DataFrame with the PullAnswer schema, not a path-missing error."""
     tp = FileQueueTransport(topic_root)
     tp.send(tp.pushes(_deltas(spark, [(1, [1.0, 1.0])])), "000_push")
-    tp.run_server(spark, init_fn=_init, max_files_per_trigger=1)
+    tp.run_server(spark, init_fn=_init)
     ans = tp.answers(spark)
     assert ans.count() == 0
     assert set(ans.columns) == {"worker_partition", "param_id", "value", "batch_id"}
@@ -163,7 +161,7 @@ def test_send_order_is_deterministic_within_one_mtime_tick(spark, topic_root):
     tp = FileQueueTransport(topic_root)
     tp.send(tp.pushes(_deltas(spark, [(3, [1.0, -1.0])])), "000_push")
     tp.send(tp.pulls(_keys(spark, [3])), "001_pull")
-    tp.run_server(spark, init_fn=_init, max_files_per_trigger=1)
+    tp.run_server(spark, init_fn=_init)
     got = _by_key(tp.answers(spark).select("param_id", "value"))
     assert got[3] == [2.5, 3.0]  # init(3)=[1.5,4.0] + [1.0,-1.0]
 
@@ -178,14 +176,27 @@ def test_answers_schema_consistent_between_push_only_and_populated(spark, topic_
 
     push_only = FileQueueTransport(topic_root + "/a")
     push_only.send(push_only.pushes(_deltas(spark, [(7, [1.0, 1.0])])), "000_a")
-    push_only.run_server(spark, init_fn=_init, max_files_per_trigger=1)
+    push_only.run_server(spark, init_fn=_init)
     empty_ans = push_only.answers(spark)
 
     served = FileQueueTransport(topic_root + "/b")
     served.send(served.pulls(_keys(spark, [3])), "000_p")
-    served.run_server(spark, init_fn=_init, max_files_per_trigger=1)
+    served.run_server(spark, init_fn=_init)
     real_ans = served.answers(spark)
 
     assert empty_ans.schema == S2W_SCHEMA
     assert real_ans.schema == S2W_SCHEMA
     assert empty_ans.unionByName(real_ans).count() == real_ans.count()
+
+
+def test_server_push_fold_is_flat_sums(spark, topic_root):
+    """The server folds each micro-batch's pushes with the kernel's one
+    flat-sum aggregation: no explode and no collect_list re-assembly in
+    the model's executed plan."""
+    tp = FileQueueTransport(topic_root)
+    tp.send(tp.pushes(_deltas(spark, [(1, [1.0, 1.0]), (1, [0.5, 0.0])])), "000_a")
+    tp.send(tp.pushes(_deltas(spark, [(2, [2.0, 0.0])])), "001_b")
+    server = tp.run_server(spark, init_fn=_init)
+    plan = server.params._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan and "collect_list" not in plan
+    assert _by_key(server.params) == {1: [2.0, 3.0], 2: [3.0, 3.0]}
