@@ -60,13 +60,12 @@ def test_topk_uses_takeordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_ps_push_fold_is_flat_sums(spark, monkeypatch):
-    """The kernel's push fold is k flat element sums in ONE aggregation,
-    with k derived from init_fn: no row explosion, no second shuffle and
-    no collect_list over the raw delta arrays (whose per-key state is
-    O(fan-in x k) and OOMs when fan-in = instances-per-feature)."""
+def _pushed_fold_plan(spark):
+    """Push 100 two-wide deltas over 5 keys into a server built from its
+    init_fn alone; return (executed plan, {param_id: value})."""
     from pyspark.sql import functions as F
 
+    from flink_parameter_server_spark import scratch
     from flink_parameter_server_spark.ps.kernel import BatchParameterServer
 
     deltas = spark.range(100).select(
@@ -74,14 +73,39 @@ def test_ps_push_fold_is_flat_sums(spark, monkeypatch):
         F.array(F.lit(1.0), F.lit(2.0)).alias("delta"),
     )
     ps = BatchParameterServer(lambda pid: F.array(F.lit(0.0), F.lit(0.0)))
-    ps.push(deltas)
-    plan = ps.params._jdf.queryExecution().executedPlan().toString()
+    try:
+        ps.push(deltas)
+        plan = ps.params._jdf.queryExecution().executedPlan().toString()
+        return plan, {r["param_id"]: r["value"] for r in ps.params.collect()}
+    finally:
+        # an identical push left cached would show up in the next plan
+        scratch.release()
+
+
+def test_ps_push_fold_is_exploded_sum_not_collect_list(spark):
+    """The kernel's push fold must be an element-level sum with map-side
+    partial aggregation — never collect_list over the raw delta arrays,
+    whose per-key state is O(fan-in x k) and OOMs when fan-in =
+    instances-per-feature. The width is now derived from init_fn, so the
+    sum runs over the k flat elements rather than exploded rows."""
+    plan, rows = _pushed_fold_plan(spark)
+    assert "collect_list" not in plan
+    assert "partial_sum(" in plan
+    # and the fold is numerically the elementwise sum
+    assert rows[0] == [20.0, 40.0]
+
+
+def test_ps_push_fold_static_k_is_flat_sums(spark, monkeypatch):
+    """The fold is k flat element sums in ONE aggregation, with the static
+    k derived from init_fn: no row explosion, no second shuffle, no
+    collect_list reassembly."""
+    from flink_parameter_server_spark.ps.kernel import BatchParameterServer
+
+    plan, rows = _pushed_fold_plan(spark)
     assert "posexplode" not in plan.lower() and "Generate" not in plan
     assert "collect_list" not in plan
     # one partial+final aggregation pair, not two chained aggregations
     assert plan.count("HashAggregate") + plan.count("ObjectHashAggregate") == 2
-    # and the fold is numerically the elementwise sum
-    rows = {r["param_id"]: r["value"] for r in ps.params.collect()}
     assert rows[0] == [20.0, 40.0]
 
     # mf.train's step feeds the fold a flat array(...) delta: a
