@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import int_hash
 from ..functions.vectors import as_double, norm2
 from ..scratch import scoped_checkpoint, tracked_checkpoint, unpersist_rdd_ids
-from .similarity import _fast_cosine
+from .similarity import _fast_cosine, _ivf2_assign, _nearest_centroids, _top_k, _with_parent
 
 IVF_SEED = 2027
 _CELLS_SCHEMA = "vec_id bigint, embedding array<float>, ne double, cid bigint"
@@ -67,21 +67,24 @@ def _normed(df: DataFrame, vec_col: str, out: str) -> DataFrame:
 
 def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, embedding, ne) x broadcast centroids -> argmax-cosine cid."""
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cid"))
+    return _nearest_centroids(vectors, centroids)
+
+
+def _dim_means(df: DataFrame, keys, vec, out: str) -> DataFrame:
+    """The Lloyd update of both trainers: the per-dimension mean of the
+    ``vec`` arrays per ``keys`` group, as an array ``out`` in dimension
+    order (posexplode -> avg per (keys, pos) -> array_sort of the
+    collected (pos, mu) structs)."""
     return (
-        vectors.crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "embedding",
-            "ne",
-            "cid",
-            _fast_cosine(
-                as_double(F.col("embedding")), F.col("cv"), F.col("ne"), F.col("nc")
-            ).alias("cos_c"),
+        df.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(F.avg("x").alias("mu"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "mu"))), lambda s: s["mu"]
+            ).alias(out)
         )
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "ne", "cid")
     )
 
 
@@ -97,7 +100,7 @@ def _train_centroids(
 ) -> DataFrame:
     """Lloyd training over a normed (vec_id, embedding, ne) frame —
     factored out of :func:`build_ivf_index` (r10) so the in-memory
-    fixed-k assignment twin (:func:`kmeans_assign`) trains the same
+    fixed-k assignment (:func:`kmeans_assign`) trains the same
     quantizer without a disk round-trip. Init = the n_cells vectors
     first in seeded-hash order; each iteration is one broadcast
     assignment pass + one per-dimension mean. Every intermediate is
@@ -105,7 +108,7 @@ def _train_centroids(
     returned frame and then frees those ids.
 
     ``two_level`` (r11): each iteration's assignment pass runs through
-    the centroid-of-centroids prune (:func:`_two_level_assign`) —
+    the centroid-of-centroids prune (:func:`similarity._ivf2_assign`) —
     TRAINING itself is n*k per iteration under flat argmax, so at
     k >> sqrt(n-scale) the prune applies to Lloyd exactly as it does
     to the final assignment (~2n*sqrt(k) per iteration; the
@@ -156,23 +159,11 @@ def _train_centroids(
     )
     for _ in range(iters):
         if two_level:
-            children, sup_local = _two_level_tables(
-                v.sparkSession, cent, n_super, iters, seed
-            )
-            assigned = _two_level_assign(tv, children, sup_local)
+            geo = _two_level_tables(v.sparkSession, cent, n_super, iters, seed)
+            assigned = _ivf2_assign(tv, geo)
         else:
             assigned = _assign(tv, cent)
-        means = (
-            assigned.select("cid", F.posexplode(as_double(F.col("embedding"))).alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-                ).alias("cv")
-            )
-        )
+        means = _dim_means(assigned, ["cid"], as_double(F.col("embedding")), "cv")
         cent = scoped_checkpoint(
             means.where(norm2(F.col("cv")) > 0).select(
                 "cid", "cv", F.sqrt(norm2(F.col("cv"))).alias("nc")
@@ -197,11 +188,11 @@ def kmeans_centroids(
     pattern), so the returned frame has no checkpoint dependency and
     broadcasts at n_cells rows no matter how large the corpus is.
 
-    Sizing k at scale (measured, tools/fixedk_rehearsal.py +
-    BASELINE.md r10): assignment costs n*k cosines, the semantic cell
-    self-join costs ~n^2/k — a CONSTANT k makes the pair join the
-    quadratic term (fixedk16 measured slower than stride at 10x), a
-    fixed-stride rule (k = n/stride) makes the ASSIGNMENT quadratic.
+    Sizing k at scale (measured, BASELINE.md r10/r11; the receipt
+    script is in git history): assignment costs n*k cosines, the
+    semantic cell self-join costs ~n^2/k — a CONSTANT k makes the pair
+    join the quadratic term (fixedk16 measured slower than stride at
+    10x), a fixed-stride rule (k = n/stride) makes the ASSIGNMENT quadratic.
     k ~ sqrt(n) balances both at n^1.5 with a sqrt(n)-row broadcast
     (~16 MB at 1e9 docs) — the standard IVF sizing, the geometry to
     deploy, and (r11) the sizing the oracle-checked counted-n rule in
@@ -232,8 +223,10 @@ def kmeans_assign(
     keep_centroid_cos: bool = False,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """Fixed-k-geometry twin of :func:`similarity.ivf_assign` — same
-    output shape (vec_id, embedding, ne, cid[, cos_c]) so EVERY
+    """Fixed-k-geometry form of :func:`similarity.ivf_assign`: both
+    rank cells with the one nearest-centroid ranker
+    (:func:`similarity._nearest_centroids`) and return the same
+    shape (vec_id, embedding, ne, cid[, cos_c]), so EVERY
     semantic consumer runs on sampled-k-means cells unchanged:
     embedding_semantic_pairs(assign=), corpus_curate(sem_assign=),
     mlprep's cluster_balance part, semdedup_prune(assign=). The
@@ -257,23 +250,8 @@ def kmeans_assign(
     # zero-norm vectors have no cosine cell — exclude exactly as the
     # persisted build's _normed does (keeps the cosine's na*nb divisor
     # nonzero under ANSI mode)
-    emb = emb.where(F.col("ne") > 0)
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cid"))
-    extra = ["cos_c"] if keep_centroid_cos else []
-    return (
-        emb.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "ne",
-            "cid",
-            _fast_cosine(
-                as_double(F.col("embedding")), F.col("cv"), F.col("ne"), F.col("nc")
-            ).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "ne", "cid", *extra)
+    return _nearest_centroids(
+        emb.where(F.col("ne") > 0), cent, keep_cos=keep_centroid_cos
     )
 
 
@@ -321,19 +299,27 @@ def kmeans_assign_two_level(
     ``emb``: a normed (vec_id, embedding, ne) frame. ``centroids``: a
     kmeans_centroids-shaped driver-local (cid, cv, nc) relation.
     Output shape matches :func:`kmeans_assign` (vec_id, embedding, ne,
-    cid[, cos_c]) so every semantic consumer runs on it unchanged."""
-    children, sup_local = _two_level_tables(spark, centroids, n_super, iters, seed)
-    return _two_level_assign(
-        emb, children, sup_local, n_super_probe, keep_centroid_cos
+    cid[, cos_c]) so every semantic consumer runs on it unchanged.
+    Steps 2-3 are the one two-level assignment
+    (:func:`similarity._ivf2_assign`) the oracle lane's
+    :func:`similarity.ivf2_assign` runs over its counted tables; the
+    lanes differ only in how the (sup, children) tables are built."""
+    # zero-norm vectors excluded as in kmeans_assign
+    return _ivf2_assign(
+        emb.where(F.col("ne") > 0),
+        _two_level_tables(spark, centroids, n_super, iters, seed),
+        keep_centroid_cos,
+        n_super_probe,
     )
 
 
 def _two_level_tables(spark, centroids: DataFrame, n_super: int | None, iters: int, seed: int):
     """Train the super-quantizer over the centroid table itself and
-    return the two DRIVER-LOCAL relations the prune needs:
-    ``children`` (cid, cv, nc, scid — each centroid with its parent
-    super cell) and ``sup_local`` (scid, sv, ns). Both are <= k rows —
-    the collect-bounded discipline kmeans_centroids already uses."""
+    return the two DRIVER-LOCAL relations the prune needs, as the
+    (sup, children) geometry :func:`similarity._ivf2_assign` takes:
+    ``sup`` (scid, sv, ns) and ``children`` (cid, cv, nc, scid — each
+    centroid with its parent super cell). Both are <= k rows — the
+    collect-bounded discipline kmeans_centroids already uses."""
     build_ids: set[int] = set()
     cent_v = centroids.select(
         F.col("cid").alias("vec_id"), F.col("cv").alias("embedding"),
@@ -347,74 +333,20 @@ def _two_level_tables(spark, centroids: DataFrame, n_super: int | None, iters: i
     )
     # parent of each centroid: flat argmax over the super table (k x
     # sqrt(k) — driver-local scale), collected alongside the centroids
-    wp = Window.partitionBy("cid").orderBy(F.col("cos_s").desc(), F.col("scid"))
-    parented = (
-        centroids.crossJoin(F.broadcast(sup))
-        .select(
-            "cid", "cv", "nc", "scid",
-            _fast_cosine(F.col("cv"), F.col("sv"), F.col("nc"), F.col("ns")).alias("cos_s"),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .where(F.col("rn") == 1)
-        .select("cid", "cv", "nc", "scid")
-    )
     rows = [
         (int(r["cid"]), [float(x) for x in r["cv"]], float(r["nc"]), int(r["scid"]))
-        for r in parented.collect()
+        for r in _with_parent(centroids, sup).collect()
     ]
     sup_rows = [
         (int(r["scid"]), [float(x) for x in r["sv"]], float(r["ns"]))
         for r in sup.collect()
     ]
     unpersist_rdd_ids(spark, build_ids)
+    sup_local = spark.createDataFrame(sup_rows, "scid bigint, sv array<double>, ns double")
     children = spark.createDataFrame(
         rows, "cid bigint, cv array<double>, nc double, scid bigint"
     )
-    sup_local = spark.createDataFrame(sup_rows, "scid bigint, sv array<double>, ns double")
-    return children, sup_local
-
-
-def _two_level_assign(
-    emb: DataFrame,
-    children: DataFrame,
-    sup_local: DataFrame,
-    n_super_probe: int = 1,
-    keep_centroid_cos: bool = False,
-    keep_top: int = 1,
-) -> DataFrame:
-    """The prune itself: coarse argmax against the super table, hash
-    join to the probed super cells' children, argmax within.
-    ``keep_top``: keep this many best CHILD cells per vector (> 1 is
-    the multi-cell probe shape ivf_search's n_probe wants — rows then
-    carry rn as the per-vector cell rank)."""
-    emb = emb.where(F.col("ne") > 0)
-    ws = Window.partitionBy("vec_id").orderBy(F.col("cos_s").desc(), F.col("scid"))
-    coarse = (
-        emb.crossJoin(F.broadcast(sup_local))
-        .select(
-            "vec_id", "embedding", "ne", "scid",
-            _fast_cosine(
-                as_double(F.col("embedding")), F.col("sv"), F.col("ne"), F.col("ns")
-            ).alias("cos_s"),
-        )
-        .withColumn("rn", F.row_number().over(ws))
-        .where(F.col("rn") <= n_super_probe)
-        .select("vec_id", "embedding", "ne", "scid")
-    )
-    wf = Window.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cid"))
-    extra = ["cos_c"] if keep_centroid_cos else []
-    return (
-        coarse.join(F.broadcast(children), "scid")  # hash join on the parent id
-        .select(
-            "vec_id", "embedding", "ne", "cid",
-            _fast_cosine(
-                as_double(F.col("embedding")), F.col("cv"), F.col("ne"), F.col("nc")
-            ).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(wf))
-        .where(F.col("rn") <= keep_top)
-        .select("vec_id", "embedding", "ne", "cid", *extra)
-    )
+    return sup_local, children
 
 
 def _pq_train_codebook(
@@ -532,18 +464,7 @@ def _pq_train_residual_codebook(
                 )
             )["aid"].alias("aid"),
         )
-        cb = (
-            enc.select("m", "aid", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("m", "aid", "pos")
-            .agg(F.avg("x").alias("mu"))
-            .groupBy("m", "aid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                    lambda s: s["mu"],
-                ).alias("cs")
-            )
-        )
+        cb = _dim_means(enc, ["m", "aid"], F.col("sv"), "cs")
         if build_ids is not None:
             cb = scoped_checkpoint(cb, build_ids)
     return cb.select("aid", "m", "cs")
@@ -586,9 +507,10 @@ def assign_two_level(spark, index_dir: str) -> bool:
 
 
 def _load_assign_tables(spark, index_dir: str):
+    """The persisted two-level (sup, children) geometry."""
     return (
-        spark.read.parquet(f"{index_dir}/assign_children"),
         spark.read.parquet(f"{index_dir}/assign_super"),
+        spark.read.parquet(f"{index_dir}/assign_children"),
     )
 
 
@@ -599,8 +521,7 @@ def _assign_for_index(spark, index_dir: str, vn: DataFrame) -> DataFrame:
     assignment shares, so a two-level index can never accrete
     flat-argmax rows (or vice versa)."""
     if assign_two_level(spark, index_dir):
-        children, sup_local = _load_assign_tables(spark, index_dir)
-        return _two_level_assign(vn, children, sup_local)
+        return _ivf2_assign(vn, _load_assign_tables(spark, index_dir))
     cent = spark.read.parquet(f"{index_dir}/centroids")
     return _assign(vn, cent)
 
@@ -680,23 +601,18 @@ def _pq_pack_expr(a2r_map: str, codes: str = "codes", bits: int = 4) -> str:
     overhead and stores the whole vector's codes in PQ_M*bits
     meaningful bits (32 at the 4-bit default, 64 at pq_bits=8).
 
-    8-bit overflow discipline (r15, verified under ANSI): PQ_M=8 byte
-    fields fill the long EXACTLY, so rank 128-255 in subspace 7 sets
+    Overflow discipline (r15, verified under ANSI): PQ_M=8 byte fields
+    fill the long EXACTLY, so at 8 bits rank 128-255 in subspace 7 sets
     the sign bit — the pack shifts the rank directly
-    (``shiftleft(rank, 8m)``, a bitwise op that never raises) instead
-    of multiplying by a power-of-two literal (``rank * 1L<<56``
+    (``shiftleft(rank, bits*m)``, a bitwise op that never raises)
+    instead of multiplying by a power-of-two literal (``rank * 1L<<56``
     ARITHMETIC_OVERFLOWs under ANSI); the summed fields are
     bit-disjoint, so every partial sum is carry-free and
-    representable. The 4-bit form keeps the r13 expression
-    byte-identical (existing persisted indexes replay unchanged)."""
+    representable. At 4 bits the value stays below 2^32 and equals the
+    r13 form ``rank * shiftleft(1L, 4m)``, so indexes written by it
+    read back unchanged."""
     from .similarity import PQ_M
 
-    if bits == 4:
-        return (
-            f"aggregate(zip_with({codes}, sequence(0, {PQ_M - 1}), "
-            f"(cd, mm) -> element_at({a2r_map}, cd * {PQ_M} + mm)"
-            f" * shiftleft(1L, 4 * mm)), 0L, (a, v) -> a + v)"
-        )
     return (
         f"aggregate(zip_with({codes}, sequence(0, {PQ_M - 1}), "
         f"(cd, mm) -> shiftleft(element_at({a2r_map}, cd * {PQ_M} + mm), "
@@ -709,22 +625,16 @@ def _pq_rank_read_expr(packed: str, bits: int) -> str:
     SQL fragment over a lambda variable ``mm`` — shared by unpack and
     the ADC scan. shiftrightunsigned + bitwise AND, NOT div/%: a
     negative packed long (8-bit sign-bit case) breaks integral div,
-    and Spark's % follows the dividend sign (measured: -1 % 256 = -1)."""
+    and Spark's % follows the dividend sign (measured: -1 % 256 = -1).
+    On the non-negative 4-bit values it equals the r13 div/% read."""
     return f"(shiftrightunsigned({packed}, {bits} * mm) & {(1 << bits) - 1})"
 
 
 def _pq_unpack_expr(r2a_map: str, packed: str = "packed", bits: int = 4) -> str:
     """packed BIGINT -> codes array<long> (anchor ids) — the map-only
-    inverse of :func:`_pq_pack_expr`; the hash-checkable view. The
-    4-bit form keeps the r13 div/% expression byte-identical (its
-    packed values are always non-negative — 32 used bits)."""
+    inverse of :func:`_pq_pack_expr`; the hash-checkable view."""
     from .similarity import PQ_M
 
-    if bits == 4:
-        return (
-            f"transform(sequence(0, {PQ_M - 1}), mm -> element_at({r2a_map}, "
-            f"(({packed} div shiftleft(1L, 4 * mm)) % 16) * {PQ_M} + mm))"
-        )
     return (
         f"transform(sequence(0, {PQ_M - 1}), mm -> element_at({r2a_map}, "
         f"{_pq_rank_read_expr(packed, bits)} * {PQ_M} + mm))"
@@ -881,7 +791,7 @@ def build_ivf_index(
     )
     cent.write.mode("overwrite").parquet(f"{index_dir}/centroids")
     if two_level:
-        children, sup_local = _two_level_tables(spark, cent, n_super, iters, seed)
+        sup_local, children = _two_level_tables(spark, cent, n_super, iters, seed)
         # the quantizer hierarchy PERSISTS (r15): assignment must be a
         # deterministic function of persisted state for add_vectors'
         # replay-idempotency contract (a replayed id must land in the
@@ -892,7 +802,7 @@ def build_ivf_index(
         # later assignment through it.
         children.write.mode("overwrite").parquet(f"{index_dir}/assign_children")
         sup_local.write.mode("overwrite").parquet(f"{index_dir}/assign_super")
-        final_assign = _two_level_assign(v, children, sup_local)
+        final_assign = _ivf2_assign(v, (sup_local, children))
     else:
         # a flat (re)build over a previously two-level dir must clear
         # the stale hierarchy, or mode detection would keep dispatching
@@ -1062,40 +972,20 @@ def ivf_search(
         # (consistent with the cells' own assignment, and free); derive
         # from the centroids only on a flat-built index, the pre-r15
         # behavior
-        if assign_two_level(spark, index_dir):
-            children, sup_local = _load_assign_tables(spark, index_dir)
-        else:
-            children, sup_local = _two_level_tables(spark, cent, None, 2, IVF_SEED)
-        probes = _two_level_assign(
-            q, children, sup_local, n_super_probe=n_super_probe, keep_top=n_probe
-        ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            F.col("ne").alias("nq"),
-            "cid",
+        geo = (
+            _load_assign_tables(spark, index_dir)
+            if assign_two_level(spark, index_dir)
+            else _two_level_tables(spark, cent, None, 2, IVF_SEED)
         )
+        probes = _ivf2_assign(q, geo, n_super_probe=n_super_probe, keep_top=n_probe)
     else:
-        wq = Window.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cid"))
-        probes = (
-            q.crossJoin(F.broadcast(cent))
-            .select(
-                "vec_id",
-                "embedding",
-                "ne",
-                "cid",
-                _fast_cosine(
-                    as_double(F.col("embedding")), F.col("cv"), F.col("ne"), F.col("nc")
-                ).alias("cos_c"),
-            )
-            .withColumn("rn", F.row_number().over(wq))
-            .where(F.col("rn") <= n_probe)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qv"),
-                F.col("ne").alias("nq"),
-                "cid",
-            )
-        )
+        probes = _nearest_centroids(q, cent, n_probe)
+    probes = probes.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        F.col("ne").alias("nq"),
+        "cid",
+    )
     # the probed_cids collect below would otherwise trigger the full
     # broadcast-cosine assignment a SECOND time when the scored join
     # recomputes the same uncached plan (ADVICE r7) — pin it once.
@@ -1155,18 +1045,9 @@ def ivf_search(
         cand = probes.select("query_id", "cid").join(codes, "cid")
         if exclude_self:
             cand = cand.where(F.col("vec_id") != F.col("query_id"))
-        # the packed-scan rank read matches the persisted width: the
-        # r13 div/% form at 4 bits (byte-identical replay), the
-        # sign-safe shiftrightunsigned/& form at 8 (r15 — see
-        # _pq_rank_read_expr for why div/% breaks on byte 7)
-        rank_read = (
-            "((packed div shiftleft(1L, 4 * mm)) % 16)"
-            if bits == 4
-            else _pq_rank_read_expr("packed", bits)
-        )
         adc_packed = F.expr(
             f"aggregate(transform(sequence(0, {PQ_M - 1}), mm -> "
-            f"element_at(lmap, {rank_read}"
+            f"element_at(lmap, {_pq_rank_read_expr('packed', bits)}"
             f" * {PQ_M} + mm)), 0L, (a, v) -> a + v)"
         )
         adcs = cand.join(lutmap, "query_id")
@@ -1220,7 +1101,7 @@ def ivf_search(
             .select("query_id", "neighbor_id")
         )
         qref = probes.select("query_id", "qv", "nq").dropDuplicates(["query_id"])
-        scored = (
+        return _top_k(
             short.join(qref, "query_id")
             .join(
                 cells.select(
@@ -1240,12 +1121,9 @@ def ivf_search(
                     ),
                     6,
                 ).alias("cos_sim"),
-            )
+            ),
+            k,
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-        return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
     scored = probes.join(cells, "cid")
     if exclude_self:
         scored = scored.where(F.col("vec_id") != F.col("query_id"))
@@ -1262,17 +1140,16 @@ def ivf_search(
             6,
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _top_k(scored, k)
 
 
 def add_vectors(spark, index_dir: str, emb: DataFrame, preassigned: bool = False) -> None:
     """Incrementally index new vectors WITHOUT re-running Lloyd
     (VERDICT r7 #8 — the serving story: a growing catalog appends, it
     does not rebuild): assign each new vector against the PERSISTED
-    centroids (one broadcast pass, identical arithmetic to the build's
-    :func:`_assign`) and append to the matching cell partitions.
-    Centroids are left untouched, so existing cell assignments — and
+    centroids (one broadcast pass through the build's own ranker,
+    :func:`_assign_for_index`) and append to the matching cell
+    partitions. Centroids are left untouched, so existing cell assignments — and
     therefore every already-served probe result — never change.
 
     Vectors whose vec_id is already in the index are skipped
@@ -1285,7 +1162,7 @@ def add_vectors(spark, index_dir: str, emb: DataFrame, preassigned: bool = False
     Zero-norm vectors are excluded as in the build.
 
     ``preassigned=True`` accepts a frame already carrying (vec_id,
-    embedding, ne, cid) from this module's own ``_assign`` arithmetic
+    embedding, ne, cid) from :func:`_assign`, the shared ranker
     (e.g. semantic_dedup's per-batch assignment) and skips the
     re-norm + re-assign pass entirely; the caller vouches for
     batch-unique vec_ids in that case — AND (r15) for matching the

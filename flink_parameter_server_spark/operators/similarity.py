@@ -21,6 +21,7 @@ from functools import reduce
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from ..functions.planes import (  # noqa: F401 (EMB_NEAR_DUP_SQL/SEMANTIC_PAIRS_SQL re-exported for dedup)
     DIM,
@@ -58,6 +59,55 @@ def _fast_cosine(a, b, na, nb):
     task binaries, dominating at bench scale (same lesson as the flat
     token hash, functions/hashing.py)."""
     return dot(a, b) / (na * nb)
+
+
+def _nearest_centroids(
+    rows, table, n: int = 1, *, on=None, keep=("vec_id", "embedding", "ne"),
+    vec=("embedding", "ne"), by=("vec_id",), keep_cos: bool = False, rank=None,
+):
+    """The nearest-centroid ranker every IVF quantizer shares, oracle
+    lane and persisted lane alike: each row of ``rows`` is scored by
+    :func:`_fast_cosine` against a broadcast centroid ``table`` —
+    crossed with it, or hash-joined to it on the parent key ``on`` —
+    and the top ``n`` per ``by`` group are kept, ordered by (cos desc,
+    centroid id), so ties go to the lowest id.
+
+    ``table`` is a centroid level (cid, cv, nc[, scid]), scored as
+    ``cos_c``, or a super level (scid, sv, ns), scored as ``cos_s``.
+    ``vec`` names the rows' (vector, norm) columns. A float vector (the
+    corpus, the oracle lane's tables) is cast with :func:`as_double`;
+    an array<double> one (the persisted lane's trained tables) is read
+    as is.
+    Returns ``keep`` (names or aliased columns), the centroid id, the
+    score when ``keep_cos``, and the rank when a ``rank`` name is
+    given."""
+    cid, cv, nc, cos = (
+        ("scid", "sv", "ns", "cos_s") if "sv" in table.columns else ("cid", "cv", "nc", "cos_c")
+    )
+    joined = (
+        rows.crossJoin(F.broadcast(table)) if on is None else rows.join(F.broadcast(table), on)
+    )
+    rn = rank or "rn"
+    w = Window.partitionBy(*by).orderBy(F.col(cos).desc(), F.col(cid))
+    top = (
+        joined.select(
+            *keep,
+            cid,
+            _fast_cosine(
+                _as_f64(joined, vec[0]), _as_f64(joined, cv), F.col(vec[1]), F.col(nc)
+            ).alias(cos),
+        )
+        .withColumn(rn, F.row_number().over(w))
+        # an argmax filters rn = 1, as the oracle SQL does
+        .where(F.col(rn) == 1 if n == 1 else F.col(rn) <= n)
+    )
+    return top.drop(*[c for c, kept in ((cos, keep_cos), (rn, rank)) if not kept])
+
+
+def _as_f64(df, name: str):
+    """Column ``name`` of ``df`` as array<double>: cast unless it is one."""
+    col = F.col(name)
+    return col if df.schema[name].dataType.elementType == DoubleType() else as_double(col)
 
 
 # one partition-count probe per (session, sf_dir): .rdd.getNumPartitions()
@@ -634,8 +684,16 @@ def ivf_assign(emb, keep_centroid_cos: bool = False):
     centroid table (and n^2/64 assignment FLOPs) grew linearly with the
     corpus (VERDICT r10 wrong-#1). ``keep_centroid_cos`` additionally
     carries the winning cosine, which SemDeDup's keep-rule ranks on."""
+    return _nearest_centroids(emb, _counted_centroids(emb), keep_cos=keep_centroid_cos)
+
+
+def _counted_centroids(emb):
+    """The counted-n centroid table (cid, cv, nc) of
+    planes.IVF_CENT_SQL: count n once (a 1-row aggregate attached as a
+    bounded broadcast, no driver action) and keep every
+    ceil(n / floor(sqrt(n)))-th vec_id."""
     nrow = emb.agg(F.count(F.lit(1)).alias("n_emb"))
-    cent = (
+    return (
         emb.crossJoin(F.broadcast(nrow))
         .where(F.col("vec_id") % counted_stride_col(F.col("n_emb")) == 0)
         .select(
@@ -643,24 +701,13 @@ def ivf_assign(emb, keep_centroid_cos: bool = False):
             F.col("ne").alias("nc"),
         )
     )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cid"))
-    extra = ["cos_c"] if keep_centroid_cos else []
-    return (
-        emb.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "ne",
-            "cid",
-            _fast_cosine(
-                as_double(F.col("embedding")), as_double(F.col("cv")),
-                F.col("ne"), F.col("nc"),
-            ).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "ne", "cid", *extra)
-    )
+
+
+def _with_parent(cent, sup):
+    """Each centroid of ``cent`` (cid, cv, nc) with the super cell it
+    ranks first in ``sup`` (scid, sv, ns): (cid, cv, nc, scid) — the
+    children table of a two-level geometry, in both lanes."""
+    return _nearest_centroids(cent, sup, keep=("cid", "cv", "nc"), vec=("cv", "nc"), by=("cid",))
 
 
 def _ivf2_geometry(emb):
@@ -671,15 +718,7 @@ def _ivf2_geometry(emb):
     centroids, each argmaxed to its super). Both broadcast-bounded;
     the rank window is single-partition over the sqrt(n)-row centroid
     table only."""
-    nrow = emb.agg(F.count(F.lit(1)).alias("n_emb"))
-    cent = (
-        emb.crossJoin(F.broadcast(nrow))
-        .where(F.col("vec_id") % counted_stride_col(F.col("n_emb")) == 0)
-        .select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"),
-            F.col("ne").alias("nc"),
-        )
-    )
+    cent = _counted_centroids(emb)
     crk = cent.select(
         "cid",
         "cv",
@@ -690,21 +729,7 @@ def _ivf2_geometry(emb):
     sup = crk.where(F.col("rnk") % counted_stride_col(F.col("k")) == 0).select(
         F.col("cid").alias("scid"), F.col("cv").alias("sv"), F.col("nc").alias("ns")
     )
-    wp = Window.partitionBy("cid").orderBy(F.col("cos_s").desc(), F.col("scid"))
-    parent = (
-        cent.crossJoin(F.broadcast(sup))
-        .select(
-            "cid", "cv", "nc", "scid",
-            _fast_cosine(
-                as_double(F.col("cv")), as_double(F.col("sv")),
-                F.col("nc"), F.col("ns"),
-            ).alias("cos_s"),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .where(F.col("rn") == 1)
-        .select("cid", "cv", "nc", "scid")
-    )
-    return sup, parent
+    return sup, _with_parent(cent, sup)
 
 
 def ivf2_probe_cells(emb, queries, probes: int):
@@ -727,44 +752,25 @@ def ivf2_probe_cells(emb, queries, probes: int):
 def _ivf2_probe(queries, geo, probes: int):
     """:func:`ivf2_probe_cells` over a prebuilt (sup, parent) geometry."""
     sup, parent = geo
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos_s").desc(), F.col("scid"))
-    qsup = (
-        queries.crossJoin(F.broadcast(sup))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
+    qsup = _nearest_centroids(
+        queries, sup, probes,
+        keep=(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
             F.col("ne").alias("nq"),
-            "scid",
-            _fast_cosine(
-                as_double(F.col("embedding")), as_double(F.col("sv")),
-                F.col("ne"), F.col("ns"),
-            ).alias("cos_s"),
-        )
-        .withColumn("srn", F.row_number().over(wq))
-        .where(F.col("srn") <= probes)
-        .select("query_id", "qv", "nq", "scid", "srn")
+        ),
+        by=("query_id",), rank="srn",
     )
-    wch = Window.partitionBy("query_id", "scid").orderBy(
-        F.col("cos_c").desc(), F.col("cid")
-    )
-    return (
-        qsup.join(F.broadcast(parent), "scid")
-        .select(
-            "query_id", "qv", "nq", "scid", "srn", "cid",
-            _fast_cosine(
-                as_double(F.col("qv")), as_double(F.col("cv")),
-                F.col("nq"), F.col("nc"),
-            ).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(wch))
-        .where(F.col("rn") == 1)
-        .select("query_id", "qv", "nq", "cid", "srn")
-    )
+    return _nearest_centroids(
+        qsup, parent, on="scid", keep=("query_id", "qv", "nq", "scid", "srn"),
+        vec=("qv", "nq"), by=("query_id", "scid"),
+    ).select("query_id", "qv", "nq", "cid", "srn")
 
 
 def ivf2_assign(emb, keep_centroid_cos: bool = False):
     """Two-level counted-rule assignment (r11) — the DETERMINISTIC,
-    oracle-replayable twin of ann_index.kmeans_assign_two_level:
+    oracle-replayable form of ann_index.kmeans_assign_two_level; both
+    run the one two-level assignment (:func:`_ivf2_assign`) and differ
+    only in how the (sup, parent) tables are built:
 
     1. centroids = the counted-n rule (as :func:`ivf_assign`);
     2. super-centroids = the counted rule applied AGAIN, to the
@@ -789,41 +795,18 @@ def ivf2_assign(emb, keep_centroid_cos: bool = False):
     return _ivf2_assign(emb, _ivf2_geometry(emb), keep_centroid_cos)
 
 
-def _ivf2_assign(emb, geo, keep_centroid_cos: bool = False):
-    """:func:`ivf2_assign` over a prebuilt (sup, parent) geometry."""
+def _ivf2_assign(
+    emb, geo, keep_centroid_cos: bool = False, n_super_probe: int = 1, keep_top: int = 1
+):
+    """:func:`ivf2_assign` over a prebuilt (sup, parent) geometry — the
+    one two-level assignment, also run by the persisted k-means lane
+    (ann_index) over its Lloyd-trained (sup, children) tables: each
+    vector keeps its ``n_super_probe`` best super cells, then the
+    ``keep_top`` best children among theirs, joined on scid by a
+    broadcast hash join."""
     sup, parent = geo
-    wc = Window.partitionBy("vec_id").orderBy(F.col("cos_s").desc(), F.col("scid"))
-    coarse = (
-        emb.crossJoin(F.broadcast(sup))
-        .select(
-            "vec_id", "embedding", "ne", "scid",
-            _fast_cosine(
-                as_double(F.col("embedding")), as_double(F.col("sv")),
-                F.col("ne"), F.col("ns"),
-            ).alias("cos_s"),
-        )
-        .withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "ne", "scid")
-    )
-    wf = Window.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cid"))
-    extra = ["cos_c"] if keep_centroid_cos else []
-    return (
-        coarse.join(F.broadcast(parent), "scid")
-        .select(
-            "vec_id",
-            "embedding",
-            "ne",
-            "cid",
-            _fast_cosine(
-                as_double(F.col("embedding")), as_double(F.col("cv")),
-                F.col("ne"), F.col("nc"),
-            ).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(wf))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "ne", "cid", *extra)
-    )
+    coarse = _nearest_centroids(emb, sup, n_super_probe)
+    return _nearest_centroids(coarse, parent, keep_top, on="scid", keep_cos=keep_centroid_cos)
 
 
 def semantic_cell_profile(assign) -> dict:
@@ -1161,15 +1144,8 @@ def _pq_tables(emb, assign, method: str):
         codes = pq_codes_arr(emb, codebook=cb)
     else:
         nrow = emb.agg(F.count(F.lit(1)).alias("n_emb"))
-        centn = (
-            emb.crossJoin(F.broadcast(nrow))
-            .where(F.col("vec_id") % counted_stride_col(F.col("n_emb")) == 0)
-            .select(
-                F.col("vec_id").alias("cid"),
-                F.transform(
-                    as_double(F.col("embedding")), lambda c: c / F.col("ne")
-                ).alias("cvn"),
-            )
+        centn = _counted_centroids(emb).select(
+            "cid", F.transform(as_double(F.col("cv")), lambda c: c / F.col("nc")).alias("cvn")
         )
         rx = scratch(
             _pq_normed(assign, keep=("cid",))

@@ -22,6 +22,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _release_scratch():
+    """Free every scratch-pinned frame a test leaves behind, whether it
+    passed or failed, so a later test's job-count and storage pins start
+    from an empty scratch. Module-scoped fixtures hold paths, collected
+    rows or plain frames, never scratch-pinned ones."""
+    yield
+    from flink_parameter_server_spark import scratch
+
+    scratch.release()
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

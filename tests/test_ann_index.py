@@ -764,8 +764,9 @@ def test_pq8_width_contract_and_plain_lifecycle(spark, tmp_path):
         (ADVICE r14);
     (b) the persisted marker carries the width; r14-schema markers
         (by_residual only) and markerless indexes read as 4-bit;
-    (c) expr-level pack/unpack inverse at 8 bits incl. the sign-bit
-        byte (all-255 codes pack to -1);
+    (c) expr-level pack/unpack inverse at 4 and 8 bits against a
+        python packing reference: all 16 nibble ranks, [15]*8 packing
+        to 2^32-1, and the sign-bit byte (all-255 codes pack to -1);
     (d) full lifecycle losslessness at 8 bits on the fixture: covering
         probe + covering shortlist == exact brute; read_pq_codes ==
         fresh encode; add_vectors keeps the byte-packed replica in
@@ -797,21 +798,37 @@ def test_pq8_width_contract_and_plain_lifecycle(spark, tmp_path):
     with _pytest.raises(ValueError, match="pq_bits must be 4 or 8"):
         build_ivf_index(spark, emb, str(tmp_path / "x3"), pq=True, pq_bits=5)
 
-    # (c) expr-level pack/unpack inverse at the sign-bit boundary:
-    # identity rank maps over the full byte alphabet
-    ident = ", ".join(f"{c * PQ_M + m}L, {c}L" for c in range(256) for m in range(PQ_M))
-    a2r = f"map({ident})"
-    adv = spark.createDataFrame(
-        [([255] * PQ_M,), ([0] * PQ_M,), ([128, 0, 0, 0, 0, 0, 0, 255],),
-         ([1, 127, 128, 129, 254, 255, 0, 200],)],
-        "codes array<long>",
-    )
-    rt = adv.selectExpr(
-        "codes", f"{_pq_pack_expr(a2r, bits=8)} AS packed"
-    ).selectExpr("codes", "packed", f"{_pq_unpack_expr(a2r, bits=8)} AS back")
-    rows = rt.collect()
-    assert all(r["codes"] == r["back"] for r in rows)
-    assert [r["packed"] for r in rows if r["codes"] == [255] * PQ_M] == [-1]
+    # (c) expr-level pack/unpack inverse at both widths, against the
+    # python packing reference sum(r_m << bits*m) read as a signed long:
+    # every 4-bit rank, [15]*8 at the top of the 32-bit range, and the
+    # 8-bit sign-bit byte (all-255 codes pack to -1); identity rank maps
+    # over each width's full alphabet
+    def packed_ref(codes, bits):
+        p = sum(r << bits * m for m, r in enumerate(codes))
+        return p - (1 << 64) if p >= 1 << 63 else p
+
+    cases = {
+        4: [[15] * PQ_M, [0] * PQ_M, list(range(8)), list(range(8, 16)),
+            [15, 0, 0, 0, 0, 0, 0, 15]],
+        8: [[255] * PQ_M, [0] * PQ_M, [128, 0, 0, 0, 0, 0, 0, 255],
+            [1, 127, 128, 129, 254, 255, 0, 200]],
+    }
+    packed = {}
+    for bits, codes in cases.items():
+        ident = ", ".join(
+            f"{c * PQ_M + m}L, {c}L" for c in range(1 << bits) for m in range(PQ_M)
+        )
+        a2r = f"map({ident})"
+        adv = spark.createDataFrame([(c,) for c in codes], "codes array<long>")
+        rt = adv.selectExpr(
+            "codes", f"{_pq_pack_expr(a2r, bits=bits)} AS packed"
+        ).selectExpr("codes", "packed", f"{_pq_unpack_expr(a2r, bits=bits)} AS back")
+        rows = rt.collect()
+        assert all(r["codes"] == r["back"] for r in rows)
+        assert all(r["packed"] == packed_ref(r["codes"], bits) for r in rows)
+        packed.update({(bits, tuple(r["codes"])): r["packed"] for r in rows})
+    assert packed[(4, (15,) * PQ_M)] == 2**32 - 1
+    assert packed[(8, (255,) * PQ_M)] == -1
 
     # (d) lifecycle at 8 bits, plain mode
     idx = str(tmp_path / "pq8")
