@@ -50,13 +50,12 @@ def read_cells(spark, index_dir: str) -> DataFrame:
     (streaming/semantic_dedup.build_semantic_store), exactly like the
     band store starts empty in incremental_dedup. Existence resolves
     through the Hadoop FileSystem API (r11, ADVICE r10): a driver-local
-    os.path.isdir would read a populated HDFS/S3 store as empty."""
-    from ..sources.fsutil import path_exists
+    os.path.isdir would read a populated HDFS/S3 store as empty. The
+    read keeps the file schema and discovers ``cid`` from the
+    partition dirs."""
+    from ..sources.fsutil import read_or_empty
 
-    path = os.path.join(index_dir, "cells")
-    if path_exists(spark, path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], _CELLS_SCHEMA)
+    return read_or_empty(spark, os.path.join(index_dir, "cells"), _CELLS_SCHEMA, typed=False)
 
 
 def _normed(df: DataFrame, vec_col: str, out: str) -> DataFrame:
@@ -1205,7 +1204,7 @@ def add_vectors(spark, index_dir: str, emb: DataFrame, preassigned: bool = False
     # pin the assignment once: the touched-cid collect, the cells
     # append, and (on a PQ index) the codes append all consume it
     # (the ivf_search double-compute class)
-    from ..sources.fsutil import path_exists
+    from ..sources.fsutil import path_exists, read_or_empty
 
     ids: set[int] = set()
     v = scoped_checkpoint(v, ids)
@@ -1234,11 +1233,9 @@ def add_vectors(spark, index_dir: str, emb: DataFrame, preassigned: bool = False
         a2r, _ = _pq_pack_maps(cbq, bits=bits)
         codes_path = f"{index_dir}/pq_codes"
         have = (
-            spark.read.parquet(codes_path)
+            read_or_empty(spark, codes_path, "vec_id long, cid bigint", typed=False)
             .where(F.col("cid").isin(touched))
             .select("vec_id")
-            if path_exists(spark, codes_path)
-            else spark.createDataFrame([], "vec_id long")
         )
         need = (
             read_cells(spark, index_dir)
@@ -1271,7 +1268,7 @@ def compact_index(spark, index_dir: str, target_files_per_cell: int = 1) -> None
     fsutil.rename_path for the object-store rename-window caveat (a
     reader racing the swap can see the cells table absent — excluded
     here by the single-writer between-batches discipline)."""
-    from ..sources.fsutil import delete_path, path_exists, rename_path
+    from ..sources.fsutil import path_exists, swap_in
 
     tables = ["cells"]
     # a pq=True index compacts its codes replica the same way — it
@@ -1281,7 +1278,6 @@ def compact_index(spark, index_dir: str, target_files_per_cell: int = 1) -> None
         tables.append("pq_codes")
     for name in tables:
         path = os.path.join(index_dir, name)
-        tmp = path + "_compacting"
         df = spark.read.parquet(path)
         if name == "pq_codes":
             # replica reconciliation (ADVICE r12): the rewrite is a full
@@ -1303,11 +1299,13 @@ def compact_index(spark, index_dir: str, target_files_per_cell: int = 1) -> None
                 "vec_id", f"{_pq_pack_expr(a2r, bits=bits)} AS packed", "cid"
             )
             df = df.dropDuplicates(["vec_id"]).unionByName(healed)
-        df.repartition(target_files_per_cell, "cid").write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(tmp)
-        delete_path(spark, path)
-        rename_path(spark, tmp, path)
+        swap_in(
+            spark,
+            path,
+            df.repartition(target_files_per_cell, "cid").write.mode("overwrite").partitionBy(
+                "cid"
+            ).parquet,
+        )
 
 
 def rebuild_index(

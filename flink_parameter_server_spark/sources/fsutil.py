@@ -12,12 +12,15 @@ session's Hadoop configuration, exactly as the read itself would.
 
 Scope (r12 — VERDICT r11 #2 closed): BOTH halves of the store
 lifecycle route through here now. Read probes (path_exists /
-list_dir_names) because their failure mode is SILENT wrong results;
-maintenance writes (delete_path / rename_path: compact_index,
-rebuild_index's staged swap, compact_store, compact_span_store,
-compact_dsir_counts) because on a remote scheme the old shutil/os
-forms crashed — the full compact/rebuild lifecycle now works on the
-same hdfs://s3a:// deployment the reads probe.
+list_dir_names, and read_or_empty on top of them: the dedup band and
+shingle tables, the curation hash table, ann_index cells and pq_codes)
+because their failure mode is SILENT wrong results; maintenance writes
+(swap_in: compact_index, compact_store and the bid-table compaction
+behind compact_span_store / compact_dsir_counts; delete_path /
+rename_path directly: rebuild_index's multi-table swap) because on a
+remote scheme the old shutil/os forms crashed — the full
+compact/rebuild lifecycle now works on the same hdfs://s3a://
+deployment the reads probe.
 
 Rename-window semantics on object stores: HDFS rename is an atomic
 metadata op; on S3-like stores it is a server-side COPY + delete, so
@@ -65,3 +68,23 @@ def rename_path(spark, src: str, dst: str) -> bool:
     form does. Returns Hadoop's success flag."""
     fs, p, jvm = _fs(spark, src)
     return fs.rename(p, jvm.org.apache.hadoop.fs.Path(dst))
+
+
+def read_or_empty(spark, path: str, schema: str, typed: bool = True):
+    """The parquet table at ``path``, or an empty frame of ``schema``
+    when nothing has been written there yet. ``typed=False`` reads with
+    the file schema and partition discovery (ann_index's cid-partitioned
+    tables); the empty frame is always ``schema``-typed."""
+    if not path_exists(spark, path):
+        return spark.createDataFrame([], schema)
+    return (spark.read.schema(schema) if typed else spark.read).parquet(path)
+
+
+def swap_in(spark, path: str, write) -> None:
+    """Staged rewrite of one table: ``write(tmp)`` fills the sibling
+    ``<path>_compacting``, then the live table is deleted and the new
+    one renamed into place (the rename-window caveat above)."""
+    tmp = path + "_compacting"
+    write(tmp)
+    delete_path(spark, path)
+    rename_path(spark, tmp, path)

@@ -39,9 +39,10 @@ SEPARATE directory, never written by this module.
 Scale shape: stage 1 map-only; stage 2 one shuffle on the content hash
 plus a keyed probe of the hash store; stages 3-4 the partition-pruned
 band probes; appends grow only with accepted unique content. Wire into
-Structured Streaming with :func:`curate_stream_writer` (foreachBatch,
-per-batch decision overwrite under bid=<batch_id> — at-least-once
-replay safe for the same reasons as dedup_stream_writer).
+Structured Streaming with :func:`curate_stream_writer` (the shared
+bid_store.bid_sink: per-batch decision overwrite under bid=<batch_id>
+— at-least-once replay safe for the same reasons as
+dedup_stream_writer).
 """
 
 from __future__ import annotations
@@ -51,6 +52,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .bid_store import bid_sink
 from .incremental_dedup import contamination_check, process_batch
 
 _HASH_SCHEMA = "doc_id bigint, h string"
@@ -149,15 +151,11 @@ def curate_batch(
         "doc_id", F.col("keeper").alias("dup_of")
     )
     keepers = hashed.where(F.col("doc_id") == F.col("keeper"))
-    from ..sources.fsutil import path_exists
+    from ..sources.fsutil import read_or_empty
 
     # FS-API existence (r11): the silent-empty-store read class
     hash_path = os.path.join(store_dir, "hashes")
-    store_h = (
-        spark.read.schema(_HASH_SCHEMA).parquet(hash_path)
-        if path_exists(spark, hash_path)
-        else spark.createDataFrame([], _HASH_SCHEMA)
-    )
+    store_h = read_or_empty(spark, hash_path, _HASH_SCHEMA)
     exact_store = (
         keepers.join(
             store_h.select(F.col("h"), F.col("doc_id").alias("dup_of")), "h"
@@ -340,31 +338,19 @@ def curate_stream_writer(
     every checkpoint curate_batch pinned, so each batch frees its own
     scratch (ADVICE r8: a long stream otherwise accumulates pinned RDD
     blocks between driver GC cycles)."""
-    from ..scratch import unpersist_rdd_ids
-    from .incremental_dedup import guard_decisions_dir
-
-    guard_decisions_dir(spark, decisions_dir)
-
-    def _sink(batch_df, batch_id: int) -> None:
-        # exact attribution, not a global diff (r9 review: a diff frees
-        # a concurrent sink's checkpoints on a shared session)
-        ids: set[int] = set()
-        curate_batch(
+    return bid_sink(
+        spark,
+        docs_stream,
+        store_dir,
+        decisions_dir,
+        lambda df, bid, ids: curate_batch(
             spark,
-            batch_df,
+            df,
             store_dir,
             eval_store_dir,
             scratch_ids=ids,
             emb=emb,
             semantic_store_dir=semantic_store_dir,
             quality_rules=quality_rules,
-        ).withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, f"bid={batch_id}")
-        )
-        unpersist_rdd_ids(spark, ids)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(store_dir, "_checkpoint"))
-        .start()
+        ),
     )

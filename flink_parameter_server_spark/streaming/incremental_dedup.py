@@ -41,8 +41,9 @@ with ACCEPTED (unique) content. Wire into Structured Streaming with
 micro-batch must join mutable external state and update it per
 batch). foreachBatch is at-least-once, not transactional: replay
 safety comes from idempotent writes — the probe's self-guard, the
-already-present append skip, and per-batch decision overwrite (see
-:func:`dedup_stream_writer`). Doc ids must be unique across the
+already-present append skip, and per-batch decision overwrite (the
+``bid=<batch_id>`` sink every incremental writer shares,
+streaming/bid_store.py). Doc ids must be unique across the
 corpus (store + all batches share one id space); the self-guard
 relies on it.
 """
@@ -61,6 +62,8 @@ from ..operators._dedup_core import (
     star_connected_components,
     token_hashes,
 )
+from ..sources.fsutil import path_exists, read_or_empty, swap_in
+from .bid_store import bid_sink
 
 _BANDS_SCHEMA = "doc_id bigint, b int, band_key bigint"
 _SH_SCHEMA = "doc_id bigint, shingles array<bigint>"
@@ -70,12 +73,7 @@ def _store(spark, store_dir: str, name: str, schema: str) -> DataFrame:
     # existence via the Hadoop FS API (r11, ADVICE r10 class): a
     # driver-local isdir silently reads a populated remote store as
     # EMPTY — every batch would then dedup against nothing
-    from ..sources.fsutil import path_exists
-
-    path = os.path.join(store_dir, name)
-    if path_exists(spark, path):
-        return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
+    return read_or_empty(spark, os.path.join(store_dir, name), schema)
 
 
 def signatures(docs: DataFrame, scratch_ids: set[int] | None = None) -> tuple[DataFrame, DataFrame]:
@@ -335,48 +333,20 @@ def compact_store(spark, store_dir: str, target_files_per_band: int = 1) -> None
     hdfs://s3a:// store the read path probes; the object-store rename
     window (rename = copy) is covered by the same single-writer
     between-batches discipline."""
-    from ..sources.fsutil import delete_path, path_exists, rename_path
-
     # "hashes" is the streaming-curation exact-dup table
     # (incremental_curate.py) — same append-per-batch small-file growth
     for name, part in (("bands", "b"), ("shingles", None), ("hashes", None)):
         path = os.path.join(store_dir, name)
         if not path_exists(spark, path):
             continue
-        tmp = path + "_compacting"
         df = spark.read.parquet(path)
         if part:
-            df.repartition(target_files_per_band, part).write.mode(
+            write = df.repartition(target_files_per_band, part).write.mode(
                 "overwrite"
-            ).partitionBy(part).parquet(tmp)
+            ).partitionBy(part).parquet
         else:
-            df.coalesce(max(1, target_files_per_band)).write.mode("overwrite").parquet(tmp)
-        delete_path(spark, path)
-        rename_path(spark, tmp, path)
-
-
-def guard_decisions_dir(spark, decisions_dir: str) -> None:
-    """Refuse a decisions dir holding FLAT (pre-bid-layout) parquet:
-    partition discovery over a mixed flat+bid=<n> layout silently
-    drops every flat row from reads (verified empirically, review r8)
-    — fail loudly instead of losing history. Shared by all three
-    stream writers (dedup + curation + semantic). Probes through the
-    Hadoop FS API (r12): a driver-local listdir returns nothing on a
-    remote scheme, which would silently WAIVE the guard — exactly the
-    silent-failure read-probe class fsutil exists for."""
-    from ..sources.fsutil import list_dir_names, path_exists
-
-    if path_exists(spark, decisions_dir) and any(
-        f.endswith(".parquet") and not f.startswith(("_", "."))
-        for f in list_dir_names(spark, decisions_dir)
-    ):
-        raise ValueError(
-            f"decisions dir {decisions_dir!r} contains flat (pre-bid-layout) "
-            "parquet files; reading a mixed flat+bid=<n> layout silently "
-            "drops the flat rows. Migrate them first, e.g. "
-            "spark.read.parquet(dir).write.parquet(dir + '/bid=-1') "
-            "and remove the flat files."
-        )
+            write = df.coalesce(max(1, target_files_per_band)).write.mode("overwrite").parquet
+        swap_in(spark, path, write)
 
 
 def dedup_stream_writer(spark, docs_stream: DataFrame, store_dir: str, decisions_dir: str):
@@ -392,30 +362,12 @@ def dedup_stream_writer(spark, docs_stream: DataFrame, store_dir: str, decisions
     process_batch's self-guard + already-present skip. A replayed
     batch may re-decide a former 'dup_in_batch' as 'dup_of_store' (its
     canonical is in the store by then) — same ``dup_of``, and the
-    overwrite keeps exactly one decision row per doc."""
-
-    guard_decisions_dir(spark, decisions_dir)
-
-    def _sink(batch_df, batch_id: int) -> None:
-        # per-batch scratch release (ADVICE r8): the decisions write
-        # consumes every checkpoint process_batch pinned, so free them
-        # here instead of letting a long stream accumulate blocks.
-        # EXACT attribution, not a global before/after diff — a diff
-        # would claim (and free) checkpoints a CONCURRENT sink on the
-        # same session pinned in the window, corrupting its batch (r9
-        # review; scoped_checkpoint's lock makes the ids exact).
-        from ..scratch import unpersist_rdd_ids
-
-        ids: set[int] = set()
-        process_batch(spark, batch_df, store_dir, scratch_ids=ids).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, f"bid={batch_id}")
-        )
-        unpersist_rdd_ids(spark, ids)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(store_dir, "_checkpoint"))
-        .start()
+    overwrite keeps exactly one decision row per doc (bid_store.bid_sink,
+    shared by all four stream writers)."""
+    return bid_sink(
+        spark,
+        docs_stream,
+        store_dir,
+        decisions_dir,
+        lambda df, bid, ids: process_batch(spark, df, store_dir, scratch_ids=ids),
     )

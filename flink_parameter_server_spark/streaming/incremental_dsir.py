@@ -8,9 +8,9 @@ Why: a growing corpus wants per-doc importance weights AT INGEST TIME
 a doc depends on corpus-WIDE distributions — recomputing the batch
 pipeline per micro-batch is a full rescan at 100 TB. State here is
 tiny and mergeable: per-batch COUNT DELTAS over the DSIR_B hashed
-feature buckets, written under ``counts/bid=<batch_id>`` (a replayed
-batch overwrites its OWN delta — the decisions-dir idempotency
-pattern of incremental_dedup). The lambda table is a DSIR_B-row
+feature buckets, a bid-delta table (streaming/bid_store.py) at
+``counts/bid=<batch_id>`` — a replayed batch overwrites its OWN
+delta. The lambda table is a DSIR_B-row
 aggregate over the store, recomputed per batch — cost bounded by B,
 never by corpus size.
 
@@ -35,10 +35,9 @@ the store read is a B-row-per-batch-file aggregate (sum over deltas);
 everything downstream is bounded broadcasts. The store grows by at
 most DSIR_B rows per batch — at micro-batch cadence over months that
 is a many-small-files listing, so :func:`compact_dsir_counts` (r11)
-folds every delta into one, recording the folded bids so a replayed
-already-compacted batch stays idempotent (it skips its delta write —
-the compact file already carries it). Run it between batches
-(single-writer discipline, the compact_index pattern).
+folds every delta into one through bid_store's compaction, whose
+folded-bid set keeps a replayed already-compacted batch idempotent.
+Run it between batches (single-writer discipline).
 """
 
 from __future__ import annotations
@@ -55,97 +54,31 @@ from ..operators._dsir_core import (
     dsir_lambda,
     dsir_weights,
 )
+from .bid_store import bid_sink, compact_table, read_table, write_delta
 
 _COUNTS_SCHEMA = "b bigint, cr bigint, ct bigint"
 
 
+def _sum_counts(df: DataFrame) -> DataFrame:
+    return df.groupBy("b").agg(F.sum("cr").alias("cr"), F.sum("ct").alias("ct"))
+
+
 def read_dsir_counts(spark, store_dir: str) -> DataFrame:
     """Aggregated (b, cr, ct) over every batch delta in the store —
-    empty-typed when nothing has been ingested yet. Existence resolves
-    through the Hadoop FileSystem API (r11, ADVICE r10): this module's
-    stated deployment is an object store, where a driver-local
-    os.path.isdir reads a POPULATED store as empty and weights would
-    silently be computed against the current batch alone."""
-    from ..sources.fsutil import path_exists
-
-    path = os.path.join(store_dir, "counts")
-    if path_exists(spark, path):
-        return (
-            spark.read.schema(_COUNTS_SCHEMA)
-            .option("recursiveFileLookup", "true")
-            .parquet(path)
-            .groupBy("b")
-            .agg(F.sum("cr").alias("cr"), F.sum("ct").alias("ct"))
-        )
-    return spark.createDataFrame([], _COUNTS_SCHEMA)
-
-
-_FOLDED_SCHEMA = "bid bigint"
-
-
-def folded_bids(spark, store_dir: str) -> set[int]:
-    """Batch ids whose deltas have been folded into the compact file by
-    :func:`compact_dsir_counts` — stored as a tiny parquet under
-    ``counts/_folded`` (the underscore prefix hides it from the
-    recursive delta read above; parquet, not a driver-local JSON, so
-    the probe works on any filesystem the store does). The collect is
-    bounded by the number of batches ever ingested (one bigint per
-    bid — ~100k rows for a year of 5-minute batches), not by corpus
-    size."""
-    from ..sources.fsutil import path_exists
-
-    path = os.path.join(store_dir, "counts", "_folded")
-    if path_exists(spark, path):
-        return {r["bid"] for r in spark.read.schema(_FOLDED_SCHEMA).parquet(path).collect()}
-    return set()
+    empty-typed when nothing has been ingested yet."""
+    return read_table(spark, os.path.join(store_dir, "counts"), _COUNTS_SCHEMA, _sum_counts)
 
 
 def compact_dsir_counts(spark, store_dir: str) -> int:
     """Fold every per-batch delta (and any previous compact file) into
     ONE summed delta — the many-small-files fix for a long-lived store
-    (the compact_index / compact_store pattern; VERDICT r10 missing-#3).
-
-    Replay contract: the folded bid set is persisted alongside the
-    compacted counts, and :func:`process_dsir_batch` SKIPS the delta
-    write for a bid in that set (its tokens are already inside the
-    compact file), so an at-least-once replay of an already-compacted
-    batch neither double-counts nor errors. Weights are identical
-    before and after compaction (pinned in tests) because the store
-    read is a sum over deltas — folding is associative. Single-writer
-    discipline: run between ingest batches, not concurrently with one.
-    All filesystem ops route through the Hadoop FS API (fsutil), so
-    the maintenance path works on the same object store the read path
-    probes (the ADVICE r10 class — a driver-local listdir/rename would
-    crash or silently no-op on hdfs://, s3a://).
-    Returns the number of bid deltas folded this call."""
-    from ..sources.fsutil import delete_path, list_dir_names, path_exists, rename_path
-
-    counts_path = os.path.join(store_dir, "counts")
-    if not path_exists(spark, counts_path):
-        return 0  # never-ingested store: nothing to fold
-    bids = folded_bids(spark, store_dir)
-    new_bids = {
-        int(name.split("=", 1)[1])
-        for name in list_dir_names(spark, counts_path)
-        if name.startswith("bid=")
-    }
-    compacted = (
-        spark.read.schema(_COUNTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(counts_path)
-        .groupBy("b")
-        .agg(F.sum("cr").alias("cr"), F.sum("ct").alias("ct"))
-    )
-    tmp = counts_path + "_compacting"
-    compacted.select("b", "cr", "ct").coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(tmp, "compact")
-    )
-    spark.createDataFrame(
-        [(int(b),) for b in sorted(bids | new_bids)], _FOLDED_SCHEMA
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "_folded"))
-    delete_path(spark, counts_path)
-    rename_path(spark, tmp, counts_path)
-    return len(new_bids)
+    (bid_store.compact_table; VERDICT r10 missing-#3). Weights are
+    identical before and after (pinned in tests) because the store read
+    is a sum over deltas — folding is associative. A replay of a folded
+    bid skips its delta write (its tokens are already inside the compact
+    file), so it neither double-counts nor errors. Returns the number of
+    bid deltas folded this call."""
+    return compact_table(spark, os.path.join(store_dir, "counts"), _COUNTS_SCHEMA, _sum_counts)
 
 
 def process_dsir_batch(
@@ -181,16 +114,16 @@ def process_dsir_batch(
     fcnt = scoped_checkpoint(dsir_features(docs), ids)
     if own:
         track_checkpoint_ids(spark, ids)
-    if batch_id not in folded_bids(spark, store_dir):
-        delta = fcnt.groupBy("b").agg(
-            F.sum("n").cast("long").alias("cr"),
-            F.sum(F.when(F.col("lang") == DSIR_TARGET_LANG, F.col("n"))).cast("long").alias("ct"),
-        )
-        delta.select(
-            "b", "cr", F.coalesce("ct", F.lit(0)).cast("long").alias("ct")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_dir, "counts", f"bid={batch_id}")
-        )
+    delta = fcnt.groupBy("b").agg(
+        F.sum("n").cast("long").alias("cr"),
+        F.sum(F.when(F.col("lang") == DSIR_TARGET_LANG, F.col("n"))).cast("long").alias("ct"),
+    )
+    write_delta(
+        spark,
+        os.path.join(store_dir, "counts"),
+        batch_id,
+        delta.select("b", "cr", F.coalesce("ct", F.lit(0)).cast("long").alias("ct")),
+    )
     counts = read_dsir_counts(spark, store_dir)
     lam = dsir_lambda(
         counts.select("b", "cr"), counts.where(F.col("ct") > 0).select("b", "ct")
@@ -231,25 +164,15 @@ def rescore_and_select(
 
 
 def dsir_stream_writer(spark, docs_stream: DataFrame, store_dir: str, weights_dir: str):
-    """Wire :func:`process_dsir_batch` into Structured Streaming:
-    foreachBatch updates the count store and writes the batch's
-    weights to ``weights_dir`` under ``bid=<batch_id>`` (overwrite —
-    one stamp per doc per batch, replay replaces itself). Returns the
-    started StreamingQuery."""
-
-    def _sink(batch_df, batch_id: int) -> None:
-        from ..scratch import unpersist_rdd_ids
-
-        ids: set[int] = set()
-        process_dsir_batch(
-            spark, batch_df, store_dir, batch_id, scratch_ids=ids
-        ).withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
-            os.path.join(weights_dir, f"bid={batch_id}")
-        )
-        unpersist_rdd_ids(spark, ids)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(store_dir, "_checkpoint"))
-        .start()
+    """Wire :func:`process_dsir_batch` into Structured Streaming
+    (bid_store.bid_sink): each micro-batch updates the count store and
+    writes its weights under ``weights_dir/bid=<batch_id>`` (one stamp
+    per doc per batch, replay replaces itself). Returns the started
+    StreamingQuery."""
+    return bid_sink(
+        spark,
+        docs_stream,
+        store_dir,
+        weights_dir,
+        lambda df, bid, ids: process_dsir_batch(spark, df, store_dir, bid, scratch_ids=ids),
     )

@@ -8,16 +8,16 @@ State = ONE append-only parquet table under ``store_dir``:
 
 - ``spans/bid=<batch_id>/`` — the DISTINCT span hashes whose canonical
   occurrence has been accepted so far, one partition per ingested
-  batch (the incremental_dsir delta layout). A replayed batch
+  batch (a bid-delta table, streaming/bid_store.py). A replayed batch
   OVERWRITES its own partition, so at-least-once delivery cannot
   double-insert; and the probe reads ``bid != current`` so a replay
   sees exactly the pre-batch store state — its decisions are
   bit-identical to the original run (the incremental_dedup self-guard,
   re-cast for spans). :func:`compact_span_store` folds all deltas
-  (and any prior compact file) into ``spans/compact`` with the folded
-  bid set persisted at ``spans/_folded`` — probe-identical before and
-  after, replay of a folded bid skips its append (contract in the
-  function docstring).
+  (and any prior compact file) into ``spans/compact`` through
+  bid_store's compaction — probe-identical before and after, replay
+  of a folded bid skips its append (contract in the function
+  docstring).
 
 Per batch (:func:`process_substr_batch`):
 
@@ -62,63 +62,30 @@ from ..operators._dedup_core import (
     span_occurrences,
     token_hashes,
 )
+from .bid_store import compact_table, read_table, write_delta
 
 _SPANS_SCHEMA = "sp bigint"
-_FOLDED_SCHEMA = "bid bigint"
 
 
-def _delta_paths(spark, spans_path: str, exclude_bid: int | None) -> list[str]:
-    from ..sources.fsutil import list_dir_names
-
-    return [
-        os.path.join(spans_path, n)
-        for n in list_dir_names(spark, spans_path)
-        if n.startswith("bid=")
-        and (exclude_bid is None or n != f"bid={exclude_bid}")
-    ]
+def _distinct_spans(df: DataFrame) -> DataFrame:
+    return df.select("sp").distinct()
 
 
 def store_spans(spark, store_dir: str, exclude_bid: int | None = None) -> DataFrame:
     """The distinct accepted span hashes — optionally excluding one
     bid's partition (the replay self-guard: a probe must not see the
-    spans its own failed attempt wrote). Reads an explicit path list
-    (per-bid delta dirs + the compact file) rather than hive partition
-    discovery, so the post-compaction mixed layout stays readable."""
-    from ..sources.fsutil import path_exists
-
-    path = os.path.join(store_dir, "spans")
-    if not path_exists(spark, path):
-        return spark.createDataFrame([], _SPANS_SCHEMA)
-    paths = _delta_paths(spark, path, exclude_bid)
-    compact = os.path.join(path, "compact")
-    if path_exists(spark, compact):
-        paths.append(compact)
-    if not paths:
-        return spark.createDataFrame([], _SPANS_SCHEMA)
-    return spark.read.schema(_SPANS_SCHEMA).parquet(*paths).select("sp").distinct()
-
-
-def folded_span_bids(spark, store_dir: str) -> set[int]:
-    """Batch ids folded into the compact file by
-    :func:`compact_span_store` (the incremental_dsir._folded pattern —
-    a tiny parquet, one bigint per ever-ingested bid)."""
-    from ..sources.fsutil import path_exists
-
-    path = os.path.join(store_dir, "spans", "_folded")
-    if path_exists(spark, path):
-        return {
-            r["bid"]
-            for r in spark.read.schema(_FOLDED_SCHEMA).parquet(path).collect()
-        }
-    return set()
+    spans its own failed attempt wrote)."""
+    return read_table(
+        spark, os.path.join(store_dir, "spans"), _SPANS_SCHEMA, _distinct_spans, exclude_bid
+    )
 
 
 def compact_span_store(spark, store_dir: str) -> int:
     """Fold every per-batch span delta (and any previous compact file)
     into ONE distinct-span file — the many-small-files fix for a
-    long-lived store (the compact_dsir_counts pattern; folding is a
-    set union, so the probe result is identical before and after —
-    pinned in tests). Returns the number of bid deltas folded.
+    long-lived store (bid_store.compact_table; folding is a set union,
+    so the probe result is identical before and after — pinned in
+    tests). Returns the number of bid deltas folded.
 
     Replay contract: a bid in the folded set SKIPS its append on
     replay (the compact file already carries its spans), so the store
@@ -127,31 +94,8 @@ def compact_span_store(spark, store_dir: str) -> int:
     exclude-own-bid guard has nothing to exclude once the partition is
     folded) — so compaction must only run once every folded batch's
     decisions are durably stamped, the same single-writer
-    between-batches discipline as the DSIR store. All filesystem ops
-    route through the Hadoop FS API (fsutil)."""
-    from ..sources.fsutil import delete_path, path_exists, rename_path
-
-    spans_path = os.path.join(store_dir, "spans")
-    if not path_exists(spark, spans_path):
-        return 0  # never-ingested store: nothing to fold
-    folded = folded_span_bids(spark, store_dir)
-    new_paths = _delta_paths(spark, spans_path, None)
-    all_paths = list(new_paths)
-    compact = os.path.join(spans_path, "compact")
-    if path_exists(spark, compact):
-        all_paths.append(compact)
-    if not all_paths:
-        return 0
-    merged = spark.read.schema(_SPANS_SCHEMA).parquet(*all_paths).select("sp").distinct()
-    new_bids = {int(p.rsplit("bid=", 1)[1]) for p in new_paths}
-    tmp = spans_path + "_compacting"
-    merged.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "compact"))
-    spark.createDataFrame(
-        [(int(b),) for b in sorted(folded | new_bids)], _FOLDED_SCHEMA
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "_folded"))
-    delete_path(spark, spans_path)
-    rename_path(spark, tmp, spans_path)
-    return len(new_bids)
+    between-batches discipline as the DSIR store."""
+    return compact_table(spark, os.path.join(store_dir, "spans"), _SPANS_SCHEMA, _distinct_spans)
 
 
 def process_substr_batch(
@@ -193,18 +137,13 @@ def process_substr_batch(
         .select("doc_id", merge_cut_runs(F.col("dpos")).alias("dpos"), "n_occ")
     )
     decisions.count()  # materialize decisions before mutating the store
-    if batch_id in folded_span_bids(spark, store_dir):
-        # already folded by compact_span_store: the compact file
-        # carries this bid's spans — appending would double-insert
-        # under a fresh partition the folded set can't cover
-        return decisions
-    new_spans = (
-        probed.where((F.col("rn") == 1) & F.col("_seen").isNull())
-        .select("sp")
-        .distinct()
-    )
-    new_spans.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(store_dir, "spans", f"bid={batch_id}")
+    # a bid already folded by compact_span_store skips the append: the
+    # compact file carries its spans
+    write_delta(
+        spark,
+        os.path.join(store_dir, "spans"),
+        batch_id,
+        probed.where((F.col("rn") == 1) & F.col("_seen").isNull()).select("sp").distinct(),
     )
     return decisions
 

@@ -64,6 +64,7 @@ from ..operators._dedup_core import star_connected_components
 from ..operators.ann_index import _assign, _normed, add_vectors, read_cells
 from ..operators.similarity import _fast_cosine, semantic_cell_profile
 from ..functions.vectors import as_double
+from .bid_store import bid_sink
 
 _LOG = logging.getLogger(__name__)
 
@@ -220,28 +221,13 @@ def semantic_stream_writer(spark, emb_stream: DataFrame, index_dir: str, decisio
     replaces its own rows (the incremental_dedup replay contract; a
     replay may re-decide a former 'dup_in_batch' as 'dup_of_store'
     once its canonical is in the store — same dup_of). Returns the
-    started StreamingQuery."""
-    from .incremental_dedup import guard_decisions_dir
-
-    guard_decisions_dir(spark, decisions_dir)
-
-    def _sink(batch_df, batch_id: int) -> None:
-        # exact attribution, not a global diff (r9 review: a diff frees
-        # a concurrent sink's checkpoints on a shared session)
-        from ..scratch import unpersist_rdd_ids
-
-        ids: set[int] = set()
-        process_semantic_batch(
-            spark, batch_df, index_dir, scratch_ids=ids
-        ).withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, f"bid={batch_id}")
-        )
-        unpersist_rdd_ids(spark, ids)
-
-    return (
-        emb_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(index_dir, "_checkpoint"))
-        .start()
+    started StreamingQuery. Runs through bid_store.bid_sink."""
+    return bid_sink(
+        spark,
+        emb_stream,
+        index_dir,
+        decisions_dir,
+        lambda df, bid, ids: process_semantic_batch(spark, df, index_dir, scratch_ids=ids),
     )
 
 

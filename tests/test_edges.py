@@ -165,3 +165,26 @@ def test_driver_threads_only_via_overlap():
         )
     )
     assert offenders == []
+
+
+def test_bid_store_lifecycle_only_in_bid_store():
+    """The incremental stores write ``bid=<batch_id>`` dirs and start
+    foreachBatch sinks in one place, streaming/bid_store.py, and stage
+    compaction swaps only through fsutil.swap_in. Copies drift (one
+    writer once skipped the flat-dir guard the other three ran)."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "flink_parameter_server_spark"
+    streaming = root / "streaming"
+    stores = sorted(streaming.glob("incremental_*.py")) + [streaming / "semantic_dedup.py"]
+    bid_path = re.compile(r"""f["'][^"']*bid=\{""")
+    assert len(stores) == 5
+    assert [
+        p.name for p in stores if bid_path.search(p.read_text()) or "foreachBatch(" in p.read_text()
+    ] == []
+    assert sorted(
+        str(p.relative_to(root.parent))
+        for p in [*root.rglob("*.py"), *(root.parent / "tools").rglob("*.py")]
+        if p.name != "fsutil.py" and "_compacting" in p.read_text()
+    ) == []

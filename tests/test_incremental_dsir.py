@@ -18,10 +18,10 @@ from pyspark.sql import functions as F
 
 from flink_parameter_server_spark.operators._dsir_core import DSIR_B, dsir_micro
 from flink_parameter_server_spark.operators._util import t
+from flink_parameter_server_spark.streaming.bid_store import folded_bids
 from flink_parameter_server_spark.streaming.incremental_dsir import (
     compact_dsir_counts,
     dsir_stream_writer,
-    folded_bids,
     process_dsir_batch,
     read_dsir_counts,
     rescore_dsir,
@@ -111,7 +111,7 @@ def test_compaction_preserves_weights_and_replay(spark, tmp_path):
     w_before = _wmap(rescore_dsir(spark, b1.unionByName(b2), store))
 
     assert compact_dsir_counts(spark, store) == 2
-    assert folded_bids(spark, store) == {0, 1}
+    assert folded_bids(spark, os.path.join(store, "counts")) == {0, 1}
     after = {r["b"]: (r["cr"], r["ct"]) for r in read_dsir_counts(spark, store).collect()}
     assert after == before
     assert _wmap(rescore_dsir(spark, b1.unionByName(b2), store)) == w_before
@@ -135,7 +135,7 @@ def test_compaction_preserves_weights_and_replay(spark, tmp_path):
     process_dsir_batch(spark, b3, store, 2).collect()
     assert _wmap(rescore_dsir(spark, d, store)) == _wmap(dsir_micro(d))
     assert compact_dsir_counts(spark, store) == 1
-    assert folded_bids(spark, store) == {0, 1, 2}
+    assert folded_bids(spark, os.path.join(store, "counts")) == {0, 1, 2}
     assert _wmap(rescore_dsir(spark, d, store)) == _wmap(dsir_micro(d))
 
 
@@ -202,3 +202,26 @@ def test_streaming_wireup(spark, tmp_path):
     assert stamped.select("doc_id").distinct().count() == n_docs
     assert os.path.isdir(os.path.join(store, "counts"))
     assert _wmap(rescore_dsir(spark, d, store)) == _wmap(dsir_micro(d))
+
+
+def test_streaming_writer_refuses_flat_weights_dir(spark, tmp_path):
+    """A weights dir holding flat parquet next to bid=<n> dirs reads
+    back short (partition discovery drops the flat rows), so the writer
+    must refuse it before any query starts — like the three decision
+    writers do."""
+    src = str(tmp_path / "src")
+    weights = str(tmp_path / "weights")
+    _docs(spark).limit(2).coalesce(1).write.parquet(f"{src}/f1")
+    spark.createDataFrame([(1, 5, 3, 0)], "doc_id long, smic long, ntok long, batch_id long").coalesce(
+        1
+    ).write.mode("append").parquet(weights)
+    spark.createDataFrame([(2, 6, 4, 0)], "doc_id long, smic long, ntok long, batch_id long").coalesce(
+        1
+    ).write.parquet(f"{weights}/bid=0")
+    assert spark.read.parquet(weights).count() == 1, "the silent loss the guard prevents"
+    stream = spark.readStream.schema("doc_id long, lang string, text string").parquet(f"{src}/*")
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match="flat"):
+        dsir_stream_writer(spark, stream, str(tmp_path / "store"), weights)
+    assert {q.id for q in spark.streams.active} == active
+    assert not os.path.exists(tmp_path / "store")

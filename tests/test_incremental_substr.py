@@ -131,9 +131,11 @@ def test_compact_span_store(spark, tmp_path):
     against the compacted and uncompacted stores, a replayed FOLDED
     bid skips its append (store stable), and compaction of a
     never-ingested store is a no-op."""
+    import os
+
+    from flink_parameter_server_spark.streaming.bid_store import folded_bids
     from flink_parameter_server_spark.streaming.incremental_substr import (
         compact_span_store,
-        folded_span_bids,
     )
 
     b1 = [(10, f"{SHARED} TAIL1")]
@@ -147,7 +149,10 @@ def test_compact_span_store(spark, tmp_path):
     assert compact_span_store(spark, compacted) == 2
     after = {r["sp"] for r in store_spans(spark, compacted).collect()}
     assert after == before, "compaction must be probe-invariant"
-    assert folded_span_bids(spark, compacted) == {1, 2}
+    spans = os.path.join(compacted, "spans")
+    assert folded_bids(spark, spans) == {1, 2}
+    # one compact dir remains (plus the hidden _folded marker)
+    assert [e for e in sorted(os.listdir(spans)) if not e.startswith("_")] == ["compact"]
     # a new batch decides identically against both store forms
     d_plain = _norm(process_substr_batch(spark, _mk(spark, b3), plain, 3))
     d_comp = _norm(process_substr_batch(spark, _mk(spark, b3), compacted, 3))
@@ -158,6 +163,6 @@ def test_compact_span_store(spark, tmp_path):
     assert store_spans(spark, compacted).count() == n
     # second compact folds only the new bid 3
     assert compact_span_store(spark, compacted) == 1
-    assert folded_span_bids(spark, compacted) == {1, 2, 3}
+    assert folded_bids(spark, spans) == {1, 2, 3}
     # never-ingested store: no-op
     assert compact_span_store(spark, str(tmp_path / "void")) == 0
