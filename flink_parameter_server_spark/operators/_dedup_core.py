@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import MOD, poly_hash, poly_hash_sql
 from ..functions.text import tokens, tokens_sql
-from ..scratch import scoped_checkpoint, track_checkpoint_ids, unpersist_rdd_ids
+from ..scratch import hand_off, scoped_checkpoint, unpersist_rdd_ids
 
 SHINGLE_N = 3
 MINHASH_SEEDS = (11, 13, 17, 19, 23, 29, 31, 37)  # 8 hashes -> 4 bands x 2 rows
@@ -207,8 +207,7 @@ CC_MAX_ITERS = 15
 
 
 def star_connected_components(
-    edges, max_rounds: int = CC_MAX_ITERS, probe_every: int = 1,
-    scratch_ids: set[int] | None = None,
+    edges, max_rounds: int = CC_MAX_ITERS, probe_every: int = 1
 ):
     """Alternating small-star/large-star connected components (Kiveris et
     al., "Connected Components in MapReduce and Beyond"): per round the
@@ -242,11 +241,6 @@ def star_connected_components(
 
     Returns (parents DataFrame (child, root), rounds_used).
     edges: DataFrame (a, b), undirected, no self loops required.
-    ``scratch_ids``: when given, the SURVIVING round's checkpoint ids
-    are attributed there instead of the global release tracker — the
-    foreachBatch-sink contract (r9 review: a stream that never reaches
-    scratch.release() would otherwise accumulate one survivor edge set
-    per micro-batch).
     """
     spark = edges.sparkSession
     e_ids: set[int] = set()
@@ -260,7 +254,7 @@ def star_connected_components(
     # previous round's blocks dead — free them immediately instead of
     # holding O(rounds) copies of the edge set; the SURVIVING round's
     # blocks (which the returned parents plan reads) are handed to the
-    # caller's scratch_ids or the scratch tracker.
+    # current scratch owner.
 
     def signature(df):
         row = df.agg(
@@ -311,10 +305,7 @@ def star_connected_components(
         if rounds % probe_every == 0 or rounds == max_rounds:
             sig = signature(e)
             if sig == prev_sig:
-                if scratch_ids is None:
-                    track_checkpoint_ids(spark, e_ids)
-                else:
-                    scratch_ids |= e_ids
+                hand_off(spark, e_ids)
                 return e, rounds
             prev_sig = sig
     raise RuntimeError(

@@ -443,9 +443,7 @@ def gopher_reason_frame(df, rules=True):
     the predicate), re-building the whole per-doc signal tree inside
     ONE filter expression whose shared subtrees then re-evaluate per
     row — a 500-doc batch went from ~20 minutes (single partition) to
-    seconds once the filter ran over a materialized frame instead.
-    Both in-repo callers (corpus_curate via tracked_checkpoint(),
-    curate_batch via scoped_checkpoint()) follow this."""
+    seconds once the filter ran over a materialized frame instead."""
     return gopher_signal_frame(df).selectExpr(
         "doc_id", f"{gopher_reason_case_sql(rules)} AS g_reason"
     )

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import int_hash
 from ..functions.vectors import as_double, norm2
-from ..scratch import scoped_checkpoint, tracked_checkpoint, unpersist_rdd_ids
+from ..scratch import pinned, scoped_checkpoint
 from .similarity import _fast_cosine, _ivf2_assign, _nearest_centroids, _top_k, _with_parent
 
 IVF_SEED = 2027
@@ -92,7 +92,6 @@ def _train_centroids(
     n_cells: int,
     iters: int,
     seed: int,
-    build_ids: set,
     two_level: bool = False,
     n_super: int | None = None,
     train_cap: int | None = None,
@@ -103,8 +102,8 @@ def _train_centroids(
     quantizer without a disk round-trip. Init = the n_cells vectors
     first in seeded-hash order; each iteration is one broadcast
     assignment pass + one per-dimension mean. Every intermediate is
-    scoped-checkpointed into ``build_ids`` — the CALLER consumes the
-    returned frame and then frees those ids.
+    checkpointed, so the CALLER opens the scratch scope that consumes
+    the returned frame.
 
     ``two_level`` (r11): each iteration's assignment pass runs through
     the centroid-of-centroids prune (:func:`similarity._ivf2_assign`) —
@@ -141,8 +140,7 @@ def _train_centroids(
             v.orderBy(int_hash(F.col("vec_id"), 0, seed), "vec_id")
             .limit(train_cap)
             .select("vec_id", "embedding", "ne")
-            .repartition(v.sparkSession.sparkContext.defaultParallelism),
-            build_ids,
+            .repartition(v.sparkSession.sparkContext.defaultParallelism)
         )
     cent = scoped_checkpoint(
         tv.orderBy(int_hash(F.col("vec_id"), 0, seed), "vec_id")
@@ -153,8 +151,7 @@ def _train_centroids(
             .alias("cid"),
             as_double(F.col("embedding")).alias("cv"),
             F.col("ne").alias("nc"),
-        ),
-        build_ids,
+        )
     )
     for _ in range(iters):
         if two_level:
@@ -166,8 +163,7 @@ def _train_centroids(
         cent = scoped_checkpoint(
             means.where(norm2(F.col("cv")) > 0).select(
                 "cid", "cv", F.sqrt(norm2(F.col("cv"))).alias("nc")
-            ),
-            build_ids,
+            )
         )
     return cent
 
@@ -203,13 +199,12 @@ def kmeans_centroids(
     ``two_level``: route each Lloyd iteration's assignment through the
     centroid-of-centroids prune (see :func:`_train_centroids`) — the
     k >> sqrt(n)-regime training form."""
-    build_ids: set[int] = set()
     v = _normed(emb.select("vec_id", "embedding"), "embedding", "ne")
-    cent = _train_centroids(
-        v, n_cells, iters, seed, build_ids, two_level=two_level, n_super=n_super
-    )
-    rows = [(int(r["cid"]), [float(x) for x in r["cv"]], float(r["nc"])) for r in cent.collect()]
-    unpersist_rdd_ids(spark, build_ids)
+    with pinned(spark):
+        cent = _train_centroids(v, n_cells, iters, seed, two_level=two_level, n_super=n_super)
+        rows = [
+            (int(r["cid"]), [float(x) for x in r["cv"]], float(r["nc"])) for r in cent.collect()
+        ]
     return spark.createDataFrame(rows, "cid bigint, cv array<double>, nc double")
 
 
@@ -319,7 +314,6 @@ def _two_level_tables(spark, centroids: DataFrame, n_super: int | None, iters: i
     ``sup`` (scid, sv, ns) and ``children`` (cid, cv, nc, scid — each
     centroid with its parent super cell). Both are <= k rows — the
     collect-bounded discipline kmeans_centroids already uses."""
-    build_ids: set[int] = set()
     cent_v = centroids.select(
         F.col("cid").alias("vec_id"), F.col("cv").alias("embedding"),
         F.col("nc").alias("ne"),
@@ -327,20 +321,20 @@ def _two_level_tables(spark, centroids: DataFrame, n_super: int | None, iters: i
     k = centroids.count()
     if n_super is None:
         n_super = max(1, int(float(k) ** 0.5 + 0.5))
-    sup = _train_centroids(cent_v, n_super, iters, seed, build_ids).select(
-        F.col("cid").alias("scid"), F.col("cv").alias("sv"), F.col("nc").alias("ns")
-    )
-    # parent of each centroid: flat argmax over the super table (k x
-    # sqrt(k) — driver-local scale), collected alongside the centroids
-    rows = [
-        (int(r["cid"]), [float(x) for x in r["cv"]], float(r["nc"]), int(r["scid"]))
-        for r in _with_parent(centroids, sup).collect()
-    ]
-    sup_rows = [
-        (int(r["scid"]), [float(x) for x in r["sv"]], float(r["ns"]))
-        for r in sup.collect()
-    ]
-    unpersist_rdd_ids(spark, build_ids)
+    with pinned(spark):
+        sup = _train_centroids(cent_v, n_super, iters, seed).select(
+            F.col("cid").alias("scid"), F.col("cv").alias("sv"), F.col("nc").alias("ns")
+        )
+        # parent of each centroid: flat argmax over the super table (k x
+        # sqrt(k) — driver-local scale), collected alongside the centroids
+        rows = [
+            (int(r["cid"]), [float(x) for x in r["cv"]], float(r["nc"]), int(r["scid"]))
+            for r in _with_parent(centroids, sup).collect()
+        ]
+        sup_rows = [
+            (int(r["scid"]), [float(x) for x in r["sv"]], float(r["ns"]))
+            for r in sup.collect()
+        ]
     sup_local = spark.createDataFrame(sup_rows, "scid bigint, sv array<double>, ns double")
     children = spark.createDataFrame(
         rows, "cid bigint, cv array<double>, nc double, scid bigint"
@@ -393,7 +387,6 @@ def _pq_train_residual_codebook(
     cent: DataFrame,
     seed: int = IVF_SEED,
     iters: int = 2,
-    build_ids: set | None = None,
     n_codes: int | None = None,
     train_cap: int | None = None,
 ) -> DataFrame:
@@ -444,8 +437,7 @@ def _pq_train_residual_codebook(
         .where(F.col("aid") < n_codes)
         .select("m", F.col("aid").cast("long").alias("aid"), F.col("sv").alias("cs"))
     )
-    if build_ids is not None:
-        cb = scoped_checkpoint(cb, build_ids)
+    cb = scoped_checkpoint(cb)
     for _ in range(iters):
         cba = cb.groupBy("m").agg(
             F.collect_list(F.struct("aid", "cs")).alias("cbm")
@@ -463,9 +455,7 @@ def _pq_train_residual_codebook(
                 )
             )["aid"].alias("aid"),
         )
-        cb = _dim_means(enc, ["m", "aid"], F.col("sv"), "cs")
-        if build_ids is not None:
-            cb = scoped_checkpoint(cb, build_ids)
+        cb = scoped_checkpoint(_dim_means(enc, ["m", "aid"], F.col("sv"), "cs"))
     return cb.select("aid", "m", "cs")
 
 
@@ -776,78 +766,69 @@ def build_ivf_index(
             "n_super sizes the super-quantizer of the two-level prune"
         )
     train_cap = None if train_max_per_cell is None else train_max_per_cell * n_cells
-    # the build consumes every iteration checkpoint by the final writes,
-    # so its scratch is self-contained: collect the exact ids each
-    # checkpoint pins (scoped_checkpoint — a global before/after diff
-    # would claim a concurrent stream's blocks, r9 review) and free
-    # them after the writes (ADVICE r8 — untracked checkpoints linger
-    # until driver GC)
-    build_ids: set[int] = set()
-    v = _normed(emb.select("vec_id", "embedding"), "embedding", "ne")
-    cent = _train_centroids(
-        v, n_cells, iters, seed, build_ids,
-        two_level=two_level, n_super=n_super, train_cap=train_cap,
-    )
-    cent.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    if two_level:
-        sup_local, children = _two_level_tables(spark, cent, n_super, iters, seed)
-        # the quantizer hierarchy PERSISTS (r15): assignment must be a
-        # deterministic function of persisted state for add_vectors'
-        # replay-idempotency contract (a replayed id must land in the
-        # cell it is already in) — the derived super tables' Lloyd is
-        # float-fold-order dependent across runs, so deriving them per
-        # append could re-place a replayed id and silently duplicate
-        # it. Same design as pq_mode: persist the mode, dispatch every
-        # later assignment through it.
-        children.write.mode("overwrite").parquet(f"{index_dir}/assign_children")
-        sup_local.write.mode("overwrite").parquet(f"{index_dir}/assign_super")
-        final_assign = _ivf2_assign(v, (sup_local, children))
-    else:
-        # a flat (re)build over a previously two-level dir must clear
-        # the stale hierarchy, or mode detection would keep dispatching
-        # appends through a quantizer the cells no longer follow
-        from ..sources.fsutil import delete_path, path_exists as _pe
+    # the build's writes consume every checkpoint it pins, so its
+    # scratch scope frees them all at the end
+    with pinned(spark):
+        v = _normed(emb.select("vec_id", "embedding"), "embedding", "ne")
+        cent = _train_centroids(
+            v, n_cells, iters, seed, two_level=two_level, n_super=n_super, train_cap=train_cap
+        )
+        cent.write.mode("overwrite").parquet(f"{index_dir}/centroids")
+        if two_level:
+            sup_local, children = _two_level_tables(spark, cent, n_super, iters, seed)
+            # the quantizer hierarchy PERSISTS (r15): assignment must be a
+            # deterministic function of persisted state for add_vectors'
+            # replay-idempotency contract (a replayed id must land in the
+            # cell it is already in) — the derived super tables' Lloyd is
+            # float-fold-order dependent across runs, so deriving them per
+            # append could re-place a replayed id and silently duplicate
+            # it. Same design as pq_mode: persist the mode, dispatch every
+            # later assignment through it.
+            children.write.mode("overwrite").parquet(f"{index_dir}/assign_children")
+            sup_local.write.mode("overwrite").parquet(f"{index_dir}/assign_super")
+            final_assign = _ivf2_assign(v, (sup_local, children))
+        else:
+            # a flat (re)build over a previously two-level dir must clear
+            # the stale hierarchy, or mode detection would keep dispatching
+            # appends through a quantizer the cells no longer follow
+            from ..sources.fsutil import delete_path, path_exists as _pe
 
-        for tbl in ("assign_children", "assign_super"):
-            if _pe(spark, f"{index_dir}/{tbl}"):
-                delete_path(spark, f"{index_dir}/{tbl}")
-        final_assign = _assign(v, cent)
-    assigned = scoped_checkpoint(
-        final_assign.select("vec_id", "embedding", "ne", "cid"), build_ids
-    )
-    assigned.write.mode("overwrite").partitionBy("cid").parquet(f"{index_dir}/cells")
-    if pq:
-        # ADVICE r14: the mode marker lands BEFORE the codebook it
-        # describes — a crash between the two writes must never leave
-        # a residual-trained codebook that reads as plain (a later
-        # gap-heal would append mixed-mode codes); a marker with no
-        # codebook is inert (every PQ consumer keys on pq_codebook's
-        # existence first)
-        _write_pq_mode(spark, index_dir, by_residual, pq_bits)
-        n_codes = 1 << pq_bits
-        cb = (
-            _pq_train_residual_codebook(
-                assigned, cent, seed, build_ids=build_ids, n_codes=n_codes,
-                train_cap=train_cap,
+            for tbl in ("assign_children", "assign_super"):
+                if _pe(spark, f"{index_dir}/{tbl}"):
+                    delete_path(spark, f"{index_dir}/{tbl}")
+            final_assign = _assign(v, cent)
+        assigned = scoped_checkpoint(final_assign.select("vec_id", "embedding", "ne", "cid"))
+        assigned.write.mode("overwrite").partitionBy("cid").parquet(f"{index_dir}/cells")
+        if pq:
+            # ADVICE r14: the mode marker lands BEFORE the codebook it
+            # describes — a crash between the two writes must never leave
+            # a residual-trained codebook that reads as plain (a later
+            # gap-heal would append mixed-mode codes); a marker with no
+            # codebook is inert (every PQ consumer keys on pq_codebook's
+            # existence first)
+            _write_pq_mode(spark, index_dir, by_residual, pq_bits)
+            n_codes = 1 << pq_bits
+            cb = (
+                _pq_train_residual_codebook(
+                    assigned, cent, seed, n_codes=n_codes, train_cap=train_cap
+                )
+                if by_residual
+                else _pq_train_codebook(v, seed, n_codes=n_codes)
             )
-            if by_residual
-            else _pq_train_codebook(v, seed, n_codes=n_codes)
-        )
-        cb.write.mode("overwrite").parquet(f"{index_dir}/pq_codebook")
-        cbq = spark.read.parquet(f"{index_dir}/pq_codebook")
-        # r13 (VERDICT r12 #3): the replica persists PACKED — one
-        # BIGINT of pq_bits-wide ranks per vector, not array<long>
-        a2r, _ = _pq_pack_maps(cbq, bits=pq_bits)
-        _write_pq_codes(
-            _encode_codes(spark, index_dir, assigned, cbq, by_residual).select(
-                "vec_id", "codes", "cid"
-            ),
-            a2r,
-            f"{index_dir}/pq_codes",
-            "overwrite",
-            bits=pq_bits,
-        )
-    unpersist_rdd_ids(spark, build_ids)
+            cb.write.mode("overwrite").parquet(f"{index_dir}/pq_codebook")
+            cbq = spark.read.parquet(f"{index_dir}/pq_codebook")
+            # r13 (VERDICT r12 #3): the replica persists PACKED — one
+            # BIGINT of pq_bits-wide ranks per vector, not array<long>
+            a2r, _ = _pq_pack_maps(cbq, bits=pq_bits)
+            _write_pq_codes(
+                _encode_codes(spark, index_dir, assigned, cbq, by_residual).select(
+                    "vec_id", "codes", "cid"
+                ),
+                a2r,
+                f"{index_dir}/pq_codes",
+                "overwrite",
+                bits=pq_bits,
+            )
 
 
 def ivf_search(
@@ -987,11 +968,10 @@ def ivf_search(
     )
     # the probed_cids collect below would otherwise trigger the full
     # broadcast-cosine assignment a SECOND time when the scored join
-    # recomputes the same uncached plan (ADVICE r7) — pin it once.
-    # Tracked (ADVICE r8): the result plan depends on this checkpoint,
-    # so it frees at scratch.release() / the next registry entry, not
-    # here — a bare localCheckpoint would linger until driver GC.
-    probes = tracked_checkpoint(probes)
+    # recomputes the same uncached plan (ADVICE r7) — pin it once. The
+    # result plan depends on this checkpoint, so its owner is the
+    # caller's scratch scope or the tracker, never this function.
+    probes = scoped_checkpoint(probes)
     probed_cids = sorted(r["cid"] for r in probes.select("cid").distinct().collect())
     cells = spark.read.parquet(f"{index_dir}/cells").where(
         F.col("cid").isin(probed_cids)
@@ -1206,52 +1186,48 @@ def add_vectors(spark, index_dir: str, emb: DataFrame, preassigned: bool = False
     # (the ivf_search double-compute class)
     from ..sources.fsutil import path_exists, read_or_empty
 
-    ids: set[int] = set()
-    v = scoped_checkpoint(v, ids)
-    touched = sorted(r["cid"] for r in v.select("cid").distinct().collect())
-    existing = read_cells(spark, index_dir).where(F.col("cid").isin(touched)).select("vec_id")
-    accepted = scoped_checkpoint(
-        v.join(existing, "vec_id", "left_anti").select(
-            "vec_id", "embedding", "ne", "cid"
-        ),
-        ids,
-    )
-    accepted.write.mode("append").partitionBy("cid").parquet(f"{index_dir}/cells")
-    # PQ maintenance (r12): a pq=True index keeps its codes replica in
-    # lockstep — encode against the PERSISTED codebook (codes never
-    # drift from their vectors; the codebook, like the centroids, is
-    # only retrained by a rebuild). The encode set is keyed on the
-    # CODES replica, not on `accepted` (ADVICE r12): a crash between
-    # the cells append and the codes append leaves rows in cells with
-    # no codes, and an accepted-keyed append would never repair them —
-    # so encode every touched-cell row missing from pq_codes (covers
-    # this batch AND any historical gap; encoding is deterministic
-    # against the immutable codebook, hence replay-safe).
-    if path_exists(spark, f"{index_dir}/pq_codebook"):
-        bits = pq_code_bits(spark, index_dir)
-        cbq = spark.read.parquet(f"{index_dir}/pq_codebook")
-        a2r, _ = _pq_pack_maps(cbq, bits=bits)
-        codes_path = f"{index_dir}/pq_codes"
-        have = (
-            read_or_empty(spark, codes_path, "vec_id long, cid bigint", typed=False)
-            .where(F.col("cid").isin(touched))
-            .select("vec_id")
+    with pinned(spark):
+        v = scoped_checkpoint(v)
+        touched = sorted(r["cid"] for r in v.select("cid").distinct().collect())
+        existing = read_cells(spark, index_dir).where(F.col("cid").isin(touched)).select("vec_id")
+        accepted = scoped_checkpoint(
+            v.join(existing, "vec_id", "left_anti").select("vec_id", "embedding", "ne", "cid")
         )
-        need = (
-            read_cells(spark, index_dir)
-            .where(F.col("cid").isin(touched))
-            .join(have, "vec_id", "left_anti")
-        )
-        _write_pq_codes(
-            _encode_codes(
-                spark, index_dir, need, cbq, pq_by_residual(spark, index_dir)
-            ).select("vec_id", "codes", "cid"),
-            a2r,
-            codes_path,
-            "append",
-            bits=bits,
-        )
-    unpersist_rdd_ids(spark, ids)
+        accepted.write.mode("append").partitionBy("cid").parquet(f"{index_dir}/cells")
+        # PQ maintenance (r12): a pq=True index keeps its codes replica in
+        # lockstep — encode against the PERSISTED codebook (codes never
+        # drift from their vectors; the codebook, like the centroids, is
+        # only retrained by a rebuild). The encode set is keyed on the
+        # CODES replica, not on `accepted` (ADVICE r12): a crash between
+        # the cells append and the codes append leaves rows in cells with
+        # no codes, and an accepted-keyed append would never repair them —
+        # so encode every touched-cell row missing from pq_codes (covers
+        # this batch AND any historical gap; encoding is deterministic
+        # against the immutable codebook, hence replay-safe).
+        if path_exists(spark, f"{index_dir}/pq_codebook"):
+            bits = pq_code_bits(spark, index_dir)
+            cbq = spark.read.parquet(f"{index_dir}/pq_codebook")
+            a2r, _ = _pq_pack_maps(cbq, bits=bits)
+            codes_path = f"{index_dir}/pq_codes"
+            have = (
+                read_or_empty(spark, codes_path, "vec_id long, cid bigint", typed=False)
+                .where(F.col("cid").isin(touched))
+                .select("vec_id")
+            )
+            need = (
+                read_cells(spark, index_dir)
+                .where(F.col("cid").isin(touched))
+                .join(have, "vec_id", "left_anti")
+            )
+            _write_pq_codes(
+                _encode_codes(
+                    spark, index_dir, need, cbq, pq_by_residual(spark, index_dir)
+                ).select("vec_id", "codes", "cid"),
+                a2r,
+                codes_path,
+                "append",
+                bits=bits,
+            )
 
 
 def compact_index(spark, index_dir: str, target_files_per_cell: int = 1) -> None:

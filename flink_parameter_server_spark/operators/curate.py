@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import int_hash
 from ..functions.text import tokens
+from ..scratch import scoped_checkpoint, scratch
 from ._dedup_core import star_connected_components
 from ._util import t
 
@@ -124,7 +125,6 @@ def corpus_curate(spark, sf_dir, sem_assign=None, quality_rules=None):
     # consumption contract). Lazy import: textstats imports this
     # module's constants at load time.
     if quality_rules:
-        from ..scratch import tracked_checkpoint
         from ._gopher_core import gopher_reason_frame
         from ._util import fan_out
 
@@ -132,7 +132,7 @@ def corpus_curate(spark, sf_dir, sem_assign=None, quality_rules=None):
         # partitions, so the signal tree ran near-serial — the gate's
         # marginal cost scaled x15.5 for x10 docs until this narrow
         # (doc_id, text) shuffle restored full-width map evaluation
-        greason = tracked_checkpoint(
+        greason = scoped_checkpoint(
             gopher_reason_frame(
                 fan_out(surv1.select("doc_id", "text")), quality_rules
             )
@@ -158,9 +158,7 @@ def corpus_curate(spark, sf_dir, sem_assign=None, quality_rules=None):
     # sf0.1). ~46k narrow rows; at 100 TB this is the natural survivor
     # materialization barrier between the cheap gates and the
     # expensive pair stages.
-    from ..scratch import tracked_checkpoint as _tc
-
-    surv1k = _tc(
+    surv1k = scoped_checkpoint(
         surv1.withColumn(
             "e_ok",
             F.col("doc_id") == F.min("doc_id").over(Window.partitionBy(nh)),
@@ -179,7 +177,6 @@ def corpus_curate(spark, sf_dir, sem_assign=None, quality_rules=None):
     # (dedup imported lazily: at registration time this module loads
     # while operators.dedup may still be initializing — _dedup_core
     # holds the cycle-free primitives, dedup.py the registered ops)
-    from ..scratch import scratch
     from ._dedup_core import shingle_sets, token_hashes
     from .dedup import dedup_minhash_lsh
 

@@ -309,7 +309,7 @@ SELECT * FROM ({cluster}) AS cluster_part
     "documents the class).",
 )
 def train_test_split(spark, sf_dir):
-    from ..scratch import tracked_checkpoint
+    from ..scratch import scoped_checkpoint
     from ._dsir_core import dsir_micro
     from .curate import corpus_curate
 
@@ -346,8 +346,8 @@ def train_test_split(spark, sf_dir):
     # the 10 % an overlap must earn
     from ._gopher_core import GOPHER_FIXTURE_RULES
 
-    w = tracked_checkpoint(dsir_micro(d.select("doc_id", "lang", "text")))
-    assign = tracked_checkpoint(ivf_assign(embeddings_normed(spark, sf_dir)))
+    w = scoped_checkpoint(dsir_micro(d.select("doc_id", "lang", "text")))
+    assign = scoped_checkpoint(ivf_assign(embeddings_normed(spark, sf_dir)))
     curated = corpus_curate(
         spark, sf_dir, sem_assign=assign, quality_rules=GOPHER_FIXTURE_RULES
     ).select(F.lit("curated").alias("part"), "doc_id", "lang", "source", "split")
@@ -974,7 +974,7 @@ def domain_reweight_iterated(
     over it with the |sources|-row rate state checkpointed per round —
     round cost is independent of corpus size."""
     from ..functions.hashing import poly_hash
-    from ..scratch import tracked_checkpoint
+    from ..scratch import scoped_checkpoint
     from ._dsir_core import DSIR_B, DSIR_SEED, DSIR_TARGET_LANG
 
     if rounds < 1:
@@ -987,16 +987,16 @@ def domain_reweight_iterated(
     ).select(
         "source", "lang", (poly_hash(F.col("tok"), DSIR_SEED) % DSIR_B).alias("b")
     )
-    csb = tracked_checkpoint(
+    csb = scoped_checkpoint(
         feat.groupBy("source", "b").agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    ctb = tracked_checkpoint(
+    ctb = scoped_checkpoint(
         feat.where(F.col("lang") == DSIR_TARGET_LANG)
         .groupBy("b")
         .agg(F.count(F.lit(1)).cast("long").alias("ct"))
     )
     ttf = ctb.agg(F.coalesce(F.sum("ct"), F.lit(0)).cast("long").alias("tt"))
-    doms = tracked_checkpoint(
+    doms = scoped_checkpoint(
         csb.groupBy("source").agg(F.sum("n").cast("long").alias("t_s"))
     )
 
@@ -1011,7 +1011,7 @@ def domain_reweight_iterated(
         base = with_margin(doc_quality_instances(spark, sf_dir)).select(
             "row_id", "y", "x", (_tau("pa1") * F.col("y")).alias("coef")
         )
-        tri = tracked_checkpoint(
+        tri = scoped_checkpoint(
             base.join(src, "row_id").select(
                 "row_id",
                 F.col("i_source").alias("source"),
@@ -1027,7 +1027,7 @@ def domain_reweight_iterated(
         pr = rates.select(F.col("g_source").alias("source"), "r")
         if excess == "pa_proxy":
             dom0 = _pa_proxy_excess(doms, tri, pr)
-            rates = tracked_checkpoint(
+            rates = scoped_checkpoint(
                 _domain_rates(dom0, prev_rate=None if rnd == 1 else pr, eta=eta)
             )
             history.append(
@@ -1077,7 +1077,7 @@ def domain_reweight_iterated(
             doms["source"].eqNullSafe(F.col("s2")),
             "left",
         ).select("source", "t_s", F.coalesce("m_s", F.lit(0)).cast("long").alias("m_s"))
-        rates = tracked_checkpoint(
+        rates = scoped_checkpoint(
             _domain_rates(dom0, prev_rate=None if rnd == 1 else pr, eta=eta)
         )
         history.append(rates.select(F.lit(rnd).alias("round"), F.col("g_source").alias("source"), "r"))

@@ -363,10 +363,10 @@ def bpe_merge_vocab(spark, sf_dir, n_merges: int = BPE_MERGES, words=None):
     lets a caller that also serves the encoder half (text_retrieval)
     build the corpus word table ONCE instead of twice; None keeps the
     self-contained build."""
-    from ..scratch import tracked_checkpoint
+    from ..scratch import scoped_checkpoint
 
     if words is None:
-        words = tracked_checkpoint(_bpe_words(spark, sf_dir))
+        words = scoped_checkpoint(_bpe_words(spark, sf_dir))
     merges = []
     for k in range(1, n_merges + 1):
         top = _bpe_pair_counts(words).orderBy(F.col("cnt").desc(), "a", "b").limit(1).collect()
@@ -570,10 +570,10 @@ def text_retrieval(spark, sf_dir):
     # thread while tf materializes ran 12 % faster at 4 cores but won
     # only 7 of 10 pairs (tools/ab.py warm rep, sf0.1); an overlap must
     # win 8
-    from ..scratch import tracked_checkpoint
+    from ..scratch import scoped_checkpoint
 
     tf.count()  # materialize the shared (doc, term) build
-    words = tracked_checkpoint(_bpe_words(spark, sf_dir))
+    words = scoped_checkpoint(_bpe_words(spark, sf_dir))
     mt = bpe_merge_vocab(spark, sf_dir, words=words)
     null_s = F.lit(None).cast("string")
     tfidf = tfidf_top_terms(spark, sf_dir, tf=tf).select(

@@ -40,7 +40,7 @@ from functools import cached_property
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..scratch import scoped_checkpoint, scratch, track_checkpoint_ids
+from ..scratch import scoped_checkpoint, scratch
 
 InitFn = Callable[[Column], Column]  # param_id -> initial value (deterministic)
 
@@ -150,17 +150,7 @@ class BatchParameterServer:
             self._superseded.append(base)
         self._epoch += 1
         if self._epoch % self.checkpoint_every == 0:
-            spark = merged.sparkSession
-            # exact-attributed lineage cut (r15): scoped_checkpoint reads
-            # the checkpoint RDD id off the LogicalRDD plan, so a trainer
-            # checkpointing on one driver thread can never claim (and
-            # later free) blocks a concurrent thread persisted. This is
-            # scratch.tracked_checkpoint inlined so that the call goes
-            # through this module's name: perfbench's traced run wraps
-            # kernel.scoped_checkpoint to count and time the cuts.
-            ids: set[int] = set()
-            merged = scoped_checkpoint(merged, ids)
-            track_checkpoint_ids(spark, ids)
+            merged = scoped_checkpoint(merged)
             # the eager cut has read the whole cached chain and the new
             # params no longer reference it. Newest first, so the cache
             # manager has no chain dependent left to re-plan when an

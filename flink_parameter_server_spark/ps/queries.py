@@ -568,9 +568,9 @@ def ps_train_epochs(spark, sf_dir):
     # its (scratch-cached) result on its own driver thread, so later
     # jobs' tasks back-fill the stragglers of earlier ones; the final
     # union then reads five warmed caches. Per-family plans, fold orders
-    # and values do not depend on the threads, and checkpoint blocks are
-    # attributed per call (scratch.scoped_checkpoint), so concurrent
-    # families cannot free each other's blocks.
+    # and values do not depend on the threads. A thread starts with no
+    # scratch scope, so its checkpoint blocks go to the tracker and
+    # outlive it.
     # 4 cores, sf0.1 (tools/ab.py warm rep, 10 pairs): serial 18.5 s -> 16.3 s.
     def fam_mf():
         return (

@@ -1,44 +1,45 @@
-"""Storage-lifecycle tracking for intra-query persisted intermediates.
+"""Storage lifecycle of persisted intermediates and checkpoint blocks.
 
-Several queries persist an intermediate that the rest of their (lazy)
-plan consumes more than once — the basket pair-join, the shared (doc,
-term) build, the sketch frequency tables. `DataFrame.persist` alone
-leaks: the blocks stay in storage memory after the query's consumer has
-finished, and a long-lived session running the whole 50-entry registry
-accumulates every query's scratch (VERDICT r4 task #3).
+Cached frames: :func:`scratch` replaces a bare ``persist()`` where a
+query's plan consumes an intermediate more than once, and tracks it
+for :func:`release`. A released cached frame is safe under any
+consumption order: a stale result that still references it recomputes.
 
-Discipline implemented here:
+Checkpoint blocks: ``localCheckpoint`` truncates lineage, so its blocks
+cannot be recomputed and only a caller that knows every consumer has
+run may free them. :func:`scoped_checkpoint` is the one entry point,
+and one rule decides who owns the blocks it pins:
 
-- :func:`scratch` replaces bare ``persist()`` at those sites and tracks
-  the handle.
-- Every registry query fn (plans/registry.py wraps them) calls
-  :func:`release` ON ENTRY — by then the previous query's result has
-  been consumed (the driver, bench.py and selfcheck.py all consume each
-  query before building the next), so its scratch is dead weight. This
-  bounds live scratch to ONE query's intermediates instead of all 50.
-- A final explicit :func:`release` (tests, long-lived sessions) empties
-  storage completely.
+1. **Scope.** Inside ``with pinned(spark):`` the innermost scope open
+   on the calling thread owns them and frees exactly those ids on
+   exit. A function opens a scope when its own barrier (a write, a
+   collect) consumes everything it pinned: a foreachBatch sink around
+   process + decisions write, an index build around its writes.
+2. **Tracker.** With no scope open, they go to the session tracker
+   that :func:`release` empties. Every registry query fn
+   (plans/registry.py wraps them) calls ``release()`` on entry — the
+   previous query's result has been consumed by then — so live scratch
+   stays bounded to one query's intermediates, and results of
+   checkpoint-backed queries must be consumed before the next query
+   starts.
+3. **Round loops.** A loop whose every round supersedes the last (the
+   star-CC and BPE loops) passes its own id set, frees each superseded
+   round itself, and hands what survives to the current owner
+   (:func:`hand_off`) or frees it.
 
-Released *cached* DataFrames are safe under any consumption order: a
-stale result that still references one simply recomputes. Released
-*localCheckpoint* blocks (tracked via :func:`track_checkpoint_ids`) are
-NOT recomputable — lineage was truncated — so results of
-checkpoint-backed queries (star-CC clustering, long kernel trainings)
-must be consumed before the next registry query starts; that is the
-documented contract of the driver harness and of every runner in this
-repo.
-
-Checkpoint block attribution is per-call and lock-free (r15: the id is
-read directly off the checkpointed Dataset's LogicalRDD plan), so
-queries may materialize checkpoints from several driver threads at once
-— which concurrent foreachBatch sinks do, and so do the §2.6 intra-query
-overlaps: independent branches built on driver threads through the one
-helper :func:`operators._util.overlap`, at the sites where the overlap
-measured faster at 4 cores.
+A scope lives in a ContextVar, so it belongs to the thread that opened
+it: a new thread starts in an empty context and hands its pins to the
+tracker, even when it was started inside a scope. Attribution is exact
+— the checkpoint's RDD id is read off the checkpointed Dataset's plan,
+never diffed against the session's persisted set — so concurrent
+foreachBatch sinks and driver-thread overlaps
+(:func:`operators._util.overlap`) never free each other's blocks.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +47,7 @@ from pyspark.storagelevel import StorageLevel
 
 _CACHED: list[DataFrame] = []
 _CHECKPOINT_HANDLES: list[Any] = []  # py4j JavaRDD handles
+_SCOPE: ContextVar[set[int] | None] = ContextVar("scratch_scope", default=None)
 
 
 def scratch(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
@@ -70,9 +72,27 @@ def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
             handle.unpersist(False)
 
 
-def track_checkpoint_ids(spark: SparkSession, ids: set[int]) -> None:
-    """Track specific checkpoint RDD ids (e.g. a loop's surviving final
-    round) for release at the next registry-query entry."""
+@contextmanager
+def pinned(spark: SparkSession):
+    """Own every checkpoint :func:`scoped_checkpoint` pins on this
+    thread until exit, then free exactly those ids. Yields the owned
+    id set."""
+    ids: set[int] = set()
+    token = _SCOPE.set(ids)
+    try:
+        yield ids
+    finally:
+        _SCOPE.reset(token)
+        unpersist_rdd_ids(spark, ids)
+
+
+def hand_off(spark: SparkSession, ids: set[int]) -> None:
+    """Give checkpoint ids to the current owner: the innermost scope
+    open on this thread, else the tracker."""
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope |= ids
+        return
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for i in ids:
         handle = jmap.get(int(i))
@@ -80,27 +100,11 @@ def track_checkpoint_ids(spark: SparkSession, ids: set[int]) -> None:
             _CHECKPOINT_HANDLES.append(handle)
 
 
-def tracked_checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint()`` with scratch discipline: the checkpoint's
-    persisted RDD blocks are tracked for :func:`release` instead of
-    lingering until driver GC (ADVICE r8: ivf_search's untracked probe
-    checkpoint accumulated blocks across serving calls). Same
-    non-recomputability contract as any tracked checkpoint — consume
-    the result before releasing."""
-    spark = df.sparkSession
-    ids: set[int] = set()
-    out = scoped_checkpoint(df, ids)
-    track_checkpoint_ids(spark, ids)
-    return out
-
-
 def _direct_checkpoint_rdd_id(df: DataFrame) -> int | None:
     """Exact block attribution for a just-localCheckpoint'ed frame: the
     Dataset analyzes to ``LogicalRDD`` over the materialized (and
-    persisted) RDD, whose id owns the checkpoint blocks — read it off
-    the plan instead of diffing the session-global persisted-RDD set.
-    Returns None if the plan shape is ever not LogicalRDD (a Spark
-    behavior change), so the caller can fall back."""
+    persisted) RDD, whose id owns the checkpoint blocks. Returns None
+    if the plan shape is ever not LogicalRDD (a Spark behavior change)."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
@@ -110,32 +114,18 @@ def _direct_checkpoint_rdd_id(df: DataFrame) -> int | None:
     return None
 
 
-def scoped_checkpoint(df: DataFrame, ids: set[int]) -> DataFrame:
-    """``localCheckpoint()`` whose persisted RDD ids are attributed to
-    THIS call and added to ``ids`` — the caller frees exactly those at
-    its own consumption barrier (``unpersist_rdd_ids``) or hands them to
-    :func:`track_checkpoint_ids`.
-
-    Attribution must be EXACT under driver concurrency: two foreachBatch
-    sinks sharing one SparkSession (dedup + semantic streams — a normal
-    serving deployment) interleave on driver threads, and a global
-    before/after diff in sink A claims and frees sink B's
-    concurrently-pinned checkpoint blocks; localCheckpoint lineage is
-    truncated, so B's decisions write then fails on missing blocks (r9
-    review). r15: exactness comes from reading the checkpointed RDD's id
-    directly off the returned Dataset's LogicalRDD plan
-    (:func:`_direct_checkpoint_rdd_id`) — no global diff, so concurrent
-    checkpoint MATERIALIZATIONS don't serialize on a module lock. r16
-    (ADVICE r15): a probe failure no longer flips a process-global into
-    a locked diff-mode fallback — mixed-mode attribution could claim a
-    concurrent direct-mode thread's blocks, the exact r9 bug class.
-    Instead, THAT call's blocks simply stay pinned until session end
-    (leaking one RDD is safe; freeing a guessed one is not), and the
-    next call probes again."""
+def scoped_checkpoint(df: DataFrame, ids: set[int] | None = None) -> DataFrame:
+    """``localCheckpoint()`` whose blocks go to the current owner (see
+    the module rule), or to ``ids`` in a round loop. A call whose id
+    cannot be read off the plan leaves its blocks pinned until session
+    end: leaking one RDD is safe, freeing a guessed one is not."""
     out = df.localCheckpoint()
     rid = _direct_checkpoint_rdd_id(out)
     if rid is not None:
-        ids.add(rid)
+        if ids is not None:
+            ids.add(rid)
+        else:
+            hand_off(out.sparkSession, {rid})
     return out
 
 

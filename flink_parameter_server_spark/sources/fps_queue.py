@@ -33,7 +33,6 @@ message file, so a wide topic scan parallelizes across executors.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -70,6 +69,13 @@ def _topic_files_meta(path: str) -> list[tuple[float, str, str]]:
 
 def _topic_files(path: str) -> list[str]:
     return [p for _, _, p in _topic_files_meta(path)]
+
+
+def latest_stamp(path: str) -> float:
+    """The newest arrival stamp on the topic (0.0 when it is empty):
+    every producer — both writers here and FileQueueTransport.send —
+    stamps its files strictly after it, over this one listing."""
+    return max((m for m, _, _ in _topic_files_meta(path)), default=0.0)
 
 
 class _FilePartition(InputPartition):
@@ -244,9 +250,7 @@ class FPSQueueStreamWriter(DataSourceStreamWriter):
         # wallclock mtime, which sorts BEFORE already-stamped files
         # once the stamp clock runs ahead, shifting the listing and
         # tripping the r8 offset-boundary verification (review r8).
-        latest = 0.0
-        for f in _topic_files(self._path):
-            latest = max(latest, os.stat(f).st_mtime)
+        latest = latest_stamp(self._path)
         for i, m in enumerate(messages):
             if m.path is None:
                 continue
@@ -283,9 +287,7 @@ class FPSQueueBatchWriter(DataSourceWriter):
     write = FPSQueueStreamWriter.write
 
     def commit(self, messages) -> None:
-        latest = 0.0
-        for f in _topic_files(self._path):
-            latest = max(latest, os.stat(f).st_mtime)
+        latest = latest_stamp(self._path)
         for i, m in enumerate(messages):
             if m.path is None:
                 continue
@@ -348,6 +350,3 @@ def register(spark) -> None:
     """Idempotent format registration for this session."""
     spark.dataSource.register(FPSQueueDataSource)
 
-
-# keep json import visible for offset (de)serialization contract readers
-_ = json

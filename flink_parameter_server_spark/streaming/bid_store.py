@@ -36,7 +36,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..scratch import unpersist_rdd_ids
+from ..scratch import pinned
 from ..sources.fsutil import list_dir_names, path_exists, swap_in
 
 _FOLDED_SCHEMA = "bid bigint"
@@ -129,24 +129,21 @@ def guard_decisions_dir(spark, decisions_dir: str) -> None:
 
 def bid_sink(spark, stream: DataFrame, store_dir: str, out_dir: str, process):
     """Start ``stream`` as a foreachBatch query: each micro-batch runs
-    ``process(batch_df, batch_id, ids)`` and its frame lands, with a
+    ``process(batch_df, batch_id)`` and its frame lands, with a
     ``batch_id`` column, under ``<out_dir>/bid=<batch_id>`` (overwrite —
     a replayed batch replaces its own rows). The query checkpoints at
     ``<store_dir>/_checkpoint``. Returns the started StreamingQuery.
 
-    ``process`` attributes every checkpoint it pins to ``ids``; the
-    decisions write consumes them all, so they are freed right after
-    it. Exact attribution, not a global before/after diff: a diff would
-    free checkpoints a concurrent sink on the same session pinned in
-    the window (r9 review)."""
+    The decisions write consumes every checkpoint ``process`` pins, so
+    each batch runs in its own scratch scope and frees them right
+    after the write."""
     guard_decisions_dir(spark, out_dir)
 
     def _sink(batch_df, batch_id: int) -> None:
-        ids: set[int] = set()
-        process(batch_df, batch_id, ids).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, f"bid={batch_id}"))
-        unpersist_rdd_ids(spark, ids)
+        with pinned(spark):
+            process(batch_df, batch_id).withColumn(
+                "batch_id", F.lit(batch_id)
+            ).write.mode("overwrite").parquet(os.path.join(out_dir, f"bid={batch_id}"))
 
     return (
         stream.writeStream.foreachBatch(_sink)

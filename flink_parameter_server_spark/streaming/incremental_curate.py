@@ -65,7 +65,6 @@ def curate_batch(
     eval_store_dir: str | None = None,
     min_chars: int | None = None,
     min_tokens: int | None = None,
-    scratch_ids: set[int] | None = None,
     emb: DataFrame | None = None,
     semantic_store_dir: str | None = None,
     quality_rules=None,
@@ -73,9 +72,6 @@ def curate_batch(
     """Run one (doc_id, text, n_chars) batch through the curation
     stages; returns (doc_id, decision, dup_of). Thresholds default to
     the batch pipeline's CURATE_MIN_CHARS / CURATE_MIN_TOKENS.
-    ``scratch_ids``: exact attribution of the checkpoints this call
-    pins (see incremental_dedup.signatures); defaults to
-    scratch-release tracking.
 
     ``quality_rules`` (r13): the opt-in Gopher Table A1 threshold gate
     — the streaming dual of corpus_curate's stage 1b, same parameter
@@ -98,14 +94,12 @@ def curate_batch(
     so every store holds end-to-end-accepted content only."""
     from ..functions.text import tokens
     from ..operators.curate import CURATE_MIN_CHARS, CURATE_MIN_TOKENS
-    from ..scratch import scoped_checkpoint, track_checkpoint_ids
+    from ..scratch import scoped_checkpoint
 
-    own = scratch_ids is None
-    ids: set[int] = set() if own else scratch_ids
     min_chars = CURATE_MIN_CHARS if min_chars is None else min_chars
     min_tokens = CURATE_MIN_TOKENS if min_tokens is None else min_tokens
 
-    docs = scoped_checkpoint(docs.select("doc_id", "text", "n_chars"), ids)
+    docs = scoped_checkpoint(docs.select("doc_id", "text", "n_chars"))
 
     # stage 1 — quality gate
     q_ok = (F.col("n_chars") >= min_chars) & (
@@ -130,10 +124,7 @@ def curate_batch(
         # evaluate the signal tree near-serial — same measured fix as
         # the batch pipeline's stage 1b
         g_all = scoped_checkpoint(
-            gopher_reason_frame(
-                fan_out(surv_q.select("doc_id", "text")), quality_rules
-            ),
-            ids,
+            gopher_reason_frame(fan_out(surv_q.select("doc_id", "text")), quality_rules)
         )
         g_rej = g_all.where(F.col("g_reason").isNotNull())
         surv_q = surv_q.join(g_rej.select("doc_id"), "doc_id", "left_anti")
@@ -145,7 +136,7 @@ def curate_batch(
 
     hashed = surv_q.select("doc_id", "text", norm_content_hash("text").alias("h"))
     hashed = scoped_checkpoint(
-        hashed.withColumn("keeper", F.min("doc_id").over(Window.partitionBy("h"))), ids
+        hashed.withColumn("keeper", F.min("doc_id").over(Window.partitionBy("h")))
     )
     exact_batch = hashed.where(F.col("doc_id") != F.col("keeper")).select(
         "doc_id", F.col("keeper").alias("dup_of")
@@ -165,7 +156,7 @@ def curate_batch(
         .groupBy("doc_id")
         .agg(F.min("dup_of").alias("dup_of"))
     )
-    exact_store = scoped_checkpoint(exact_store, ids)
+    exact_store = scoped_checkpoint(exact_store)
     surv_e = keepers.join(exact_store.select("doc_id"), "doc_id", "left_anti")
 
     # stages 3+4 signature the batch ONCE (the token-hash build is the
@@ -174,7 +165,7 @@ def curate_batch(
     # filters it to its own survivors (r8 simplify pass)
     from .incremental_dedup import signatures
 
-    sigs = signatures(surv_e.select("doc_id", "text"), scratch_ids=ids)
+    sigs = signatures(surv_e.select("doc_id", "text"))
 
     # stage 3 — eval decontamination (read-only probe)
     if eval_store_dir is not None:
@@ -183,7 +174,7 @@ def curate_batch(
                 spark, surv_e.select("doc_id", "text"), eval_store_dir, sigs=sigs
             ).select("doc_id", F.col("contaminated_by").alias("dup_of"))
         )
-        contam = scoped_checkpoint(contam, ids)
+        contam = scoped_checkpoint(contam)
     else:
         contam = spark.createDataFrame([], "doc_id bigint, dup_of bigint")
     surv_c = surv_e.join(contam.select("doc_id"), "doc_id", "left_anti")
@@ -196,7 +187,6 @@ def curate_batch(
         surv_c.select("doc_id", "text"),
         store_dir,
         sigs=sigs,
-        scratch_ids=ids,
         append=not semantic_on,
     )
 
@@ -210,12 +200,11 @@ def curate_batch(
             "decision IN ('accepted', 'no_shingles')"
         ).select(F.col("doc_id").alias("vec_id"))
         emb_surv = emb.select("vec_id", "embedding").join(surv_n, "vec_id", "left_semi")
-        sem = process_semantic_batch(spark, emb_surv, semantic_store_dir, scratch_ids=ids)
+        sem = process_semantic_batch(spark, emb_surv, semantic_store_dir)
         sem_rej = scoped_checkpoint(
             sem.where("decision IN ('dup_of_store', 'dup_in_batch')").select(
                 F.col("vec_id").alias("doc_id"), "dup_of"
-            ),
-            ids,
+            )
         )
     else:
         sem_rej = spark.createDataFrame([], "doc_id bigint, dup_of bigint")
@@ -275,7 +264,7 @@ def curate_batch(
     if semantic_on:
         from .incremental_dedup import append_signatures
 
-        append_signatures(spark, store_dir, sigs[0], accepted_ids, ids)
+        append_signatures(spark, store_dir, sigs[0], accepted_ids)
     new_hashes = (
         keepers.join(accepted_ids, "doc_id", "left_semi")
         .select("doc_id", "h")
@@ -283,8 +272,6 @@ def curate_batch(
     )
     new_hashes.write.mode("append").parquet(hash_path)
 
-    if own:
-        track_checkpoint_ids(spark, ids)
     # assemble one decision per input doc, stage precedence preserved
     return (
         docs.select("doc_id")
@@ -343,12 +330,11 @@ def curate_stream_writer(
         docs_stream,
         store_dir,
         decisions_dir,
-        lambda df, bid, ids: curate_batch(
+        lambda df, bid: curate_batch(
             spark,
             df,
             store_dir,
             eval_store_dir,
-            scratch_ids=ids,
             emb=emb,
             semantic_store_dir=semantic_store_dir,
             quality_rules=quality_rules,

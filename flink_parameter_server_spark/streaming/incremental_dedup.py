@@ -62,6 +62,7 @@ from ..operators._dedup_core import (
     star_connected_components,
     token_hashes,
 )
+from ..scratch import pinned, scoped_checkpoint
 from ..sources.fsutil import path_exists, read_or_empty, swap_in
 from .bid_store import bid_sink
 
@@ -76,22 +77,10 @@ def _store(spark, store_dir: str, name: str, schema: str) -> DataFrame:
     return read_or_empty(spark, os.path.join(store_dir, name), schema)
 
 
-def signatures(docs: DataFrame, scratch_ids: set[int] | None = None) -> tuple[DataFrame, DataFrame]:
+def signatures(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(shingles, bands) for a (doc_id, text) batch — the exact batch
-    pipeline arithmetic (seeded, oracle-replayable).
-
-    ``scratch_ids``: the shingle build is checkpointed; its persisted
-    RDD ids are attributed there (the caller frees them at its own
-    consumption barrier — r9 review: a global diff-unpersist in one
-    foreachBatch sink frees a concurrent sink's blocks). When omitted,
-    the ids are tracked for ``scratch.release()`` instead."""
-    from ..scratch import scoped_checkpoint, track_checkpoint_ids
-
-    own = scratch_ids is None
-    ids: set[int] = set() if own else scratch_ids
-    sh = scoped_checkpoint(shingle_sets(token_hashes(docs.select("doc_id", "text"))), ids)
-    if own:
-        track_checkpoint_ids(sh.sparkSession, ids)
+    pipeline arithmetic (seeded, oracle-replayable)."""
+    sh = scoped_checkpoint(shingle_sets(token_hashes(docs.select("doc_id", "text"))))
     return sh, minhash_bands(sh)
 
 
@@ -100,7 +89,6 @@ def process_batch(
     docs: DataFrame,
     store_dir: str,
     sigs=None,
-    scratch_ids: set[int] | None = None,
     append: bool = True,
 ) -> DataFrame:
     """Run one batch through the store; returns decisions
@@ -117,9 +105,6 @@ def process_batch(
     doc_id) — lets a composing pipeline (incremental_curate) signature
     each batch once instead of once per stage.
 
-    ``scratch_ids``: see :func:`signatures` — exact attribution of the
-    checkpoints this call pins; defaults to scratch-release tracking.
-
     ``append=False`` skips the store writes: a composing pipeline with
     LATER gates (incremental_curate's r9 semantic stage) must persist
     signatures only for docs accepted END-TO-END — the store's
@@ -128,19 +113,14 @@ def process_batch(
     already landed. The caller then appends via
     :func:`append_signatures` after its final gate.
     """
-    from ..scratch import scoped_checkpoint, track_checkpoint_ids
-
-    own = scratch_ids is None
-    ids: set[int] = set() if own else scratch_ids
-
-    docs = scoped_checkpoint(docs.select("doc_id", "text"), ids)
+    docs = scoped_checkpoint(docs.select("doc_id", "text"))
     if sigs is None:
-        sh, bands = signatures(docs, scratch_ids=ids)
+        sh, bands = signatures(docs)
     else:
         batch_ids = docs.select("doc_id")
         sh = sigs[0].join(batch_ids, "doc_id", "left_semi")
         bands = sigs[1].join(batch_ids, "doc_id", "left_semi")
-    bands = scoped_checkpoint(bands, ids)
+    bands = scoped_checkpoint(bands)
 
     store_bands = _store(spark, store_dir, "bands", _BANDS_SCHEMA)
     store_sh = _store(spark, store_dir, "shingles", _SH_SCHEMA)
@@ -177,10 +157,10 @@ def process_batch(
         .groupBy("doc_id")
         .agg(F.min("old_id").alias("dup_of"))
     )
-    store_dups = scoped_checkpoint(store_dups, ids)
+    store_dups = scoped_checkpoint(store_dups)
 
     # --- stage 2: within the batch, among store-survivors ---
-    surv = scoped_checkpoint(sh.join(store_dups.select("doc_id"), "doc_id", "left_anti"), ids)
+    surv = scoped_checkpoint(sh.join(store_dups.select("doc_id"), "doc_id", "left_anti"))
     sbands = minhash_bands(surv)
     a, b = sbands.alias("a"), sbands.alias("b")
     cand_in = (
@@ -203,9 +183,9 @@ def process_batch(
         )
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     )
-    parents, _ = star_connected_components(pairs, scratch_ids=ids)
+    parents, _ = star_connected_components(pairs)
     batch_dups = scoped_checkpoint(
-        parents.select(F.col("a").alias("doc_id"), F.col("b").alias("dup_of")), ids
+        parents.select(F.col("a").alias("doc_id"), F.col("b").alias("dup_of"))
     )
 
     accepted = surv.join(batch_dups.select("doc_id"), "doc_id", "left_anti")
@@ -213,10 +193,8 @@ def process_batch(
     # --- persist accepted signatures (append-only, replay-idempotent;
     # presence-skip semantics in _append_sig_frames) ---
     if append:
-        _append_sig_frames(store_dir, store_bands, store_sh, accepted, ids)
+        _append_sig_frames(store_dir, store_bands, store_sh, accepted)
 
-    if own:
-        track_checkpoint_ids(spark, ids)
     return (
         docs.select("doc_id")
         .join(sh.select("doc_id", F.lit(True).alias("has_sh")), "doc_id", "left")
@@ -234,16 +212,14 @@ def process_batch(
     )
 
 
-def _append_sig_frames(store_dir, store_bands, store_sh, accepted, ids) -> None:
+def _append_sig_frames(store_dir, store_bands, store_sh, accepted) -> None:
     """Append an accepted (doc_id, shingles) frame to both store
     tables with the per-table presence skip (bands are written first,
     so a crash between the writes leaves a doc bands-only; each table
     skips what IT already has — review r8)."""
-    from ..scratch import scoped_checkpoint
-
     present_bands = store_bands.select("doc_id").distinct()
     present_sh = store_sh.select("doc_id")
-    new_for_bands = scoped_checkpoint(accepted.join(present_bands, "doc_id", "left_anti"), ids)
+    new_for_bands = scoped_checkpoint(accepted.join(present_bands, "doc_id", "left_anti"))
     minhash_bands(new_for_bands).write.mode("append").partitionBy("b").parquet(
         os.path.join(store_dir, "bands")
     )
@@ -252,9 +228,7 @@ def _append_sig_frames(store_dir, store_bands, store_sh, accepted, ids) -> None:
     ).write.mode("append").parquet(os.path.join(store_dir, "shingles"))
 
 
-def append_signatures(
-    spark, store_dir: str, sh, accepted_ids, scratch_ids: set[int]
-) -> None:
+def append_signatures(spark, store_dir: str, sh, accepted_ids) -> None:
     """Deferred half of ``process_batch(append=False)``: persist
     signatures for the docs that survived EVERY downstream gate.
     ``sh``: the (doc_id, shingles) frame the batch was signatured with;
@@ -262,7 +236,7 @@ def append_signatures(
     store_bands = _store(spark, store_dir, "bands", _BANDS_SCHEMA)
     store_sh = _store(spark, store_dir, "shingles", _SH_SCHEMA)
     accepted = sh.join(accepted_ids, "doc_id", "left_semi")
-    _append_sig_frames(store_dir, store_bands, store_sh, accepted, scratch_ids)
+    _append_sig_frames(store_dir, store_bands, store_sh, accepted)
 
 
 def build_signature_store(spark, docs: DataFrame, store_dir: str) -> None:
@@ -271,29 +245,25 @@ def build_signature_store(spark, docs: DataFrame, store_dir: str) -> None:
     decontamination primitive: build the store from the EVAL/BENCHMARK
     set, then :func:`contamination_check` any training corpus against
     it — the GPT-3/Pile decontamination shape, reusing the identical
-    probe join. Self-contained scratch: the writes consume the
-    signature checkpoint, so its ids free here."""
-    from ..scratch import unpersist_rdd_ids
-
-    ids: set[int] = set()
-    sh, bands = signatures(docs, scratch_ids=ids)
-    bands.write.mode("append").partitionBy("b").parquet(os.path.join(store_dir, "bands"))
-    sh.select("doc_id", "shingles").write.mode("append").parquet(
-        os.path.join(store_dir, "shingles")
-    )
-    unpersist_rdd_ids(spark, ids)
+    probe join. The writes consume the signature checkpoint, so it
+    frees here."""
+    with pinned(spark):
+        sh, bands = signatures(docs)
+        bands.write.mode("append").partitionBy("b").parquet(os.path.join(store_dir, "bands"))
+        sh.select("doc_id", "shingles").write.mode("append").parquet(
+            os.path.join(store_dir, "shingles")
+        )
 
 
 def contamination_check(
-    spark, docs: DataFrame, store_dir: str, sigs=None, scratch_ids: set[int] | None = None
+    spark, docs: DataFrame, store_dir: str, sigs=None
 ) -> DataFrame:
     """(doc_id, contaminated_by) — training docs that near-duplicate a
     store (eval-set) doc; clean docs are absent. Read-only: unlike
     :func:`process_batch` nothing appends, so the same eval store
     screens any number of corpora. ``sigs``: optional precomputed
-    ``(sh, bands)`` for ``docs`` (see :func:`process_batch`);
-    ``scratch_ids``: see :func:`signatures`."""
-    sh, bands = signatures(docs, scratch_ids=scratch_ids) if sigs is None else sigs
+    ``(sh, bands)`` for ``docs`` (see :func:`process_batch`)."""
+    sh, bands = signatures(docs) if sigs is None else sigs
     store_bands = _store(spark, store_dir, "bands", _BANDS_SCHEMA)
     store_sh = _store(spark, store_dir, "shingles", _SH_SCHEMA)
     cand = (
@@ -369,5 +339,5 @@ def dedup_stream_writer(spark, docs_stream: DataFrame, store_dir: str, decisions
         docs_stream,
         store_dir,
         decisions_dir,
-        lambda df, bid, ids: process_batch(spark, df, store_dir, scratch_ids=ids),
+        lambda df, bid: process_batch(spark, df, store_dir),
     )

@@ -86,7 +86,6 @@ def process_dsir_batch(
     docs: DataFrame,
     store_dir: str,
     batch_id: int,
-    scratch_ids: set[int] | None = None,
 ) -> DataFrame:
     """Ingest one (doc_id, lang, text) batch: write its count delta
     under ``counts/bid=<batch_id>`` (overwrite — replay-idempotent),
@@ -100,20 +99,12 @@ def process_dsir_batch(
     re-run with the SAME bid before the store is considered consistent
     (the overwrite self-heals; a replay under a new bid double-counts).
     A bid already folded by :func:`compact_dsir_counts` skips its delta
-    write — the compact file carries it — and just recomputes weights.
+    write — the compact file carries it — and just recomputes weights."""
+    from ..scratch import scoped_checkpoint
 
-    ``scratch_ids``: exact checkpoint attribution (the incremental
-    family contract); when omitted, ids are tracked for
-    ``scratch.release()``."""
-    from ..scratch import scoped_checkpoint, track_checkpoint_ids
-
-    own = scratch_ids is None
-    ids: set[int] = set() if own else scratch_ids
     # the feature counts feed the delta write AND the weight sums —
     # checkpoint once so the (doc, b) shuffle runs once
-    fcnt = scoped_checkpoint(dsir_features(docs), ids)
-    if own:
-        track_checkpoint_ids(spark, ids)
+    fcnt = scoped_checkpoint(dsir_features(docs))
     delta = fcnt.groupBy("b").agg(
         F.sum("n").cast("long").alias("cr"),
         F.sum(F.when(F.col("lang") == DSIR_TARGET_LANG, F.col("n"))).cast("long").alias("ct"),
@@ -157,9 +148,9 @@ def rescore_and_select(
     persist-before-count contract — the count action would otherwise
     re-execute the whole weight lineage)."""
     from ..operators.mlprep import DSIR_KEEP_DIV, dsir_select_threshold
-    from ..scratch import tracked_checkpoint
+    from ..scratch import scoped_checkpoint
 
-    w = tracked_checkpoint(rescore_dsir(spark, docs, store_dir))
+    w = scoped_checkpoint(rescore_dsir(spark, docs, store_dir))
     return dsir_select_threshold(w, keep_div=keep_div or DSIR_KEEP_DIV)
 
 
@@ -174,5 +165,5 @@ def dsir_stream_writer(spark, docs_stream: DataFrame, store_dir: str, weights_di
         docs_stream,
         store_dir,
         weights_dir,
-        lambda df, bid, ids: process_dsir_batch(spark, df, store_dir, bid, scratch_ids=ids),
+        lambda df, bid: process_dsir_batch(spark, df, store_dir, bid),
     )

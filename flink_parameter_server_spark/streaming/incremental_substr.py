@@ -108,21 +108,21 @@ def process_substr_batch(
     function's contract). The returned frame is computed EAGERLY
     (checkpointed) before the store append so the decisions a caller
     stamps are the ones made against the pre-append state."""
-    from ..scratch import tracked_checkpoint
+    from ..scratch import scoped_checkpoint
 
     th = token_hashes(docs.select("doc_id", "text"))
     occ = span_occurrences(th)
     w = Window.partitionBy("sp").orderBy("doc_id", "s")
     ranked = occ.withColumn("rn", F.row_number().over(w))
     seen = store_spans(spark, store_dir, exclude_bid=batch_id)
-    probed = tracked_checkpoint(
+    probed = scoped_checkpoint(
         ranked.join(seen.withColumn("_seen", F.lit(1)), "sp", "left")
     )
     cut = probed.where((F.col("rn") >= 2) | F.col("_seen").isNotNull())
     # same maximal-run merge as the batch half (r12, merge_cut_runs):
     # sub-span kept fragments between a doc's cut runs are filled, so
     # the single-batch ≡ batch pin keeps holding position-for-position
-    decisions = tracked_checkpoint(
+    decisions = scoped_checkpoint(
         cut.groupBy("doc_id")
         .agg(
             F.array_distinct(

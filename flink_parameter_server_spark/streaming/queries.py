@@ -293,21 +293,10 @@ def online_ps_sequential(spark, sf_dir):
         # SGD loop is CPU-bound per key, so it wants the full task
         # parallelism (unlike the pure-JVM stateful windows, where extra
         # state stores are overhead at test scale).
-        tmp = tempfile.mkdtemp(prefix="fps_online_mf_")
-        name = f"online_mf_{uuid.uuid4().hex[:8]}"
-        ratings.coalesce(1).write.parquet(f"{tmp}/src")
-        stream = spark.readStream.schema(ratings.schema).parquet(f"{tmp}/src")
-        q = (
-            online_mf_stream(spark, stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        mf_wide = _run_instance_stream(
+            spark, ratings, lambda s: online_mf_stream(spark, s), "fps_online_mf_",
+            ["item", "n_updates", *[f"f{j}" for j in range(K)]],
         )
-        q.awaitTermination()
-        mf_wide = spark.table(name)
         return (
             mf_wide.select(
                 "item",

@@ -82,9 +82,7 @@ _LOG = logging.getLogger(__name__)
 MAX_SHARE_FLAG = 0.1
 
 
-def process_semantic_batch(
-    spark, emb: DataFrame, index_dir: str, scratch_ids: set[int] | None = None
-) -> DataFrame:
+def process_semantic_batch(spark, emb: DataFrame, index_dir: str) -> DataFrame:
     """Run one (vec_id, embedding) batch through the store; returns
     decisions (vec_id, decision, dup_of) with decision in
     'accepted' | 'dup_of_store' | 'dup_in_batch' | 'zero_norm'.
@@ -92,16 +90,10 @@ def process_semantic_batch(
     'zero_norm' marks vectors with no cosine cell — they pass through
     un-deduped (the analog of incremental_dedup's 'no_shingles').
     Intra-batch duplicate vec_ids collapse to one decision row per id
-    (deterministic keeper, matching add_vectors' contract).
-    ``scratch_ids``: exact attribution of the checkpoints this call
-    pins (incremental_dedup.signatures contract); when omitted they are
-    tracked for ``scratch.release()`` — direct callers no longer leak
-    pinned blocks until driver GC (r9 review)."""
-    from ..scratch import scoped_checkpoint, track_checkpoint_ids
+    (deterministic keeper, matching add_vectors' contract)."""
+    from ..scratch import scoped_checkpoint
 
-    own = scratch_ids is None
-    sids: set[int] = set() if own else scratch_ids
-    ids = scoped_checkpoint(emb.select("vec_id").distinct(), sids)
+    ids = scoped_checkpoint(emb.select("vec_id").distinct())
     wdup = Window.partitionBy("vec_id").orderBy(F.col("embedding").cast("string"))
     v = (
         _normed(emb.select("vec_id", "embedding"), "embedding", "ne")
@@ -110,7 +102,7 @@ def process_semantic_batch(
         .drop("_rn")
     )
     cent = spark.read.parquet(f"{index_dir}/centroids")
-    assigned = scoped_checkpoint(_assign(v, cent), sids)
+    assigned = scoped_checkpoint(_assign(v, cent))
 
     # per-batch geometry diagnostic (r12, log-only — no behavior
     # change): exact-duplicate mass collapses identical vectors into
@@ -162,7 +154,7 @@ def process_semantic_batch(
         .where(F.col("rn") == 1)
         .select("vec_id", F.col("old_id").alias("dup_of"))
     )
-    store_dups = scoped_checkpoint(store_dups, sids)
+    store_dups = scoped_checkpoint(store_dups)
 
     # --- stage 2: within the batch, among store-survivors ---
     surv = assigned.join(store_dups.select("vec_id"), "vec_id", "left_anti")
@@ -181,9 +173,9 @@ def process_semantic_batch(
         .where(cos_b >= SEMANTIC_T)
         .select(F.col("x.vec_id").alias("a"), F.col("y.vec_id").alias("b"))
     )
-    parents, _ = star_connected_components(pairs, scratch_ids=sids)
+    parents, _ = star_connected_components(pairs)
     batch_dups = scoped_checkpoint(
-        parents.select(F.col("a").alias("vec_id"), F.col("b").alias("dup_of")), sids
+        parents.select(F.col("a").alias("vec_id"), F.col("b").alias("dup_of"))
     )
 
     accepted = surv.join(batch_dups.select("vec_id"), "vec_id", "left_anti")
@@ -195,8 +187,6 @@ def process_semantic_batch(
     # re-norm + re-assign pass (r9 review) ---
     add_vectors(spark, index_dir, accepted, preassigned=True)
 
-    if own:
-        track_checkpoint_ids(spark, sids)
     return (
         ids.join(assigned.select("vec_id", F.lit(True).alias("has_cell")), "vec_id", "left")
         .join(store_dups.select("vec_id", F.col("dup_of").alias("d_store")), "vec_id", "left")
@@ -227,7 +217,7 @@ def semantic_stream_writer(spark, emb_stream: DataFrame, index_dir: str, decisio
         emb_stream,
         index_dir,
         decisions_dir,
-        lambda df, bid, ids: process_semantic_batch(spark, df, index_dir, scratch_ids=ids),
+        lambda df, bid: process_semantic_batch(spark, df, index_dir),
     )
 
 

@@ -47,6 +47,7 @@ from pyspark.sql.types import (
 )
 
 from ..ps.kernel import BatchParameterServer, InitFn
+from ..sources.fps_queue import latest_stamp
 
 W2S_SCHEMA = StructType(
     [
@@ -100,12 +101,7 @@ class FileQueueTransport:
         messages.select("kind", "worker_partition", "param_id", "delta").coalesce(
             1
         ).write.mode("overwrite").parquet(staging)
-        latest = 0.0
-        for entry in os.scandir(self.w2s):
-            if entry.is_dir() and not entry.name.startswith(("_", ".")):
-                for f in os.scandir(entry.path):
-                    latest = max(latest, f.stat().st_mtime)
-        stamp = max(latest + 2.0, os.stat(staging).st_mtime)
+        stamp = max(latest_stamp(self.w2s) + 2.0, os.stat(staging).st_mtime)
         for f in os.scandir(staging):
             os.utime(f.path, (stamp, stamp))
         if os.path.isdir(target):

@@ -4,6 +4,7 @@ them."""
 
 from __future__ import annotations
 
+import threading
 from datetime import datetime
 
 import pytest
@@ -77,10 +78,12 @@ def test_scoped_checkpoint_exact_attribution_concurrent(spark):
     the LogicalRDD id off the returned plan (no global diff, no lock
     around materialization). Two concurrent checkpoints must each claim
     exactly their own RDD id, and freeing one must leave the other's
-    blocks (and data) alive."""
+    blocks (and data) alive — with explicit id sets and with one
+    scratch scope per thread."""
     from flink_parameter_server_spark.operators._util import overlap
     from flink_parameter_server_spark.scratch import (
         persistent_rdd_ids,
+        pinned,
         scoped_checkpoint,
         unpersist_rdd_ids,
     )
@@ -103,6 +106,32 @@ def test_scoped_checkpoint_exact_attribution_concurrent(spark):
     assert ids2 <= persistent_rdd_ids(spark)
     assert out2.count() == 50_000
     unpersist_rdd_ids(spark, ids2)
+
+    # the scope form: each thread opens its own scratch scope, both
+    # scopes are open at once, and the first scope's exit frees only
+    # its own id while the other thread's frame stays readable
+    both_pinned = threading.Barrier(2)
+    first_exited = threading.Event()
+
+    def in_scope(tag, exits_first):
+        df = spark.range(0, 50_000).selectExpr("id", f"id * {tag} as v")
+        with pinned(spark) as ids:
+            out = scoped_checkpoint(df)
+            both_pinned.wait(timeout=120)
+            if not exits_first:
+                assert first_exited.wait(timeout=120)
+                seen = (persistent_rdd_ids(spark), out.count())
+        if exits_first:
+            first_exited.set()
+            return ids, None
+        return ids, seen
+
+    (ids1, _), (ids2, (live, n2)) = overlap(
+        spark, lambda: in_scope(3, True), lambda: in_scope(7, False)
+    )
+    assert len(ids1) == 1 and len(ids2) == 1 and ids1 != ids2
+    assert not ids1 & live and ids2 <= live and n2 == 50_000
+    assert not (ids1 | ids2) & persistent_rdd_ids(spark)
 
 
 def test_overlap_threads_inherit_tags_and_local_properties(spark):

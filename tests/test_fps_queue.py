@@ -134,6 +134,34 @@ def test_reads_real_transport_topic_in_stamped_order(fpsq, spark, tmp_path):
     assert all(r.delta == [1.0, 2.0] for r in rows if r.kind == "push")
 
 
+def test_send_stamps_after_flat_fpsqueue_files(fpsq, spark, tmp_path):
+    """FileQueueTransport.send and the fpsqueue writers share one topic
+    listing: a send after a batch-writer append (whose files sit flat
+    at the topic root, not in a message dir) must stamp strictly after
+    it. Sequence: send A, A restamped ahead of the wallclock, fpsqueue
+    append B (stamped after A), send C — arrival order A, B, C."""
+    import time
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from flink_parameter_server_spark.sources.fps_queue import _topic_files
+
+    tr = FileQueueTransport(str(tmp_path / "transport"))
+
+    def keys(pid):
+        return spark.range(1).select(F.lit(pid).cast("long").alias("param_id"))
+
+    tr.send(tr.pulls(keys(1)), "a")
+    ahead = time.time() + 100.0
+    for f in _topic_files(tr.w2s):
+        os.utime(f, (ahead, ahead))
+    tr.pulls(keys(2)).write.format("fpsqueue").option("path", tr.w2s).mode("append").save()
+    tr.send(tr.pulls(keys(3)), "c")
+    order = [pq.read_table(f).column("param_id").to_pylist() for f in _topic_files(tr.w2s)]
+    assert order == [[1], [2], [3]]
+
+
 def test_offset_boundary_contract_violation_raises(fpsq, spark, tmp_path):
     """ADVICE r7: positional offsets are only stable under the
     producer's monotonic-utime contract. The offset JSON pins the

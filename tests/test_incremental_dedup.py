@@ -115,6 +115,50 @@ def test_streaming_foreachbatch_wireup(spark, tmp_path):
     assert n_batches == 2
 
 
+def test_stream_sinks_leave_no_persistent_rdds(spark, tmp_path):
+    """Each micro-batch of a decision sink runs in its own scratch
+    scope: after two batches through dedup_stream_writer (one with an
+    in-batch duplicate pair, so the CC survivor is pinned too) and two
+    through dsir_stream_writer, the persisted RDD set is back at its
+    baseline without any scratch.release() call."""
+    from flink_parameter_server_spark.scratch import persistent_rdd_ids
+    from flink_parameter_server_spark.streaming.incremental_dsir import dsir_stream_writer
+
+    body = " ".join(f"tok{i} word{i % 7} filler{i % 11}" for i in range(30))
+    rows = [
+        [(1, "en", body), (2, "en", body + " tail")],
+        [(3, "en", body), (4, "de", " ".join(f"q{i}w{i}" for i in range(30)))],
+    ]
+    src = str(tmp_path / "src")
+    for i, r in enumerate(rows):
+        spark.createDataFrame(r, "doc_id long, lang string, text string").coalesce(
+            1
+        ).write.parquet(f"{src}/f{i}")
+
+    def stream(schema):
+        return (
+            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{src}/*")
+        )
+
+    base = persistent_rdd_ids(spark)
+    for name, writer, schema, out in (
+        ("dedup", dedup_stream_writer, "doc_id long, text string", "ddec"),
+        ("dsir", dsir_stream_writer, "doc_id long, lang string, text string", "weights"),
+    ):
+        q = writer(spark, stream(schema), str(tmp_path / f"{name}_store"), str(tmp_path / out))
+        try:
+            q.processAllAvailable()
+            assert persistent_rdd_ids(spark) - base == set(), name
+        finally:
+            q.stop()
+    dec = spark.read.parquet(str(tmp_path / "ddec"))
+    assert {r["doc_id"]: r["decision"] for r in dec.collect()} == {
+        1: "accepted", 2: "dup_in_batch", 3: "dup_of_store", 4: "accepted",
+    }
+    for out in (dec, spark.read.parquet(str(tmp_path / "weights"))):
+        assert out.select("batch_id").distinct().count() == 2
+
+
 def test_replay_idempotency(spark, tmp_path):
     """foreachBatch is at-least-once: re-running the SAME batch against
     the store (the replay shape) must not self-reject accepted docs,

@@ -150,7 +150,7 @@ def test_rescore_and_select_matches_batch_threshold_cut(spark, tmp_path):
         DSIR_KEEP_DIV,
         dsir_select_threshold,
     )
-    from flink_parameter_server_spark.scratch import tracked_checkpoint
+    from flink_parameter_server_spark.scratch import scoped_checkpoint
     from flink_parameter_server_spark.streaming.incremental_dsir import (
         rescore_and_select,
     )
@@ -162,7 +162,7 @@ def test_rescore_and_select_matches_batch_threshold_cut(spark, tmp_path):
     got = {(r["doc_id"], r["sel"]) for r in rescore_and_select(spark, d, store).collect()}
     want = {
         (r["doc_id"], r["sel"])
-        for r in dsir_select_threshold(tracked_checkpoint(dsir_micro(d))).collect()
+        for r in dsir_select_threshold(scoped_checkpoint(dsir_micro(d))).collect()
     }
     assert got == want and got
     w = {r["doc_id"]: r["smic"] for r in dsir_micro(d).collect()}

@@ -185,12 +185,12 @@ def test_replay_idempotency(spark, tmp_path):
 def test_direct_calls_leak_no_persistent_rdds(spark, tmp_path):
     """r9 review: process_semantic_batch called OUTSIDE the stream sink
     (as tests and batch drivers do) must not leave pinned RDD blocks
-    behind — its checkpoints are tracked for scratch.release(); with an
-    explicit scratch_ids set the caller frees exactly its own ids."""
+    behind — its checkpoints are tracked for scratch.release(); inside
+    a scratch scope the scope owns them and frees exactly those on exit."""
     from flink_parameter_server_spark.scratch import (
         persistent_rdd_ids,
+        pinned,
         release,
-        unpersist_rdd_ids,
     )
 
     seed, batch = _halves(spark)
@@ -203,12 +203,12 @@ def test_direct_calls_leak_no_persistent_rdds(spark, tmp_path):
     release()
     assert persistent_rdd_ids(spark) - base == set()
 
-    # explicit scratch_ids: freed by the caller, exactly attributed
-    ids: set[int] = set()
-    process_semantic_batch(spark, batch, idx, scratch_ids=ids).collect()
-    assert ids and ids <= persistent_rdd_ids(spark)
-    unpersist_rdd_ids(spark, ids)
+    # scope: owned by the scope, freed on exit, nothing left tracked
+    with pinned(spark) as ids:
+        process_semantic_batch(spark, batch, idx).collect()
+        assert ids and ids <= persistent_rdd_ids(spark)
     assert persistent_rdd_ids(spark) - base == set()
+    assert release() == 0
 
 
 def test_probe_scan_partition_pruned(spark, tmp_path):
