@@ -255,7 +255,8 @@ def streaming_static_enrich(spark, sf_dir):
     "state (applyInPandasWithState), both algorithm families in one "
     "rows-only query discriminated by `family` (consolidated from "
     "online_mf_sequential / pa_online_sequential). 'mf': ratings stream "
-    "keyed by item, per-record sequential SGD against co-located value "
+    "sharded by item % SHARDS (one state row per shard holds its items' "
+    "vectors), per-record sequential SGD per item against co-located "
     "state — the faithful form of the reference's cyclic PS loop "
     "(FlinkParameterServer#transform + PSOnlineMatrixFactorization "
     "[C-high]); rows = (item, dim) factor components. 'pa': PA-I binary "
@@ -276,13 +277,13 @@ def online_ps_sequential(spark, sf_dir):
     # REGRESSED under the driver's cold-process bench (4.55 -> 9.47 s at
     # 32 cores, 8-core reps consistent) even though the warm in-process
     # A/B showed a win: two concurrent pandas-UDF availableNow streams
-    # each spin their own Python worker pool + state stores against
-    # ~19k groups/batch, and cold-process worker spin-up contention
-    # exceeds the overlap. The streams now run back-to-back again; the
-    # r15 vectorized per-group hot path (1c75f74) stays — it is
-    # independently sound and semantics-identical.
+    # each spin their own Python worker pool + state stores, and
+    # cold-process worker spin-up contention exceeds the overlap. The
+    # streams run back-to-back. That was measured while MF was keyed by
+    # item (~19k groups/batch); with one group per shard
+    # (online_ps.SHARDS) the overlap has not been re-measured.
     def _mf_run():
-        # --- MF: per-record SGD on item-keyed state
+        # --- MF: per-record SGD on item-sharded state
         ratings = (
             mf.ratings(spark, sf_dir)
             .where(F.col("user") % 10 == 0)
@@ -290,8 +291,8 @@ def online_ps_sequential(spark, sf_dir):
             .select("seq", "user", "item", "rating")
         )
         # NOTE: no shuffle-partition clamp here — the per-record Python
-        # SGD loop is CPU-bound per key, so it wants the full task
-        # parallelism (unlike the pure-JVM stateful windows, where extra
+        # SGD loops run one task per shard, so they want up to SHARDS
+        # partitions (unlike the pure-JVM stateful windows, where extra
         # state stores are overhead at test scale).
         mf_wide = _run_instance_stream(
             spark, ratings, lambda s: online_mf_stream(spark, s), "fps_online_mf_",

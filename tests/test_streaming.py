@@ -569,6 +569,112 @@ def test_online_pa_matches_sequential_reference(spark):
         assert abs(got[f] - wf) < 1e-9, f"feat {f}: {got[f]} != {wf}"
 
 
+def _stream_files_in_order(spark, tmp, parts, schema, build):
+    """Write each pandas frame of `parts` as one parquet file, later files
+    with later mtimes, and stream them through `build` one file per
+    micro-batch. Returns (rows each data batch emitted, the query)."""
+    import os
+    import time
+
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    now = time.time()
+    for i, part in enumerate(parts):
+        path = os.path.join(src, f"part-{i}.parquet")
+        part.to_parquet(path, index=False)
+        os.utime(path, (now + i, now + i))  # file order = batch order
+    batches = []
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    q = (
+        build(stream)
+        .writeStream.outputMode("update")
+        .foreachBatch(lambda df, _bid: batches.append(df.collect()))
+        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return [b for b in batches if b], q
+
+
+def test_online_mf_shards_span_batches(spark, tmp_path):
+    """Several items share a shard, every item's records span both
+    micro-batches and seq interleaves across items (files written out of
+    seq order): each item still equals the sequential reference, each
+    batch's n_updates counts that batch's records once, and the state
+    holds one row per shard, not one per item."""
+    import random
+
+    import pandas as pd
+
+    from flink_parameter_server_spark.streaming.online_ps import (
+        K,
+        SHARDS,
+        online_mf_stream,
+        sequential_reference,
+    )
+
+    # SHARDS + 1 items in shard 1, plus one item in each of shards 2 and 3
+    items = [1 + k * SHARDS for k in range(SHARDS + 1)] + [2, 3]
+    rng = random.Random(7)
+    rows = [
+        (seq, rng.randrange(1000), items[seq % len(items)], float(rng.randint(1, 5)))
+        for seq in range(40)
+    ]
+    parts = [
+        pd.DataFrame(rng.sample(part, len(part)), columns=["seq", "user", "item", "rating"])
+        for part in (rows[:20], rows[20:])
+    ]
+
+    batches, q = _stream_files_in_order(
+        spark, str(tmp_path), parts, "seq long, user long, item long, rating double",
+        lambda s: online_mf_stream(spark, s),
+    )
+
+    assert [sum(r.n_updates for r in b) for b in batches] == [20, 20]
+    got = {r.item: [r[f"f{j}"] for j in range(K)] for b in batches for r in b}
+    want = sequential_reference(rows)
+    assert set(got) == set(want)
+    for item, vec in want.items():
+        for a, b in zip(got[item], vec):
+            assert abs(a - b) < 1e-9, f"item {item}: {got[item]} != {vec}"
+    last = [p for p in q.recentProgress if p["numInputRows"]][-1]
+    assert last["stateOperators"][0]["numRowsTotal"] <= SHARDS
+
+
+def test_online_pa_two_batches_counts_cumulative(spark, tmp_path):
+    """PA through the shared shard shell over two micro-batches: the
+    weights equal the sequential reference and n_updates counts every
+    record so far (cumulative), not the batch's records."""
+    import pandas as pd
+
+    from flink_parameter_server_spark.ps import pa
+    from flink_parameter_server_spark.streaming.online_ps import (
+        online_pa_stream,
+        pa_sequential_reference,
+    )
+
+    rows = sorted((r.row_id, r.y, list(r.x)) for r in pa.instances(spark, SF_SMALL).limit(120).collect())
+    parts = [
+        pd.DataFrame(
+            {"seq": [r[0] for r in part], "model_id": 0, "y": [r[1] for r in part], "x": [r[2] for r in part]}
+        )
+        for part in (rows[:50], rows[50:])
+    ]
+
+    batches, _q = _stream_files_in_order(
+        spark, str(tmp_path), parts, "seq long, model_id long, y double, x array<double>",
+        lambda s: online_pa_stream(spark, s),
+    )
+
+    assert [{r.n_updates for r in b} for b in batches] == [{50}, {len(rows)}]
+    want = pa_sequential_reference(rows)
+    got = {r.feat_id: r.w for r in batches[-1]}
+    assert len(got) == len(want)
+    for f, wf in enumerate(want):
+        assert abs(got[f] - wf) < 1e-9, f"feat {f}: {got[f]} != {wf}"
+
+
 def test_stream_shuffle_clamp_is_refcounted_under_concurrency(spark):
     """r16 (ADVICE r15): the clamp is a refcounted save/set-once,
     restore-on-last-exit — two overlapping clamp windows on one session
