@@ -132,3 +132,17 @@ def mean_of(sum_col: Column, cnt_col: Column, scale: int = 6) -> Column:
 
 def mean_of_sql(sum_expr: str, cnt_expr: str, scale: int = 6) -> str:
     return f"round(CAST({sum_expr} AS DOUBLE) / CAST({cnt_expr} AS DOUBLE), {scale})"
+
+
+def with_grand_total(df: DataFrame, how: str, cols: list[str], *aggs: Column) -> DataFrame:
+    """``df.rollup(*cols)`` or ``df.cube(*cols)`` (``how``) aggregated by
+    ``aggs``, keeping the () grand-total row on empty input. Spark 4.1.2
+    emits no () row for a rollup/cube over zero rows, where DuckDB and
+    the SQL standard emit one (count 0, sum NULL). So the () level comes
+    from a global aggregate over ``df``, which always yields one row, and
+    every other level from the rollup/cube minus its () set."""
+    levels = getattr(df, how)(*cols).agg(*aggs, F.grouping_id().alias("_gid"))
+    levels = levels.where(F.col("_gid") != (1 << len(cols)) - 1).drop("_gid")
+    total = df.agg(*aggs)
+    keys = [F.lit(None).cast(df.schema[c].dataType).alias(c) for c in cols]
+    return levels.unionByName(total.select(*keys, *total.columns))

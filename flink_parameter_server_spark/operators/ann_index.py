@@ -123,9 +123,10 @@ def _train_centroids(
     (a superset of the init rows by construction), instead of the full
     catalog. The full-catalog assignment pass stays with the caller —
     this bounds only the trainer, which is otherwise iters extra
-    n*n_cells passes (the n^1.5 term the r15 ivf_scale receipt
-    measured dominating the build). orderBy+limit is a TakeOrdered
-    (per-partition top-cap + driver merge), not a full sort shuffle.
+    n*n_cells passes (the n^1.5 term the r15 receipt, BASELINE.md
+    "Persisted serving lane across two decades", measured dominating
+    the build). orderBy+limit is a TakeOrdered (per-partition top-cap +
+    driver merge), not a full sort shuffle.
     None = train on everything (the pre-r15 path, byte-identical)."""
     tv = v
     if train_cap is not None:
@@ -716,8 +717,8 @@ def build_ivf_index(
     in seeded-hash order instead of the full catalog — the standard
     coarse-quantizer training bound (FAISS trains on a capped sample;
     256/cell is its convention). Measured reason (BASELINE.md r15
-    ivf_scale receipt): training passes are the n^1.5 term that
-    dominates the build by x100 catalog (447 s at 200k vectors), while
+    "Persisted serving lane across two decades"): training passes are
+    the n^1.5 term that dominates the build by x100 catalog (447 s at 200k vectors), while
     the one full-catalog assignment pass the index REQUIRES is a
     single n*n_cells map — sampling the trainer bounds the avoidable
     part. Training-time only: nothing about the persisted layout,
@@ -892,7 +893,7 @@ def ivf_search(
     recovers the remaining 16x if a deployment needs it).
 
     OPERATING-POINT GUIDE (r15, VERDICT r14 #4 — every number is a
-    committed receipt, BASELINE.md r14/r15 + tools/ann_recall.py).
+    committed receipt, BASELINE.md r14/r15 "ANN recall@10" sections).
     Diagnose by comparing three recalls at your geometry: covering
     (n_probe=n_cells, the brute ceiling), exact at your n_probe, and
     ADC at your (n_probe, shortlist).

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..scratch import scratch
-from ._util import dround, exact_sum, mean_of, money_sum, t
+from ._util import dround, exact_sum, mean_of, money_sum, t, with_grand_total
 
 
 # ---------------------------------------------------------------------------
@@ -174,14 +174,18 @@ def revenue_by_nation(spark, sf_dir):
     # (tools/ab.py warm rep, sf0.1, 5 pairs), under the 10 % an overlap
     # must earn
     def _rollup_part():
-        return (
+        geo = (
             t(spark, sf_dir, "supplier")
             .join(F.broadcast(t(spark, sf_dir, "nation")), F.col("s_nationkey") == F.col("n_nationkey"))
             .join(F.broadcast(t(spark, sf_dir, "region")), F.col("n_regionkey") == F.col("r_regionkey"))
-            .rollup("r_name", "n_name")
-            .agg(money_sum(F.col("s_acctbal")).alias("revenue"), F.count(F.lit(1)).alias("n_suppliers"))
-            .select(F.lit("rollup").alias("part"), "r_name", "n_name", "revenue", "n_suppliers")
         )
+        return with_grand_total(
+            geo,
+            "rollup",
+            ["r_name", "n_name"],
+            money_sum(F.col("s_acctbal")).alias("revenue"),
+            F.count(F.lit(1)).alias("n_suppliers"),
+        ).select(F.lit("rollup").alias("part"), "r_name", "n_name", "revenue", "n_suppliers")
 
     def _by_nation():
         cust = t(spark, sf_dir, "customer")

@@ -9,7 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from ._util import dround, exact_sum, money_sum as _money_sum, t
+from ._util import dround, exact_sum, money_sum as _money_sum, t, with_grand_total
 
 
 @register(
@@ -42,17 +42,18 @@ def orders_grouping_sets(spark, sf_dir):
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
         """
     )
-    cube = (
-        t(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"), _money_sum(F.col("o_totalprice")).alias("total_price"))
-        .select(
-            F.lit("cube").alias("gset"),
-            "o_orderstatus",
-            "o_orderpriority",
-            "n",
-            "total_price",
-        )
+    cube = with_grand_total(
+        t(spark, sf_dir, "orders"),
+        "cube",
+        ["o_orderstatus", "o_orderpriority"],
+        F.count(F.lit(1)).alias("n"),
+        _money_sum(F.col("o_totalprice")).alias("total_price"),
+    ).select(
+        F.lit("cube").alias("gset"),
+        "o_orderstatus",
+        "o_orderpriority",
+        "n",
+        "total_price",
     )
     return gsets.unionByName(cube)
 

@@ -626,7 +626,7 @@ SELECT * FROM ({_IVFPQ_RES_ANN_SQL}) AS ivfpq_res_part
     "query's cell ranked by ADC over 4-byte PQ codes (constant 128-row "
     "codebook, integer micro-grid sums) without touching raw vectors, "
     "exact-cosine refine on the top-10 — the 64x-compressed memory "
-    "lane, quantization error hash-checked (receipt in BASELINE.md). r13 adds the family-wide recall@10-vs-brute receipt (tools/ann_recall.py; BASELINE.md r13 — monotone in the ivf2 probe count at both fixture scales, pinned) and k= parameters on every method function (registry output unchanged). "
+    "lane, quantization error hash-checked (receipt in BASELINE.md). r13 adds the family-wide recall@10-vs-brute receipt (BASELINE.md r13 'ANN recall@10 receipt' — monotone in the ivf2 probe count at both fixture scales, pinned) and k= parameters on every method function (registry output unchanged). "
     "'ivfpq_res' (r14): the BY-RESIDUAL IVFADC form (Jegou et al.'s "
     "by_residual=true) hash-checked end to end — counted-n centroids "
     "are actual sampled vectors, so the unit-centroid subtraction and "
@@ -1249,9 +1249,9 @@ def embedding_ivfpq_ann(spark, sf_dir, k: int = 1, shortlist: int | None = None)
 
     ``shortlist`` (r14, VERDICT r13 #4): override the PQ_SHORTLIST
     refine window — the recall-receipt sweep knob that separates ADC
-    ranking loss from refine-window truncation (tools/ann_recall.py;
-    recall@k is non-decreasing in it, pinned). Default None keeps the
-    hash-pinned registered behavior. Runs the registry entry's flat
+    ranking loss from refine-window truncation (BASELINE.md r14 "ANN
+    recall@10 — shortlist sweep"; recall@k is non-decreasing in it,
+    pinned). Default None keeps the hash-pinned registered behavior. Runs the registry entry's flat
     path and IVFADC chain (:func:`_pq_topk`) for this lane alone; the
     refine reads the in-cell exact-cosine set, so a standalone call
     scores every in-cell pair, not only the shortlist."""

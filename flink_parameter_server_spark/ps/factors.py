@@ -14,25 +14,16 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..functions.hashing import KNUTH, MOD
+from ..functions.hashing import int_hash2, int_hash2_sql, unit_uniform, unit_uniform_sql
 
 
 def factor_element(id_col: Column, j: Column, seed: int, lo: float, hi: float) -> Column:
     """value(id, j) = lo + hash(id, j, seed)/MOD * (hi - lo) — exact int64 math."""
-    h = (
-        (id_col.cast("long") + F.lit(1)) * F.lit(KNUTH)
-        + (j.cast("long") + F.lit(1)) * F.lit(40503)
-        + F.lit(seed * 97)
-    ) % F.lit(MOD)
-    return F.lit(lo) + h.cast("double") / F.lit(float(MOD)) * F.lit(hi - lo)
+    return F.lit(lo) + unit_uniform(int_hash2(id_col, j, seed)) * F.lit(hi - lo)
 
 
 def factor_element_sql(id_expr: str, j_expr: str, seed: int, lo: float, hi: float) -> str:
-    h = (
-        f"(((CAST({id_expr} AS BIGINT) + 1) * {KNUTH} "
-        f"+ (CAST({j_expr} AS BIGINT) + 1) * 40503 + {seed * 97}) % {MOD})"
-    )
-    return f"({lo} + CAST({h} AS DOUBLE) / {float(MOD)} * {hi - lo})"
+    return f"({lo} + {unit_uniform_sql(int_hash2_sql(id_expr, j_expr, seed))} * {hi - lo})"
 
 
 def factor_vector(id_col: Column | str, k: int, seed: int, lo: float = -0.1, hi: float = 0.1) -> Column:

@@ -280,9 +280,9 @@ def topk_candidates(
 
     ``user_factors``/``item_factors`` (schema ``(id, vec)``) swap the
     deterministic hash-init factors for externally trained ones — the
-    catalog shape LEMP is built for (tools/lemp_rehearsal.py measures
-    the bound's pruning power on trained vs hash-init factors; the
-    registry entry always uses the default hash-init build).
+    catalog shape LEMP is built for (BASELINE.md "Trained-factors LEMP
+    receipt" measures the bound's pruning power on trained vs hash-init
+    factors; the registry entry always uses the default hash-init build).
     ``keep_bound_pairs=True`` returns the scored frame BEFORE the final
     ``score >= theta`` filter, i.e. exactly the pairs whose dot product
     had to be computed — the rehearsal's cost metric.

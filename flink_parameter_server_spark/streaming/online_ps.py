@@ -163,9 +163,9 @@ def _sharded_stream(records: DataFrame, rule: _Rule) -> DataFrame:
     )
 
 
-def _factor(idx: int, j: int, seed: int) -> float:
+def _factor(idx: int, j: int, seed: int, lo: float = FACTOR_LO, hi: float = FACTOR_HI) -> float:
     h = ((idx + 1) * KNUTH + (j + 1) * 40503 + seed * 97) % MOD
-    return FACTOR_LO + h / MOD * (FACTOR_HI - FACTOR_LO)
+    return lo + h / MOD * (hi - lo)
 
 
 def _factor_rows(ids: np.ndarray, seed: int) -> np.ndarray:
@@ -228,10 +228,7 @@ def online_mf_stream(spark: SparkSession, ratings_stream: DataFrame) -> DataFram
 
 def _pa_w0(n_features: int) -> list[float]:
     """Scalar mirror of pa.class_w0_array(0) (factor_element(0, f, W_SEED) per f)."""
-    return [
-        W_LO + (((0 + 1) * KNUTH + (j + 1) * 40503 + W_SEED * 97) % MOD) / MOD * (W_HI - W_LO)
-        for j in range(n_features)
-    ]
+    return [_factor(0, j, W_SEED, W_LO, W_HI) for j in range(n_features)]
 
 
 def _pa_init(models: np.ndarray) -> np.ndarray:

@@ -679,7 +679,8 @@ def test_ivf2_multiprobe_recall_at_10_monotone(spark):
     """VERDICT r12 #5 monotonicity pin: recall@10-vs-brute of the
     two-level lane rises with the probe count — ivf2_p2's recall@10 is
     >= ivf2's (p=1), and p=4's >= p=2's — on the fixture query set
-    (the table receipt lives in BASELINE.md via tools/ann_recall.py)."""
+    (the table receipt lives in BASELINE.md r13 "ANN recall@10
+    receipt")."""
     from flink_parameter_server_spark.operators import similarity as sim
     from flink_parameter_server_spark.scratch import release
 
@@ -718,8 +719,8 @@ def test_ivfpq_recall_at_10_monotone_in_shortlist(spark):
     the refine and brute rank by (cos desc, neighbor_id), so a true
     top-10 neighbor can only be displaced by another true top-10
     neighbor — recall cannot drop. The sweep receipt separating ADC
-    ranking loss from window truncation lives in BASELINE.md via
-    tools/ann_recall.py."""
+    ranking loss from window truncation lives in BASELINE.md r14 "ANN
+    recall@10 — shortlist sweep"."""
     from flink_parameter_server_spark.operators import similarity as sim
     from flink_parameter_server_spark.scratch import release
 
@@ -940,7 +941,7 @@ def test_pq8_residual_controlled_recall(spark, tmp_path):
     two widths are statistically tied (0.25 vs 0.28 — a 10-slot window
     is noise-bound at either precision), and at ~500 candidates/cell
     NEITHER width ranks (the inter-rank cosine gaps fall below even the
-    8-bit distortion floor — density receipt, tools/ann_recall.py);
+    8-bit distortion floor — BASELINE.md r15 "Density receipt");
     the working levers there are finer cells + multi-probe. Also pins
     the 8-bit RESIDUAL lifecycle: mode + width persist together and
     read_pq_codes inverts the byte-packed residual encode."""
@@ -1153,8 +1154,9 @@ def test_density_floor_escape_loop_end_to_end(spark, tmp_path):
 def test_bounded_sample_trainer_quality_and_contract(spark, tmp_path):
     """r15: build_ivf_index(train_max_per_cell=N) bounds the Lloyd
     iterations (coarse + residual codebook) to the first N*n_cells
-    vectors in seeded-hash order — the avoidable n^1.5 term the
-    ivf_scale receipt measured dominating the build. Pins: (1) the
+    vectors in seeded-hash order — the avoidable n^1.5 term the r15
+    receipt (BASELINE.md "Persisted serving lane across two decades")
+    measured dominating the build. Pins: (1) the
     sampled build still degrades gracefully to exact brute at covering
     probe (exactness never depended on centroid quality); (2) on the
     clustered corpus a genuine sample (256 of 400 vectors) loses no

@@ -350,25 +350,13 @@ def test_corpus_curate_stage_semantics(spark, tmp_path):
     semantics (min doc_id survives; a COPY of a quality-rejected doc is
     the keeper of its group, not an exact_dup reject), and oracle
     parity on the same synthetic corpus."""
-    import shutil
-
     import duckdb
     from pyspark.sql import functions as F
 
     from flink_parameter_server_spark.plans import REGISTRY
     from tests.conftest import register_duck_views
+    from tests.fixture_dirs import derive
     from tests.oracle import compare
-
-    src = SF_SMALL
-    out = str(tmp_path / "curate_corpus")
-    import os
-
-    os.makedirs(out)
-    from flink_parameter_server_spark.sources import TABLES
-
-    for tab in TABLES:
-        if tab != "documents":
-            shutil.copy(f"{src}/{tab}.parquet", f"{out}/{tab}.parquet")
 
     body = " ".join(f"tok{i} word{i % 7} filler{i % 11}" for i in range(20))
     bench = " ".join(f"bench{i} eval{i % 5} item{i % 9}" for i in range(25))
@@ -392,12 +380,7 @@ def test_corpus_curate_stage_semantics(spark, tmp_path):
 
     pdf = pd.DataFrame(docs, columns=["doc_id", "text", "lang", "source"])
     pdf["n_chars"] = pdf["text"].str.len()
-    spark.createDataFrame(pdf).coalesce(1).write.parquet(f"{out}/_tmp_docs")
-    import glob
-
-    [part] = glob.glob(f"{out}/_tmp_docs/part-*.parquet")
-    shutil.move(part, f"{out}/documents.parquet")
-    shutil.rmtree(f"{out}/_tmp_docs")
+    out = derive(spark, SF_SMALL, str(tmp_path / "curate_corpus"), {"documents": spark.createDataFrame(pdf)})
 
     spec = REGISTRY["train_test_split"]
     df = spec.fn(spark, out)

@@ -120,7 +120,7 @@ def test_aqe_splits_skewed_join(spark):
 
 def test_topk_external_factors_lossless(spark):
     """The parameterized topk path (trained/external factor tables,
-    tools/lemp_rehearsal.py) must stay LOSSLESS: for every user the
+    BASELINE.md "Trained-factors LEMP receipt") must stay LOSSLESS: for every user the
     candidate set after seed-theta + norm-band + Cauchy-Schwarz pruning
     contains the exact brute-force top-k, regardless of the factor
     distribution. Factors here are the repo's own hash-init vectors
@@ -169,8 +169,8 @@ def test_topk_external_factors_lossless(spark):
 
 
 def test_topk_trained_factor_pruning_regression(spark):
-    """VERDICT r6 #4: promote the LEMP receipt (tools/lemp_rehearsal.py,
-    BASELINE.md) from tool prose to a regression test. The pruning
+    """VERDICT r6 #4: promote the LEMP receipt (BASELINE.md
+    "Trained-factors LEMP receipt") from tool prose to a regression test. The pruning
     bound's value is its WORKING-REGIME behavior: on trained factors
     (norms skewed by item popularity) the seed-theta + Cauchy-Schwarz
     bound must score a decisively smaller fraction of the U x I pairs
@@ -197,8 +197,8 @@ def test_topk_trained_factor_pruning_regression(spark):
     init_frac = init_pairs / (n_users * n_items)
 
     # trained scenario: the repo's own bidirectional PS trainer, pivoted
-    # long (side, id, dim, v) -> (id, vec) per side (the
-    # tools/lemp_rehearsal.py shape)
+    # long (side, id, dim, v) -> (id, vec) per side (the LEMP receipt's
+    # shape)
     long = mf.train_bidirectional(spark, mf.ratings(spark, sf), epochs=1)
 
     def side(name):

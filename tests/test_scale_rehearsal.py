@@ -1,6 +1,6 @@
-"""Invariants of the third-decade rehearsal generator
-(tools/scale_rehearsal.py) — the tool whose measurements BASELINE.md's
-~sf1 tables rest on. Generated from sf0.001 with 3 replicas so the
+"""Invariants of the xN key-offset replica (tests/fixture_dirs.py
+`replicas`), the dir shape BASELINE.md's ~sf1 tables rest on ("Third-
+decade rehearsal at ~sf1"). Derived from sf0.001 with 3 replicas so the
 test stays cheap; the invariants are scale-independent:
 
 - row counts scale by the replica factor; shared dims stay single-copy
@@ -17,38 +17,34 @@ test stays cheap; the invariants are scale-independent:
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import functions as F
 
+from flink_parameter_server_spark.sources import TABLES
+from tests import fixture_dirs as fd
 from tests.conftest import SF_SMALL
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-
-from tools import scale_rehearsal as sr  # noqa: E402
-
 N_REP = 3
+SHARED_DIMS = [t for t in TABLES if t not in fd.KEY_COLS]
 
 
 def _gen(spark, tmp_path):
-    out = str(tmp_path / "sfx3")
-    sr.generate(out, src=SF_SMALL, replicas=N_REP, spark=spark)
-    return out
+    return fd.derive(spark, SF_SMALL, str(tmp_path / "sfx3"), fd.replicas(N_REP))
 
 
 def test_replica_invariants(spark, tmp_path):
     out = _gen(spark, tmp_path)
 
     # single bare file per table
-    for table in list(sr.KEY_COLS) + sr.SHARED_DIMS:
+    for table in list(fd.KEY_COLS) + SHARED_DIMS:
         assert os.path.isfile(f"{out}/{table}.parquet"), table
 
     # counts: keyed tables x3, shared dims x1
-    for table in sr.KEY_COLS:
+    for table in fd.KEY_COLS:
         n0 = spark.read.parquet(f"{SF_SMALL}/{table}.parquet").count()
         n1 = spark.read.parquet(f"{out}/{table}.parquet").count()
         assert n1 == N_REP * n0, (table, n0, n1)
-    for table in sr.SHARED_DIMS:
+    for table in SHARED_DIMS:
         n0 = spark.read.parquet(f"{SF_SMALL}/{table}.parquet").count()
         assert spark.read.parquet(f"{out}/{table}.parquet").count() == n0
 
@@ -68,7 +64,7 @@ def test_replica_invariants(spark, tmp_path):
 def test_document_and_embedding_perturbation(spark, tmp_path):
     out = _gen(spark, tmp_path)
     docs = spark.read.parquet(f"{out}/documents.parquet").withColumn(
-        "replica", F.floor(F.col("doc_id") / sr.OFF)
+        "replica", F.floor(F.col("doc_id") / fd.OFF)
     )
     # vocabularies disjoint across replicas: each distinct token maps to
     # exactly one replica
@@ -89,6 +85,6 @@ def test_document_and_embedding_perturbation(spark, tmp_path):
     )
     base = emb0.select(F.col("vec_id").alias("bid"), norm.alias("n0"))
     got = emb.select(
-        (F.col("vec_id") % sr.OFF).alias("bid"), norm.alias("n1")
+        (F.col("vec_id") % fd.OFF).alias("bid"), norm.alias("n1")
     )
     assert got.join(base, "bid").where(F.col("n0") != F.col("n1")).count() == 0

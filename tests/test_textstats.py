@@ -66,56 +66,23 @@ def test_pii_signals_match_duckdb(spark, duck):
 BPE_VOCAB = {"low": 5, "lower": 2, "newest": 6}
 
 
+DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars int"
+
+
 def _mk_text_corpus(spark, tmp_path, text):
     """A minimal sf-dir whose documents table is one doc holding
     ``text`` (other tables copied from the fixture)."""
-    import glob
-    import os
-    import shutil
-
-    from flink_parameter_server_spark.sources import TABLES
-    from tests.conftest import SF_SMALL
-
-    out = str(tmp_path / "bpe_corpus")
-    os.makedirs(out)
-    for tab in TABLES:
-        if tab != "documents":
-            shutil.copy(f"{SF_SMALL}/{tab}.parquet", f"{out}/{tab}.parquet")
-    docs = spark.createDataFrame(
-        [(1, text, "en", "web", len(text))],
-        "doc_id long, text string, lang string, source string, n_chars int",
-    )
-    docs.coalesce(1).write.parquet(f"{out}/_tmp")
-    [part] = glob.glob(f"{out}/_tmp/part-*.parquet")
-    shutil.move(part, f"{out}/documents.parquet")
-    shutil.rmtree(f"{out}/_tmp")
-    return out
+    return _mk_docs_corpus(spark, tmp_path, [(1, text)], name="bpe_corpus")
 
 
 def _mk_docs_corpus(spark, tmp_path, rows, name="docs_corpus"):
     """A minimal sf-dir whose documents table is ``rows`` of
     (doc_id, text) (other tables copied from the fixture)."""
-    import glob
-    import os
-    import shutil
-
-    from flink_parameter_server_spark.sources import TABLES
     from tests.conftest import SF_SMALL
+    from tests.fixture_dirs import derive
 
-    out = str(tmp_path / name)
-    os.makedirs(out)
-    for tab in TABLES:
-        if tab != "documents":
-            shutil.copy(f"{SF_SMALL}/{tab}.parquet", f"{out}/{tab}.parquet")
-    docs = spark.createDataFrame(
-        [(i, s, "en", "web", len(s)) for i, s in rows],
-        "doc_id long, text string, lang string, source string, n_chars int",
-    )
-    docs.coalesce(1).write.parquet(f"{out}/_tmp")
-    [part] = glob.glob(f"{out}/_tmp/part-*.parquet")
-    shutil.move(part, f"{out}/documents.parquet")
-    shutil.rmtree(f"{out}/_tmp")
-    return out
+    docs = spark.createDataFrame([(i, s, "en", "web", len(s)) for i, s in rows], DOCS_SCHEMA)
+    return derive(spark, SF_SMALL, str(tmp_path / name), {"documents": docs})
 
 
 def test_eval_overlap_frac_measures_verbatim_span_mass(spark, tmp_path):
@@ -423,19 +390,10 @@ def test_lm_xent_separates_outliers(spark, tmp_path):
     gibberish outlier, the outlier must carry the highest lm_xent (the
     CCNet perplexity-filtering property), in-domain docs cluster low,
     and a 1-token doc gets NULL (no bigrams)."""
-    import glob
-    import os
-    import shutil
-
     from flink_parameter_server_spark.plans import REGISTRY
-    from flink_parameter_server_spark.sources import TABLES
     from tests.conftest import SF_SMALL
+    from tests.fixture_dirs import derive
 
-    out = str(tmp_path / "lm_corpus")
-    os.makedirs(out)
-    for tab in TABLES:
-        if tab != "documents":
-            shutil.copy(f"{SF_SMALL}/{tab}.parquet", f"{out}/{tab}.parquet")
     domain = "the quick brown fox jumps over the lazy dog again and again"
     docs = [
         (i, domain + f" round{i % 3}", "en", "web") for i in range(1, 9)
@@ -447,10 +405,7 @@ def test_lm_xent_separates_outliers(spark, tmp_path):
 
     pdf = pd.DataFrame(docs, columns=["doc_id", "text", "lang", "source"])
     pdf["n_chars"] = pdf["text"].str.len()
-    spark.createDataFrame(pdf).coalesce(1).write.parquet(f"{out}/_tmp")
-    [part] = glob.glob(f"{out}/_tmp/part-*.parquet")
-    shutil.move(part, f"{out}/documents.parquet")
-    shutil.rmtree(f"{out}/_tmp")
+    out = derive(spark, SF_SMALL, str(tmp_path / "lm_corpus"), {"documents": spark.createDataFrame(pdf)})
 
     got = {
         r["doc_id"]: r["lm_xent"]
@@ -612,40 +567,13 @@ def test_bpe_encode_part_cross_engine_on_exhausted_ranks(spark, duck, tmp_path):
 def _mk_mix_corpus(spark, tmp_path, docs, embs=None):
     """A minimal sf-dir with custom documents (and optionally custom
     embeddings) rows; other tables copied from the fixture."""
-    import glob
-    import os
-    import shutil
-
-    from flink_parameter_server_spark.sources import TABLES
     from tests.conftest import SF_SMALL
+    from tests.fixture_dirs import derive
 
-    out = str(tmp_path / "mix_corpus")
-    os.makedirs(out)
-    custom = {"documents"} | ({"embeddings"} if embs is not None else set())
-    for tab in TABLES:
-        if tab not in custom:
-            shutil.copy(f"{SF_SMALL}/{tab}.parquet", f"{out}/{tab}.parquet")
-
-    def _write_one(df, tab):
-        df.coalesce(1).write.parquet(f"{out}/_tmp_{tab}")
-        [part] = glob.glob(f"{out}/_tmp_{tab}/part-*.parquet")
-        shutil.move(part, f"{out}/{tab}.parquet")
-        shutil.rmtree(f"{out}/_tmp_{tab}")
-
-    _write_one(
-        spark.createDataFrame(
-            docs, "doc_id long, text string, lang string, source string, n_chars int"
-        ),
-        "documents",
-    )
+    frames = {"documents": spark.createDataFrame(docs, DOCS_SCHEMA)}
     if embs is not None:
-        _write_one(
-            spark.createDataFrame(
-                embs, "vec_id long, embedding array<float>, label int"
-            ),
-            "embeddings",
-        )
-    return out
+        frames["embeddings"] = spark.createDataFrame(embs, "vec_id long, embedding array<float>, label int")
+    return derive(spark, SF_SMALL, str(tmp_path / "mix_corpus"), frames)
 
 
 def test_domain_reweight_direction_and_branches(spark, tmp_path):
