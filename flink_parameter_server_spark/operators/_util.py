@@ -14,12 +14,16 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
 
 DEC = "decimal(18,6)"
+# exact sum type of training step deltas (MF, PA): 15 fractional digits
+# keep products like LR*e*u (often < 1e-4) exact where DEC would round
+# them to two or three significant digits
+STEP_DEC = "decimal(28,15)"
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -138,11 +142,27 @@ def with_grand_total(df: DataFrame, how: str, cols: list[str], *aggs: Column) ->
     """``df.rollup(*cols)`` or ``df.cube(*cols)`` (``how``) aggregated by
     ``aggs``, keeping the () grand-total row on empty input. Spark 4.1.2
     emits no () row for a rollup/cube over zero rows, where DuckDB and
-    the SQL standard emit one (count 0, sum NULL). So the () level comes
-    from a global aggregate over ``df``, which always yields one row, and
-    every other level from the rollup/cube minus its () set."""
-    levels = getattr(df, how)(*cols).agg(*aggs, F.grouping_id().alias("_gid"))
-    levels = levels.where(F.col("_gid") != (1 << len(cols)) - 1).drop("_gid")
-    total = df.agg(*aggs)
+    the SQL standard emit one (count 0, sum NULL). So a filler () row,
+    ``aggs`` over ``df.limit(0)`` (which Catalyst plans as an empty local
+    relation, not a scan), joins the levels, and a window keeps it only
+    where the rollup/cube emitted no () row of its own: ``df`` is read
+    once. The window runs over the levels' few rows in one task
+    (``coalesce(1)``), so it adds no shuffle."""
+    total = (1 << len(cols)) - 1
+    levels = (
+        getattr(df, how)(*cols)
+        .agg(*aggs, F.grouping_id().alias("_gid"))
+        .withColumn("_filler", F.lit(0))
+    )
+    empty = df.limit(0).agg(*aggs)
     keys = [F.lit(None).cast(df.schema[c].dataType).alias(c) for c in cols]
-    return levels.unionByName(total.select(*keys, *total.columns))
+    filler = empty.select(
+        *keys, *empty.columns, F.lit(total).cast("long").alias("_gid"), F.lit(1).alias("_filler")
+    )
+    return (
+        levels.unionByName(filler)
+        .coalesce(1)
+        .withColumn("_first", F.min("_filler").over(Window.partitionBy("_gid")))
+        .where(F.col("_filler") == F.col("_first"))
+        .drop("_gid", "_filler", "_first")
+    )

@@ -18,7 +18,7 @@ from ..functions.hashing import MOD, int_hash, int_hash_sql
 from ..functions.text import tokens, tokens_sql
 from ..functions.vectors import as_double, norm2, norm2_sql
 from ..plans.registry import register
-from ._util import t
+from ._util import STEP_DEC, t
 
 SPLIT_SEED = 77
 N_TILES = 10  # 8/1/1 -> train/valid/test
@@ -877,7 +877,6 @@ def _pa_proxy_excess(doms, tri, pr):
     from ..ps.factors import factor_element
     from ..ps.pa import W_HI, W_LO, W_SEED
 
-    dec = "decimal(28,15)"
     pr2 = pr.select(F.col("source").alias("r_source"), F.col("r").alias("rw"))
     weighted = tri.join(
         F.broadcast(pr2), tri["source"].eqNullSafe(F.col("r_source")), "left"
@@ -891,7 +890,7 @@ def _pa_proxy_excess(doms, tri, pr):
     )
     w1 = (
         weighted.groupBy("feat_id")
-        .agg(F.sum(F.col("contrib").cast(dec)).alias("dsum"))
+        .agg(F.sum(F.col("contrib").cast(STEP_DEC)).alias("dsum"))
         .select(
             "feat_id",
             (
@@ -903,7 +902,7 @@ def _pa_proxy_excess(doms, tri, pr):
     sc = (
         tri.join(F.broadcast(w1), "feat_id")
         .groupBy("row_id", "source", "y")
-        .agg(F.sum((F.col("x_f") * F.col("wt")).cast(dec)).alias("ms"))
+        .agg(F.sum((F.col("x_f") * F.col("wt")).cast(STEP_DEC)).alias("ms"))
     )
     hinge = F.greatest(F.lit(0.0), F.lit(1.0) - F.col("y") * F.col("ms").cast("double"))
     exc = (

@@ -17,19 +17,25 @@ Reference mapping (SURVEY.md §0 citation convention — public repo layout
 - `ParameterServerLogic.close -> output` (model dump) [C-med] -> :attr:`params`
   (the state *is* a DataFrame; write it with ``.write.parquet``).
 
-Scale design: params are hash-partitioned by param_id exactly like the
-reference's `paramId % psParallelism` partitioner [C-high] — Spark's
-shuffle does this implicitly on every groupBy/join. Pushes are combined
-map-side (the reference's client/server message combiners
-`common/CombinationLogic` [C-med] are subsumed by partial aggregation).
-Each epoch's params are ``persist``-ed and every superseded epoch stays
-cached until the next eager ``localCheckpoint`` (every ``checkpoint_every``
-pushes) has read it, so one epoch costs the same whatever its position:
-it reads the previous epoch from cache instead of recomputing the history
-back to the last cut. Unpersisting the previous epoch while the new one
-is still lazy would make Spark's cache manager re-plan the new epoch
-without that cache: mf.train at sf0.001 ran 8/15/32/66 Spark jobs for 1-4
-epochs that way, against 8/13/19/25 with the chain kept.
+Scale design: the reference's servers keep state partitioned by
+`paramId % psParallelism` [C-high] and touch only the pushed keys. Here
+a push folds its deltas in one aggregation hash-partitioned by param_id
+and combined map-side (the reference's client/server message combiners
+`common/CombinationLogic` [C-med] are subsumed by partial aggregation),
+then merges them into the whole model with a full outer join. The
+checkpoint cut below drops the params' partitioning, so each merge from
+the second push on exchanges the whole model, not only the deltas.
+
+Lineage: every push ends in one eager ``localCheckpoint`` of the merged
+params (:func:`scratch.scoped_checkpoint`), so a push costs the same
+whatever its position and the params frame is always a scan of
+checkpoint blocks with no history behind it. A push is therefore eager:
+it runs the fold and the merge. The kernel never frees a superseded
+checkpoint, so a params frame a caller still holds stays readable:
+the blocks go to the current scratch owner and accumulate one per push
+until ``scratch.release()`` (or the enclosing scope) frees them. A
+long-running server, such as the transport's ``run_server``, holds one
+checkpoint per push it has folded.
 """
 
 from __future__ import annotations
@@ -40,7 +46,7 @@ from functools import cached_property
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..scratch import scoped_checkpoint, scratch
+from ..scratch import scoped_checkpoint
 
 InitFn = Callable[[Column], Column]  # param_id -> initial value (deterministic)
 
@@ -54,20 +60,10 @@ class BatchParameterServer:
     the width of ``init_fn``'s array.
     """
 
-    def __init__(
-        self,
-        init_fn: InitFn,
-        params: DataFrame | None = None,
-        checkpoint_every: int = 5,
-    ) -> None:
+    def __init__(self, init_fn: InitFn, params: DataFrame | None = None) -> None:
         self.init_fn = init_fn
         self.params = params  # None => everything lazily initialized
-        self.checkpoint_every = checkpoint_every
         self._width: int | None = None  # vector width, derived on first push
-        self._epoch = 0
-        # params frames superseded since the last checkpoint cut, still
-        # cached: the newer, lazy epochs read them
-        self._superseded: list[DataFrame] = []
 
     @cached_property
     def _init(self) -> Column:
@@ -127,7 +123,8 @@ class BatchParameterServer:
 
         groupBy does map-side partial aggregation (the reference's message
         combiner); the outer join + coalesce implements SimplePSLogic's
-        lazy init + fold, a key with no delta adding a zero array.
+        lazy init + fold, a key with no delta adding a zero array. The
+        merged params are checkpointed before the call returns.
         """
         k = self._k(deltas.sparkSession)
         agg = _fold_deltas(deltas, k)
@@ -147,21 +144,7 @@ class BatchParameterServer:
                     lambda a, b: a + b,
                 ).alias("value"),
             )
-            self._superseded.append(base)
-        self._epoch += 1
-        if self._epoch % self.checkpoint_every == 0:
-            merged = scoped_checkpoint(merged)
-            # the eager cut has read the whole cached chain and the new
-            # params no longer reference it. Newest first, so the cache
-            # manager has no chain dependent left to re-plan when an
-            # older one goes.
-            while self._superseded:
-                self._superseded.pop().unpersist()
-        else:
-            # scratch-tracked: stays cached until the next cut (above), or
-            # until the next registry query begins (scratch.py lifecycle)
-            merged = scratch(merged)
-        self.params = merged
+        self.params = scoped_checkpoint(merged)
 
     # -- A1: transform (the iteration) --------------------------------------
     def iterate(

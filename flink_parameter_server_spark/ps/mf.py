@@ -115,12 +115,6 @@ def train_bidirectional(spark: SparkSession, r: DataFrame, epochs: int = 2) -> D
 
     Returns a union: (side, id, dim, value) for side in {user, item}.
     """
-    # checkpoint_every=1: with BOTH sides in one server, each epoch's
-    # plan references the previous params in THREE places (two pulls +
-    # the merge join), against two (the pull and the merge join) in the
-    # one-sided trainers, which keep the default cadence. Measured at
-    # sf0.01, local[2], 2 epochs, warm: cadence 1 took 2.5-4.6 s and
-    # cadence 5 took 3.9-6.0 s, with an identical model hash.
     init_fn = lambda pid: F.when(  # noqa: E731 — shared with the preseed below
         pid % 2 == F.lit(0), user_vec(F.floor(pid / 2))
     ).otherwise(item_vec(F.floor(pid / 2)))
@@ -139,7 +133,6 @@ def train_bidirectional(spark: SparkSession, r: DataFrame, epochs: int = 2) -> D
         .distinct()
     )
     ps = BatchParameterServer(
-        checkpoint_every=1,
         init_fn=init_fn,
         params=scratch(ids.withColumn("value", init_fn(F.col("param_id")))),
     )
@@ -167,10 +160,9 @@ def train_bidirectional(spark: SparkSession, r: DataFrame, epochs: int = 2) -> D
             .withColumnRenamed("value", "uvec")
             .drop("param_id")
         )
-        # scratch (NOT persist+immediate unpersist, which dropped the
-        # cache before the lazy push ever materialized it): both delta
-        # branches read `both` once from cache when the model finally
-        # computes; released at the next registry-query entry
+        # scratch: both delta branches read `both` once from cache when
+        # the push checkpoints the merge; released at the next
+        # registry-query entry
         both = scratch(
             both.withColumn(
                 "e", F.col("rating") - vectors.dot_fixed(F.col("uvec"), F.col("ivec"), K)

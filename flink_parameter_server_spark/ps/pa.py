@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
-from ..operators._util import t
+from ..operators._util import STEP_DEC, t
 from .factors import factor_element
 from .kernel import BatchParameterServer
 
@@ -135,7 +135,7 @@ def binary_steps_all_variants(inst: DataFrame, variants=("pa", "pa1", "pa2")) ->
     )
     sums = stepped.groupBy("feat_id").agg(
         *[
-            F.sum((F.col(f"coef_{v}") * F.col("x_f")).cast("decimal(28,15)")).alias(f"d_{v}")
+            F.sum((F.col(f"coef_{v}") * F.col("x_f")).cast(STEP_DEC)).alias(f"d_{v}")
             for v in variants
         ]
     )
@@ -169,9 +169,6 @@ def predict_binary(inst: DataFrame) -> DataFrame:
 # score the corpus with the learned weights. Reuses the PA kernels
 # unchanged because the doc feature space is deliberately N_FEATURES-dim.
 # ---------------------------------------------------------------------------
-
-_DEC28 = "decimal(28,15)"
-
 
 def doc_quality_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(row_id, y, x) PA instances from `documents`: x = 64-dim hashed
@@ -247,7 +244,7 @@ def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = (
         tri.join(F.broadcast(w1), "feat_id")
         .groupBy("row_id", "y")
-        .agg(F.sum((F.col("x_f") * F.col("w")).cast(_DEC28)).alias("ms"))
+        .agg(F.sum((F.col("x_f") * F.col("w")).cast(STEP_DEC)).alias("ms"))
     )
     m1 = F.col("ms").cast("double")
     return sc.select(
@@ -308,7 +305,7 @@ def multiclass_step(inst: DataFrame) -> DataFrame:
     deltas = (
         signed.select("class_id", "coef", F.posexplode("x").alias("feat_id", "x_f"))
         .groupBy("class_id", "feat_id")
-        .agg(F.sum((F.col("coef") * F.col("x_f")).cast("decimal(28,15)")).alias("d"))
+        .agg(F.sum((F.col("coef") * F.col("x_f")).cast(STEP_DEC)).alias("d"))
     )
     # full weight matrix: untouched cells stay at their init value
     base = (

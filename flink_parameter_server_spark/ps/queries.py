@@ -5,14 +5,12 @@ constants/SQL-twins as the Spark expressions, so they cannot drift.
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import int_hash2, int_hash2_sql
 from ..functions.vectors import dot_sql, norm2_sql
-from ..operators._util import overlap, t
+from ..operators._util import STEP_DEC, overlap, t
 from ..plans.registry import register
 from ..scratch import scratch
 from . import mf, pa
@@ -245,7 +243,7 @@ d1 AS (
   SELECT item, j AS dim,
          sum(CAST(CAST({mf.LR} AS DOUBLE) * e
                   * {factor_element_sql('"user"', 'j', mf.USER_SEED, mf.FACTOR_LO, mf.FACTOR_HI)}
-             AS DECIMAL(28,15))) AS d
+             AS {STEP_DEC.upper()})) AS d
   FROM we1 CROSS JOIN (SELECT unnest(range(0, {mf.K})) AS j) GROUP BY item, j
 ),
 i1 AS (
@@ -263,7 +261,7 @@ d2 AS (
   SELECT item, j AS dim,
          sum(CAST(CAST({mf.LR} AS DOUBLE) * e
                   * {factor_element_sql('"user"', 'j', mf.USER_SEED, mf.FACTOR_LO, mf.FACTOR_HI)}
-             AS DECIMAL(28,15))) AS d
+             AS {STEP_DEC.upper()})) AS d
   FROM we2 CROSS JOIN (SELECT unnest(range(0, {mf.K})) AS j) GROUP BY item, j
 )
 SELECT 0 AS epoch, p_partkey AS id, CAST(j AS BIGINT) AS dim,
@@ -305,7 +303,7 @@ def mf_epoch_factors(spark, sf_dir):
             "u_j", factor_element(F.col("user"), F.col("dim"), mf.USER_SEED, mf.FACTOR_LO, mf.FACTOR_HI)
         )
         return ex.groupBy("item", "dim").agg(
-            F.sum((F.lit(mf.LR) * F.col("e") * F.col("u_j")).cast("decimal(28,15)")).alias("d")
+            F.sum((F.lit(mf.LR) * F.col("e") * F.col("u_j")).cast(STEP_DEC)).alias("d")
         )
 
     init_part = (
@@ -552,25 +550,23 @@ def mf_negative_samples(spark, sf_dir):
 )
 def ps_train_epochs(spark, sf_dir):
     # the ratings join and the PA triplet build each feed two trainers
-    # (and each trainer's epochs re-read them several times once the
-    # final union materializes) — build both once, MATERIALIZED before
-    # the trainer fan-out so concurrent families read the cache instead
-    # of racing to compute it
+    # (and each trainer's pushes re-read them) — build both once,
+    # MATERIALIZED before the trainer fan-out so concurrent families
+    # read the cache instead of racing to compute it
     rat = scratch(mf.ratings(spark, sf_dir))
     inst = scratch(pa.instances(spark, sf_dir))
     rat.count()
     inst.count()
 
     # guide §2.6 — overlap independent jobs: the five trainer families
-    # are INDEPENDENT programs whose serial segments (bidir's per-epoch
-    # eager checkpoints, each family's multi-epoch fold chain) would
-    # otherwise run back-to-back. Each family builds and materializes
-    # its (scratch-cached) result on its own driver thread, so later
-    # jobs' tasks back-fill the stragglers of earlier ones; the final
-    # union then reads five warmed caches. Per-family plans, fold orders
-    # and values do not depend on the threads. A thread starts with no
-    # scratch scope, so its checkpoint blocks go to the tracker and
-    # outlive it.
+    # are INDEPENDENT programs whose serial segments (every push is an
+    # eager fold + merge + checkpoint) would otherwise run back-to-back.
+    # Each family trains on its own driver thread, so later jobs' tasks
+    # back-fill the stragglers of earlier ones; the final union is a
+    # projection over five checkpointed models. Per-family plans, fold
+    # orders and values do not depend on the threads. A thread starts
+    # with no scratch scope, so its checkpoint blocks go to the tracker
+    # and outlive it.
     # 4 cores, sf0.1 (tools/ab.py warm rep, 10 pairs): serial 18.5 s -> 16.3 s.
     def fam_mf():
         return (
@@ -635,14 +631,8 @@ def ps_train_epochs(spark, sf_dir):
             )
         )
 
-    def _materialize(build):
-        df = scratch(build())
-        df.count()
-        return df
-
-    families = (fam_mf, fam_bidir, fam_pa, fam_pamc, fam_mfneg)
     mf_part, bidir, pa_part, pamc, mfneg = overlap(
-        spark, *[partial(_materialize, fam) for fam in families]
+        spark, fam_mf, fam_bidir, fam_pa, fam_pamc, fam_mfneg
     )
     return (
         mf_part.unionByName(bidir).unionByName(pa_part).unionByName(pamc).unionByName(mfneg)
@@ -674,7 +664,7 @@ tri AS (
 ),
 d AS (
   SELECT CAST(feat_id AS BIGINT) AS feat_id,
-         sum(CAST(coef * CAST(x_f AS DOUBLE) AS DECIMAL(28,15))) AS d
+         sum(CAST(coef * CAST(x_f AS DOUBLE) AS {STEP_DEC.upper()})) AS d
   FROM tri GROUP BY 1
 )
 SELECT '{variant}' AS variant, CAST(-1 AS BIGINT) AS class_id, feat_id,
@@ -720,7 +710,7 @@ dq_tri AS (
 dq_w AS (
   SELECT CAST(feat_id AS BIGINT) AS feat_id,
          {W0_SQL('feat_id')}
-           + CAST(sum(CAST(coef * x_f AS DECIMAL(28,15))) AS DOUBLE) AS w
+           + CAST(sum(CAST(coef * x_f AS {STEP_DEC.upper()})) AS DOUBLE) AS w
   FROM dq_tri GROUP BY 1
 ),
 dq_tri2 AS (
@@ -728,7 +718,7 @@ dq_tri2 AS (
   FROM dq_inst
 ),
 dq_sc AS (
-  SELECT t.row_id, t.y, sum(CAST(t.x_f * w.w AS DECIMAL(28,15))) AS ms
+  SELECT t.row_id, t.y, sum(CAST(t.x_f * w.w AS {STEP_DEC.upper()})) AS ms
   FROM dq_tri2 t JOIN dq_w w ON t.feat_id = w.feat_id
   GROUP BY 1, 2
 )
@@ -822,7 +812,7 @@ tri AS (
 ),
 deltas AS (
   SELECT CAST(class_id AS BIGINT) AS class_id, CAST(feat_id AS BIGINT) AS feat_id,
-         sum(CAST(coef * CAST(x_f AS DOUBLE) AS DECIMAL(28,15))) AS d
+         sum(CAST(coef * CAST(x_f AS DOUBLE) AS {STEP_DEC.upper()})) AS d
   FROM tri GROUP BY 1, 2
 ),
 base AS (

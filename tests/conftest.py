@@ -34,6 +34,26 @@ def _release_scratch():
     scratch.release()
 
 
+@pytest.fixture()
+def checkpointed_plans(monkeypatch) -> list[str]:
+    """The executed plan of every frame a kernel push hands to
+    ``kernel.scoped_checkpoint``, in call order: the params themselves
+    are checkpoint scans, so the fold and the merge are only in view on
+    their way into the cut. Wraps the name the kernel calls, as the
+    traced benchmark does."""
+    from flink_parameter_server_spark.ps import kernel
+
+    plans: list[str] = []
+    real = kernel.scoped_checkpoint
+
+    def recording(df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(kernel, "scoped_checkpoint", recording)
+    return plans
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -60,9 +60,10 @@ def test_topk_uses_takeordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def _pushed_fold_plan(spark):
+def _pushed_fold_plan(spark, checkpointed_plans):
     """Push 100 two-wide deltas over 5 keys into a server built from its
-    init_fn alone; return (executed plan, {param_id: value})."""
+    init_fn alone; return (executed plan of the checkpointed merge,
+    {param_id: value})."""
     from pyspark.sql import functions as F
 
     from flink_parameter_server_spark import scratch
@@ -75,33 +76,33 @@ def _pushed_fold_plan(spark):
     ps = BatchParameterServer(lambda pid: F.array(F.lit(0.0), F.lit(0.0)))
     try:
         ps.push(deltas)
-        plan = ps.params._jdf.queryExecution().executedPlan().toString()
+        (plan,) = checkpointed_plans
         return plan, {r["param_id"]: r["value"] for r in ps.params.collect()}
     finally:
-        # an identical push left cached would show up in the next plan
+        # free the push's checkpoint blocks
         scratch.release()
 
 
-def test_ps_push_fold_is_exploded_sum_not_collect_list(spark):
+def test_ps_push_fold_is_exploded_sum_not_collect_list(spark, checkpointed_plans):
     """The kernel's push fold must be an element-level sum with map-side
     partial aggregation — never collect_list over the raw delta arrays,
     whose per-key state is O(fan-in x k) and OOMs when fan-in =
     instances-per-feature. The width is now derived from init_fn, so the
     sum runs over the k flat elements rather than exploded rows."""
-    plan, rows = _pushed_fold_plan(spark)
+    plan, rows = _pushed_fold_plan(spark, checkpointed_plans)
     assert "collect_list" not in plan
     assert "partial_sum(" in plan
     # and the fold is numerically the elementwise sum
     assert rows[0] == [20.0, 40.0]
 
 
-def test_ps_push_fold_static_k_is_flat_sums(spark, monkeypatch):
+def test_ps_push_fold_static_k_is_flat_sums(spark, monkeypatch, checkpointed_plans):
     """The fold is k flat element sums in ONE aggregation, with the static
     k derived from init_fn: no row explosion, no second shuffle, no
     collect_list reassembly."""
     from flink_parameter_server_spark.ps.kernel import BatchParameterServer
 
-    plan, rows = _pushed_fold_plan(spark)
+    plan, rows = _pushed_fold_plan(spark, checkpointed_plans)
     assert "posexplode" not in plan.lower() and "Generate" not in plan
     assert "collect_list" not in plan
     # one partial+final aggregation pair, not two chained aggregations
@@ -115,8 +116,9 @@ def test_ps_push_fold_static_k_is_flat_sums(spark, monkeypatch):
     from flink_parameter_server_spark.ps import mf
 
     scratch.release()
-    model = mf.train(spark, mf.ratings(spark, SF_SMALL), epochs=1)
-    plan = model._jdf.queryExecution().executedPlan().toString()
+    checkpointed_plans.clear()
+    mf.train(spark, mf.ratings(spark, SF_SMALL), epochs=1)
+    (plan,) = checkpointed_plans
     assert "partial_sum(" in plan  # the fold aggregation is in view
     assert "transform(uv" not in plan
     scratch.release()

@@ -125,34 +125,26 @@ def test_mf_train_epoch_cost_is_linear(spark):
     assert jobs[4] - jobs[3] == jobs[3] - jobs[2], jobs
 
 
-def test_superseded_params_caches_bounded_by_checkpoint_every(spark):
-    """Superseded params frames stay cached until the next checkpoint cut
-    has read them, then the whole chain is freed: at most
-    ``checkpoint_every`` params caches are ever live, the fold is exact,
-    and ``scratch.release()`` frees every block the server persisted."""
-    every = 3
-    pushes = 2 * every + 1
+def test_each_push_adds_one_checkpoint_and_no_params_cache(spark):
+    """Every push ends in one checkpoint cut and caches nothing: after
+    each push exactly one new persisted RDD is live (the checkpoint the
+    params frame scans), superseded checkpoints stay until release, the
+    fold is exact, and ``scratch.release()`` frees every block the
+    server persisted."""
+    pushes = 7
     scratch.release()
     baseline = scratch.persistent_rdd_ids(spark)
-    ps = BatchParameterServer(init_fn=_init_fn, checkpoint_every=every)
+    ps = BatchParameterServer(init_fn=_init_fn)
     seen: set[int] = set()
-    checkpoints: set[int] = set()
-    live_caches = []
     for i in range(1, pushes + 1):
         ps.push(spark.createDataFrame([(1, [1.0, 0.5]), (i % 3, [0.25, 0.0])], ["param_id", "delta"]))
         ps.params.count()
         live = scratch.persistent_rdd_ids(spark) - baseline
-        if i % every == 0:
-            # a cut: only its checkpoint blocks are new
-            checkpoints |= live - seen
+        # no params cache: the one new id is the checkpoint the params scan
+        assert live - seen == {scratch._direct_checkpoint_rdd_id(ps.params)}
+        assert seen <= live
         seen |= live
-        live_caches.append(len(live - checkpoints))
-    assert len(checkpoints) == pushes // every
-    # between cuts the superseded frames stay cached (the frame a cut
-    # returns is checkpoint blocks, not a cache): every - 1 caches just
-    # before a cut, the current one included, and each cut frees them all
-    assert max(live_caches) == every - 1
-    assert [live_caches[i - 1] for i in range(every, pushes + 1, every)] == [0] * (pushes // every)
+    assert len(seen) == pushes
     # init(id) = [id, 2 id]; key 1 gets (1, 0.5) every push and (0.25, 0)
     # when i % 3 == 1; keys 0 and 2 get (0.25, 0) when i % 3 hits them
     want = {0: [0.0, 0.0], 1: [1.0, 2.0], 2: [2.0, 4.0]}
@@ -165,18 +157,38 @@ def test_superseded_params_caches_bounded_by_checkpoint_every(spark):
     assert not seen & scratch.persistent_rdd_ids(spark)
 
 
+def test_params_frames_outlive_later_pushes(spark):
+    """The kernel never frees a superseded checkpoint: a params frame
+    taken after push 1 still reads its values after two more pushes,
+    and only ``scratch.release()`` frees the server's blocks."""
+    scratch.release()
+    baseline = scratch.persistent_rdd_ids(spark)
+    ps = BatchParameterServer(init_fn=_init_fn)
+    ps.push(spark.createDataFrame([(1, [1.0, 0.5])], ["param_id", "delta"]))
+    p1 = ps.params
+    for _ in range(2):
+        ps.push(spark.createDataFrame([(1, [1.0, 0.5]), (2, [0.5, 0.5])], ["param_id", "delta"]))
+    assert {r.param_id: r.value for r in p1.collect()} == {1: [2.0, 2.5]}
+    assert {r.param_id: r.value for r in ps.params.collect()} == {1: [4.0, 3.5], 2: [3.0, 5.0]}
+    ids = scratch.persistent_rdd_ids(spark) - baseline
+    assert len(ids) == 3  # one checkpoint per push, none freed yet
+    scratch.release()
+    assert not ids & scratch.persistent_rdd_ids(spark)
+
+
 def test_push_derives_width_without_a_spark_job(spark):
     """The fold width is size(init_fn(param_id)) over a one-row local
-    relation, which Catalyst folds on the driver: a lazy push (width
-    derivation included) launches no Spark job. The control count in
-    the same job group shows the group does see jobs."""
+    relation, which Catalyst folds on the driver: deriving it launches
+    no Spark job (the push itself is eager, it checkpoints the merge).
+    The control count in the same job group shows the group does see
+    jobs."""
     sc = spark.sparkContext
     deltas = spark.createDataFrame([(1, [1.0, 0.5])], ["param_id", "delta"])
     ps = BatchParameterServer(init_fn=mf.item_vec)
     group = "test_push_derives_width"
     sc.setJobGroup(group, "width derivation")
     try:
-        ps.push(deltas.select("param_id", F.array(*[F.lit(0.5)] * mf.K).alias("delta")))
+        assert ps._k(spark) == mf.K
         assert sc.statusTracker().getJobIdsForGroup(group) == []
         assert ps._width == mf.K
         deltas.count()  # control
@@ -190,7 +202,7 @@ def test_push_derives_width_without_a_spark_job(spark):
 def test_push_cuts_lineage_through_kernel_scoped_checkpoint(spark, monkeypatch):
     """The traced benchmark counts and times lineage cuts by wrapping the
     name ``kernel.scoped_checkpoint``: every cut must go through that
-    name, once per ``checkpoint_every`` pushes. A cut routed elsewhere
+    name, once per push. A cut routed elsewhere
     would silently read 0 in the traced checkpoint metrics."""
     from flink_parameter_server_spark.ps import kernel
 
@@ -202,10 +214,9 @@ def test_push_cuts_lineage_through_kernel_scoped_checkpoint(spark, monkeypatch):
         return real(*a, **kw)
 
     monkeypatch.setattr(kernel, "scoped_checkpoint", counting)
-    every = 2
-    ps = BatchParameterServer(init_fn=_init_fn, checkpoint_every=every)
-    for _ in range(2 * every):
+    ps = BatchParameterServer(init_fn=_init_fn)
+    for _ in range(4):
         ps.push(spark.createDataFrame([(1, [1.0, 0.5])], ["param_id", "delta"]))
-    assert len(calls) == 2
+    assert len(calls) == 4
     assert {r.param_id: r.value for r in ps.params.collect()} == {1: [5.0, 4.0]}
     scratch.release()

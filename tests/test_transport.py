@@ -189,14 +189,17 @@ def test_answers_schema_consistent_between_push_only_and_populated(spark, topic_
     assert empty_ans.unionByName(real_ans).count() == real_ans.count()
 
 
-def test_server_push_fold_is_flat_sums(spark, topic_root):
+def test_server_push_fold_is_flat_sums(spark, topic_root, checkpointed_plans):
     """The server folds each micro-batch's pushes with the kernel's one
     flat-sum aggregation: no explode and no collect_list re-assembly in
-    the model's executed plan."""
+    the executed plan of each push's merge (read on its way into the
+    checkpoint cut: the params are checkpoint scans)."""
     tp = FileQueueTransport(topic_root)
     tp.send(tp.pushes(_deltas(spark, [(1, [1.0, 1.0]), (1, [0.5, 0.0])])), "000_a")
     tp.send(tp.pushes(_deltas(spark, [(2, [2.0, 0.0])])), "001_b")
     server = tp.run_server(spark, init_fn=_init)
-    plan = server.params._jdf.queryExecution().executedPlan().toString()
-    assert "Generate" not in plan and "collect_list" not in plan
+    assert len(checkpointed_plans) == 2  # one merge per micro-batch
+    for plan in checkpointed_plans:
+        assert "partial_sum(" in plan  # the fold is in view
+        assert "Generate" not in plan and "collect_list" not in plan
     assert _by_key(server.params) == {1: [2.0, 3.0], 2: [3.0, 3.0]}
