@@ -114,16 +114,35 @@ def counted_stride_col(n_col):
     )
 
 
+def first_sql(cols, inner, part, order, src, keep="rn = 1") -> str:
+    """One ranked pick as the body of a CTE: number the rows of ``src``
+    (projected as ``inner``) per ``part`` group by ``order`` and return
+    ``cols`` of the rows that satisfy ``keep`` (the first by default)."""
+    return f"""  SELECT {cols} FROM (
+    SELECT {inner},
+           row_number() OVER (PARTITION BY {part}
+                              ORDER BY {order}) AS rn
+    FROM {src}
+  ) WHERE {keep}"""
+
+
+def nearest_sql(cols, inner, part, x, cv, cid, src, keep="rn = 1") -> str:
+    """The oracle twin of similarity._nearest_centroids: each ``part``
+    group keeps the centroid (vector ``cv``, id ``cid``) of max cosine
+    to ``x``, ties going to the lowest id."""
+    return first_sql(cols, inner, part, f"{cosine_sql(x, cv)} DESC, {cid}", src, keep)
+
+
+# The flat cell assignment over a `cent` CTE: every embedding's
+# max-cosine centroid.
+ASSIGN_SQL = f"""assign AS (
+{nearest_sql('vec_id, embedding, cid', 'e.vec_id, e.embedding, c.cid', 'e.vec_id',
+             'e.embedding', 'c.cv', 'c.cid', 'embeddings e CROSS JOIN cent c')}
+)"""
+
 SEMANTIC_PAIRS_SQL = f"""
 WITH cent AS {IVF_CENT_SQL},
-assign AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT e.vec_id, e.embedding, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cosine_sql('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-    FROM embeddings e CROSS JOIN cent c
-  ) WHERE rn = 1
-)
+{ASSIGN_SQL}
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        round({cosine_sql('a.embedding', 'b.embedding')}, 6) + 0.0 AS cos_sim
 FROM assign a JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id

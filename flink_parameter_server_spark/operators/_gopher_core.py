@@ -267,7 +267,9 @@ def _collapse_runs_ssql(toks: str) -> tuple[str, str]:
 
 
 def _char_frac_ssql(dedup: str, removed: str, sep_len: int) -> str:
-    """Spark-SQL twin of :func:`_char_frac` (n_chars_measured bound)."""
+    """Fraction of a document's characters inside removed duplicate
+    units: (orig_chars - dedup_chars - removed*sep_len) / orig_chars,
+    NULL for NULL/empty text (n_chars_measured bound)."""
     return (
         f"CASE WHEN n_chars_measured > 0 THEN round(CAST(n_chars_measured"
         f" - length({dedup}) - {removed} * {sep_len} AS DOUBLE)"

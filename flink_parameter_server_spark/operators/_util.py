@@ -134,10 +134,6 @@ def mean_of(sum_col: Column, cnt_col: Column, scale: int = 6) -> Column:
     return F.round(sum_col.cast("double") / cnt_col.cast("double"), scale)
 
 
-def mean_of_sql(sum_expr: str, cnt_expr: str, scale: int = 6) -> str:
-    return f"round(CAST({sum_expr} AS DOUBLE) / CAST({cnt_expr} AS DOUBLE), {scale})"
-
-
 def with_grand_total(df: DataFrame, how: str, cols: list[str], *aggs: Column) -> DataFrame:
     """``df.rollup(*cols)`` or ``df.cube(*cols)`` (``how``) aggregated by
     ``aggs``, keeping the () grand-total row on empty input. Spark 4.1.2

@@ -943,10 +943,14 @@ def _install_cc_oracle() -> None:
 
     from ..plans.registry import REGISTRY
 
-    from ..functions.planes import IVF_CENT_SQL, SEMANTIC_PAIRS_SQL
+    from ..functions.planes import IVF_CENT_SQL, SEMANTIC_PAIRS_SQL, nearest_sql
     from ..functions.vectors import cosine_sql, norm2_sql
 
     mh = _MINHASH_SQL
+    sassign_src = (
+        f"embeddings e\n    CROSS JOIN {IVF_CENT_SQL} c\n"
+        f"    WHERE {norm2_sql('e.embedding')} > 0"
+    )
     cc = f"""
 WITH RECURSIVE
 pairs AS ({mh}),
@@ -967,14 +971,9 @@ sedges AS (
   SELECT vec_b AS a, vec_a AS b FROM sem_pairs
 ),
 sassign AS (
-  SELECT vec_id, round(cos_c, 6) AS cos_c FROM (
-    SELECT e.vec_id, {cosine_sql('e.embedding', 'c.cv')} AS cos_c,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cosine_sql('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-    FROM embeddings e
-    CROSS JOIN {IVF_CENT_SQL} c
-    WHERE {norm2_sql('e.embedding')} > 0
-  ) WHERE rn = 1
+{nearest_sql('vec_id, round(cos_c, 6) AS cos_c',
+             f"e.vec_id, {cosine_sql('e.embedding', 'c.cv')} AS cos_c", 'e.vec_id',
+             'e.embedding', 'c.cv', 'c.cid', sassign_src)}
 ),
 sreach AS (
   SELECT vec_id AS src, vec_id AS dst FROM sassign

@@ -186,18 +186,13 @@ UNION ALL
 SELECT 'domain_reweight' AS part, doc_id, lang, source, 'dropped' AS split
 FROM domc WHERE copies = 0
 """
-    from ..functions.planes import IVF_CENT_SQL
-    from ..functions.vectors import cosine_sql
+    from ..functions.planes import IVF_CENT_SQL, nearest_sql
 
     cluster = f"""
 WITH cent AS {IVF_CENT_SQL},
 assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cosine_sql('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-    FROM embeddings e CROSS JOIN cent c
-  ) WHERE rn = 1
+{nearest_sql('vec_id, cid', 'e.vec_id, c.cid', 'e.vec_id',
+             'e.embedding', 'c.cv', 'c.cid', 'embeddings e CROSS JOIN cent c')}
 ),
 cells AS (SELECT cid, count(*) AS n_c FROM assign GROUP BY cid),
 caps AS (

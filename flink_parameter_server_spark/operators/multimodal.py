@@ -254,27 +254,6 @@ FROM sz
 """
 
 
-def multimodal_resize(spark, sf_dir):
-    """Multimodal resize plumbing: binary payload stride-sampled to the
-    RESIZE_BYTES target via Arrow-batched mapInPandas (binary in ->
-    resized stats out; swap the byte math for a real resize kernel)."""
-    return resize_media(media_table(spark, sf_dir))
-
-
-def multimodal_frame_sample(spark, sf_dir):
-    """Multimodal frame sampling: binary payload as fixed-size frame
-    windows, every FRAME_STRIDE-th frame emitted as its own row via
-    Arrow-batched mapInPandas (1 row in -> N frame rows out, the real
-    video-sampler batch shape)."""
-    return frame_sample(media_table(spark, sf_dir))
-
-
-def multimodal_decode_features(spark, sf_dir):
-    """Multimodal pipeline plumbing: binary media column + typed metadata
-    -> Arrow-batched mapInPandas decode/feature-extract."""
-    return decode_features(media_table(spark, sf_dir))
-
-
 @register(
     "multimodal_pipeline",
     oracle=f"""

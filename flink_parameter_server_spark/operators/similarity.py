@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from ..functions.planes import (  # noqa: F401 (EMB_NEAR_DUP_SQL/SEMANTIC_PAIRS_SQL re-exported for dedup)
+    ASSIGN_SQL,
     DIM,
     EMB_NEAR_DUP_SQL,
     IVF_CENT_SQL,
@@ -32,6 +33,8 @@ from ..functions.planes import (  # noqa: F401 (EMB_NEAR_DUP_SQL/SEMANTIC_PAIRS_
     bucket_col as _bucket_col,
     bucket_sql as _bucket_sql,
     counted_stride_col,
+    first_sql,
+    nearest_sql,
 )
 from ..functions.vectors import (
     as_double,
@@ -149,6 +152,17 @@ def _with_norm(df, vec_col: str, out: str, scan_partitions: int | None = None):
     return df.withColumn(out, F.sqrt(norm2(as_double(F.col(vec_col)))))
 
 
+def _tail_sql(method: str, src: str, keep: str = "rk = 1") -> str:
+    """The per-query top-k tail every embedding_ann_topk oracle ends in:
+    rank ``src``'s (query_id, neighbor_id, cos_sim) rows by (cos desc,
+    neighbor id) and tag the kept ones with ``method``."""
+    return f"""SELECT '{method}' AS method, query_id, neighbor_id, cos_sim, rk FROM (
+  SELECT query_id, neighbor_id, cos_sim,
+         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rk
+  FROM {src}
+) WHERE {keep}"""
+
+
 _BRUTE_SQL = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0),
 scored AS (
@@ -156,11 +170,7 @@ scored AS (
          round({cosine_sql('q.qv', 'e.embedding')}, 6) + 0.0 AS cos_sim
   FROM q JOIN embeddings e ON e.vec_id <> q.query_id
 )
-SELECT 'brute' AS method, query_id, neighbor_id, cos_sim, rk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scored
-) WHERE rk <= 5
+{_tail_sql('brute', 'scored', 'rk <= 5')}
 """
 
 
@@ -201,11 +211,7 @@ scored AS (
          round({cosine_sql('q.qv', 's.embedding')}, 6) + 0.0 AS cos_sim
   FROM q JOIN sig s ON s.bucket = q.bucket AND s.vec_id <> q.query_id
 )
-SELECT 'simhash' AS method, query_id, neighbor_id, cos_sim, rk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scored
-) WHERE rk = 1
+{_tail_sql('simhash', 'scored')}
 """
 
 
@@ -241,25 +247,14 @@ def embedding_simhash_ann(spark, sf_dir, k: int = 1):
 # functions/planes.py with the other oracle-shared constants.
 _IVF_ANN_SQL = f"""
 WITH cent AS {IVF_CENT_SQL},
-assign AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT e.vec_id, e.embedding, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cosine_sql('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-    FROM embeddings e CROSS JOIN cent c
-  ) WHERE rn = 1
-),
+{ASSIGN_SQL},
 q AS (SELECT vec_id AS query_id, embedding AS qv, cid FROM assign WHERE vec_id % 50 = 0),
 scored AS (
   SELECT q.query_id, a.vec_id AS neighbor_id,
          round({cosine_sql('q.qv', 'a.embedding')}, 6) + 0.0 AS cos_sim
   FROM q JOIN assign a ON a.cid = q.cid AND a.vec_id <> q.query_id
 )
-SELECT 'ivf' AS method, query_id, neighbor_id, cos_sim, rk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scored
-) WHERE rk = 1
+{_tail_sql('ivf', 'scored')}
 """
 
 
@@ -271,8 +266,10 @@ SELECT 'ivf' AS method, query_id, neighbor_id, cos_sim, rk FROM (
 # prune, identical cells, identical neighbors in Spark and DuckDB.
 # Assignment FLOPs: n·k^(1/2) per level ~ 2n·n^(1/4) total (vs the flat
 # counted rule's n·sqrt(n)) — at 1e9 docs, ~3.6e11 vs 3e13 cosines.
-_IVF2_ANN_SQL = f"""
-WITH cent AS {IVF_CENT_SQL},
+# The geometry (supers, each centroid's parent super, each vector's
+# coarse super and its cell among that super's children) is shared by
+# the single- and multi-probe lanes.
+_IVF2_GEOMETRY_SQL = f"""WITH cent AS {IVF_CENT_SQL},
 crk AS (
   SELECT cid, cv,
          row_number() OVER (ORDER BY cid) - 1 AS rnk,
@@ -285,40 +282,27 @@ sup AS (
               / greatest(1.0, floor(sqrt(CAST(k AS DOUBLE))))) AS BIGINT)) = 0
 ),
 parent AS (
-  SELECT cid, cv, scid FROM (
-    SELECT c.cid, c.cv, s.scid,
-           row_number() OVER (PARTITION BY c.cid
-                              ORDER BY {cosine_sql('c.cv', 's.sv')} DESC, s.scid) AS rn
-    FROM cent c CROSS JOIN sup s
-  ) WHERE rn = 1
+{nearest_sql('cid, cv, scid', 'c.cid, c.cv, s.scid', 'c.cid',
+             'c.cv', 's.sv', 's.scid', 'cent c CROSS JOIN sup s')}
 ),
 coarse AS (
-  SELECT vec_id, embedding, scid FROM (
-    SELECT e.vec_id, e.embedding, s.scid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cosine_sql('e.embedding', 's.sv')} DESC, s.scid) AS rn
-    FROM embeddings e CROSS JOIN sup s
-  ) WHERE rn = 1
+{nearest_sql('vec_id, embedding, scid', 'e.vec_id, e.embedding, s.scid', 'e.vec_id',
+             'e.embedding', 's.sv', 's.scid', 'embeddings e CROSS JOIN sup s')}
 ),
 assign2 AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT x.vec_id, x.embedding, p.cid,
-           row_number() OVER (PARTITION BY x.vec_id
-                              ORDER BY {cosine_sql('x.embedding', 'p.cv')} DESC, p.cid) AS rn
-    FROM coarse x JOIN parent p ON p.scid = x.scid
-  ) WHERE rn = 1
-),
+{nearest_sql('vec_id, embedding, cid', 'x.vec_id, x.embedding, p.cid', 'x.vec_id',
+             'x.embedding', 'p.cv', 'p.cid', 'coarse x JOIN parent p ON p.scid = x.scid')}
+),"""
+
+_IVF2_ANN_SQL = f"""
+{_IVF2_GEOMETRY_SQL}
 q2 AS (SELECT vec_id AS query_id, embedding AS qv, cid FROM assign2 WHERE vec_id % 50 = 0),
 scored2 AS (
   SELECT q2.query_id, a.vec_id AS neighbor_id,
          round({cosine_sql('q2.qv', 'a.embedding')}, 6) + 0.0 AS cos_sim
   FROM q2 JOIN assign2 a ON a.cid = q2.cid AND a.vec_id <> q2.query_id
 )
-SELECT 'ivf2' AS method, query_id, neighbor_id, cos_sim, rk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scored2
-) WHERE rk = 1
+{_tail_sql('ivf2', 'scored2')}
 """
 
 
@@ -331,70 +315,27 @@ SELECT 'ivf2' AS method, query_id, neighbor_id, cos_sim, rk FROM (
 # deterministic rank: the p>1 approximation is replayed bit-for-bit.
 IVF2_PROBES = 2
 
+_QSUP_SQL = nearest_sql(
+    "query_id, qv, scid", "e.vec_id AS query_id, e.embedding AS qv, s.scid", "e.vec_id",
+    "e.embedding", "s.sv", "s.scid",
+    "embeddings e CROSS JOIN sup s\n    WHERE e.vec_id % 50 = 0", f"rn <= {IVF2_PROBES}",
+)
+
 _IVF2P_ANN_SQL = f"""
-WITH cent AS {IVF_CENT_SQL},
-crk AS (
-  SELECT cid, cv,
-         row_number() OVER (ORDER BY cid) - 1 AS rnk,
-         count(*) OVER () AS k
-  FROM cent
-),
-sup AS (
-  SELECT cid AS scid, cv AS sv FROM crk
-  WHERE rnk % greatest(1, CAST(ceil(CAST(k AS DOUBLE)
-              / greatest(1.0, floor(sqrt(CAST(k AS DOUBLE))))) AS BIGINT)) = 0
-),
-parent AS (
-  SELECT cid, cv, scid FROM (
-    SELECT c.cid, c.cv, s.scid,
-           row_number() OVER (PARTITION BY c.cid
-                              ORDER BY {cosine_sql('c.cv', 's.sv')} DESC, s.scid) AS rn
-    FROM cent c CROSS JOIN sup s
-  ) WHERE rn = 1
-),
-coarse AS (
-  SELECT vec_id, embedding, scid FROM (
-    SELECT e.vec_id, e.embedding, s.scid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cosine_sql('e.embedding', 's.sv')} DESC, s.scid) AS rn
-    FROM embeddings e CROSS JOIN sup s
-  ) WHERE rn = 1
-),
-assign2 AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT x.vec_id, x.embedding, p.cid,
-           row_number() OVER (PARTITION BY x.vec_id
-                              ORDER BY {cosine_sql('x.embedding', 'p.cv')} DESC, p.cid) AS rn
-    FROM coarse x JOIN parent p ON p.scid = x.scid
-  ) WHERE rn = 1
-),
+{_IVF2_GEOMETRY_SQL}
 qsup AS (
-  SELECT query_id, qv, scid FROM (
-    SELECT e.vec_id AS query_id, e.embedding AS qv, s.scid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cosine_sql('e.embedding', 's.sv')} DESC, s.scid) AS rn
-    FROM embeddings e CROSS JOIN sup s
-    WHERE e.vec_id % 50 = 0
-  ) WHERE rn <= {IVF2_PROBES}
+{_QSUP_SQL}
 ),
 qcell AS (
-  SELECT query_id, qv, cid FROM (
-    SELECT q.query_id, q.qv, p.cid,
-           row_number() OVER (PARTITION BY q.query_id, q.scid
-                              ORDER BY {cosine_sql('q.qv', 'p.cv')} DESC, p.cid) AS rn
-    FROM qsup q JOIN parent p ON p.scid = q.scid
-  ) WHERE rn = 1
+{nearest_sql('query_id, qv, cid', 'q.query_id, q.qv, p.cid', 'q.query_id, q.scid',
+             'q.qv', 'p.cv', 'p.cid', 'qsup q JOIN parent p ON p.scid = q.scid')}
 ),
 scoredp AS (
   SELECT qc.query_id, a.vec_id AS neighbor_id,
          round({cosine_sql('qc.qv', 'a.embedding')}, 6) + 0.0 AS cos_sim
   FROM qcell qc JOIN assign2 a ON a.cid = qc.cid AND a.vec_id <> qc.query_id
 )
-SELECT 'ivf2_p{IVF2_PROBES}' AS method, query_id, neighbor_id, cos_sim, rk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scoredp
-) WHERE rk = 1
+{_tail_sql(f'ivf2_p{IVF2_PROBES}', 'scoredp')}
 """
 
 
@@ -419,75 +360,76 @@ PQ_SUB = DIM // PQ_M
 PQ_K = 16
 PQ_SHORTLIST = 10
 
-_IVFPQ_ANN_SQL = f"""
-WITH cent AS {IVF_CENT_SQL},
-assign AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT e.vec_id, e.embedding, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cosine_sql('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-    FROM embeddings e CROSS JOIN cent c
-  ) WHERE rn = 1
-),
-nv AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt({norm2_sql('embedding')})) AS xn
-  FROM embeddings WHERE {norm2_sql('embedding')} > 0
-),
-anch AS (
-  SELECT vec_id AS aid, xn FROM nv,
+
+def _pq_chain_sql(method: str, x: str, rows: str, sfx: str) -> str:
+    """The IVFADC chain both PQ oracles share, from the codebook to the
+    top-k tail: PQ_K stride-sampled anchors of the encoded vectors
+    ``x`` in ``rows`` give each subspace's codewords, every row takes
+    its argmin-L2 code, each query's cell is ranked by its ADC score
+    over a LUT of normalized-query-to-codeword dots, and the top
+    PQ_SHORTLIST are refined by exact cosine. ``sfx`` suffixes the CTE
+    names (the residual lane's chain reads anchr .. scoredpqr)."""
+    qp = f"qp{sfx} qp" if sfx else "qp"
+    return f"""anch{sfx} AS (
+  SELECT vec_id AS aid, {x} FROM {rows},
        (SELECT greatest(1, CAST(ceil(CAST(count(*) AS DOUBLE) / {PQ_K}.0) AS BIGINT)) AS stride
         FROM embeddings) s
   WHERE vec_id % s.stride = 0
 ),
-cb AS (
-  SELECT aid, m, list_slice(xn, m*{PQ_SUB}+1, m*{PQ_SUB}+{PQ_SUB}) AS cs
-  FROM anch, generate_series(0, {PQ_M - 1}) t(m)
+cb{sfx} AS (
+  SELECT aid, m, list_slice({x}, m*{PQ_SUB}+1, m*{PQ_SUB}+{PQ_SUB}) AS cs
+  FROM anch{sfx}, generate_series(0, {PQ_M - 1}) t(m)
 ),
-xs AS (
-  SELECT vec_id, m, list_slice(xn, m*{PQ_SUB}+1, m*{PQ_SUB}+{PQ_SUB}) AS sv
-  FROM nv, generate_series(0, {PQ_M - 1}) t(m)
+xs{sfx} AS (
+  SELECT vec_id, m, list_slice({x}, m*{PQ_SUB}+1, m*{PQ_SUB}+{PQ_SUB}) AS sv
+  FROM {rows}, generate_series(0, {PQ_M - 1}) t(m)
 ),
-codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT x.vec_id, x.m, c.aid AS code,
-           row_number() OVER (PARTITION BY x.vec_id, x.m
-                              ORDER BY {l2sq_sql('x.sv', 'c.cs')}, c.aid) AS rn
-    FROM xs x JOIN cb c ON c.m = x.m
-  ) WHERE rn = 1
+codes{sfx} AS (
+{first_sql('vec_id, m, code', 'x.vec_id, x.m, c.aid AS code', 'x.vec_id, x.m',
+           f"{l2sq_sql('x.sv', 'c.cs')}, c.aid", f'xs{sfx} x JOIN cb{sfx} c ON c.m = x.m')}
 ),
-qp AS (SELECT vec_id AS query_id, embedding AS qv, cid FROM assign WHERE vec_id % 50 = 0),
-lut AS (
+qp{sfx} AS (SELECT vec_id AS query_id, embedding AS qv, cid FROM assign WHERE vec_id % 50 = 0),
+lut{sfx} AS (
   SELECT n.vec_id AS query_id, c.m, c.aid,
          CAST(CAST(round({dot_sql(f'list_slice(n.xn, c.m*{PQ_SUB}+1, c.m*{PQ_SUB}+{PQ_SUB})', 'c.cs')}, 6) AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS lmic
-  FROM nv n CROSS JOIN cb c
+  FROM nv n CROSS JOIN cb{sfx} c
   WHERE n.vec_id % 50 = 0
 ),
-adc AS (
+adc{sfx} AS (
   SELECT qp.query_id, a.vec_id AS neighbor_id, sum(l.lmic) AS adc_mic
-  FROM qp JOIN assign a ON a.cid = qp.cid AND a.vec_id <> qp.query_id
-  JOIN codes k ON k.vec_id = a.vec_id
-  JOIN lut l ON l.query_id = qp.query_id AND l.m = k.m AND l.aid = k.code
+  FROM {qp} JOIN assign a ON a.cid = qp.cid AND a.vec_id <> qp.query_id
+  JOIN codes{sfx} k ON k.vec_id = a.vec_id
+  JOIN lut{sfx} l ON l.query_id = qp.query_id AND l.m = k.m AND l.aid = k.code
   GROUP BY qp.query_id, a.vec_id
 ),
-short AS (
+short{sfx} AS (
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id,
            row_number() OVER (PARTITION BY query_id ORDER BY adc_mic DESC, neighbor_id) AS rn
-    FROM adc
+    FROM adc{sfx}
   ) WHERE rn <= {PQ_SHORTLIST}
 ),
-scoredpq AS (
+scoredpq{sfx} AS (
   SELECT s.query_id, s.neighbor_id,
          round({cosine_sql('qp.qv', 'e.embedding')}, 6) + 0.0 AS cos_sim
-  FROM short s JOIN qp ON qp.query_id = s.query_id
+  FROM short{sfx} s JOIN {qp} ON qp.query_id = s.query_id
   JOIN embeddings e ON e.vec_id = s.neighbor_id
 )
-SELECT 'ivfpq' AS method, query_id, neighbor_id, cos_sim, rk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scoredpq
-) WHERE rk = 1
+{_tail_sql(method, f'scoredpq{sfx}')}"""
+
+
+# The flat assignment and the unit vectors both PQ chains encode from.
+_PQ_HEAD_SQL = f"""WITH cent AS {IVF_CENT_SQL},
+{ASSIGN_SQL},
+nv AS (
+  SELECT vec_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt({norm2_sql('embedding')})) AS xn
+  FROM embeddings WHERE {norm2_sql('embedding')} > 0
+),"""
+
+_IVFPQ_ANN_SQL = f"""
+{_PQ_HEAD_SQL}
+{_pq_chain_sql('ivfpq', 'xn', 'nv', '')}
 """
 
 # By-residual IVFADC twin (r14, method='ivfpq_res'): identical chain to
@@ -499,20 +441,7 @@ SELECT 'ivfpq' AS method, query_id, neighbor_id, cos_sim, rk FROM (
 # normalized query; the per-query centroid base term is constant within
 # the probed cell (n_probe=1) and drops out of the ADC ranking.
 _IVFPQ_RES_ANN_SQL = f"""
-WITH cent AS {IVF_CENT_SQL},
-assign AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT e.vec_id, e.embedding, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {cosine_sql('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-    FROM embeddings e CROSS JOIN cent c
-  ) WHERE rn = 1
-),
-nv AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE) / sqrt({norm2_sql('embedding')})) AS xn
-  FROM embeddings WHERE {norm2_sql('embedding')} > 0
-),
+{_PQ_HEAD_SQL}
 centn AS (
   SELECT cid,
          list_transform(cv, x -> CAST(x AS DOUBLE) / sqrt({norm2_sql('cv')})) AS cvn
@@ -523,60 +452,7 @@ rres AS (
          list_transform(range(1, len(n.xn) + 1), i -> n.xn[i] - c.cvn[i]) AS rx
   FROM nv n JOIN assign a USING (vec_id) JOIN centn c ON a.cid = c.cid
 ),
-anchr AS (
-  SELECT vec_id AS aid, rx FROM rres,
-       (SELECT greatest(1, CAST(ceil(CAST(count(*) AS DOUBLE) / {PQ_K}.0) AS BIGINT)) AS stride
-        FROM embeddings) s
-  WHERE vec_id % s.stride = 0
-),
-cbr AS (
-  SELECT aid, m, list_slice(rx, m*{PQ_SUB}+1, m*{PQ_SUB}+{PQ_SUB}) AS cs
-  FROM anchr, generate_series(0, {PQ_M - 1}) t(m)
-),
-xsr AS (
-  SELECT vec_id, m, list_slice(rx, m*{PQ_SUB}+1, m*{PQ_SUB}+{PQ_SUB}) AS sv
-  FROM rres, generate_series(0, {PQ_M - 1}) t(m)
-),
-codesr AS (
-  SELECT vec_id, m, code FROM (
-    SELECT x.vec_id, x.m, c.aid AS code,
-           row_number() OVER (PARTITION BY x.vec_id, x.m
-                              ORDER BY {l2sq_sql('x.sv', 'c.cs')}, c.aid) AS rn
-    FROM xsr x JOIN cbr c ON c.m = x.m
-  ) WHERE rn = 1
-),
-qpr AS (SELECT vec_id AS query_id, embedding AS qv, cid FROM assign WHERE vec_id % 50 = 0),
-lutr AS (
-  SELECT n.vec_id AS query_id, c.m, c.aid,
-         CAST(CAST(round({dot_sql(f'list_slice(n.xn, c.m*{PQ_SUB}+1, c.m*{PQ_SUB}+{PQ_SUB})', 'c.cs')}, 6) AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS lmic
-  FROM nv n CROSS JOIN cbr c
-  WHERE n.vec_id % 50 = 0
-),
-adcr AS (
-  SELECT qp.query_id, a.vec_id AS neighbor_id, sum(l.lmic) AS adc_mic
-  FROM qpr qp JOIN assign a ON a.cid = qp.cid AND a.vec_id <> qp.query_id
-  JOIN codesr k ON k.vec_id = a.vec_id
-  JOIN lutr l ON l.query_id = qp.query_id AND l.m = k.m AND l.aid = k.code
-  GROUP BY qp.query_id, a.vec_id
-),
-shortr AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY adc_mic DESC, neighbor_id) AS rn
-    FROM adcr
-  ) WHERE rn <= {PQ_SHORTLIST}
-),
-scoredpqr AS (
-  SELECT s.query_id, s.neighbor_id,
-         round({cosine_sql('qp.qv', 'e.embedding')}, 6) + 0.0 AS cos_sim
-  FROM shortr s JOIN qpr qp ON qp.query_id = s.query_id
-  JOIN embeddings e ON e.vec_id = s.neighbor_id
-)
-SELECT 'ivfpq_res' AS method, query_id, neighbor_id, cos_sim, rk FROM (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rk
-  FROM scoredpqr
-) WHERE rk = 1
+{_pq_chain_sql('ivfpq_res', 'rx', 'rres', 'r')}
 """
 
 

@@ -362,6 +362,26 @@ def _lang_token_freq(spark, sf_dir):
     return scratch(occ.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("f")))
 
 
+def _cms_rows(df, word: str, *keep: str):
+    """``keep`` plus (seed, col) for each CMS hash row: the counter
+    column that ``word`` hashes to in that row."""
+    sc = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(sd).alias("seed"), (poly_hash(F.col(word), sd) % CMS_W).alias("col"))
+                for sd in CMS_SEEDS
+            ]
+        )
+    ).alias("sc")
+    return df.select(*keep, sc).select(*keep, "sc.seed", "sc.col")
+
+
+def _cms_cells(freq):
+    """The Count-Min counter table (lang, seed, col, c): each token's
+    count summed into its cell of every hash row."""
+    return _cms_rows(freq, "tok", "lang", "f").groupBy("lang", "seed", "col").agg(F.sum("f").alias("c"))
+
+
 def _cms_heavy(spark, sf_dir, freq=None):
     """phi-heavy-hitters over the CMS (r12, sketch='cms_heavy'): every
     distinct token whose CMS estimate clears ceil(N_lang / CMS_HH_PHI).
@@ -377,24 +397,9 @@ def _cms_heavy(spark, sf_dir, freq=None):
     class at any scale."""
     if freq is None:
         freq = _lang_token_freq(spark, sf_dir)
-    seed_cols = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(sd).alias("seed"), (poly_hash(F.col("tok"), sd) % CMS_W).alias("col"))
-                for sd in CMS_SEEDS
-            ]
-        )
-    ).alias("sc")
-    cells = (
-        freq.select("lang", "f", seed_cols)
-        .groupBy("lang", F.col("sc.seed").alias("seed"), F.col("sc.col").alias("col"))
-        .agg(F.sum("f").alias("c"))
-    )
-    probes = freq.select("lang", "tok", "f", seed_cols).select(
-        "lang", "tok", "f", F.col("sc.seed").alias("seed"), F.col("sc.col").alias("col")
-    )
     est = (
-        probes.join(cells, ["lang", "seed", "col"], "left")
+        _cms_rows(freq, "tok", "lang", "tok", "f")
+        .join(_cms_cells(freq), ["lang", "seed", "col"], "left")
         .groupBy("lang", "tok", "f")
         .agg(F.min(F.coalesce(F.col("c"), F.lit(0))).alias("est"))
     )
@@ -419,35 +424,11 @@ def _cms_frequency(spark, sf_dir, freq=None):
     docs = t(spark, sf_dir, "documents")
     if freq is None:
         freq = _lang_token_freq(spark, sf_dir)
-    seed_cols = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(sd).alias("seed"), (poly_hash(F.col("tok"), sd) % CMS_W).alias("col"))
-                for sd in CMS_SEEDS
-            ]
-        )
-    ).alias("sc")
-    cells = (
-        freq.select("lang", "f", seed_cols)
-        .groupBy("lang", F.col("sc.seed").alias("seed"), F.col("sc.col").alias("col"))
-        .agg(F.sum("f").alias("c"))
-    )
     words = spark.createDataFrame([(w,) for w in CMS_PROBE_WORDS], ["word"])
-    probes = words.select(
-        "word",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(sd).alias("seed"), (poly_hash(F.col("word"), sd) % CMS_W).alias("col"))
-                    for sd in CMS_SEEDS
-                ]
-            )
-        ).alias("sc"),
-    ).select("word", F.col("sc.seed").alias("seed"), F.col("sc.col").alias("col"))
     langs = docs.select("lang").distinct()
     est = (
-        langs.crossJoin(probes)
-        .join(cells, ["lang", "seed", "col"], "left")
+        langs.crossJoin(_cms_rows(words, "word", "word"))
+        .join(_cms_cells(freq), ["lang", "seed", "col"], "left")
         .groupBy("lang", "word")
         .agg(F.min(F.coalesce(F.col("c"), F.lit(0))).alias("cms_estimate"))
     )

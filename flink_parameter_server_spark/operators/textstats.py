@@ -181,16 +181,6 @@ def collapse_runs(toks_col):
     return F.array_join(kept, " "), (F.size(toks_col) - F.size(kept)).cast("long")
 
 
-def _char_frac(dedup_col: str, removed_col: str, sep_len: int):
-    """Fraction of a document's characters inside removed duplicate
-    units: (orig_chars - dedup_chars - removed*sep_len) / orig_chars,
-    NULL for NULL/empty text. Expects the dedup transform and removed
-    count as BOUND columns plus n_chars_measured in scope."""
-    orig = F.col("n_chars_measured")
-    removed_chars = orig - F.length(F.col(dedup_col)) - F.col(removed_col) * sep_len
-    return F.when(orig > 0, F.round(removed_chars.cast("double") / orig, 6))
-
-
 # Gopher Table A1 n-gram repetition signals (r12, Rae et al. 2021):
 # the remaining repetition thresholds of the table — fraction of
 # characters in the MOST COMMON {2,3,4}-gram (top_{n}gram_char_frac)
@@ -252,13 +242,6 @@ def _flag_col(gh_name: str, dup_name: str):
         F.col(gh_name),
         lambda x: F.array_contains(F.col(dup_name), x).cast("int"),
     )
-
-
-
-
-
-
-
 
 
 def _dup_set(gh_col):
@@ -338,10 +321,6 @@ def _stoplist_sql(words) -> str:
 
 
 _LANGS = sorted(LANG_MARKERS)
-
-
-def _in_list(words):
-    return lambda s: s.isin(*words)
 
 
 @register(

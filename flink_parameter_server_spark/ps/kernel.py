@@ -34,8 +34,8 @@ it runs the fold and the merge. The kernel never frees a superseded
 checkpoint, so a params frame a caller still holds stays readable:
 the blocks go to the current scratch owner and accumulate one per push
 until ``scratch.release()`` (or the enclosing scope) frees them. A
-long-running server, such as the transport's ``run_server``, holds one
-checkpoint per push it has folded.
+long-running server frees the cuts it supersedes itself, as the
+transport's ``run_server`` does once a batch has written its answers.
 """
 
 from __future__ import annotations

@@ -129,6 +129,15 @@ def scoped_checkpoint(df: DataFrame, ids: set[int] | None = None) -> DataFrame:
     return out
 
 
+def free_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a frame :func:`scoped_checkpoint` returned,
+    ahead of their owner. Only for a caller that knows no consumer
+    reads ``df`` any more; the owner's later free is a no-op."""
+    rid = _direct_checkpoint_rdd_id(df)
+    if rid is not None:
+        unpersist_rdd_ids(df.sparkSession, {rid})
+
+
 def release() -> int:
     """Unpersist everything tracked; returns the number of handles freed."""
     n = 0

@@ -47,6 +47,7 @@ from pyspark.sql.types import (
 )
 
 from ..ps.kernel import BatchParameterServer, InitFn
+from ..scratch import free_checkpoint
 from ..sources.fps_queue import latest_stamp
 
 W2S_SCHEMA = StructType(
@@ -149,11 +150,18 @@ class FileQueueTransport:
         pass the prior run's ``server.params`` (or a
         ``BatchParameterServer.load`` read of a dumped model). Without
         it a restart holds offsets but starts model-fresh, silently
-        dropping previously folded pushes."""
+        dropping previously folded pushes.
+
+        Each push cuts a new params checkpoint (ps/kernel.py). Once a
+        batch has written its answers, nothing reads the cut its push
+        superseded, so the server frees it if it made it: the ``params``
+        seed stays with the caller, and the final model stays with the
+        scratch tracker."""
         ps = BatchParameterServer(init_fn=init_fn, params=params)
         s2w = self.s2w
 
         def serve(batch_df: DataFrame, batch_id: int) -> None:
+            superseded = ps.params
             # one probe job per batch, not one per message kind
             kinds = {r["kind"] for r in batch_df.select("kind").distinct().collect()}
             if "push" in kinds:
@@ -170,6 +178,9 @@ class FileQueueTransport:
                 )
                 # idempotent per-batch dir: a replayed batch overwrites itself
                 answers.write.mode("overwrite").parquet(f"{s2w}/bid={batch_id}")
+            # a batch with no push keeps `superseded`; the seed is the caller's
+            if ps.params is not superseded and superseded is not params:
+                free_checkpoint(superseded)
 
         stream = (
             spark.readStream.schema(W2S_SCHEMA)

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_parameter_server_spark.ps.kernel import BatchParameterServer
+from flink_parameter_server_spark.scratch import persistent_rdd_ids
 from flink_parameter_server_spark.streaming.transport import FileQueueTransport
 
 
@@ -121,9 +122,25 @@ def test_transport_server_restart_resumes_from_checkpoint(spark, topic_root):
     )
     model2 = _by_key(server2.params)
     assert model1[7] == [4.5, 9.0]  # init(7)=[3.5,8.0] + [1.0,1.0]
+    # server2 superseded its seed but must not free it: it is the caller's
+    assert _by_key(server1.params) == model1
     # seeded restart: prior model + file b ONLY — a re-fold of file a
     # would read [6.0, 10.0]
     assert model2[7] == [5.0, 9.0]
+
+
+def test_drain_keeps_only_the_final_cut(spark, topic_root):
+    """Every push cuts a params checkpoint; the server frees each cut a
+    later batch supersedes, so a 4-push drain leaves exactly one new
+    persisted RDD: the final model's."""
+    tp = FileQueueTransport(topic_root)
+    for i in range(4):
+        tp.send(tp.pushes(_deltas(spark, [(i % 2, [1.0, 0.0])])), f"00{i}_push")
+    before = persistent_rdd_ids(spark)
+    server = tp.run_server(spark, init_fn=_init)
+    assert len(persistent_rdd_ids(spark) - before) == 1
+    # init(0)=[0.0,1.0] and init(1)=[0.5,2.0], each + 2 x [1.0,0.0]
+    assert _by_key(server.params) == {0: [2.0, 1.0], 1: [2.5, 2.0]}
 
 
 def test_transport_unseeded_restart_is_model_fresh(spark, topic_root):
