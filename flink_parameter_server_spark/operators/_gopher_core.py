@@ -1,7 +1,9 @@
 """Gopher Table A1 machinery — gram-hash builders, their Spark-SQL
-string twins, the published threshold rule set, and the curation-gate
-reason builders shared by text_profile (operators/textstats.py), the
-batch curation pipeline (operators/curate.py) and its streaming dual
+string twins, the published threshold rule set, and the per-document
+signal surface, written once per engine (gopher_signal_frame in Spark,
+gopher_signal_sql in DuckDB). text_profile (operators/textstats.py)
+publishes the surface; the curation gate's reason builders read it for
+the batch pipeline (operators/curate.py) and its streaming dual
 (streaming/incremental_curate.py).
 
 Cycle-free by the _dedup_core/_dsir_core rule: mlprep's late-bound
@@ -269,18 +271,20 @@ def _collapse_runs_ssql(toks: str) -> tuple[str, str]:
 def _char_frac_ssql(dedup: str, removed: str, sep_len: int) -> str:
     """Fraction of a document's characters inside removed duplicate
     units: (orig_chars - dedup_chars - removed*sep_len) / orig_chars,
-    NULL for NULL/empty text (n_chars_measured bound)."""
+    NULL for NULL/empty text (``text`` bound)."""
     return (
-        f"CASE WHEN n_chars_measured > 0 THEN round(CAST(n_chars_measured"
+        f"CASE WHEN length(text) > 0 THEN round(CAST(length(text)"
         f" - length({dedup}) - {removed} * {sep_len} AS DOUBLE)"
-        f" / n_chars_measured, 6) END"
+        f" / length(text), 6) END"
     )
 
 
 # ---------------------------------------------------------------------------
 # Gopher Table A1 threshold gate (r13, VERDICT r12 #2): the engine has
-# computed the full published signal surface since r12; this wires the
-# published THRESHOLDS (Rae et al. 2021, Table A1) into a reusable gate
+# computed the full published signal surface since r12 (bound by
+# gopher_signal_frame / gopher_signal_sql below, the same columns
+# text_profile publishes); this wires the published THRESHOLDS
+# (Rae et al. 2021, Table A1) into a reusable gate
 # that operators/curate.py (batch) and streaming/incremental_curate.py
 # (continuous) apply as stage 1b. One spec table drives BOTH engines:
 # the reason CASE below is engine-neutral SQL rendered from it, so the
@@ -298,17 +302,18 @@ GOPHER_REQUIRED_WORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 # NULL signal never fails (short docs have NULL high-n gram fracs —
 # same non-true CASE semantics in both engines).
 GOPHER_RULES = (
-    ("word_count", (("n_ws", "<", "50"), ("n_ws", ">", "100000"))),
-    ("mean_word_len", (("mean_wlen", "<", "3.0"), ("mean_wlen", ">", "10.0"))),
-    ("symbol_word_ratio", (("symbol_ratio", ">", "0.1"),)),
-    ("bullet_line_frac", (("bullet_frac", ">", "0.9"),)),
-    ("ellipsis_line_frac", (("ellipsis_frac", ">", "0.3"),)),
-    ("alpha_word_frac", (("alpha_frac", "<", "0.8"),)),
+    ("word_count", (("n_ws_tokens", "<", "50"), ("n_ws_tokens", ">", "100000"))),
+    ("mean_word_len",
+     (("avg_token_len", "<", "3.0"), ("avg_token_len", ">", "10.0"))),
+    ("symbol_word_ratio", (("symbol_word_ratio", ">", "0.1"),)),
+    ("bullet_line_frac", (("bullet_line_frac", ">", "0.9"),)),
+    ("ellipsis_line_frac", (("ellipsis_line_frac", ">", "0.3"),)),
+    ("alpha_word_frac", (("alpha_word_frac", "<", "0.8"),)),
     ("stopwords", (("n_req_stop", "<", "2"),)),
     ("dup_line_frac", (("dup_line_frac", ">", "0.3"),)),
     ("dup_para_frac", (("dup_para_frac", ">", "0.3"),)),
-    ("dup_line_char_frac", (("dup_line_cfrac", ">", "0.2"),)),
-    ("dup_para_char_frac", (("dup_para_cfrac", ">", "0.2"),)),
+    ("dup_line_char_frac", (("dup_line_char_frac", ">", "0.2"),)),
+    ("dup_para_char_frac", (("dup_para_char_frac", ">", "0.2"),)),
     ("top_2gram_char_frac", (("top_2gram_char_frac", ">", "0.2"),)),
     ("top_3gram_char_frac", (("top_3gram_char_frac", ">", "0.18"),)),
     ("top_4gram_char_frac", (("top_4gram_char_frac", ">", "0.16"),)),
@@ -361,15 +366,21 @@ _TOKS_SSQL = "filter(split(text, ' '), t -> t != '')"
 
 
 def gopher_signal_frame(df):
-    """Bind every Table A1 gate signal on a (doc_id, text, ...) frame —
-    map-only selectExpr stages reusing text_profile's exact builders,
-    so each signal is value-identical to its hash-green profile column.
-    Adds: n_ws, mean_wlen, symbol_ratio, bullet_frac, ellipsis_frac,
-    alpha_frac, n_req_stop, dup_line_frac, dup_para_frac,
-    dup_line_cfrac, dup_para_cfrac, top_{2,3,4}gram_char_frac,
+    """Bind the per-document Table A1 signal surface on a (doc_id, text)
+    frame, ``toks`` bound from text when the frame does not carry it —
+    map-only selectExpr stages, the one Spark place each signal is
+    written. text_profile reads this binder and publishes its columns
+    under the same names; the gate's rules read them too. Adds the
+    gram columns (wlen, th_rep, gh2..gh10, f5..f10), dedup_lines_text,
+    n_dup_lines_removed, dedup_paras_text, n_dup_paras_removed and the
+    signals n_ws_tokens, avg_token_len, symbol_word_ratio,
+    bullet_line_frac, ellipsis_line_frac, alpha_word_frac, n_req_stop,
+    dup_line_frac, dup_para_frac, dup_line_char_frac,
+    dup_para_char_frac, top_{2,3,4}gram_char_frac,
     dup_{5..10}gram_char_frac."""
-    g = df.selectExpr("*", f"{_TOKS_SSQL} AS toks")
-    g = g.selectExpr(
+    if "toks" not in df.columns:
+        df = df.selectExpr("*", f"{_TOKS_SSQL} AS toks")
+    g = df.selectExpr(
         "*",
         f"{_WLEN_SSQL} AS wlen",
         f"transform(toks, s -> {_ph_ssql('s', 0)}) AS th_rep",
@@ -379,10 +390,10 @@ def gopher_signal_frame(df):
     dp_t, dp_n = _dedup_lines_ssql("text", "\n\n")
     g = g.selectExpr(
         "*",
-        f"{dl_t} AS _dlt",
-        f"{dl_n} AS _dln",
-        f"{dp_t} AS _dpt",
-        f"{dp_n} AS _dpn",
+        f"{dl_t} AS dedup_lines_text",
+        f"{dl_n} AS n_dup_lines_removed",
+        f"{dp_t} AS dedup_paras_text",
+        f"{dp_n} AS n_dup_paras_removed",
     )
     n_s = "CAST(size(toks) AS BIGINT)"
     sum_len_s = "aggregate(wlen, CAST(0 AS BIGINT), (a, x) -> a + x)"
@@ -390,38 +401,41 @@ def gopher_signal_frame(df):
     lines_s = "split(text, '\\n')"
     return g.selectExpr(
         "*",
-        # ADVICE r13: guard NULL text — Spark size(NULL) is -1 while
-        # DuckDB len(NULL) is NULL, so an unguarded n_ws would fire
-        # word_count on NULL-text docs in ONE engine only (unreachable
-        # via corpus_curate's structural stage 1, but the helper is
-        # public and documented as unable to drift)
-        f"CASE WHEN toks IS NOT NULL THEN {n_s} END AS n_ws",
+        # NULL-text guard: with ANSI on (the Spark 4 default) size(NULL)
+        # is NULL, like DuckDB's len(NULL); with ANSI off Spark's legacy
+        # size(NULL) is -1. The guard keeps n_ws_tokens NULL in both
+        # engines either way, so word_count cannot fire on NULL-text
+        # docs in one engine only
+        f"CASE WHEN toks IS NOT NULL THEN {n_s} END AS n_ws_tokens",
         f"CASE WHEN size(toks) > 0 THEN round(CAST({sum_len_s} AS DOUBLE)"
-        f" / {n_s}, 6) END AS mean_wlen",
+        f" / {n_s}, 6) END AS avg_token_len",
+        # symbol-to-word ratio ('#' or ellipsis per word), fraction of
+        # lines starting with a bullet, fraction of lines ending with an
+        # ellipsis, fraction of words with >= 1 alphabetic char
         "CASE WHEN size(toks) > 0 THEN round(CAST(size("
         "regexp_extract_all(text, '#|[.][.][.]|…', 0)) AS DOUBLE)"
-        f" / {n_s}, 6) END AS symbol_ratio",
+        f" / {n_s}, 6) END AS symbol_word_ratio",
         f"CASE WHEN text IS NOT NULL THEN round(CAST(size(filter({lines_s},"
         " l -> substring(ltrim(l), 1, 1) IN ('•', '-', '*'))) AS DOUBLE)"
-        f" / size({lines_s}), 6) END AS bullet_frac",
+        f" / size({lines_s}), 6) END AS bullet_line_frac",
         f"CASE WHEN text IS NOT NULL THEN round(CAST(size(filter({lines_s},"
         " l -> endswith(rtrim(l), '...') OR endswith(rtrim(l), '…')))"
-        f" AS DOUBLE) / size({lines_s}), 6) END AS ellipsis_frac",
+        f" AS DOUBLE) / size({lines_s}), 6) END AS ellipsis_line_frac",
         "CASE WHEN size(toks) > 0 THEN round(CAST(size(filter(toks,"
         f" t2 -> t2 RLIKE '[A-Za-z]')) AS DOUBLE) / {n_s}, 6) END"
-        " AS alpha_frac",
+        " AS alpha_word_frac",
         f"size(filter(array({req}), w -> array_contains(toks, w)))"
         " AS n_req_stop",
-        f"CASE WHEN text IS NOT NULL THEN round(CAST(_dln AS DOUBLE)"
-        f" / size({lines_s}), 6) END AS dup_line_frac",
-        "CASE WHEN text IS NOT NULL THEN round(CAST(_dpn AS DOUBLE)"
-        " / size(split(text, '\\n\\n')), 6) END AS dup_para_frac",
-        "CASE WHEN length(text) > 0 THEN round(CAST(length(text)"
-        " - length(_dlt) - _dln * 1 AS DOUBLE) / length(text), 6) END"
-        " AS dup_line_cfrac",
-        "CASE WHEN length(text) > 0 THEN round(CAST(length(text)"
-        " - length(_dpt) - _dpn * 2 AS DOUBLE) / length(text), 6) END"
-        " AS dup_para_cfrac",
+        "CASE WHEN text IS NOT NULL THEN round(CAST(n_dup_lines_removed"
+        f" AS DOUBLE) / size({lines_s}), 6) END AS dup_line_frac",
+        "CASE WHEN text IS NOT NULL THEN round(CAST(n_dup_paras_removed"
+        " AS DOUBLE) / size(split(text, '\\n\\n')), 6) END AS dup_para_frac",
+        # Table A1's line/paragraph thresholds are over the fraction of
+        # CHARACTERS inside duplicate units, not duplicate counts
+        f"{_char_frac_ssql('dedup_lines_text', 'n_dup_lines_removed', 1)}"
+        " AS dup_line_char_frac",
+        f"{_char_frac_ssql('dedup_paras_text', 'n_dup_paras_removed', 2)}"
+        " AS dup_para_char_frac",
         *[
             f"{_top_gram_fast_ssql(f'gh{n}', n)} AS top_{n}gram_char_frac"
             for n in TOP_NGRAM_NS
@@ -451,15 +465,14 @@ def gopher_reason_frame(df, rules=True):
     )
 
 
-def gopher_gate_sql(src: str, rules=True) -> str:
-    """DuckDB twin of :func:`gopher_reason_frame` as a CTE chain ending
-    in ``greason(doc_id, reason)`` — ``src`` must expose (doc_id,
-    text). Signal expressions mirror text_profile's oracle twins
-    column for column; the reason CASE is the SAME rendered string the
-    Spark gate runs. Line/para stages are MATERIALIZED (DuckDB inlines
-    lateral aliases textually — the _rep_ngram_sql discipline)."""
-    from ..functions.text import tokens_sql
-
+def gopher_signal_sql(src: str) -> str:
+    """DuckDB twin of :func:`gopher_signal_frame` as a CTE chain over
+    ``src`` (doc_id, text): ``gsig`` carries the dedup text and count
+    columns and the per-doc quality signals, ``repx`` the n-gram
+    repetition fractions, both keyed by doc_id and named as the Spark
+    binder's columns. text_profile's oracle and the gate read it.
+    Line/para stages are MATERIALIZED (DuckDB inlines lateral aliases
+    textually — the _rep_ngram_sql discipline)."""
     req = ", ".join("'" + w + "'" for w in GOPHER_REQUIRED_WORDS)
     gtk = (
         f"gtk AS MATERIALIZED (SELECT doc_id, text, {tokens_sql('text')}"
@@ -475,44 +488,57 @@ def gopher_gate_sql(src: str, rules=True) -> str:
         "list_filter(prs, (x, i) -> list_position(prs, x) = i) AS kprs "
         "FROM glin)"
     )
+    # coalesce: DuckDB's array_to_string over an EMPTY list is NULL
+    # where Spark's array_join is ''; the CASE keeps NULL text NULL
     gsig = f"""gsig AS MATERIALIZED (SELECT doc_id,
-  CAST(len(toks) AS BIGINT) AS n_ws,
+  CAST(len(toks) AS BIGINT) AS n_ws_tokens,
   CASE WHEN len(toks) > 0 THEN round(CAST(list_reduce(list_prepend(
     CAST(0 AS BIGINT), list_transform(toks, s -> CAST(length(s) AS BIGINT))),
-    (a, x) -> a + x) AS DOUBLE) / len(toks), 6) END AS mean_wlen,
+    (a, x) -> a + x) AS DOUBLE) / len(toks), 6) END AS avg_token_len,
   CASE WHEN len(toks) > 0 THEN round(CAST(len(regexp_extract_all(text,
-    '#|[.][.][.]|…')) AS DOUBLE) / len(toks), 6) END AS symbol_ratio,
+    '#|[.][.][.]|…')) AS DOUBLE) / len(toks), 6) END AS symbol_word_ratio,
   CASE WHEN text IS NOT NULL THEN round(CAST(len(list_filter(lns,
     l -> substr(ltrim(l), 1, 1) IN ('•', '-', '*'))) AS DOUBLE)
-    / len(lns), 6) END AS bullet_frac,
+    / len(lns), 6) END AS bullet_line_frac,
   CASE WHEN text IS NOT NULL THEN round(CAST(len(list_filter(lns,
     l -> ends_with(rtrim(l), '...') OR ends_with(rtrim(l), '…')))
-    AS DOUBLE) / len(lns), 6) END AS ellipsis_frac,
+    AS DOUBLE) / len(lns), 6) END AS ellipsis_line_frac,
   CASE WHEN len(toks) > 0 THEN round(CAST(len(list_filter(toks,
     t2 -> regexp_matches(t2, '[A-Za-z]'))) AS DOUBLE) / len(toks), 6)
-    END AS alpha_frac,
+    END AS alpha_word_frac,
   len(list_filter([{req}], w -> list_contains(toks, w))) AS n_req_stop,
-  CASE WHEN text IS NOT NULL THEN round(CAST(len(lns) - len(klns)
+  CASE WHEN text IS NOT NULL THEN
+    coalesce(array_to_string(klns, chr(10)), '') END AS dedup_lines_text,
+  CAST(len(lns) - len(klns) AS BIGINT) AS n_dup_lines_removed,
+  CASE WHEN text IS NOT NULL THEN
+    coalesce(array_to_string(kprs, chr(10) || chr(10)), '')
+    END AS dedup_paras_text,
+  CAST(len(prs) - len(kprs) AS BIGINT) AS n_dup_paras_removed,
+  CASE WHEN text IS NOT NULL THEN round(CAST(n_dup_lines_removed
     AS DOUBLE) / len(lns), 6) END AS dup_line_frac,
-  CASE WHEN text IS NOT NULL THEN round(CAST(len(prs) - len(kprs)
+  CASE WHEN text IS NOT NULL THEN round(CAST(n_dup_paras_removed
     AS DOUBLE) / len(prs), 6) END AS dup_para_frac,
   CASE WHEN length(text) > 0 THEN round(CAST(length(text)
-    - length(coalesce(array_to_string(klns, chr(10)), ''))
-    - (len(lns) - len(klns)) * 1 AS DOUBLE) / length(text), 6)
-    END AS dup_line_cfrac,
+    - length(dedup_lines_text) - n_dup_lines_removed * 1 AS DOUBLE)
+    / length(text), 6) END AS dup_line_char_frac,
   CASE WHEN length(text) > 0 THEN round(CAST(length(text)
-    - length(coalesce(array_to_string(kprs, chr(10) || chr(10)), ''))
-    - (len(prs) - len(kprs)) * 2 AS DOUBLE) / length(text), 6)
-    END AS dup_para_cfrac
+    - length(dedup_paras_text) - n_dup_paras_removed * 2 AS DOUBLE)
+    / length(text), 6) END AS dup_para_char_frac
 FROM glin2)"""
+    return ",\n".join([gtk, glin, glin2, gsig, _rep_ngram_sql("gtk")])
+
+
+def gopher_gate_sql(src: str, rules=True) -> str:
+    """DuckDB twin of :func:`gopher_reason_frame`: the
+    :func:`gopher_signal_sql` chain over ``src`` (doc_id, text) plus a
+    ``greason(doc_id, reason)`` CTE whose CASE is the SAME rendered
+    string the Spark gate runs."""
     greason = (
         "greason AS (SELECT g.doc_id, "
         f"{gopher_reason_case_sql(rules)} AS reason "
         "FROM gsig g JOIN repx USING (doc_id))"
     )
-    return ",\n".join(
-        [gtk, glin, glin2, gsig, _rep_ngram_sql(src="gtk"), greason]
-    )
+    return f"{gopher_signal_sql(src)},\n{greason}"
 
 
 def _bind_gram_columns(df, th_name: str = "th_rep"):
@@ -520,8 +546,8 @@ def _bind_gram_columns(df, th_name: str = "th_rep"):
     must already carry the BOUND token-hash array ``th_name``): the
     incremental gh2..gh{max} chain, the duplicate sets, and the
     per-gram flags — each stage one selectExpr (one JVM parse), so the
-    whole build is ~12 driver round-trips. One shared builder so
-    text_profile and the curation gate analyze the same (small) tree."""
+    whole build is ~12 driver round-trips (gopher_signal_frame's gram
+    stage, which text_profile and the curation gate both read)."""
     prev = None
     for n in range(2, DUP_NGRAM_NS[-1] + 1):
         df = df.selectExpr(
@@ -548,11 +574,10 @@ def _gram_hash_sql(n: int) -> str:
     )
 
 
-def _rep_ngram_sql(src: str = "tk") -> str:
+def _rep_ngram_sql(src: str) -> str:
     """The repx CTE CHAIN: per-doc Gopher n-gram signals as staged
     MATERIALIZED CTEs over the ``src`` CTE (doc_id, text, toks —
-    parameterized in r13 so the curation gate's oracle reuses the
-    chain over the structural-survivor subset). DuckDB expands lateral column aliases (and
+    :func:`gopher_signal_sql`'s ``gtk``). DuckDB expands lateral column aliases (and
     plain CTEs) by TEXTUAL substitution, so a lambda referencing a
     same-stage alias re-inlines the whole producing expression per
     element — the frac -> cov -> f -> dup -> srt chain blew up

@@ -84,14 +84,16 @@ def is_eval_holdout():
 def corpus_curate(spark, sf_dir, sem_assign=None, quality_rules=None):
     """``quality_rules`` (r13, VERDICT r12 #2): opt-in Gopher Table A1
     threshold gate — True applies the full published rule set
-    (textstats.GOPHER_RULES), an iterable of rule labels applies that
+    (_gopher_core.GOPHER_RULES), an iterable of rule labels applies that
     subset, None/False keeps the structural-only stage-1 gate. When
-    on, stage 1b runs the map-only textstats.gopher_reason_frame over
+    on, stage 1b runs the map-only _gopher_core.gopher_reason_frame over
     structural survivors; a doc failing rule R gets decision
     'rejected:quality:R' (first failing rule in published order) and
     never reaches the dedup stages. The registered train_test_split
-    entry passes True — the flagship pipeline now rejects on the same
-    17 signals text_profile computes (the r12 wiring gap)."""
+    entry passes True — the flagship pipeline rejects on the 17
+    signals text_profile publishes, read from the same binder
+    (_gopher_core.gopher_signal_frame), plus the gate-only n_req_stop,
+    dup_line_frac and dup_para_frac."""
     d = t(spark, sf_dir, "documents")
     full = d.select(
         "doc_id",
@@ -325,7 +327,7 @@ def curate_oracle_sql(
     which subset survives); ``int_hash_sql_expr`` the seeded integer
     hash of doc_id used by the split ordering; ``quality_rules`` the
     Gopher Table A1 gate parameter (r13) — must match the Spark call
-    (the gate CTEs come from textstats.gopher_gate_sql and the reason
+    (the gate CTEs come from _gopher_core.gopher_gate_sql and the reason
     CASE is the SAME rendered string both engines run)."""
     from ..functions.hashing import int_hash_sql
 

@@ -28,36 +28,15 @@ from ._dsir_core import (  # noqa: F401 (re-exported: tests + mlprep history)
     DSIR_TARGET_LANG,
     dsir_micro,
 )
-from ._gopher_core import (  # noqa: F401 (re-exported: gate + SSQL twins
-    # live in the cycle-free core so mlprep's late-bound curate oracle
-    # can import them mid-registration; tests and callers keep reaching
-    # them through this module)
+from ._gopher_core import (
     DUP_NGRAM_NS,
-    GOPHER_REQUIRED_WORDS,
-    GOPHER_RULES,
     TOP_NGRAM_NS,
-    _WLEN_SSQL,
-    _bind_gram_columns,
-    _char_frac_ssql,
     _collapse_runs_ssql,
-    _dedup_lines_ssql,
-    _dup_gram_ssql,
-    _dup_set_ssql,
-    _flag_from_gh_ssql,
-    _flag_ssql,
-    _gram_hash_sql,
     _gram_hashes_ssql,
-    _gram_step_ssql,
     _ph_ssql,
-    _rep_ngram_sql,
-    _select_gopher_rules,
     _sql_str_lit,
-    _top_gram_fast_ssql,
-    _top_gram_ssql,
-    gopher_gate_sql,
-    gopher_reason_case_sql,
-    gopher_reason_frame,
     gopher_signal_frame,
+    gopher_signal_sql,
 )
 from ._util import t
 from .curate import CURATE_EVAL_J, CURATE_EVAL_MOD, CURATE_SEED
@@ -418,23 +397,20 @@ delx AS (
     || [dp0[len(dp0)]] AS dpos
   FROM del0
 ),
--- Gopher Table A1 n-gram repetition signals (r12): top-(2,3,4)-gram
--- char fraction + duplicated-(5..10)-gram char coverage, staged
--- MATERIALIZED CTEs mirroring the Spark bound-column build
-{_rep_ngram_sql()}
+-- Gopher Table A1 signal surface (gsig: quality rules, line/paragraph
+-- dedup transforms; repx: n-gram repetition fractions), the same CTE
+-- chain the curation gate's oracle reads
+{gopher_signal_sql("documents")}
 SELECT sc.doc_id, sc.lang AS actual_lang,
   CASE WHEN greatest({', '.join('c_' + lg for lg in _LANGS)}) = 0 THEN 'und'
        {' '.join(f"WHEN c_{lg} = greatest({', '.join('c_' + l2 for l2 in _LANGS)}) THEN '{lg}'" for lg in _LANGS)}
   END AS guessed_lang,
-  CAST(len(toks) AS BIGINT) AS n_ws_tokens,
+  gsig.n_ws_tokens,
   CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+')) AS BIGINT) AS n_bpe_tokens,
   CAST(length(text) AS BIGINT) AS n_chars_measured,
   n_chars,
   CASE WHEN len(toks) > 0 THEN CAST(len(list_distinct(toks)) AS BIGINT) END AS n_unique,
-  CASE WHEN len(toks) > 0 THEN
-    round(CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-          list_transform(toks, s -> CAST(length(s) AS BIGINT))), (a, x) -> a + x) AS DOUBLE)
-          / len(toks), 6) END AS avg_token_len,
+  gsig.avg_token_len,
   CASE WHEN len(toks) > 0 THEN
     round(CAST(len(list_filter(toks, s -> s IN {_stoplist_sql(STOPWORDS)})) AS DOUBLE)
           / len(toks), 6) END AS stopword_ratio,
@@ -454,57 +430,13 @@ SELECT sc.doc_id, sc.lang AS actual_lang,
   CASE WHEN length(sc.text) > 0 THEN
     round(CAST(len(regexp_extract_all(sc.text, '[0-9]')) AS DOUBLE) / length(sc.text), 6)
   END AS digit_ratio,
-  -- Gopher Table A1 QUALITY rules (r12): the four thresholds the
-  -- profile did not already carry (word-count/mean-length/stopword
-  -- bounds ride on n_ws_tokens/avg_token_len/stopword_ratio)
-  CASE WHEN len(toks) > 0 THEN
-    round(CAST(len(regexp_extract_all(sc.text, '#|[.][.][.]|…')) AS DOUBLE) / len(toks), 6)
-  END AS symbol_word_ratio,
-  CASE WHEN sc.text IS NOT NULL THEN
-    round(CAST(len(list_filter(string_split(sc.text, chr(10)),
-      l -> substr(ltrim(l), 1, 1) IN ('•', '-', '*'))) AS DOUBLE)
-      / len(string_split(sc.text, chr(10))), 6)
-  END AS bullet_line_frac,
-  CASE WHEN sc.text IS NOT NULL THEN
-    round(CAST(len(list_filter(string_split(sc.text, chr(10)),
-      l -> ends_with(rtrim(l), '...') OR ends_with(rtrim(l), '…'))) AS DOUBLE)
-      / len(string_split(sc.text, chr(10))), 6)
-  END AS ellipsis_line_frac,
-  CASE WHEN len(toks) > 0 THEN
-    round(CAST(len(list_filter(toks, t2 -> regexp_matches(t2, '[A-Za-z]'))) AS DOUBLE)
-      / len(toks), 6)
-  END AS alpha_word_frac,
+  gsig.symbol_word_ratio, gsig.bullet_line_frac, gsig.ellipsis_line_frac,
+  gsig.alpha_word_frac,
   regexp_replace(regexp_replace(sc.text, '{EMAIL_RE}', '<EMAIL>', 'g'),
                  '{URL_RE}', '<URL>', 'g') AS redacted_text,
-  -- coalesce: DuckDB's array_to_string over an EMPTY list is NULL
-  -- where Spark's array_join is '' — the CASE already handles the
-  -- true NULL-text path
-  CASE WHEN sc.text IS NOT NULL THEN
-    coalesce(array_to_string(list_filter(string_split(sc.text, chr(10)),
-      (x, i) -> list_position(string_split(sc.text, chr(10)), x) = i), chr(10)), '')
-  END AS dedup_lines_text,
-  CAST(len(string_split(sc.text, chr(10)))
-       - len(list_filter(string_split(sc.text, chr(10)),
-           (x, i) -> list_position(string_split(sc.text, chr(10)), x) = i))
-       AS BIGINT) AS n_dup_lines_removed,
-  CASE WHEN sc.text IS NOT NULL THEN
-    coalesce(array_to_string(list_filter(string_split(sc.text, chr(10) || chr(10)),
-      (x, i) -> list_position(string_split(sc.text, chr(10) || chr(10)), x) = i), chr(10) || chr(10)), '')
-  END AS dedup_paras_text,
-  CAST(len(string_split(sc.text, chr(10) || chr(10)))
-       - len(list_filter(string_split(sc.text, chr(10) || chr(10)),
-           (x, i) -> list_position(string_split(sc.text, chr(10) || chr(10)), x) = i))
-       AS BIGINT) AS n_dup_paras_removed,
-  -- char-fraction repetition signals (lateral alias refs): removed
-  -- content chars = orig - dedup - removed*len(sep)
-  CASE WHEN length(sc.text) > 0 THEN
-    round(CAST(length(sc.text) - length(dedup_lines_text) - n_dup_lines_removed AS DOUBLE)
-          / length(sc.text), 6)
-  END AS dup_line_char_frac,
-  CASE WHEN length(sc.text) > 0 THEN
-    round(CAST(length(sc.text) - length(dedup_paras_text) - 2 * n_dup_paras_removed AS DOUBLE)
-          / length(sc.text), 6)
-  END AS dup_para_char_frac,
+  gsig.dedup_lines_text, gsig.n_dup_lines_removed,
+  gsig.dedup_paras_text, gsig.n_dup_paras_removed,
+  gsig.dup_line_char_frac, gsig.dup_para_char_frac,
   repx.top_2gram_char_frac, repx.top_3gram_char_frac, repx.top_4gram_char_frac,
   repx.dup_5gram_char_frac, repx.dup_6gram_char_frac, repx.dup_7gram_char_frac,
   repx.dup_8gram_char_frac, repx.dup_9gram_char_frac, repx.dup_10gram_char_frac,
@@ -533,6 +465,7 @@ LEFT JOIN docx ON docx.doc_id = sc.doc_id
 LEFT JOIN fdsir ON fdsir.doc_id = sc.doc_id
 LEFT JOIN cov ON cov.doc_id = sc.doc_id
 LEFT JOIN delx ON delx.doc_id = sc.doc_id
+LEFT JOIN gsig ON gsig.doc_id = sc.doc_id
 LEFT JOIN repx ON repx.doc_id = sc.doc_id
 """,
     tags=("D26", "D23"),
@@ -760,10 +693,6 @@ def text_profile(spark, sf_dir):
     n_s = "CAST(size(toks) AS BIGINT)"
     nonempty_s = "size(toks) > 0"
     n_uniq_s = "CAST(size(array_distinct(toks)) AS BIGINT)"
-    sum_len_s = (
-        "aggregate(transform(toks, s -> CAST(length(s) AS BIGINT)), "
-        "CAST(0 AS BIGINT), (a, x) -> a + x)"
-    )
     stop_in = ", ".join(_sql_str_lit(w) for w in STOPWORDS)
     stop_ratio_s = (
         f"CAST(size(filter(toks, s -> s IN ({stop_in}))) AS DOUBLE) / {n_s}"
@@ -792,35 +721,18 @@ def text_profile(spark, sf_dir):
         + " END"
     )
 
-    _dl_text, _dl_n = _dedup_lines_ssql("text", "\n")
-    _dp_text, _dp_n = _dedup_lines_ssql("text", "\n\n")
     _cr_text, _cr_n = _collapse_runs_ssql("toks")
-    # Gopher Table A1 n-gram repetition signals (r12): every
-    # intermediate (token lengths, token hashes, per-n gram hashes,
-    # duplicate sets, per-gram flags) is BOUND as a column before any
-    # lambda reads it — the outer-reference O(L^2) pitfall class.
-    rep = sc.selectExpr(
+    # the Gopher Table A1 signal surface (quality rules, line/paragraph
+    # dedup transforms, gram repetition fractions) is bound by the
+    # curation gate's binder; the profile publishes its columns
+    wide = gopher_signal_frame(sc).selectExpr(
         "*",
-        f"{_WLEN_SSQL} AS wlen",
-        f"transform(toks, s -> {_ph_ssql('s', 0)}) AS th_rep",
-    )
-    # gh2..gh10 as the incremental chain + dup sets + flags (r13: one
-    # shared small-tree builder, see _gram_step/_bind_gram_columns)
-    rep = _bind_gram_columns(rep)
-    lines_s = "split(text, '\\n')"
-    wide = rep.selectExpr(
-        "doc_id",
-        "toks",
         "lang AS actual_lang",
         f"{guess_s} AS guessed_lang",
-        f"{n_s} AS n_ws_tokens",
         "CAST(size(regexp_extract_all(text, '[a-z]+|[0-9]+', 0)) AS BIGINT)"
         " AS n_bpe_tokens",
         "CAST(length(text) AS BIGINT) AS n_chars_measured",
-        "n_chars",
         f"CASE WHEN {nonempty_s} THEN {n_uniq_s} END AS n_unique",
-        f"CASE WHEN {nonempty_s} THEN "
-        f"round(CAST({sum_len_s} AS DOUBLE) / {n_s}, 6) END AS avg_token_len",
         f"CASE WHEN {nonempty_s} THEN round({stop_ratio_s}, 6) END"
         " AS stopword_ratio",
         f"CASE WHEN {nonempty_s} THEN round("
@@ -857,58 +769,15 @@ def text_profile(spark, sf_dir):
         "CASE WHEN length(text) > 0 THEN round("
         "CAST(size(regexp_extract_all(text, '[0-9]', 0)) AS DOUBLE)"
         " / length(text), 6) END AS digit_ratio",
-        # Gopher Table A1 QUALITY rules (r12): the four thresholds not
-        # already carried (word-count / mean-word-length / stopword
-        # bounds ride on n_ws_tokens / avg_token_len / stopword_ratio):
-        # symbol-to-word ratio ('#' or ellipsis per word), fraction of
-        # lines starting with a bullet, fraction of lines ending with
-        # an ellipsis, fraction of words with >= 1 alphabetic char —
-        # map-only in the same scan; fixture text is clean so real hits
-        # are parity-pinned on the synthetic corpus in tests
-        f"CASE WHEN {nonempty_s} THEN round(CAST(size("
-        "regexp_extract_all(text, '#|[.][.][.]|…', 0)) AS DOUBLE)"
-        f" / {n_s}, 6) END AS symbol_word_ratio",
-        f"CASE WHEN text IS NOT NULL THEN round(CAST(size(filter({lines_s},"
-        " l -> substring(ltrim(l), 1, 1) IN ('•', '-', '*'))) AS DOUBLE)"
-        f" / size({lines_s}), 6) END AS bullet_line_frac",
-        f"CASE WHEN text IS NOT NULL THEN round(CAST(size(filter({lines_s},"
-        " l -> endswith(rtrim(l), '...') OR endswith(rtrim(l), '…')))"
-        f" AS DOUBLE) / size({lines_s}), 6) END AS ellipsis_line_frac",
-        f"CASE WHEN {nonempty_s} THEN round(CAST(size(filter(toks,"
-        f" t2 -> t2 RLIKE '[A-Za-z]')) AS DOUBLE) / {n_s}, 6) END"
-        " AS alpha_word_frac",
         # PII redaction (r10): the transform half of the count signals
         # above — fixture text is PII-free so the driver path is
         # identity; real hits are parity-pinned on a synthetic corpus
         f"regexp_replace(regexp_replace(text, {_sql_str_lit(EMAIL_RE)},"
         f" '<EMAIL>'), {_sql_str_lit(URL_RE)}, '<URL>') AS redacted_text",
-        # within-document repetition REMOVAL (r10, VERDICT r9
-        # missing-#6): the Gopher/RefinedWeb (Rae et al. 2021 §A1.1)
-        # TRANSFORM, not just the max_token_ratio/dup_bigram_ratio
-        # signals above — dedup_lines_text / dedup_paras_text keep each
-        # line's/paragraph's first occurrence (sort-based group heads,
-        # multi-line behavior parity-pinned on a synthetic corpus),
-        # collapse_runs_text drops consecutive duplicate whitespace
-        # tokens; each with its removed-count column.
-        f"{_dl_text} AS dedup_lines_text",
-        f"{_dl_n} AS n_dup_lines_removed",
-        f"{_dp_text} AS dedup_paras_text",
-        f"{_dp_n} AS n_dup_paras_removed",
+        # within-document repetition REMOVAL (r10): the token-run
+        # collapse; the line/paragraph transforms come from the binder
         f"{_cr_text} AS collapse_runs_text",
         f"{_cr_n} AS n_run_tokens_removed",
-        # Gopher Table A1 n-gram repetition signals (r12): the
-        # most-common-{2,3,4}-gram char fraction and the duplicated-
-        # {5..10}-gram char coverage (conventions documented on the
-        # helpers above) — per-doc bounded array math over the bound
-        # gram columns, same scan
-        *[
-            f"{_top_gram_fast_ssql(f'gh{n}', n)} AS top_{n}gram_char_frac"
-            for n in TOP_NGRAM_NS
-        ],
-        *[
-            f"{_dup_gram_ssql(f'f{n}', n)} AS dup_{n}gram_char_frac"
-            for n in DUP_NGRAM_NS
-        ],
         f"{_ph_ssql('text', 1)} AS full_hash",
     )
     # rebuild text minus the deleted duplicate-span positions (1-based
@@ -944,16 +813,7 @@ def text_profile(spark, sf_dir):
             "redacted_text",
             "dedup_lines_text", "n_dup_lines_removed", "dedup_paras_text",
             "n_dup_paras_removed",
-            # late r11: the CHAR-fraction forms of the repetition
-            # signals — Gopher's gate thresholds are defined over the
-            # fraction of CHARACTERS inside duplicate lines/paragraphs
-            # (Rae et al. 2021 Table A1), not duplicate counts.
-            # Derived from the transforms above: removed content chars
-            # = orig - dedup - removed*len(sep).
-            f"{_char_frac_ssql('dedup_lines_text', 'n_dup_lines_removed', 1)}"
-            " AS dup_line_char_frac",
-            f"{_char_frac_ssql('dedup_paras_text', 'n_dup_paras_removed', 2)}"
-            " AS dup_para_char_frac",
+            "dup_line_char_frac", "dup_para_char_frac",
             *[f"top_{n}gram_char_frac" for n in TOP_NGRAM_NS],
             *[f"dup_{n}gram_char_frac" for n in DUP_NGRAM_NS],
             # ExactSubstr removal (late r11): corpus-wide duplicate

@@ -75,7 +75,7 @@ def curate_batch(
 
     ``quality_rules`` (r13): the opt-in Gopher Table A1 threshold gate
     — the streaming dual of corpus_curate's stage 1b, same parameter
-    values, same map-only textstats.gopher_reason_frame, decision
+    values, same map-only _gopher_core.gopher_reason_frame, decision
     'rejected:quality:<rule>' (first failing rule in published
     order). Per-batch doc-local signals, so streamed decisions equal
     the batch pipeline's for the same content (pinned in

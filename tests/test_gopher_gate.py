@@ -235,8 +235,9 @@ def test_gate_spark_duckdb_parity(spark, duck, gate_corpus):
 
 def test_null_text_cross_engine(spark, duck):
     """ADVICE r13: NULL text must label identically in both engines.
-    Spark size(NULL toks) is -1 (so an unguarded n_ws fired word_count)
-    while DuckDB len(NULL) is NULL — with the n_ws guard both engines
+    With ANSI off, Spark size(NULL toks) is -1 (so an unguarded
+    n_ws_tokens fires word_count) while DuckDB len(NULL) is NULL; with
+    ANSI on both are NULL — with the n_ws_tokens guard both engines
     see NULL numeric signals and n_req_stop = 0, so the first failing
     rule is 'stopwords' in BOTH (unreachable via corpus_curate's
     structural stage 1, but the public helpers must not drift)."""

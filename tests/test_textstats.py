@@ -1367,6 +1367,23 @@ def test_gopher_ngram_repetition_signals(spark, duck, tmp_path):
     assert got[4]["bullet_line_frac"] == 0.0    # one empty line
     assert got[4]["ellipsis_line_frac"] == 0.0
 
+    # the Table A1 gate reads the values text_profile publishes: the
+    # signal binder over bare (doc_id, text) equals the profile row on
+    # every column the two share
+    from flink_parameter_server_spark.operators._gopher_core import (
+        gopher_signal_frame,
+    )
+
+    sig = gopher_signal_frame(
+        spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    )
+    published = set(got[0].asDict())
+    shared = [c for c in sig.columns if c in published and c != "doc_id"]
+    assert len(shared) == 21, shared
+    for r in sig.select("doc_id", *shared).collect():
+        for col in shared:
+            assert r[col] == got[r["doc_id"]][col], (r["doc_id"], col)
+
 
 def test_column_vs_sql_builder_equivalence(spark):
     """r13: text_profile's per-doc surface is rendered as Spark-SQL
@@ -1381,6 +1398,7 @@ def test_column_vs_sql_builder_equivalence(spark):
 
     from flink_parameter_server_spark.functions.hashing import poly_hash
     from flink_parameter_server_spark.functions.text import tokens
+    from flink_parameter_server_spark.operators import _gopher_core as gc
     from flink_parameter_server_spark.operators import textstats as ts
 
     rng = random.Random(13)
@@ -1405,36 +1423,36 @@ def test_column_vs_sql_builder_equivalence(spark):
         }
     )
     prev = None
-    for n in range(2, ts.DUP_NGRAM_NS[-1] + 1):
+    for n in range(2, gc.DUP_NGRAM_NS[-1] + 1):
         df = df.withColumn(f"gh{n}", ts._gram_step("th_rep", prev, n))
-        df = df.selectExpr("*", f"{ts._gram_step_ssql('th_rep', prev, n)} AS sgh{n}")
+        df = df.selectExpr("*", f"{gc._gram_step_ssql('th_rep', prev, n)} AS sgh{n}")
         prev = f"gh{n}"
     df = df.withColumns(
-        {f"dupset{n}": ts._dup_set(F.col(f"gh{n}")) for n in ts.DUP_NGRAM_NS}
+        {f"dupset{n}": ts._dup_set(F.col(f"gh{n}")) for n in gc.DUP_NGRAM_NS}
     )
     df = df.withColumns(
-        {f"f{n}": ts._flag_col(f"gh{n}", f"dupset{n}") for n in ts.DUP_NGRAM_NS}
+        {f"f{n}": ts._flag_col(f"gh{n}", f"dupset{n}") for n in gc.DUP_NGRAM_NS}
     )
     pairs = []  # (label, column form, sql form)
-    pairs.append(("ph", poly_hash(F.col("text"), 1), F.expr(ts._ph_ssql("text", 1))))
+    pairs.append(("ph", poly_hash(F.col("text"), 1), F.expr(gc._ph_ssql("text", 1))))
     pairs.append(
         (
             "gram13",
             ts._gram_hashes(F.col("th_rep"), 13),
-            F.expr(ts._gram_hashes_ssql("th_rep", 13)),
+            F.expr(gc._gram_hashes_ssql("th_rep", 13)),
         )
     )
-    for n in range(2, ts.DUP_NGRAM_NS[-1] + 1):
+    for n in range(2, gc.DUP_NGRAM_NS[-1] + 1):
         pairs.append((f"gh{n}", F.col(f"gh{n}"), F.col(f"sgh{n}")))
-    for n in ts.DUP_NGRAM_NS:
+    for n in gc.DUP_NGRAM_NS:
         pairs.append(
-            (f"ds{n}", ts._dup_set(F.col(f"gh{n}")), F.expr(ts._dup_set_ssql(f"gh{n}")))
+            (f"ds{n}", ts._dup_set(F.col(f"gh{n}")), F.expr(gc._dup_set_ssql(f"gh{n}")))
         )
         pairs.append(
             (
                 f"fl{n}",
                 ts._flag_col(f"gh{n}", f"dupset{n}"),
-                F.expr(ts._flag_ssql(f"gh{n}", f"dupset{n}")),
+                F.expr(gc._flag_ssql(f"gh{n}", f"dupset{n}")),
             )
         )
         # r13 sort-adjacency flag rewrite == the dupset+contains form
@@ -1442,22 +1460,22 @@ def test_column_vs_sql_builder_equivalence(spark):
             (
                 f"nf{n}",
                 ts._flag_col(f"gh{n}", f"dupset{n}"),
-                F.expr(ts._flag_from_gh_ssql(f"gh{n}")),
+                F.expr(gc._flag_from_gh_ssql(f"gh{n}")),
             )
         )
         pairs.append(
             (
                 f"dg{n}",
                 ts._dup_gram_frac(f"f{n}", n),
-                F.expr(ts._dup_gram_ssql(f"f{n}", n)),
+                F.expr(gc._dup_gram_ssql(f"f{n}", n)),
             )
         )
-    for n in ts.TOP_NGRAM_NS:
+    for n in gc.TOP_NGRAM_NS:
         pairs.append(
             (
                 f"tg{n}",
                 ts._top_gram_frac(f"gh{n}", n),
-                F.expr(ts._top_gram_ssql(f"gh{n}", n)),
+                F.expr(gc._top_gram_ssql(f"gh{n}", n)),
             )
         )
         # r13 single-pass run-length argmax == the per-distinct rescan
@@ -1465,16 +1483,16 @@ def test_column_vs_sql_builder_equivalence(spark):
             (
                 f"tgf{n}",
                 ts._top_gram_frac(f"gh{n}", n),
-                F.expr(ts._top_gram_fast_ssql(f"gh{n}", n)),
+                F.expr(gc._top_gram_fast_ssql(f"gh{n}", n)),
             )
         )
     for sep, tag in (("\n", "l"), ("\n\n", "p")):
         ct, cn = ts.dedup_lines(F.col("text"), sep)
-        st, sn = ts._dedup_lines_ssql("text", sep)
+        st, sn = gc._dedup_lines_ssql("text", sep)
         pairs.append((f"dl{tag}t", ct, F.expr(st)))
         pairs.append((f"dl{tag}n", cn, F.expr(sn)))
     crt, crn = ts.collapse_runs(F.col("toks"))
-    srt, srn = ts._collapse_runs_ssql("toks")
+    srt, srn = gc._collapse_runs_ssql("toks")
     pairs.append(("crt", crt, F.expr(srt)))
     pairs.append(("crn", crn, F.expr(srn)))
     rows = df.select(
