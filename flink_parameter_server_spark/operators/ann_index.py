@@ -31,6 +31,7 @@ tests/test_ann_index.py).
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -41,32 +42,41 @@ from ..scratch import pinned, scoped_checkpoint
 from .similarity import _fast_cosine, _ivf2_assign, _nearest_centroids, _top_k, _with_parent
 
 IVF_SEED = 2027
-_CELLS_SCHEMA = "vec_id bigint, embedding array<float>, ne double, cid bigint"
+_SCHEMAS = {
+    "cells": "vec_id bigint, embedding array<float>, ne double, cid bigint",
+    "pq_codes": "vec_id bigint, packed bigint, cid bigint",
+}
 
 
-def read_cells(spark, index_dir: str) -> DataFrame:
-    """The cells table, or an empty typed frame when no vector has
-    been accepted yet — a semantic-dedup store starts centroids-only
-    (streaming/semantic_dedup.build_semantic_store), exactly like the
-    band store starts empty in incremental_dedup. Existence resolves
-    through the Hadoop FileSystem API (r11, ADVICE r10): a driver-local
-    os.path.isdir would read a populated HDFS/S3 store as empty. The
-    read keeps the file schema and discovers ``cid`` from the
-    partition dirs."""
+def _touched_cids(assigned: DataFrame) -> list:
+    """The sorted cid set of an assigned frame: <= n_cells values, so it
+    collects to the driver whatever the batch or query count."""
+    return sorted(r["cid"] for r in assigned.select("cid").distinct().collect())
+
+
+def _touched_cells(spark, index_dir: str, cids: list, table: str = "cells") -> DataFrame:
+    """The one touched-cell probe: the rows of a cid-partitioned table
+    (``cells`` or ``pq_codes``) in the listed cells only. The LITERAL
+    ``cid IN (...)`` filter is static partition pruning on the scan
+    (visible as PartitionFilters, no dynamic-pruning dependency): every
+    untouched cell is skipped without listing its files. A table not
+    written yet reads as an empty typed frame — a semantic-dedup store
+    starts centroids-only (streaming/semantic_dedup.build_semantic_store),
+    exactly like the band store starts empty in incremental_dedup.
+    Existence resolves through the Hadoop FileSystem API (r11, ADVICE
+    r10): a driver-local os.path.isdir would read a populated HDFS/S3
+    store as empty. The read keeps the file schema and discovers ``cid``
+    from the partition dirs."""
     from ..sources.fsutil import read_or_empty
 
-    return read_or_empty(spark, os.path.join(index_dir, "cells"), _CELLS_SCHEMA, typed=False)
+    path = os.path.join(index_dir, table)
+    return read_or_empty(spark, path, _SCHEMAS[table], typed=False).where(F.col("cid").isin(cids))
 
 
 def _normed(df: DataFrame, vec_col: str, out: str) -> DataFrame:
     return df.where(norm2(as_double(F.col(vec_col))) > 0).withColumn(
         out, F.sqrt(norm2(as_double(F.col(vec_col))))
     )
-
-
-def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
-    """(vec_id, embedding, ne) x broadcast centroids -> argmax-cosine cid."""
-    return _nearest_centroids(vectors, centroids)
 
 
 def _dim_means(df: DataFrame, keys, vec, out: str) -> DataFrame:
@@ -159,7 +169,7 @@ def _train_centroids(
             geo = _two_level_tables(v.sparkSession, cent, n_super, iters, seed)
             assigned = _ivf2_assign(tv, geo)
         else:
-            assigned = _assign(tv, cent)
+            assigned = _nearest_centroids(tv, cent)
         means = _dim_means(assigned, ["cid"], as_double(F.col("embedding")), "cv")
         cent = scoped_checkpoint(
             means.where(norm2(F.col("cv")) > 0).select(
@@ -466,34 +476,37 @@ def _write_pq_mode(spark, index_dir: str, by_residual: bool, pq_bits: int = 4) -
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/pq_mode")
 
 
-def _read_pq_mode(spark, index_dir: str):
+class IndexMode(NamedTuple):
+    """The persisted mode of an index dir — what every post-build
+    assignment, encode and probe must follow. ``pq``: a PQ codes replica
+    exists (its ``pq_codebook`` does). ``by_residual`` (r14): the codes
+    quantize residuals from the cell centroid. ``bits`` (r15): bits per
+    subspace code, 4 or 8. ``two_level`` (r15): the build persisted its
+    quantizer hierarchy (``assign_children``/``assign_super``), so every
+    assignment runs the two-level prune over it."""
+
+    pq: bool
+    by_residual: bool
+    bits: int
+    two_level: bool
+
+
+def index_mode(spark, index_dir: str) -> IndexMode:
+    """Read the persisted mode once; every public lifecycle call takes
+    it from here. Legacy readings: an index with no ``pq_mode`` marker
+    (r12/r13) is plain 4-bit PQ, a marker without ``pq_bits`` (r14) is
+    4-bit, and an index without ``assign_children`` (every pre-r15 and
+    every flat build) assigns flat. A marker with no codebook is inert
+    (the build writes the marker first): such a dir reads as pq=False."""
     from ..sources.fsutil import path_exists
 
-    path = f"{index_dir}/pq_mode"
-    if not path_exists(spark, path):
-        return None
-    return spark.read.parquet(path).collect()[0]
-
-
-def pq_by_residual(spark, index_dir: str) -> bool:
-    """Does this index's codes replica encode residuals? Indexes built
-    before the marker existed (r12/r13) are plain-PQ by construction —
-    absence reads as False, never as an error."""
-    row = _read_pq_mode(spark, index_dir)
-    return bool(row["by_residual"]) if row is not None else False
-
-
-def assign_two_level(spark, index_dir: str) -> bool:
-    """Was this index built with the two-level assignment prune? The
-    persisted ``assign_children``/``assign_super`` tables ARE the mode
-    marker (r15) — their presence means every lifecycle assignment
-    must dispatch through them (add_vectors replay-idempotency: a
-    replayed id must land in the cell it is already in, which only a
-    persisted, immutable quantizer guarantees). Indexes built flat —
-    including every pre-r15 index — read as False."""
-    from ..sources.fsutil import path_exists
-
-    return path_exists(spark, f"{index_dir}/assign_children")
+    two_level = path_exists(spark, f"{index_dir}/assign_children")
+    if not path_exists(spark, f"{index_dir}/pq_codebook"):
+        return IndexMode(False, False, 4, two_level)
+    if not path_exists(spark, f"{index_dir}/pq_mode"):
+        return IndexMode(True, False, 4, two_level)
+    row = spark.read.parquet(f"{index_dir}/pq_mode").first().asDict()
+    return IndexMode(True, bool(row["by_residual"]), int(row.get("pq_bits") or 4), two_level)
 
 
 def _load_assign_tables(spark, index_dir: str):
@@ -504,29 +517,37 @@ def _load_assign_tables(spark, index_dir: str):
     )
 
 
-def _assign_for_index(spark, index_dir: str, vn: DataFrame) -> DataFrame:
+def _assign_for_index(spark, index_dir: str, vn: DataFrame, mode: IndexMode) -> DataFrame:
     """Assign a normed (vec_id, embedding, ne) frame in the index's
     PERSISTED mode — the coarse-assignment analog of
     :func:`_encode_codes`: the one dispatch point every post-build
     assignment shares, so a two-level index can never accrete
-    flat-argmax rows (or vice versa)."""
-    if assign_two_level(spark, index_dir):
+    flat-argmax rows (or vice versa). A replayed id therefore lands in
+    the cell it is already in, which is what lets the presence probe
+    scan only the touched cells."""
+    if mode.two_level:
         return _ivf2_assign(vn, _load_assign_tables(spark, index_dir))
-    cent = spark.read.parquet(f"{index_dir}/centroids")
-    return _assign(vn, cent)
+    return _nearest_centroids(vn, spark.read.parquet(f"{index_dir}/centroids"))
 
 
-def pq_code_bits(spark, index_dir: str) -> int:
-    """Persisted code width in bits per subspace (r15): 4 = the nibble
-    packing default (PQ_K=16 codewords), 8 = byte packing (256
-    codewords — the density escape hatch, BASELINE.md r14: at ~500
-    candidates/cell 4-bit codes of either mode stop ranking). Markers
-    written before the column existed (r14) — and indexes with no
-    marker at all (r12/r13) — are 4-bit by construction."""
-    row = _read_pq_mode(spark, index_dir)
-    if row is None or "pq_bits" not in row.__fields__ or row["pq_bits"] is None:
-        return 4
-    return int(row["pq_bits"])
+def _intake(spark, index_dir: str, emb: DataFrame, mode: IndexMode) -> DataFrame:
+    """The one batch intake of add_vectors and the semantic-dedup store:
+    norm a (vec_id, embedding) batch (zero-norm vectors dropped, as in
+    the build), keep ONE row per vec_id, and assign it in the index's
+    persisted mode -> (vec_id, embedding, ne, cid). The keeper is the
+    min embedding (as its string rendering) per vec_id (ADVICE r8): an
+    intra-batch duplicate id would otherwise append twice and surface
+    as a doubled neighbor with unstable rk tie-breaks; duplicate ids
+    with conflicting embeddings violate the one-id contract anyway, but
+    the keeper must not depend on scan order."""
+    wdup = Window.partitionBy("vec_id").orderBy(F.col("embedding").cast("string"))
+    v = (
+        _normed(emb.select("vec_id", "embedding"), "embedding", "ne")
+        .withColumn("_rn", F.row_number().over(wdup))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    return _assign_for_index(spark, index_dir, v, mode)
 
 
 def _encode_codes(spark, index_dir: str, rows: DataFrame, cbq: DataFrame, by_residual: bool) -> DataFrame:
@@ -631,12 +652,18 @@ def _pq_unpack_expr(r2a_map: str, packed: str = "packed", bits: int = 4) -> str:
     )
 
 
-def _write_pq_codes(
-    df_with_codes: DataFrame, a2r_map: str, path: str, mode: str, bits: int = 4
-) -> None:
-    df_with_codes.selectExpr(
-        "vec_id", f"{_pq_pack_expr(a2r_map, bits=bits)} AS packed", "cid"
-    ).write.mode(mode).partitionBy("cid").parquet(path)
+def _packed_codes(spark, index_dir: str, rows: DataFrame, mode: IndexMode) -> DataFrame:
+    """The one packed-codes encoder of the build, add_vectors and
+    compact_index's heal: (vec_id, embedding, ne, cid) rows -> the
+    persisted replica's (vec_id, packed, cid) form, encoded against the
+    persisted codebook in ``mode`` (:func:`_encode_codes`) and packed
+    ``mode.bits`` wide (r13, VERDICT r12 #3: one BIGINT per vector, not
+    array<long>)."""
+    cbq = spark.read.parquet(f"{index_dir}/pq_codebook")
+    a2r, _ = _pq_pack_maps(cbq, bits=mode.bits)
+    return _encode_codes(spark, index_dir, rows, cbq, mode.by_residual).selectExpr(
+        "vec_id", f"{_pq_pack_expr(a2r, bits=mode.bits)} AS packed", "cid"
+    )
 
 
 def read_pq_codes(spark, index_dir: str) -> DataFrame:
@@ -645,7 +672,7 @@ def read_pq_codes(spark, index_dir: str) -> DataFrame:
     codebook's rank table (tests and receipts read this; the ADC probe
     itself scores the packed column directly, no unpack). Width comes
     from the persisted ``pq_mode`` marker (r15)."""
-    bits = pq_code_bits(spark, index_dir)
+    bits = index_mode(spark, index_dir).bits
     cbq = spark.read.parquet(f"{index_dir}/pq_codebook")
     _, r2a = _pq_pack_maps(cbq, bits=bits)
     return spark.read.parquet(f"{index_dir}/pq_codes").selectExpr(
@@ -739,8 +766,8 @@ def build_ivf_index(
     can land in a different cell than flat argmax, which moves
     RECALL, never correctness — cells remain a partition of the
     catalog, so the covering probe stays exact (pinned against an
-    independent brute) and lifecycle appends (flat-assigned by
-    add_vectors) coexist in the same cells table."""
+    independent brute). The hierarchy persists, and every later
+    assignment follows it (:func:`index_mode`)."""
     # ADVICE r14: silent-ignore is the wrong contract for PQ options
     # on a pq=False build
     if not pq:
@@ -792,12 +819,11 @@ def build_ivf_index(
             # a flat (re)build over a previously two-level dir must clear
             # the stale hierarchy, or mode detection would keep dispatching
             # appends through a quantizer the cells no longer follow
-            from ..sources.fsutil import delete_path, path_exists as _pe
+            from ..sources.fsutil import delete_path
 
             for tbl in ("assign_children", "assign_super"):
-                if _pe(spark, f"{index_dir}/{tbl}"):
-                    delete_path(spark, f"{index_dir}/{tbl}")
-            final_assign = _assign(v, cent)
+                delete_path(spark, f"{index_dir}/{tbl}")
+            final_assign = _nearest_centroids(v, cent)
         assigned = scoped_checkpoint(final_assign.select("vec_id", "embedding", "ne", "cid"))
         assigned.write.mode("overwrite").partitionBy("cid").parquet(f"{index_dir}/cells")
         if pq:
@@ -817,19 +843,10 @@ def build_ivf_index(
                 else _pq_train_codebook(v, seed, n_codes=n_codes)
             )
             cb.write.mode("overwrite").parquet(f"{index_dir}/pq_codebook")
-            cbq = spark.read.parquet(f"{index_dir}/pq_codebook")
-            # r13 (VERDICT r12 #3): the replica persists PACKED — one
-            # BIGINT of pq_bits-wide ranks per vector, not array<long>
-            a2r, _ = _pq_pack_maps(cbq, bits=pq_bits)
-            _write_pq_codes(
-                _encode_codes(spark, index_dir, assigned, cbq, by_residual).select(
-                    "vec_id", "codes", "cid"
-                ),
-                a2r,
-                f"{index_dir}/pq_codes",
-                "overwrite",
-                bits=pq_bits,
-            )
+            mode = IndexMode(True, by_residual, pq_bits, two_level)
+            _packed_codes(spark, index_dir, assigned, mode).write.mode(
+                "overwrite"
+            ).partitionBy("cid").parquet(f"{index_dir}/pq_codes")
 
 
 def ivf_search(
@@ -942,6 +959,7 @@ def ivf_search(
     of the extra window is refine-side only (shortlist * n_probe raw
     rows per query, not a larger codes scan).
     """
+    mode = index_mode(spark, index_dir)
     cent = spark.read.parquet(f"{index_dir}/centroids")
     q = _normed(
         queries.select(F.col("query_id").alias("vec_id"), F.col("qv").alias("embedding")),
@@ -955,7 +973,7 @@ def ivf_search(
         # behavior
         geo = (
             _load_assign_tables(spark, index_dir)
-            if assign_two_level(spark, index_dir)
+            if mode.two_level
             else _two_level_tables(spark, cent, None, 2, IVF_SEED)
         )
         probes = _ivf2_assign(q, geo, n_super_probe=n_super_probe, keep_top=n_probe)
@@ -973,17 +991,14 @@ def ivf_search(
     # result plan depends on this checkpoint, so its owner is the
     # caller's scratch scope or the tracker, never this function.
     probes = scoped_checkpoint(probes)
-    probed_cids = sorted(r["cid"] for r in probes.select("cid").distinct().collect())
-    cells = spark.read.parquet(f"{index_dir}/cells").where(
-        F.col("cid").isin(probed_cids)
-    )
+    probed_cids = _touched_cids(probes)
+    cells = _touched_cells(spark, index_dir, probed_cids)
     if adc:
-        from ..sources.fsutil import path_exists
         from .similarity import PQ_M, pq_lut
 
         # ADVICE r12: a clear contract error beats the opaque
         # parquet-path failure on a pq=False build
-        if not path_exists(spark, f"{index_dir}/pq_codebook"):
+        if not mode.pq:
             raise ValueError(
                 "ivf_search(adc=True) requires a pq=True index — "
                 f"{index_dir}/pq_codebook is absent; rebuild with "
@@ -997,11 +1012,7 @@ def ivf_search(
         # query — the refine can only re-rank what the shortlist kept
         shortlist = max(shortlist, k)
         cbq = spark.read.parquet(f"{index_dir}/pq_codebook")
-        by_res = pq_by_residual(spark, index_dir)
-        bits = pq_code_bits(spark, index_dir)
-        codes = spark.read.parquet(f"{index_dir}/pq_codes").where(
-            F.col("cid").isin(probed_cids)
-        )
+        codes = _touched_cells(spark, index_dir, probed_cids, "pq_codes")
         # rank-keyed LUT (r13): lmap keys are rank*PQ_M + m, so the ADC
         # sum reads each 4-bit rank straight out of the packed BIGINT —
         # the scan side never materializes the codes array. Duplicate
@@ -1027,11 +1038,11 @@ def ivf_search(
             cand = cand.where(F.col("vec_id") != F.col("query_id"))
         adc_packed = F.expr(
             f"aggregate(transform(sequence(0, {PQ_M - 1}), mm -> "
-            f"element_at(lmap, {_pq_rank_read_expr('packed', bits)}"
+            f"element_at(lmap, {_pq_rank_read_expr('packed', mode.bits)}"
             f" * {PQ_M} + mm)), 0L, (a, v) -> a + v)"
         )
         adcs = cand.join(lutmap, "query_id")
-        if by_res:
+        if mode.by_residual:
             # by-residual ADC (r14): score = <q, centroid> + LUT sum —
             # the base term is ONE micro-grid scalar per (query, probed
             # cell), computed off the same broadcast centroid table the
@@ -1126,9 +1137,9 @@ def ivf_search(
 def add_vectors(spark, index_dir: str, emb: DataFrame, preassigned: bool = False) -> None:
     """Incrementally index new vectors WITHOUT re-running Lloyd
     (VERDICT r7 #8 — the serving story: a growing catalog appends, it
-    does not rebuild): assign each new vector against the PERSISTED
-    centroids (one broadcast pass through the build's own ranker,
-    :func:`_assign_for_index`) and append to the matching cell
+    does not rebuild): assign each new vector in the index's PERSISTED
+    mode (one broadcast pass through the build's own ranker, via the
+    one batch intake :func:`_intake`) and append to the matching cell
     partitions. Centroids are left untouched, so existing cell assignments — and
     therefore every already-served probe result — never change.
 
@@ -1142,55 +1153,33 @@ def add_vectors(spark, index_dir: str, emb: DataFrame, preassigned: bool = False
     Zero-norm vectors are excluded as in the build.
 
     ``preassigned=True`` accepts a frame already carrying (vec_id,
-    embedding, ne, cid) from :func:`_assign`, the shared ranker
-    (e.g. semantic_dedup's per-batch assignment) and skips the
-    re-norm + re-assign pass entirely; the caller vouches for
-    batch-unique vec_ids in that case — AND (r15) for matching the
-    index's persisted assignment mode: on a two-level-built index
-    (:func:`assign_two_level`) a flat-argmax preassignment can place a
-    replayed id in a different cell than the build did, defeating the
-    presence probe below. Non-preassigned calls dispatch through
-    :func:`_assign_for_index` automatically.
+    embedding, ne, cid) from the one batch intake (:func:`_intake` —
+    e.g. semantic_dedup's per-batch assignment) and skips the re-norm +
+    re-assign pass entirely; the caller vouches for batch-unique
+    vec_ids and for the index's persisted assignment mode in that case
+    (r15: on a two-level-built index a flat-argmax preassignment can
+    place a replayed id in a different cell than the build did,
+    defeating the presence probe below).
 
     Drift: appended vectors join their nearest EXISTING cell, so a
     shifting distribution skews cell sizes instead of moving
-    centroids. Monitor with :func:`cell_skew` and rebuild (full
-    :func:`build_ivf_index`) when max_cell/mean_cell exceeds ~4 — past
-    that, probing the hot cell costs more than the rebuild amortizes.
+    centroids. Monitor with :func:`index_stats` and rebuild
+    (:func:`rebuild_index`) when its skew (max_cell/mean_cell) exceeds
+    ~4 — past that, probing the hot cell costs more than the rebuild
+    amortizes.
     """
+    mode = index_mode(spark, index_dir)
     if preassigned:
         v = emb.select("vec_id", "embedding", "ne", "cid")
     else:
-        # one row per vec_id WITHIN the batch too (ADVICE r8): the
-        # left_anti below only guards against ids already indexed, so an
-        # intra-batch duplicate id would append twice and surface as a
-        # doubled neighbor with unstable rk tie-breaks. Deterministic
-        # keeper = min embedding (as its string rendering) per vec_id —
-        # duplicate ids with conflicting embeddings violate the one-id
-        # contract anyway, but the keeper must not depend on scan order.
-        # Assignment dispatches through the index's PERSISTED mode
-        # (r15, _assign_for_index): on a two-level-built index a flat
-        # argmax here could place a replayed id in a DIFFERENT cell
-        # than the build did — the presence probe scans only the
-        # batch's cells, so the replay would append a silent duplicate.
-        wdup = Window.partitionBy("vec_id").orderBy(F.col("embedding").cast("string"))
-        v = _assign_for_index(
-            spark,
-            index_dir,
-            _normed(emb.select("vec_id", "embedding"), "embedding", "ne")
-            .withColumn("_rn", F.row_number().over(wdup))
-            .where(F.col("_rn") == 1)
-            .drop("_rn"),
-        )
+        v = _intake(spark, index_dir, emb, mode)
     # pin the assignment once: the touched-cid collect, the cells
     # append, and (on a PQ index) the codes append all consume it
     # (the ivf_search double-compute class)
-    from ..sources.fsutil import path_exists, read_or_empty
-
     with pinned(spark):
         v = scoped_checkpoint(v)
-        touched = sorted(r["cid"] for r in v.select("cid").distinct().collect())
-        existing = read_cells(spark, index_dir).where(F.col("cid").isin(touched)).select("vec_id")
+        touched = _touched_cids(v)
+        existing = _touched_cells(spark, index_dir, touched).select("vec_id")
         accepted = scoped_checkpoint(
             v.join(existing, "vec_id", "left_anti").select("vec_id", "embedding", "ne", "cid")
         )
@@ -1205,30 +1194,12 @@ def add_vectors(spark, index_dir: str, emb: DataFrame, preassigned: bool = False
         # so encode every touched-cell row missing from pq_codes (covers
         # this batch AND any historical gap; encoding is deterministic
         # against the immutable codebook, hence replay-safe).
-        if path_exists(spark, f"{index_dir}/pq_codebook"):
-            bits = pq_code_bits(spark, index_dir)
-            cbq = spark.read.parquet(f"{index_dir}/pq_codebook")
-            a2r, _ = _pq_pack_maps(cbq, bits=bits)
-            codes_path = f"{index_dir}/pq_codes"
-            have = (
-                read_or_empty(spark, codes_path, "vec_id long, cid bigint", typed=False)
-                .where(F.col("cid").isin(touched))
-                .select("vec_id")
-            )
-            need = (
-                read_cells(spark, index_dir)
-                .where(F.col("cid").isin(touched))
-                .join(have, "vec_id", "left_anti")
-            )
-            _write_pq_codes(
-                _encode_codes(
-                    spark, index_dir, need, cbq, pq_by_residual(spark, index_dir)
-                ).select("vec_id", "codes", "cid"),
-                a2r,
-                codes_path,
-                "append",
-                bits=bits,
-            )
+        if mode.pq:
+            have = _touched_cells(spark, index_dir, touched, "pq_codes").select("vec_id")
+            need = _touched_cells(spark, index_dir, touched).join(have, "vec_id", "left_anti")
+            _packed_codes(spark, index_dir, need, mode).write.mode("append").partitionBy(
+                "cid"
+            ).parquet(f"{index_dir}/pq_codes")
 
 
 def compact_index(spark, index_dir: str, target_files_per_cell: int = 1) -> None:
@@ -1245,15 +1216,13 @@ def compact_index(spark, index_dir: str, target_files_per_cell: int = 1) -> None
     fsutil.rename_path for the object-store rename-window caveat (a
     reader racing the swap can see the cells table absent — excluded
     here by the single-writer between-batches discipline)."""
-    from ..sources.fsutil import path_exists, swap_in
+    from ..sources.fsutil import swap_in
 
-    tables = ["cells"]
+    mode = index_mode(spark, index_dir)
     # a pq=True index compacts its codes replica the same way — it
     # accretes one small file per touched cell per batch exactly like
     # the cells table (r12)
-    if path_exists(spark, os.path.join(index_dir, "pq_codes")):
-        tables.append("pq_codes")
-    for name in tables:
+    for name in ["cells"] + (["pq_codes"] if mode.pq else []):
         path = os.path.join(index_dir, name)
         df = spark.read.parquet(path)
         if name == "pq_codes":
@@ -1264,17 +1233,10 @@ def compact_index(spark, index_dir: str, target_files_per_cell: int = 1) -> None
             # the persisted codebook; (b) duplicate codes rows for one
             # vec_id (crash replay / manual append) collapse to one, so
             # an ADC shortlist can never rank the same neighbor twice.
-            bits = pq_code_bits(spark, index_dir)
-            cbq = spark.read.parquet(os.path.join(index_dir, "pq_codebook"))
-            a2r, _ = _pq_pack_maps(cbq, bits=bits)
             missing = spark.read.parquet(os.path.join(index_dir, "cells")).join(
                 df.select("vec_id"), "vec_id", "left_anti"
             )
-            healed = _encode_codes(
-                spark, index_dir, missing, cbq, pq_by_residual(spark, index_dir)
-            ).selectExpr(
-                "vec_id", f"{_pq_pack_expr(a2r, bits=bits)} AS packed", "cid"
-            )
+            healed = _packed_codes(spark, index_dir, missing, mode)
             df = df.dropDuplicates(["vec_id"]).unionByName(healed)
         swap_in(
             spark,
@@ -1291,7 +1253,7 @@ def rebuild_index(
     two_level: bool | None = None,
     n_super: int | None = None,
 ) -> dict:
-    """The documented :func:`cell_skew` rebuild trigger made
+    """The :func:`index_stats` skew rebuild trigger made
     actionable: retrain the coarse quantizer over the CURRENT catalog
     (the cells table holds every indexed vector verbatim) and swap
     both tables in place. Every vector keeps its id — probes after the
@@ -1300,36 +1262,35 @@ def rebuild_index(
     index lands in a sibling directory first, so the live index stays
     readable until the per-table swap (a crash mid-swap loses at most
     the rebuild, never the catalog). Returns the post-rebuild
-    :func:`cell_skew` stats. Single-writer discipline as
+    :func:`index_stats`. Single-writer discipline as
     :func:`compact_index`. Per-table swap through the Hadoop FS API
     (fsutil — r12, VERDICT r11 #2): on an object store each rename is
     a copy, so the no-reader window is two renames wide here
     (centroids swaps before cells) — acceptable under the same
     single-writer discipline, and a crash mid-swap still loses at
     most the rebuild."""
-    from ..sources.fsutil import delete_path, path_exists, rename_path
+    from ..sources.fsutil import delete_path, rename_path
 
     emb = spark.read.parquet(os.path.join(index_dir, "cells")).select(
         "vec_id", "embedding"
     )
-    # a pq=True index rebuilds WITH its PQ side: the rebuild retrains
-    # both quantizers over the current catalog (coarse cells AND the
-    # PQ codebook — fresh anchors from the same seeded order), so
-    # codes stay consistent with the codebook that scores them (r12)
-    pq = path_exists(spark, os.path.join(index_dir, "pq_codebook"))
-    by_res = pq and pq_by_residual(spark, index_dir)
-    bits = pq_code_bits(spark, index_dir) if pq else 4
+    # a pq=True index rebuilds WITH its PQ side, in its persisted
+    # residual mode and width: the rebuild retrains both quantizers over
+    # the current catalog (coarse cells AND the PQ codebook — fresh
+    # anchors from the same seeded order), so codes stay consistent with
+    # the codebook that scores them (r12)
+    mode = index_mode(spark, index_dir)
     # two_level=None (default) inherits the persisted assignment mode,
-    # like pq/by_res/bits above; an explicit bool overrides (r15)
-    two_l = assign_two_level(spark, index_dir) if two_level is None else two_level
+    # like the PQ mode; an explicit bool overrides (r15)
+    two_l = mode.two_level if two_level is None else two_level
     tmp = index_dir.rstrip("/") + "_rebuild"
     build_ivf_index(
-        spark, emb, tmp, n_cells=n_cells, iters=iters, seed=seed, pq=pq,
-        by_residual=by_res, pq_bits=bits, train_max_per_cell=train_max_per_cell,
-        two_level=two_l, n_super=n_super,
+        spark, emb, tmp, n_cells=n_cells, iters=iters, seed=seed, pq=mode.pq,
+        by_residual=mode.by_residual, pq_bits=mode.bits,
+        train_max_per_cell=train_max_per_cell, two_level=two_l, n_super=n_super,
     )
     tables = ["centroids", "cells"] + (
-        ["pq_codebook", "pq_codes", "pq_mode"] if pq else []
+        ["pq_codebook", "pq_codes", "pq_mode"] if mode.pq else []
     ) + (["assign_children", "assign_super"] if two_l else [])
     for name in tables:
         old = os.path.join(index_dir, name)
@@ -1339,38 +1300,9 @@ def rebuild_index(
         # a flat rebuild of a previously two-level index sheds the
         # stale hierarchy (the swap list above never visits it)
         for name in ("assign_children", "assign_super"):
-            old = os.path.join(index_dir, name)
-            if path_exists(spark, old):
-                delete_path(spark, old)
+            delete_path(spark, os.path.join(index_dir, name))
     delete_path(spark, tmp)
-    return cell_skew(spark, index_dir)
-
-
-def cell_skew(spark, index_dir: str) -> dict:
-    """Cell-size balance stats — the documented rebuild trigger for
-    :func:`add_vectors`. One count-by-partition-column aggregation
-    (metadata-cheap: cid is the partition key). Returns
-    {n_cells, total, max_cell, mean_cell, skew} with
-    skew = max_cell / mean_cell; rebuild at skew > ~4."""
-    counts = (
-        spark.read.parquet(f"{index_dir}/cells")
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("n").alias("total"),
-            F.max("n").alias("max_cell"),
-            F.avg("n").alias("mean_cell"),
-        )
-        .collect()[0]
-    )
-    return {
-        "n_cells": counts["n_cells"],
-        "total": counts["total"],
-        "max_cell": counts["max_cell"],
-        "mean_cell": counts["mean_cell"],
-        "skew": counts["max_cell"] / counts["mean_cell"] if counts["mean_cell"] else 0.0,
-    }
+    return index_stats(spark, index_dir)
 
 
 # per-cell candidate-density thresholds, from the committed recall
@@ -1391,10 +1323,12 @@ def index_stats(spark, index_dir: str) -> dict:
     pass — because at catalog scale nobody can eyeball per-cell
     density, and density is what decides WHICH knob works.
 
-    Extends :func:`cell_skew`'s balance stats with per-cell candidate
-    DENSITY quantiles (exact percentiles over the <= n_cells-row count
-    table) and the persisted PQ mode, then names the regime from the
-    committed receipts:
+    Cell-size balance stats (n_cells, total, max_cell, mean_cell and
+    skew = max_cell / mean_cell — the :func:`add_vectors` drift
+    trigger: rebuild at skew > ~4), per-cell candidate DENSITY
+    quantiles (exact percentiles over the <= n_cells-row count table)
+    and the persisted :func:`index_mode`, then names the regime from
+    the committed receipts:
 
     - ``density_regime='rankable'`` (p50 < DENSITY_CAUTION): ADC codes
       rank within cells — ``shortlist`` / ``by_residual`` /
@@ -1411,8 +1345,7 @@ def index_stats(spark, index_dir: str) -> dict:
     Cost: one count-by-partition-column aggregation (cid is the
     partition key), exact percentiles over the <= n_cells-row result,
     and the 1-row ``pq_mode`` read — bounded at any corpus size."""
-    from ..sources.fsutil import path_exists
-
+    mode = index_mode(spark, index_dir)
     row = (
         spark.read.parquet(f"{index_dir}/cells")
         .groupBy("cid")
@@ -1427,7 +1360,6 @@ def index_stats(spark, index_dir: str) -> dict:
         )
         .collect()[0]
     )
-    pq = path_exists(spark, f"{index_dir}/pq_codebook")
     p50 = row["p50_cell"] or 0.0
     regime = (
         "density_floor"
@@ -1442,9 +1374,9 @@ def index_stats(spark, index_dir: str) -> dict:
         "skew": row["max_cell"] / row["mean_cell"] if row["mean_cell"] else 0.0,
         "p50_cell": p50,
         "p90_cell": row["p90_cell"] or 0.0,
-        "pq": pq,
-        "by_residual": pq_by_residual(spark, index_dir) if pq else False,
-        "pq_bits": pq_code_bits(spark, index_dir) if pq else None,
-        "assign_mode": "two_level" if assign_two_level(spark, index_dir) else "flat",
+        "pq": mode.pq,
+        "by_residual": mode.by_residual,
+        "pq_bits": mode.bits if mode.pq else None,
+        "assign_mode": "two_level" if mode.two_level else "flat",
         "density_regime": regime,
     }

@@ -687,7 +687,7 @@ def _ivf2_assign(
 
 def semantic_cell_profile(assign) -> dict:
     """Cell-size balance stats for an in-memory assignment frame — the
-    counted-n twin of ann_index.cell_skew (r11). The counted rule's
+    counted-n twin of ann_index.index_stats (r11). The counted rule's
     centroids are ID-STRATIFIED samples: on a corpus whose embeddings
     CLUSTER heavily (the realistic pretraining case), a dense region's
     vectors pile into few cells and the in-cell pair join goes

@@ -86,71 +86,58 @@ def ps_kernel_ops(spark, sf_dir):
 
     li = t(spark, sf_dir, "lineitem")
 
-    # serial: the dump->load->pull leg runs EAGER work at build time (a
-    # checkpointed push fold, a parquet model dump, the reload) while
-    # the pull/push legs are pure plan construction, but overlapping the
-    # two on driver threads ran 7 % faster at 4 cores (tools/ab.py warm
-    # rep, sf0.1, 10 pairs), under the 10 % an overlap must earn
-    def _pull_push():
-        # --- pull over lazily-initialized K=4 item vectors
-        keys = (
-            li.where(F.col("l_orderkey") % 100 == 0)
-            .select(F.col("l_partkey").alias("param_id"))
-            .distinct()
-        )
-        pulled = BatchParameterServer(init_fn=lambda pid: mf.item_vec(pid)).pull(keys)
-        pull_part = pulled.select(
-            F.lit("pull").alias("op"),
-            "param_id",
-            F.posexplode("value").alias("dim", "raw"),
-        ).select("op", "param_id", F.col("dim").cast("long").alias("dim"), F.round("raw", 6).alias("w"))
+    # --- pull over lazily-initialized K=4 item vectors
+    keys = (
+        li.where(F.col("l_orderkey") % 100 == 0)
+        .select(F.col("l_partkey").alias("param_id"))
+        .distinct()
+    )
+    pulled = BatchParameterServer(init_fn=lambda pid: mf.item_vec(pid)).pull(keys)
+    pull_part = pulled.select(
+        F.lit("pull").alias("op"),
+        "param_id",
+        F.posexplode("value").alias("dim", "raw"),
+    ).select("op", "param_id", F.col("dim").cast("long").alias("dim"), F.round("raw", 6).alias("w"))
 
-        # --- push: fold one round of summed deltas into init state
-        deltas = li.groupBy(F.col("l_partkey").alias("param_id")).agg(
-            F.sum((F.col("l_quantity") * F.col("l_discount")).cast("decimal(18,6)")).alias("d")
-        )
-        push_part = deltas.select(
-            F.lit("push").alias("op"),
-            "param_id",
-            F.lit(0).cast("long").alias("dim"),
-            F.round(
-                factor_element(F.col("param_id"), F.lit(0), mf.ITEM_SEED, mf.FACTOR_LO, mf.FACTOR_HI)
-                + F.lit(0.001) * F.col("d").cast("double"),
-                6,
-            ).alias("w"),
-        )
-        return pull_part, push_part
+    # --- push: fold one round of summed deltas into a width-1 server
+    # (element 0 of the item factor init). The fold sums one delta row
+    # per key, which is exact, so each value is init + delta as the
+    # oracle writes it
+    init_fn = lambda pid: F.array(  # noqa: E731
+        factor_element(pid, F.lit(0), mf.ITEM_SEED, mf.FACTOR_LO, mf.FACTOR_HI)
+    )
+    server = BatchParameterServer(init_fn=init_fn)
+    server.push(
+        li.groupBy(F.col("l_partkey").alias("param_id"))
+        .agg(F.sum((F.col("l_quantity") * F.col("l_discount")).cast("decimal(18,6)")).alias("d"))
+        .select("param_id", F.array(F.lit(0.001) * F.col("d").cast("double")).alias("delta"))
+    )
 
-    def _load():
-        # --- dump -> load -> pull (A6/B11)
-        init_fn = lambda pid: F.array(  # noqa: E731
-            factor_element(pid, F.lit(0), mf.ITEM_SEED, mf.FACTOR_LO, mf.FACTOR_HI)
-        )
-        load_deltas = (
-            li.where(F.col("l_partkey") % 3 == 0)
-            .groupBy(F.col("l_partkey").alias("param_id"))
-            .agg(F.sum((F.col("l_quantity") * F.col("l_discount")).cast("decimal(18,6)")).alias("d"))
-            .select("param_id", F.array(F.lit(0.001) * F.col("d").cast("double")).alias("delta"))
-        )
-        trained = BatchParameterServer(init_fn=init_fn)
-        trained.push(load_deltas)
-        tmp = tempfile.mkdtemp(prefix="fps_model_dump_")
-        trained.params.write.mode("overwrite").parquet(f"{tmp}/model")
-        loaded = BatchParameterServer.load(spark, f"{tmp}/model", init_fn=init_fn)
-        load_keys = (
-            t(spark, sf_dir, "part")
-            .where(F.col("p_partkey") % 20 == 0)
-            .select(F.col("p_partkey").alias("param_id"))
-        )
-        return loaded.pull(load_keys).select(
-            F.lit("load_pull").alias("op"),
+    def w0(df, op):
+        return df.select(
+            F.lit(op).alias("op"),
             "param_id",
             F.lit(0).cast("long").alias("dim"),
             F.round(F.element_at("value", 1), 6).alias("w"),
         )
 
-    pull_part, push_part = _pull_push()
-    load_part = _load()
+    push_part = w0(server.params, "push")
+
+    # --- dump -> load -> pull (A6/B11): dump the pushed model's keys
+    # % 3 == 0 (each key's value depends on its own deltas only, so
+    # this is the model a push of just those keys' deltas would hold),
+    # load it into a fresh server and pull dumped and never-trained keys
+    tmp = tempfile.mkdtemp(prefix="fps_model_dump_")
+    server.params.where(F.col("param_id") % 3 == 0).write.mode("overwrite").parquet(
+        f"{tmp}/model"
+    )
+    loaded = BatchParameterServer.load(spark, f"{tmp}/model", init_fn=init_fn)
+    load_keys = (
+        t(spark, sf_dir, "part")
+        .where(F.col("p_partkey") % 20 == 0)
+        .select(F.col("p_partkey").alias("param_id"))
+    )
+    load_part = w0(loaded.pull(load_keys), "load_pull")
 
     return pull_part.unionByName(push_part).unionByName(load_part)
 
@@ -568,18 +555,18 @@ def ps_train_epochs(spark, sf_dir):
     # with no scratch scope, so its checkpoint blocks go to the tracker
     # and outlive it.
     # 4 cores, sf0.1 (tools/ab.py warm rep, 10 pairs): serial 18.5 s -> 16.3 s.
-    def fam_mf():
-        return (
-            mf.train(spark, rat, epochs=2)
-            .select("param_id", F.posexplode("value").alias("dim", "v"))
-            .select(
-                F.lit("mf").alias("family"),
-                F.lit("item").alias("side"),
-                F.col("param_id").alias("id"),
-                F.col("dim").cast("long").alias("dim"),
-                F.round("v", 6).alias("v"),
-            )
+    def item_rows(model, family):
+        # one row per (item, factor dimension) of an mf.train model
+        return model.select("param_id", F.posexplode("value").alias("dim", "v")).select(
+            F.lit(family).alias("family"),
+            F.lit("item").alias("side"),
+            F.col("param_id").alias("id"),
+            F.col("dim").cast("long").alias("dim"),
+            F.round("v", 6).alias("v"),
         )
+
+    def fam_mf():
+        return item_rows(mf.train(spark, rat, epochs=2), "mf")
 
     def fam_bidir():
         return mf.train_bidirectional(spark, rat, epochs=2).select(
@@ -619,17 +606,7 @@ def ps_train_epochs(spark, sf_dir):
             .where(F.col("memory") == "full")
             .select("user", F.col("neg_item").alias("item"), F.lit(0.0).alias("rating"))
         )
-        return (
-            mf.train(spark, rat.unionByName(negs), epochs=1)
-            .select("param_id", F.posexplode("value").alias("dim", "v"))
-            .select(
-                F.lit("mf_neg").alias("family"),
-                F.lit("item").alias("side"),
-                F.col("param_id").alias("id"),
-                F.col("dim").cast("long").alias("dim"),
-                F.round("v", 6).alias("v"),
-            )
-        )
+        return item_rows(mf.train(spark, rat.unionByName(negs), epochs=1), "mf_neg")
 
     mf_part, bidir, pa_part, pamc, mfneg = overlap(
         spark, fam_mf, fam_bidir, fam_pa, fam_pamc, fam_mfneg

@@ -12,12 +12,14 @@ catalog (stored verbatim, no dedup semantics — the analog of
 incremental_dedup.build_signature_store); the centroids then DEFINE
 the dedup geometry for every subsequent batch (append-only cells, no
 Lloyd re-run — the add_vectors drift contract applies, monitor with
-cell_skew).
+index_stats).
 
 Per batch (:func:`process_semantic_batch`):
 
-1. assign the batch against the PERSISTED centroids (one bounded
-   broadcast — identical arithmetic to the index build);
+1. assign the batch in the store's PERSISTED mode (add_vectors' own
+   batch intake: flat argmax against the centroids, or the persisted
+   two-level prune on a two-level-built index — one bounded broadcast,
+   identical arithmetic to the index build);
 2. ``dup_of_store``: probe ONLY the touched cells (literal ``cid IN``
    partition pruning, the ivf_search shape) for store vectors with
    cosine >= SEMANTIC_T; dup_of = the most-similar store vector
@@ -61,7 +63,14 @@ from pyspark.sql import functions as F
 
 from ..functions.planes import SEMANTIC_T
 from ..operators._dedup_core import star_connected_components
-from ..operators.ann_index import _assign, _normed, add_vectors, read_cells
+from ..operators.ann_index import (
+    _intake,
+    _normed,
+    _touched_cells,
+    _touched_cids,
+    add_vectors,
+    index_mode,
+)
 from ..operators.similarity import _fast_cosine, semantic_cell_profile
 from ..functions.vectors import as_double
 from .bid_store import bid_sink
@@ -78,7 +87,7 @@ _LOG = logging.getLogger(__name__)
 # store: a BALANCED batch has max_share ~ 1/k, so the absolute 0.1
 # rule only discriminates when k >> 10 (the counted rule's sqrt(n)
 # regime); on a small-k store the 4x-balanced-share term (the
-# cell_skew rebuild-at-skew>4 convention) keeps a healthy batch quiet.
+# index_stats rebuild-at-skew>4 convention) keeps a healthy batch quiet.
 MAX_SHARE_FLAG = 0.1
 
 
@@ -94,15 +103,7 @@ def process_semantic_batch(spark, emb: DataFrame, index_dir: str) -> DataFrame:
     from ..scratch import scoped_checkpoint
 
     ids = scoped_checkpoint(emb.select("vec_id").distinct())
-    wdup = Window.partitionBy("vec_id").orderBy(F.col("embedding").cast("string"))
-    v = (
-        _normed(emb.select("vec_id", "embedding"), "embedding", "ne")
-        .withColumn("_rn", F.row_number().over(wdup))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    cent = spark.read.parquet(f"{index_dir}/centroids")
-    assigned = scoped_checkpoint(_assign(v, cent))
+    assigned = scoped_checkpoint(_intake(spark, index_dir, emb, index_mode(spark, index_dir)))
 
     # per-batch geometry diagnostic (r12, log-only — no behavior
     # change): exact-duplicate mass collapses identical vectors into
@@ -112,7 +113,8 @@ def process_semantic_batch(spark, emb: DataFrame, index_dir: str) -> DataFrame:
     # adaptive quantizer (build_semantic_store centroids=) or an
     # upstream exact-dedup gate.
     prof = semantic_cell_profile(assigned)
-    share_flag = max(MAX_SHARE_FLAG, 4.0 / max(1, cent.count()))
+    n_cent = spark.read.parquet(f"{index_dir}/centroids").count()
+    share_flag = max(MAX_SHARE_FLAG, 4.0 / max(1, n_cent))
     if prof["total"] and prof["max_share"] > share_flag:
         _LOG.warning(
             "semantic-dedup batch cell profile: max_share=%.3f > %.2f "
@@ -129,8 +131,7 @@ def process_semantic_batch(spark, emb: DataFrame, index_dir: str) -> DataFrame:
         )
 
     # --- stage 1: against the store (touched cells only) ---
-    probed_cids = sorted(r["cid"] for r in assigned.select("cid").distinct().collect())
-    cells = read_cells(spark, index_dir).where(F.col("cid").isin(probed_cids))
+    cells = _touched_cells(spark, index_dir, _touched_cids(assigned))
     cos_s = _fast_cosine(
         as_double(F.col("n.embedding")),
         as_double(F.col("s.embedding")),
@@ -182,9 +183,9 @@ def process_semantic_batch(spark, emb: DataFrame, index_dir: str) -> DataFrame:
 
     # --- persist accepted vectors (add_vectors is replay-idempotent:
     # already-indexed ids are skipped by its touched-cells left_anti).
-    # `accepted` already carries this module's own (ne, cid) assignment
-    # against the same persisted centroids, so skip add_vectors'
-    # re-norm + re-assign pass (r9 review) ---
+    # `accepted` already carries the (ne, cid) assignment of add_vectors'
+    # own intake in the store's persisted mode, so skip its re-norm +
+    # re-assign pass (r9 review) ---
     add_vectors(spark, index_dir, accepted, preassigned=True)
 
     return (

@@ -15,7 +15,7 @@ from flink_parameter_server_spark.operators.ann_index import (
     DENSITY_FLOOR,
     add_vectors,
     build_ivf_index,
-    cell_skew,
+    index_mode,
     index_stats,
     ivf_search,
 )
@@ -141,7 +141,7 @@ def test_add_vectors_incremental_append_and_reprobe(spark, tmp_path):
     add_vectors the other half (no Lloyd re-run), and a full-probe
     search over the grown index must equal exact brute force over the
     WHOLE catalog — i.e. appended vectors are first-class neighbors.
-    Also pins idempotent re-ingest and the cell_skew trigger stats."""
+    Also pins idempotent re-ingest and the index_stats trigger stats."""
     idx = str(tmp_path / "ivf_inc")
     emb = t(spark, SF, "embeddings")
     first = emb.where(F.col("vec_id") % 2 == 0)
@@ -172,7 +172,7 @@ def test_add_vectors_incremental_append_and_reprobe(spark, tmp_path):
     assert got == want and got
 
     # the rebuild trigger reports sane balance stats
-    stats = cell_skew(spark, idx)
+    stats = index_stats(spark, idx)
     assert stats["total"] == n_after and stats["n_cells"] <= N_CELLS
     assert stats["skew"] >= 1.0
 
@@ -279,7 +279,6 @@ def test_compact_and_rebuild_preserve_catalog_and_results(spark, tmp_path):
     import glob
 
     from flink_parameter_server_spark.operators.ann_index import (
-        cell_skew,
         compact_index,
         rebuild_index,
     )
@@ -538,7 +537,6 @@ def test_by_residual_ivfpq_lifecycle_and_clustered_recall(spark, tmp_path):
     from flink_parameter_server_spark.operators.ann_index import (
         _encode_codes,
         compact_index,
-        pq_by_residual,
         read_pq_codes,
         rebuild_index,
     )
@@ -574,8 +572,8 @@ def test_by_residual_ivfpq_lifecycle_and_clustered_recall(spark, tmp_path):
     res_idx = str(tmp_path / "pq_res")
     build_ivf_index(spark, emb, plain_idx, n_cells=8, iters=3, pq=True)
     build_ivf_index(spark, emb, res_idx, n_cells=8, iters=3, pq=True, by_residual=True)
-    assert not pq_by_residual(spark, plain_idx)  # (d): default + pre-r14 read
-    assert pq_by_residual(spark, res_idx)
+    assert not index_mode(spark, plain_idx).by_residual  # (d): default + pre-r14 read
+    assert index_mode(spark, res_idx).by_residual
 
     # (a) covering settings exact, both modes
     def rows_of(df):
@@ -658,7 +656,7 @@ def test_by_residual_ivfpq_lifecycle_and_clustered_recall(spark, tmp_path):
 
     # rebuild retrains in the persisted mode and stays exact at covering
     rebuild_index(spark, res_idx, n_cells=8, iters=2)
-    assert pq_by_residual(spark, res_idx)
+    assert index_mode(spark, res_idx).by_residual
     grown_exact = rows_of(ivf_search(spark, res_idx, queries, k=K, n_probe=8))
     got = rows_of(
         ivf_search(spark, res_idx, queries, k=K, n_probe=8, adc=True, shortlist=10**6)
@@ -782,8 +780,6 @@ def test_pq8_width_contract_and_plain_lifecycle(spark, tmp_path):
         _pq_pack_expr,
         _pq_pack_maps,
         _pq_unpack_expr,
-        pq_code_bits,
-        pq_by_residual,
         read_pq_codes,
         rebuild_index,
     )
@@ -834,7 +830,7 @@ def test_pq8_width_contract_and_plain_lifecycle(spark, tmp_path):
     # (d) lifecycle at 8 bits, plain mode
     idx = str(tmp_path / "pq8")
     build_ivf_index(spark, emb, idx, n_cells=N_CELLS, iters=2, pq=True, pq_bits=8)
-    assert pq_code_bits(spark, idx) == 8 and not pq_by_residual(spark, idx)
+    assert index_mode(spark, idx) == (True, False, 8, False)
     cb = spark.read.parquet(f"{idx}/pq_codebook")
     n_anchors = cb.select("aid").distinct().count()
     assert n_anchors > 16, "8-bit build must train past the nibble alphabet"
@@ -873,7 +869,7 @@ def test_pq8_width_contract_and_plain_lifecycle(spark, tmp_path):
     assert grown_adc == grown_exact and grown_adc
 
     rebuild_index(spark, idx, n_cells=N_CELLS, iters=2)
-    assert pq_code_bits(spark, idx) == 8, "rebuild must keep the persisted width"
+    assert index_mode(spark, idx).bits == 8, "rebuild must keep the persisted width"
     rebuilt = rows_of(
         ivf_search(spark, idx, _queries(spark), k=K, n_probe=N_CELLS,
                    adc=True, shortlist=10**6)
@@ -886,13 +882,18 @@ def test_pq8_width_contract_and_plain_lifecycle(spark, tmp_path):
     with _pytest.raises(ValueError, match="packing requires"):
         _pq_pack_maps(spark.read.parquet(f"{idx}/pq_codebook"), bits=4)
 
-    # (b) marker back-compat: r14 schema (by_residual only) reads 4-bit
-    r14_idx = str(tmp_path / "r14marker")
-    spark.createDataFrame([(True,)], "by_residual boolean").coalesce(1).write.parquet(
-        f"{r14_idx}/pq_mode"
-    )
-    assert pq_code_bits(spark, r14_idx) == 4 and pq_by_residual(spark, r14_idx)
-    assert pq_code_bits(spark, str(tmp_path / "nomarker")) == 4
+    # (b) marker back-compat over this index's own codebook: the r14
+    # schema (by_residual only) reads 4-bit, and no marker at all
+    # (r12/r13) reads plain 4-bit
+    import shutil
+
+    spark.createDataFrame([(True,)], "by_residual boolean").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{idx}/pq_mode")
+    assert index_mode(spark, idx) == (True, True, 4, False)
+    shutil.rmtree(f"{idx}/pq_mode")
+    assert index_mode(spark, idx) == (True, False, 4, False)
+    assert index_mode(spark, str(tmp_path / "nomarker")).bits == 4
 
 
 def _clustered_emb(spark, n=400, n_centers=8, dim=64, sigma=0.1):
@@ -947,8 +948,6 @@ def test_pq8_residual_controlled_recall(spark, tmp_path):
     read_pq_codes inverts the byte-packed residual encode."""
     from flink_parameter_server_spark.operators.ann_index import (
         _encode_codes,
-        pq_by_residual,
-        pq_code_bits,
         read_pq_codes,
     )
 
@@ -962,7 +961,7 @@ def test_pq8_residual_controlled_recall(spark, tmp_path):
     build_ivf_index(
         spark, emb, idx8, n_cells=8, iters=3, pq=True, by_residual=True, pq_bits=8
     )
-    assert pq_code_bits(spark, idx8) == 8 and pq_by_residual(spark, idx8)
+    assert index_mode(spark, idx8) == (True, True, 8, False)
 
     # byte-packed residual encode inverts against the persisted state
     cells = spark.read.parquet(f"{idx8}/cells")
@@ -1067,17 +1066,22 @@ def test_adc_shortlist_per_probe_repairs_multiprobe_dip(spark, tmp_path):
 @pytest.mark.slow
 def test_index_stats_geometry_and_regimes(spark, tmp_path):
     """r15: index_stats = the operating-point probe — balance stats
-    consistent with cell_skew, exact density quantiles, the persisted
+    equal to an independent count of the cells table by cid, exact
+    density quantiles, the persisted
     PQ mode, and the receipt-derived density regime that names which
     ivf_search knob is live at this geometry."""
     idx = str(tmp_path / "st1")
     build_ivf_index(spark, t(spark, SF, "embeddings"), idx, n_cells=N_CELLS, iters=2)
     st = index_stats(spark, idx)
-    sk = cell_skew(spark, idx)
-    assert st["n_cells"] == sk["n_cells"]
-    assert st["total"] == sk["total"]
-    assert st["max_cell"] == sk["max_cell"]
-    assert st["skew"] == sk["skew"]
+    sizes = [
+        r["n"]
+        for r in spark.read.parquet(f"{idx}/cells").groupBy("cid").agg(F.count("*").alias("n")).collect()
+    ]
+    assert st["n_cells"] == len(sizes)
+    assert st["total"] == sum(sizes)
+    assert st["max_cell"] == max(sizes)
+    assert st["mean_cell"] == pytest.approx(sum(sizes) / len(sizes))
+    assert st["skew"] == pytest.approx(max(sizes) * len(sizes) / sum(sizes))
     assert st["p50_cell"] <= st["p90_cell"] <= st["max_cell"]
     assert st["pq"] is False and st["pq_bits"] is None
     assert st["density_regime"] == "rankable", st
@@ -1350,7 +1354,7 @@ def test_two_level_lifecycle_mode_dispatch(spark, tmp_path):
     vn = _normed(batch.select("vec_id", "embedding"), "embedding", "ne")
     want = {
         (r["vec_id"], r["cid"])
-        for r in _assign_for_index(spark, idx, vn)
+        for r in _assign_for_index(spark, idx, vn, index_mode(spark, idx))
         .select("vec_id", "cid").collect()
     }
     got = {

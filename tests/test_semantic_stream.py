@@ -15,8 +15,14 @@ from pyspark.sql import functions as F
 from flink_parameter_server_spark.functions.planes import SEMANTIC_T
 from flink_parameter_server_spark.functions.vectors import as_double
 from flink_parameter_server_spark.operators._util import t
-from flink_parameter_server_spark.operators.ann_index import _assign, _normed, build_ivf_index
-from flink_parameter_server_spark.operators.similarity import _fast_cosine
+from flink_parameter_server_spark.operators.ann_index import (
+    _assign_for_index,
+    _normed,
+    _touched_cells,
+    build_ivf_index,
+    index_mode,
+)
+from flink_parameter_server_spark.operators.similarity import _fast_cosine, _nearest_centroids
 from flink_parameter_server_spark.streaming.semantic_dedup import (
     process_semantic_batch,
     semantic_stream_writer,
@@ -56,7 +62,7 @@ def test_single_batch_matches_driver_reference(spark, tmp_path):
     idx = _seed_index(spark, tmp_path, seed)
 
     cent = spark.read.parquet(f"{idx}/centroids")
-    assigned = _assign(_normed(batch, "embedding", "ne"), cent).localCheckpoint()
+    assigned = _nearest_centroids(_normed(batch, "embedding", "ne"), cent).localCheckpoint()
     cells = spark.read.parquet(f"{idx}/cells")
     cos = _fast_cosine(
         as_double(F.col("n.embedding")), as_double(F.col("s.embedding")),
@@ -219,14 +225,68 @@ def test_probe_scan_partition_pruned(spark, tmp_path):
     seed, batch = _halves(spark)
     idx = _seed_index(spark, tmp_path, seed)
     small = batch.limit(3)
-    assigned = _assign(_normed(small, "embedding", "ne"), spark.read.parquet(f"{idx}/centroids"))
+    assigned = _nearest_centroids(
+        _normed(small, "embedding", "ne"), spark.read.parquet(f"{idx}/centroids")
+    )
     probed = sorted(r["cid"] for r in assigned.select("cid").distinct().collect())
     assert len(probed) < N_CELLS
-    cells = spark.read.parquet(f"{idx}/cells").where(F.col("cid").isin(probed))
+    cells = _touched_cells(spark, idx, probed)
     plan = cells._jdf.queryExecution().executedPlan().toString()
     # short literal lists render IN (...), longer ones INSET — both are
     # the pushed partition filter
     assert re.search(r"PartitionFilters: \[cid#\d+ IN", plan), plan[:2000]
+
+
+def test_two_level_store_assigns_in_persisted_mode(spark, tmp_path):
+    """A store seeded by a two-level build assigns every batch through
+    its persisted hierarchy, as add_vectors does
+    (test_ann_index.py::test_two_level_lifecycle_mode_dispatch): the
+    landed (vec_id, cid) pairs equal the persisted-mode assignment, and
+    a replayed batch leaves the store unchanged. On this corpus 48 of
+    the 100 batch vectors have a flat-argmax cell other than their
+    two-level cell, so a flat intake lands them elsewhere."""
+    import numpy as np
+    import pandas as pd
+
+    x = np.random.RandomState(11).normal(size=(400, 64)).astype("float32")
+    emb = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(400), "embedding": [r.tolist() for r in x]}),
+        "vec_id long, embedding array<float>",
+    )
+    idx = str(tmp_path / "ivf2")
+    build_ivf_index(
+        spark, emb.where(F.col("vec_id") < 300), idx, n_cells=16, iters=2, two_level=True
+    )
+    batch = emb.where(F.col("vec_id") >= 300)
+    vn = _normed(batch, "embedding", "ne")
+    mode = index_mode(spark, idx)
+    assert mode.two_level
+    want = {(r["vec_id"], r["cid"]) for r in _assign_for_index(spark, idx, vn, mode).collect()}
+    flat = {
+        (r["vec_id"], r["cid"])
+        for r in _nearest_centroids(vn, spark.read.parquet(f"{idx}/centroids")).collect()
+    }
+    assert want - flat, "the corpus must tell the two assignment modes apart"
+
+    decisions = process_semantic_batch(spark, batch, idx).collect()
+    accepted = {r.vec_id for r in decisions if r.decision == "accepted"}
+    assert accepted
+
+    def landed():
+        return {
+            (r["vec_id"], r["cid"])
+            for r in spark.read.parquet(f"{idx}/cells")
+            .where(F.col("vec_id") >= 300)
+            .select("vec_id", "cid")
+            .collect()
+        }
+
+    got = landed()
+    assert got == {(v, c) for v, c in want if v in accepted}
+    n_rows = spark.read.parquet(f"{idx}/cells").count()
+    process_semantic_batch(spark, batch, idx).collect()
+    assert spark.read.parquet(f"{idx}/cells").count() == n_rows
+    assert landed() == got
 
 
 def test_streaming_wireup_two_batches(spark, tmp_path):
